@@ -11,9 +11,8 @@ import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 
 /** Bounded buffer of the k SMALLEST values of any orderable Catalyst type
-  * under the type's natural ordering — the aggregate-function form of
-  * [[graft.sim.TopK.TopKAgg]], generalized from (id, score) pairs to
-  * arbitrary values so it can carry a struct whose FIELD ORDER encodes the
+  * under the type's natural ordering — the engine's one bounded-heap
+  * top-k. Values are arbitrary, so a struct whose FIELD ORDER encodes the
   * sort (structs compare field-by-field): `struct(-count, name, payload…)`
   * is "count DESC, name ASC, payload along for the ride".
   *

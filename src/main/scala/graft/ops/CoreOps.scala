@@ -353,31 +353,6 @@ object CoreOps {
       changes.filter(!col(isDeleteCol)).drop(isDeleteCol))
   }
 
-  /** Grouped top-k through the bounded-heap [[graft.sim.TopK.TopKAgg]]
-    * typed Aggregator — the RELATIONAL surface of the ANN family's
-    * shortlist machinery: per group, the k best (score desc, id asc)
-    * rows, with ≤k entries of state per group through the partial/merge
-    * tree. The window form (`row_number over (partition by g)`) buffers
-    * and sorts every row of every group; this shape is what survives
-    * millions of groups — or a handful of giant ones — at 100 TB.
-    * Returns (group, id, score, rank).
-    */
-  def groupedTopK(df: DataFrame, groupCol: String, idCol: String,
-                  scoreCol: String, k: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(groupCol).cast("string"), col(idCol).cast("long"),
-        col(scoreCol).cast("double"))
-      .as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => graft.sim.TopK.Scored(t._2, t._3))
-      .agg(graft.sim.TopK.TopKAgg(k).toColumn)
-      .toDF(groupCol, "topk")
-      .select(col(groupCol), posexplode(col("topk.entries")))
-      .select(col(groupCol), col("col.id").as(idCol),
-        col("col.score").as(scoreCol), (col("pos") + 1).cast("int").as("rank"))
-  }
-
   /** Snapshot diff — CDC DERIVATION, the inverse of [[mergeInto]]: given
     * two snapshots of a keyed table, emit one row per changed key with
     * `change ∈ {insert, delete, update}` (insert = key only in `newDf`,

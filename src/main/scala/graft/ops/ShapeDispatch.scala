@@ -90,6 +90,13 @@ object ShapeDispatch {
   val TopKRowsPerGroupCutoverKey = "spark.graft.shape.topkRowsPerGroupCutover"
   val DefaultTopKRowsPerGroupCutover: Long = 1000L * 1000
 
+  /** Upper bound on k for the AUTO top-k heap: the heap holds k rows PER
+    * GROUP per task, so a `k = 50_000_000` must keep WindowExec's sort
+    * (which spills) rather than pin groups × k rows in memory. Default
+    * 1M (≈ tens of MB per group at typical row widths). */
+  val MaxKKey = "spark.graft.topk.maxK"
+  val DefaultMaxK: Long = 1000L * 1000
+
   /** Session-wide override: "window" | "ranged" (anything else ignored). */
   val ForceKey = "spark.graft.shape.force"
 
@@ -614,15 +621,15 @@ object ShapeDispatch {
     *    copy-gate fix landed, and it has no checkpoint to amortize):
     *    ≤ k rows of aggregation state per group at every node, never a
     *    group-sized sort. The auto decision additionally refuses to
-    *    heap a k above `spark.graft.topk.maxK` (the TopKRewrite line:
-    *    O(k) inserts and groups×k state stop being "bounded" there —
-    *    WindowExec's spillable sort is the safe shape); a forced shape
+    *    heap a k above `spark.graft.topk.maxK` (O(k) inserts and
+    *    groups×k state stop being "bounded" there — WindowExec's
+    *    spillable sort is the safe shape); a forced shape
     *    is the caller's own sizing and bypasses the guard.
     *
     * Output: the input columns + `rnCol` (int, 1-based). Identical
     * multisets whenever (orderCols) is a total order within each group
     * — with ties both forms carry row_number's declared
-    * nondeterminism (the TopKRewrite contract, stated not hidden).
+    * nondeterminism (the same contract, stated not hidden).
     */
   def topKPerGroupAuto(df: DataFrame, groupCols: Seq[String],
                        orderCols: Seq[String], k: Int,
@@ -643,13 +650,12 @@ object ShapeDispatch {
     val cut = confLong(df, TopKRowsPerGroupCutoverKey,
       DefaultTopKRowsPerGroupCutover)
     // the AUTO decision never heaps a huge k (O(k) insert, groups×k
-    // state — the same line TopKRewrite draws); an explicit force is the
-    // caller's own sizing and is honored either way. k > maxK decides
+    // state); an explicit force is the caller's own sizing and is
+    // honored either way. k > maxK decides
     // WindowShape unconditionally, so short-circuit BEFORE touching
     // stats — a cold memo would otherwise pay a full probe scan whose
     // result is predetermined to be ignored (r16 ADVICE).
-    val maxK = confLong(df, graft.plans.TopKRewrite.MaxKKey,
-      graft.plans.TopKRewrite.DefaultMaxK.toLong)
+    val maxK = confLong(df, MaxKKey, DefaultMaxK)
     (force.orElse(confForce(df)).getOrElse {
       if (k > maxK) WindowShape
       else decideByRows(stats.getOrElse(guardedStats(df, groupCols, Nil,

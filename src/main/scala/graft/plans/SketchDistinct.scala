@@ -50,6 +50,5 @@ object SketchDistinct extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SketchDistinct)
-    e.injectPlannerStrategy(_ => TopKRewrite)
   }
 }

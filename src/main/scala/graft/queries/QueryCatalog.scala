@@ -452,13 +452,13 @@ object QueryCatalog {
     Similarity.scoreAll(e, e.filter(col("vec_id") < 10))
   }
 
-  /** Exact top-k through the bounded-heap Aggregator (identical values to
+  /** Exact top-k through the `topk_structs` bounded heap (identical values to
     * the window form — SimilaritySpec asserts equality — but k-entry state
     * per query instead of a full per-group sort; see Similarity Scaladoc).
     */
   def annTopK(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    Similarity.bruteForceTopKAgg(e, e.filter(col("vec_id") < 10), 5)
+    Similarity.bruteForceTopKHeap(e, e.filter(col("vec_id") < 10), 5)
   }
 
   def lshAnnTopK(s: SparkSession, dir: String): DataFrame = {
@@ -3615,7 +3615,7 @@ object QueryCatalog {
   // r15: q137 rides topKPerGroupAuto. DESC encodes as the negated
   // integer score (the q71 convention); (−rev1e4, l_partkey) is a total
   // order within each flag, so both shapes are deterministic and agree
-  // with the former groupedTopK ordering (score DESC, id ASC) row for
+  // with the former grouped top-k ordering (score DESC, id ASC) row for
   // row — hashes frozen across the re-platform.
   private def topPartsPerFlagShaped(s: SparkSession, dir: String,
       force: Option[graft.ops.ShapeDispatch.Shape]): DataFrame = {
@@ -4067,7 +4067,9 @@ object QueryCatalog {
     * is built on), and with fixed md5 row-hashes everything is a pure
     * function of the data, so the ESTIMATES cross the oracle bit-exact
     * (the q117/q155 property; the classic array implementation is the
-    * same numbers stored densely). Readout: the 20 heaviest users,
+    * same numbers stored densely). Readout: the 20 heaviest users (a
+    * TakeOrderedAndProject top-20, not a single-partition window;
+    * user_id is unique after the groupBy, so the order is total),
     * estimated vs true count, with the one-sided guarantee est ≥ true
     * asserted as a column. State: d·w counters total — CONSTANT, vs
     * Space-Saving's k counters of top-k-only coverage; CM answers ANY
@@ -4091,9 +4093,8 @@ object QueryCatalog {
     val est = userCells.join(broadcast(counters), Seq("r", "b"))
       .groupBy("user_id").agg(min(col("c")).as("n_est"))
     val truth = ev.groupBy("user_id").agg(count(lit(1)).as("n_true"))
-    val wTop = Window.orderBy(desc("n_true"), asc("user_id"))
     truth.join(est, Seq("user_id"))
-      .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= 20)
+      .orderBy(desc("n_true"), asc("user_id")).limit(20)
       .select(col("user_id"), col("n_true"), col("n_est"),
         (col("n_est") >= col("n_true")).as("never_under"),
         (col("n_est") - col("n_true")).as("overcount"))

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.TopKStructs.topk_structs
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`), per the BASELINE.json north star.
@@ -86,7 +87,7 @@ object Similarity {
   /** Exact top-k: rank within each query with a deterministic tie-break on
     * vec_id. Window over query_id — partitions = queries, each sortable
     * in memory when k ≪ corpus (Spark's TopK-per-key via rank is fine here;
-    * for huge query sets switch to a bounded-heap Aggregator).
+    * for huge query sets use [[bruteForceTopKHeap]]).
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -97,32 +98,22 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Exact top-k via the bounded-heap [[TopK.TopKAgg]] Aggregator — same
-    * results as [[bruteForceTopK]] (same scores, same tie-break), different
-    * physical shape: state is ≤k entries per query at every point of the
+  /** Exact top-k via the `topk_structs` bounded heap — same results as
+    * [[bruteForceTopK]] (same scores, same tie-break), different physical
+    * shape: state is ≤k entries per query at every point of the
     * partial/merge tree, so the shuffle carries k-entry buffers instead of
     * all |corpus| scored rows per query, and nothing ever sorts a full
     * group. The window form is fine when queries are few; THIS is the form
     * that survives a million-query batch at 100 TB.
     */
-  def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val scored = scoreAll(corpus, queries, idCol, vecCol)
-    import scored.sparkSession.implicits._
-    scored.select(col("query_id"), col("vec_id"), col("score")).as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => TopK.Scored(t._2, t._3))
-      .agg(TopK.TopKAgg(k).toColumn)
-      .toDF("query_id", "topk")
-      .select(col("query_id"), posexplode(col("topk.entries")))
-      .select(col("query_id"), col("col.id").as("vec_id"), col("col.score").as("score"),
-              (col("pos") + 1).cast("int").as("rank"))
-  }
+  def bruteForceTopKHeap(corpus: DataFrame, queries: DataFrame, k: Int,
+                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    topKByScore(scoreAll(corpus, queries, idCol, vecCol), k, "vec_id")
 
   /** Hard-negative mining — per anchor, the top-k most-similar vectors
     * with a DIFFERENT label: the contrastive-training data op (anchors'
     * nearest wrong-label neighbors are the negatives that sharpen an
-    * embedding model). Same bounded-heap shape as [[bruteForceTopKAgg]]
+    * embedding model). Same bounded-heap shape as [[bruteForceTopKHeap]]
     * (≤k state per anchor through the partial/merge tree); the label
     * inequality rides the broadcast-join condition, so same-label pairs
     * are filtered BEFORE any score is computed, not after.
@@ -140,16 +131,21 @@ object Similarity {
         col("query_id") =!= col("vec_id") && col("qlbl") =!= col("lbl"))
       .select(col("query_id"), col("vec_id"),
         roundScore(cosineFromNorms(dot(col("qv"), col("v")), col("qnrm"), col("nrm"))).as("score"))
-    import scored.sparkSession.implicits._
-    scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => TopK.Scored(t._2, t._3))
-      .agg(TopK.TopKAgg(k).toColumn)
-      .toDF("query_id", "topk")
-      .select(col("query_id"), posexplode(col("topk.entries")))
-      .select(col("query_id"), col("col.id").as("neg_id"), col("col.score").as("score"),
-              (col("pos") + 1).cast("int").as("rank"))
+    topKByScore(scored, k, "neg_id")
   }
+
+  /** Per-query top-k of a (query_id, vec_id, score) frame by score DESC,
+    * vec_id ASC through the `topk_structs` heap. Ascending
+    * `struct(-score, vec_id)` IS that order (structs compare field by
+    * field), and IEEE negation is exact, so scores come back
+    * bit-identical. Returns (query_id, `idOut`, score, rank).
+    */
+  private def topKByScore(scored: DataFrame, k: Int, idOut: String): DataFrame =
+    scored.groupBy("query_id")
+      .agg(topk_structs(struct((-col("score")).as("neg"), col("vec_id")), k).as("topk"))
+      .select(col("query_id"), posexplode(col("topk")))
+      .select(col("query_id"), col("col.vec_id").as(idOut), (-col("col.neg")).as("score"),
+              (col("pos") + 1).cast("int").as("rank"))
 
   /** Deterministic pseudo-random hyperplanes: component h[i][d] derived from
     * md5(bit, dim) — no RNG state, same planes every run/engine.
@@ -663,28 +659,17 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         roundScore((0 until m).foldLeft(lit(0.0))((acc, i) => acc + col(s"__d$i")))
           .as("approx_dist"))
-    // shortlist selection through the bounded-heap [[TopK.TopKAgg]] — NOT a
-    // row_number window: the ADC stage scores every corpus vector per query
-    // (PQ's design), and a window over that stream shuffles |corpus| rows
-    // into ONE partition per query and sorts them. The Aggregator keeps
+    // shortlist selection through the `topk_structs` bounded heap — NOT
+    // a row_number window: the ADC stage scores every corpus vector per
+    // query (PQ's design), and a window over that stream shuffles |corpus|
+    // rows into ONE partition per query and sorts them. The heap keeps
     // ≤shortlist entries per query through the partial/merge tree, so the
     // shuffle carries k-entry buffers and nothing sorts a full group.
-    // Distances are negated on the way in (TopKAgg ranks score DESC, id ASC
-    // — exactly asc(approx_dist), asc(vec_id) on the negation; IEEE
-    // negation is exact, so values and ties are identical to the window
-    // form, which SimilaritySpec asserts).
-    val short = {
-      import scored.sparkSession.implicits._
-      scored.select(col("query_id"), col("vec_id"), col("approx_dist"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .mapValues(t => TopK.Scored(t._2, -t._3))
-        .agg(TopK.TopKAgg(shortlist).toColumn)
-        .toDF("query_id", "topk")
-        .select(col("query_id"), explode(col("topk.entries")).as("e"))
-        .select(col("query_id"), col("e.id").as("vec_id"),
-          (-col("e.score")).as("approx_dist"))
-    }
+    // Ascending struct(approx_dist, vec_id) is the window's order.
+    val short = scored.groupBy("query_id")
+      .agg(topk_structs(struct(col("approx_dist"), col("vec_id")), shortlist).as("topk"))
+      .select(col("query_id"), explode(col("topk")).as("e"))
+      .select(col("query_id"), col("e.vec_id").as("vec_id"), col("e.approx_dist").as("approx_dist"))
     // exact re-rank of the shortlist only: |queries|·shortlist full-vector
     // distance evaluations — the raw-vector reads PQ exists to bound
     val qv = e.select(col("vec_id").as("query_id"), col("v").as("qvec"))

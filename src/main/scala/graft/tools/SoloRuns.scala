@@ -42,8 +42,10 @@ object SoloRuns {
     // listener-bus events are delivered asynchronously: settle before each
     // CPU sample so one run's late stage events don't bleed into the next
     // run's delta (r18 ADVICE). The bus API is private[spark]; poll the
-    // counter until it stops moving instead (50ms quiet, 1s cap).
-    def settledCpu(): Long = {
+    // counter until it stops moving instead (50ms quiet, 1s cap). A sample
+    // taken at the cap prints a note: the CPU delta ending at it may be
+    // undercounted.
+    def settledCpu(at: => String): Long = {
       val deadline = System.nanoTime() + 1000000000L
       var prev = cpuNanos.get()
       var quietSince = System.nanoTime()
@@ -53,6 +55,9 @@ object SoloRuns {
         val cur = cpuNanos.get()
         if (cur != prev) { prev = cur; quietSince = System.nanoTime() }
       }
+      if (System.nanoTime() - quietSince < 50000000L)
+        println(s"[solo] note: $at: CPU counter still moving at the 1s settle " +
+          "cap; the cpu= delta ending here may be undercounted")
       prev
     }
 
@@ -62,10 +67,10 @@ object SoloRuns {
         sys.error(s"unknown query $name; known: ${catalog.keys.toSeq.sorted.take(5)}..."))
       var best = Double.MaxValue; var bestCpu = Double.MaxValue
       for (r <- 1 to runs) {
-        val c0 = settledCpu(); val t0 = System.nanoTime()
+        val c0 = settledCpu(s"q=$name run=$r start"); val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        val cpu = (settledCpu() - c0) / 1e9
+        val cpu = (settledCpu(s"q=$name run=$r end") - c0) / 1e9
         // release per-query caches exactly as Bench does, so every
         // iteration re-pays the fill the bench charges this query
         graft.queries.QueryCatalog.cacheReleaseAfter.get(name)

@@ -89,20 +89,25 @@ class CoreOpsSpec extends SparkSpec {
     assert(id == Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
-  test("groupedTopK equals the window form row-for-row") {
+  test("topKPerGroupAuto heap equals the window form row-for-row") {
     import spark.implicits._
     val rng = new scala.util.Random(3)
     val df = (1L to 2000L).map(i => (s"g${i % 7}", i, rng.nextInt(500).toDouble))
       .toDF("g", "id", "score")
-    val agg = graft.ops.CoreOps.groupedTopK(df, "g", "id", "score", 4)
-      .as[(String, Long, Double, Int)].collect().toSet
+    // score DESC encoded as a negated column (the q71 convention)
+    val heapDf = graft.ops.ShapeDispatch.topKPerGroupAuto(
+        df.withColumn("neg", -col("score")), Seq("g"), Seq("neg", "id"), 4,
+        rnCol = "rank", force = Some(graft.ops.ShapeDispatch.RangedShape))
+      .select("g", "id", "score", "rank")
+    assert(heapDf.queryExecution.executedPlan.toString.contains("topk_structs"))
+    val heap = heapDf.as[(String, Long, Double, Int)].collect().toSet
     val win = df.withColumn("rank",
         org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("g")
             .orderBy(col("score").desc, col("id").asc)))
       .filter(col("rank") <= 4)
       .as[(String, Long, Double, Int)].collect().toSet
-    assert(agg == win, s"bounded-heap diverged from the window form")
+    assert(heap == win, s"bounded-heap diverged from the window form")
   }
 
   test("snapshotDiff round-trips mergeInto: diff(old, merge(old, ch)) == ch's classes") {

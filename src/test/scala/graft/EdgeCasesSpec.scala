@@ -105,10 +105,10 @@ class EdgeCasesSpec extends SparkSpec {
     assert(rows.toSeq == Seq((0, 100L)))
   }
 
-  test("TopKAgg over fewer rows than k returns all of them, ranked") {
+  test("bruteForceTopKHeap over fewer rows than k returns all of them, ranked") {
     val corpus  = Seq((10L, Array(1.0f, 0.0f)), (11L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
     val queries = Seq((1L, Array(1.0f, 0.0f))).toDF("vec_id", "embedding")
-    val out = graft.sim.Similarity.bruteForceTopKAgg(corpus, queries, k = 5)
+    val out = graft.sim.Similarity.bruteForceTopKHeap(corpus, queries, k = 5)
       .select("query_id", "vec_id", "rank").as[(Long, Long, Int)].collect().sortBy(_._3)
     assert(out.map(_._2).toSeq == Seq(10L, 11L))
     assert(out.map(_._3).toSeq == Seq(1, 2))

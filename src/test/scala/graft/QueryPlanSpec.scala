@@ -13,6 +13,9 @@ class QueryPlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  private def windowNodes(plan: String): Int =
+    "(?m)^\\s*[+:*-]*\\s*Window\\b".r.findAllIn(plan).size
+
   test("q165 fact scan carries a DYNAMIC partition-pruning filter fed by " +
        "the filtered dim (reads months, not the decade)") {
     val df = QueryCatalog.dppStarScan(spark, sf)
@@ -236,8 +239,8 @@ class QueryPlanSpec extends SparkSpec {
       s"space_saving must run as an object hash aggregate:\n${ssPlan.take(1500)}")
     assert(ssPlan.contains("partial_space_saving"),
       s"space_saving must partial-aggregate map-side:\n${ssPlan.take(1500)}")
-    // the bounded-heap top-k Aggregator behind hard negatives likewise:
-    // k-entry buffers through partial/merge, never a per-group sort
+    // the topk_structs heap behind hard negatives likewise: k-entry
+    // buffers through partial/merge, never a per-group sort
     val hnPlan = executedPlan(QueryCatalog.hardNegatives(spark, sf))
     assert(hnPlan.contains("ObjectHashAggregate"),
       s"top-k heap must run as an object hash aggregate:\n${hnPlan.take(1500)}")
@@ -302,14 +305,24 @@ class QueryPlanSpec extends SparkSpec {
     // the ADC stage scores every corpus vector per query; its shortlist must
     // partial-aggregate (k-entry heap state crossing the shuffle), never
     // shuffle |corpus| scored rows into one partition per query and sort.
-    assert(plan.contains("ObjectHashAggregate"),
-      s"ADC shortlist must run through the bounded-heap typed Aggregator:\n${plan.take(1500)}")
+    assert(plan.contains("topk_structs"),
+      s"ADC shortlist must run through the topk_structs bounded heap:\n${plan.take(1500)}")
     // exactly two windows may remain: the encode arg-min over ksub
     // sub-centroids (bounded by codebook size) and the exact re-rank over
     // the ≤shortlist rows per query — never a third over the ADC scores
-    val windows = "(?m)^\\s*[+:*-]*\\s*Window\\b".r.findAllIn(plan).size
+    val windows = windowNodes(plan)
     assert(windows <= 2,
       s"expected ≤2 bounded windows (encode arg-min + shortlist re-rank), got $windows:\n${plan.take(2000)}")
+  }
+
+  test("q22/q97 exact top-k: the topk_structs heap, never a window over the scored pairs") {
+    for (df <- Seq(QueryCatalog.annTopK(spark, sf), QueryCatalog.hardNegatives(spark, sf))) {
+      val plan = executedPlan(df)
+      assert(plan.contains("topk_structs"),
+        s"per-query top-k must run through the topk_structs heap:\n${plan.take(1500)}")
+      assert(windowNodes(plan) == 0,
+        s"no window may rank the scored pairs:\n${plan.take(2000)}")
+    }
   }
 
   test("q128 merge / q133 diff: key-equi joins only, never cartesian or nested-loop") {
@@ -421,5 +434,13 @@ class QueryPlanSpec extends SparkSpec {
       s"the 256-row counter table must broadcast:\n${plan.take(1500)}")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"estimate lookup is an equi-join on (r, b):\n${plan.take(1500)}")
+  }
+
+  test("q157 count-min: the top-20 readout is a TakeOrderedAndProject, no global window") {
+    val plan = executedPlan(QueryCatalog.countMinSketch(spark, sf))
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"the top-20 must plan as a bounded take-ordered:\n${plan.take(2000)}")
+    assert(windowNodes(plan) == 0,
+      s"no single-partition window may rank every user:\n${plan.take(2000)}")
   }
 }

@@ -280,25 +280,4 @@ class Round14Spec extends SparkSpec {
       .filter(col("expr") =!= col("jvm"))
     assert(diff.isEmpty, s"counts diverge:\n${diff.limit(5).collect().mkString("\n")}")
   }
-
-  // ---- TopKRewrite stat guard ---------------------------------------------
-
-  test("TopKRewrite: k above spark.graft.topk.maxK keeps WindowExec") {
-    graft.plans.TopKRewrite.install(spark)
-    withConf(graft.plans.TopKRewrite.FlagKey, "true") {
-      def plan(k: Int): String = {
-        val w = Window.partitionBy("grp").orderBy(asc("value"), asc("id"))
-        fixture.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-          .queryExecution.executedPlan.toString
-      }
-      withConf(graft.plans.TopKRewrite.MaxKKey, "5") {
-        assert(!plan(10).contains("TopKPerGroup"),
-          "k=10 > maxK=5 must NOT rewrite to the bounded heap")
-        assert(plan(3).contains("TopKPerGroup"),
-          "k=3 <= maxK=5 must still rewrite")
-      }
-      // default maxK admits the common small-k cases
-      assert(plan(10).contains("TopKPerGroup"))
-    }
-  }
 }

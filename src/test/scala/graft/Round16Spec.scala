@@ -258,7 +258,7 @@ class Round16Spec extends SparkSpec {
         force = Some(ShapeDispatch.WindowShape))
       assert(heap.exceptAll(w).isEmpty && w.exceptAll(heap).isEmpty)
       // the auto decision refuses a k above spark.graft.topk.maxK…
-      withConf(graft.plans.TopKRewrite.MaxKKey, "4") {
+      withConf(ShapeDispatch.MaxKKey, "4") {
         val guarded = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"),
           Seq("v", "id"), 5)
         assert(!planOf(guarded).contains("topk_structs"),

@@ -200,7 +200,7 @@ class Round17Spec extends SparkSpec {
     // distinct literals → a fresh plan → cold memo entry by construction
     val df = (0 until 220).map(i => (s"r17k${i % 4}", i.toLong, (i * 17 % 41).toLong))
       .toDF("grp", "id", "v")
-    withConf(graft.plans.TopKRewrite.MaxKKey, "4") {
+    withConf(ShapeDispatch.MaxKKey, "4") {
       assert(probes {
         val out = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5)
         assert(!out.queryExecution.executedPlan.toString.contains("topk_structs"))

@@ -44,7 +44,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // a hard negative can never outscore the unrestricted best at its rank:
     // the global top-k maximizes over a superset of candidates
-    val global = Similarity.bruteForceTopKAgg(e, anchors, 5).collect()
+    val global = Similarity.bruteForceTopKHeap(e, anchors, 5).collect()
       .map(r => ((r.getLong(0), r.getInt(3)), r.getDouble(2))).toMap
     negs.foreach { case (a, _, score, rank) =>
       assert(global((a, rank)) >= score,
@@ -207,13 +207,13 @@ class SimilaritySpec extends SparkSpec {
     assert(s1 == s2)
   }
 
-  test("bruteForceTopKAgg equals the window form row-for-row (bounded-heap Aggregator)") {
+  test("bruteForceTopKHeap equals the window form row-for-row (topk_structs heap)") {
     val e = Tables.table(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 10)
     val win = Similarity.bruteForceTopK(e, q, 5)
       .select("query_id", "vec_id", "score", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val agg = Similarity.bruteForceTopKAgg(e, q, 5)
+    val agg = Similarity.bruteForceTopKHeap(e, q, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(agg == win, s"agg path diverged: ${agg.diff(win).take(5)} vs ${win.diff(agg).take(5)}")
   }

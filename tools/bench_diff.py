@@ -39,7 +39,10 @@ two-way split, which mislabeled moved medians as "median clean"):
       back inside the threshold prints DRIFT-adjudicated (host) and
       passes; a solo median still over escalates to REGRESSION; no solo
       data leaves the DRIFT unadjudicated and FAILS the gate -- the
-      receipt is mandatory, not optional.
+      receipt is mandatory, not optional. With --solo-base a DRIFT gets
+      the REGRESSION class's same-code A/B (one shared ladder: >= 2 runs
+      per side and a positive solo-base median, or the flag stands),
+      except that a PARTIAL reproduction clears it as a watch item.
   HOST-STALL (spikes k/n, median clean) -- one-off spikes: some run(s)
       exceed the threshold but the median does not. Not a code problem;
       re-run on a quiet box instead of re-litigating.
@@ -84,33 +87,83 @@ def report_errors_contention(label, runs):
             print(f"{tag} CONTENDED: {note}")
 
 
+def per_run_values(runs):
+    per_run = {}
+    for b in runs:
+        for q, v in b.get("queries", {}).items():
+            per_run.setdefault(q, []).append(v)
+    return per_run
+
+
 def medians(runs):
-    keys = set().union(*[set(b.get("queries", {})) for b in runs])
-    return {q: statistics.median([b["queries"][q] for b in runs
-                                  if q in b.get("queries", {})])
-            for q in keys}
+    return {q: statistics.median(v) for q, v in per_run_values(runs).items()}
 
 
-def main():
-    argv = sys.argv[1:]
-    opts = dict(a.lstrip("-").split("=", 1) if "=" in a else (a.lstrip("-"), True)
-                for a in argv if a.startswith("--") and a != "--vs")
-    ratio = float(opts.get("ratio", 1.5))
-    min_sec = float(opts.get("min-sec", 0.5))
-    drift_ratio = float(opts.get("drift-ratio", 1.25))
-    paths = [a for a in argv if not a.startswith("--") or a == "--vs"]
-    if "--vs" in paths:
-        cut = paths.index("--vs")
-        base_paths, new_paths = paths[:cut], paths[cut + 1:]
-    else:
-        if len(paths) != 2:
-            raise SystemExit(__doc__)
-        base_paths, new_paths = paths[:1], paths[1:]
-    if not base_paths or not new_paths:
-        raise SystemExit(__doc__)
+def fmt_runs(vals):
+    return "[" + ", ".join(f"{v:.2f}" for v in vals) + "]"
 
-    base_runs = [load(p) for p in base_paths]
-    new_runs = [load(p) for p in new_paths]
+
+# r18: the same-code A/B adjudication DRIFT gets applies to reproduced
+# REGRESSIONs too, with the SAME criteria -- previously a host-window
+# regression that reproduced in-suite could only be cleared by hand
+# (the r17 judge did exactly that for 45 flags). Solo-new vs
+# solo-base on the same box IS the stronger evidence: if the flagged
+# query runs wash-or-faster on current code interleaved against the
+# base worktree, the in-suite flag was the window, not the code.
+# Requires BOTH receipts (--solo and --solo-base); a lone --solo is
+# not accepted for a REGRESSION (a suite-vs-solo comparison can hide a
+# real regression behind the session-cache asymmetry, so only the
+# symmetric A/B may clear a reproduced flag).
+# r19 (ADVICE r18): clearing via the solo A/B needs >= 2 interleaved
+# runs per side (a 1v1 solo cell is one host-window sample, not an
+# A/B) and prints the per-run values. A non-positive solo-base median
+# is a corrupt receipt and clears nothing either. Caveat printed with
+# every solo clear: the solo cell runs only the flagged queries, so a
+# regression that manifests only under full-suite context (memory
+# pressure, session-cache lifecycle like the r5 q80/q81 tail) runs
+# clean solo on both sides and is NOT clearable this way -- corroborate
+# suite-context suspects with suite-level receipts (gc_sec,
+# storage-pool occupancy).
+SOLO_CTX_CAVEAT = ("(caveat: solo cells can't clear suite-context-"
+                   "dependent regressions -- see --help)")
+
+
+def solo_ab(kind, head, r, sr, sbr, ratio, drift_ratio, min_sec):
+    """The solo same-code A/B ladder for one flagged query of class
+    `kind` ("REGRESSION" or "DRIFT"): `sr`/`sbr` are the per-run solo
+    values on new/base code. Returns (flag_stands, verdict_line). A
+    PARTIAL reproduction (drift-ratio <= s/sb < gate) corroborates a
+    REGRESSION (it stands) but clears a DRIFT as a watch item."""
+    if len(sr) < 2 or len(sbr) < 2:
+        return True, (f"{head} -- solo receipts too thin to adjudicate "
+                      f"(need >= 2 runs/side, have {len(sr)}/{len(sbr)}): "
+                      f"{kind} stands")
+    s, sb = statistics.median(sr), statistics.median(sbr)
+    detail = (f"solo new {s:.2f}s {fmt_runs(sr)} vs solo base-code "
+              f"{sb:.2f}s {fmt_runs(sbr)}")
+    if sb <= 0:
+        return True, (f"{head} -- solo base-code median is not positive "
+                      f"({detail}): receipt unusable, {kind} stands")
+    if s / sb >= min(r, ratio) and s - sb >= min_sec:
+        return True, f"{head} -- same-code A/B CONFIRMS ({detail}): REGRESSION"
+    if s / sb >= drift_ratio and s - sb >= min_sec:
+        if kind == "REGRESSION":
+            return True, (f"{head} -- same-code A/B PARTIALLY reproduces "
+                          f"({detail}, {s / sb:.2f}x -- between drift-ratio "
+                          f"and gate): corroborating evidence, REGRESSION "
+                          f"stands")
+        return False, (f"{head} -- same-code A/B PARTIAL ({detail}, "
+                       f"{s / sb:.2f}x -- between drift-ratio and gate): "
+                       f"cleared as drift, but treat as a watch item")
+    return False, (f"{head} -- same-code A/B clean ({detail}): "
+                   f"adjudicated host drift {SOLO_CTX_CAVEAT}")
+
+
+def compare(base_runs, new_runs, solo=(), solo_base=(), ratio=1.5,
+            min_sec=0.5, drift_ratio=1.25, out=print):
+    """Median-mode verdicts over in-memory receipts (one dict per run;
+    `solo`/`solo-base` are the --solo/--solo-base run receipts). Prints
+    through `out`; returns (regression_failures, drift_failures)."""
     report_errors_contention("BASE", base_runs)
     report_errors_contention("NEW", new_runs)
     bq, nq = medians(base_runs), medians(new_runs)
@@ -118,33 +171,18 @@ def main():
     added = sorted(set(nq) - set(bq))
     removed = sorted(set(bq) - set(nq))
     if added:
-        print(f"added ({len(added)}): {', '.join(added)}")
+        out(f"added ({len(added)}): {', '.join(added)}")
     if removed:
-        print(f"removed ({len(removed)}): {', '.join(removed)}")
+        out(f"removed ({len(removed)}): {', '.join(removed)}")
 
-    def solo_dir(key):
-        if key in opts and opts[key] is not True:
-            files = sorted(glob.glob(os.path.join(opts[key], "run*.json")))
-            if not files:
-                raise SystemExit(f"--{key}={opts[key]}: no run*.json receipts")
-            runs = [load(p) for p in files]
-            per_run = {}
-            for b in runs:
-                for q, v in b.get("queries", {}).items():
-                    per_run.setdefault(q, []).append(v)
-            return medians(runs), per_run
-        return {}, {}
-    solo_meds, solo_runs = solo_dir("solo")
+    solo_meds = medians(solo)
     # --solo-base: the SAME queries run solo with the BASE code on the
     # SAME box (git worktree at the base commit). Solo runs pay costs a
     # full-suite run amortizes elsewhere (session caches), so solo-new
     # vs suite-base is apples-to-oranges; solo-new vs solo-base is the
     # same-code-shape A/B that actually separates box drift from a code
     # regression. Preferred over the plain solo comparison when present.
-    solo_base_meds, solo_base_runs = solo_dir("solo-base")
-
-    def fmt_runs(vals):
-        return "[" + ", ".join(f"{v:.2f}" for v in vals) + "]"
+    solo_runs, solo_base_runs = per_run_values(solo), per_run_values(solo_base)
 
     shared = sorted(set(bq) & set(nq))
     reproduced, drifts, stalls, improvements = [], [], [], []
@@ -167,102 +205,86 @@ def main():
             stalls.append((max(per_run) / b, q, b, n, over, len(per_run)))
         elif n > 0 and b / n >= ratio and b - n >= min_sec:
             improvements.append((b / n, q, b, n))
-    # r18: the same-code A/B adjudication DRIFT gets applies to reproduced
-    # REGRESSIONs too, with the SAME criteria — previously a host-window
-    # regression that reproduced in-suite could only be cleared by hand
-    # (the r17 judge did exactly that for 45 flags). Solo-new vs
-    # solo-base on the same box IS the stronger evidence: if the flagged
-    # query runs wash-or-faster on current code interleaved against the
-    # base worktree, the in-suite flag was the window, not the code.
-    # Requires BOTH receipts (--solo and --solo-base); a lone --solo is
-    # not accepted here (a suite-vs-solo comparison can hide a real
-    # regression behind the session-cache asymmetry, so only the
-    # symmetric A/B may clear a reproduced flag).
-    # r19 (ADVICE r18): clearing a reproduced flag via the solo A/B needs
-    # >= 2 interleaved runs per side (a 1v1 solo cell is one host-window
-    # sample, not an A/B), prints the per-run values, and a PARTIAL solo
-    # reproduction (drift_ratio <= s/sb < gate) is corroborating evidence,
-    # not "clean" -- it keeps the flag. Caveat printed with every solo
-    # clear: the solo cell runs only the flagged queries, so a regression
-    # that manifests only under full-suite context (memory pressure,
-    # session-cache lifecycle like the r5 q80/q81 tail) runs clean solo on
-    # both sides and is NOT clearable this way -- corroborate suite-context
-    # suspects with suite-level receipts (gc_sec, storage-pool occupancy).
-    SOLO_CTX_CAVEAT = ("(caveat: solo cells can't clear suite-context-"
-                       "dependent regressions -- see --help)")
     regression_failures = []
     for r, q, b, n, k, t in sorted(reproduced, reverse=True):
         head = f"REGRESSION {q}: {b:.2f}s -> {n:.2f}s ({r:.1f}x, reproduces {k}/{t})"
-        if q in solo_meds and q in solo_base_meds:
-            s, sb = solo_meds[q], solo_base_meds[q]
-            sr, sbr = solo_runs.get(q, []), solo_base_runs.get(q, [])
-            detail = (f"solo new {s:.2f}s {fmt_runs(sr)} vs solo base-code "
-                      f"{sb:.2f}s {fmt_runs(sbr)}")
-            if len(sr) < 2 or len(sbr) < 2:
+        if q in solo_runs and q in solo_base_runs:
+            stands, line = solo_ab("REGRESSION", head, r, solo_runs[q],
+                                   solo_base_runs[q], ratio, drift_ratio, min_sec)
+            if stands:
                 regression_failures.append(q)
-                print(f"{head} -- solo receipts too thin to clear a "
-                      f"reproduced flag (need >= 2 runs/side, have "
-                      f"{len(sr)}/{len(sbr)}): REGRESSION stands")
-            elif sb > 0 and s / sb >= min(r, ratio) and s - sb >= min_sec:
-                regression_failures.append(q)
-                print(f"{head} -- same-code A/B CONFIRMS ({detail}): REGRESSION")
-            elif sb > 0 and s / sb >= drift_ratio and s - sb >= min_sec:
-                regression_failures.append(q)
-                print(f"{head} -- same-code A/B PARTIALLY reproduces "
-                      f"({detail}, {s / sb:.2f}x -- between drift-ratio and "
-                      f"gate): corroborating evidence, REGRESSION stands")
-            else:
-                print(f"{head} -- same-code A/B clean ({detail}): "
-                      f"adjudicated host drift {SOLO_CTX_CAVEAT}")
+            out(line)
         else:
             regression_failures.append(q)
-            print(head)
+            out(head)
     drift_failures = []
     for r, q, b, n, k, t in sorted(drifts, reverse=True):
         head = (f"DRIFT {q}: median {b:.2f}s -> {n:.2f}s "
                 f"({r:.1f}x, reproduces only {k}/{t})")
-        if q in solo_meds and q in solo_base_meds:
-            s, sb = solo_meds[q], solo_base_meds[q]
-            sr, sbr = solo_runs.get(q, []), solo_base_runs.get(q, [])
-            detail = (f"solo new {s:.2f}s {fmt_runs(sr)} vs solo base-code "
-                      f"{sb:.2f}s {fmt_runs(sbr)}")
-            if sb > 0 and s / sb >= min(r, ratio) and s - sb >= min_sec:
+        if q in solo_runs and q in solo_base_runs:
+            stands, line = solo_ab("DRIFT", head, r, solo_runs[q],
+                                   solo_base_runs[q], ratio, drift_ratio, min_sec)
+            if stands:
                 drift_failures.append(q)
-                print(f"{head} -- same-code A/B CONFIRMS ({detail}): REGRESSION")
-            elif sb > 0 and s / sb >= drift_ratio and s - sb >= min_sec:
-                print(f"{head} -- same-code A/B PARTIAL ({detail}, "
-                      f"{s / sb:.2f}x -- between drift-ratio and gate): "
-                      f"cleared as drift, but treat as a watch item")
-            else:
-                print(f"{head} -- same-code A/B clean ({detail}): "
-                      f"adjudicated host drift {SOLO_CTX_CAVEAT}")
+            out(line)
         elif q in solo_meds:
             s = solo_meds[q]
             if b > 0 and s / b >= min(r, ratio) and s - b >= min_sec:
                 drift_failures.append(q)
-                print(f"{head} -- solo receipt CONFIRMS ({s:.2f}s vs base "
-                      f"{b:.2f}s): REGRESSION (caveat: a solo run pays "
-                      f"session-cache fills the suite amortizes -- prefer "
-                      f"--solo-base for a same-code A/B)")
+                out(f"{head} -- solo receipt CONFIRMS ({s:.2f}s vs base "
+                    f"{b:.2f}s): REGRESSION (caveat: a solo run pays "
+                    f"session-cache fills the suite amortizes -- prefer "
+                    f"--solo-base for a same-code A/B)")
             else:
-                print(f"{head} -- solo receipt clean ({s:.2f}s vs base "
-                      f"{b:.2f}s): adjudicated host drift")
+                out(f"{head} -- solo receipt clean ({s:.2f}s vs base "
+                    f"{b:.2f}s): adjudicated host drift")
         else:
             drift_failures.append(q)
-            print(f"{head} -- UNADJUDICATED: no solo receipt (--solo=<dir> "
-                  f"with a quiet SPARK_GRAFT_BENCH_ONLY={q} run)")
+            out(f"{head} -- UNADJUDICATED: no solo receipt (--solo=<dir> "
+                f"with a quiet SPARK_GRAFT_BENCH_ONLY={q} run)")
     for r, q, b, n, k, t in sorted(stalls, reverse=True):
-        print(f"HOST-STALL {q}: spikes {k}/{t}; median {n:.2f}s vs base "
-              f"{b:.2f}s ({n / b:.2f}x, under the gate, runs straddle base) "
-              f"-- re-run quiet, not a code verdict")
+        out(f"HOST-STALL {q}: spikes {k}/{t}; median {n:.2f}s vs base "
+            f"{b:.2f}s ({n / b:.2f}x, under the gate, runs straddle base) "
+            f"-- re-run quiet, not a code verdict")
     for r, q, b, n in sorted(improvements, reverse=True):
-        print(f"improved   {q}: {b:.2f}s -> {n:.2f}s ({r:.1f}x faster)")
+        out(f"improved   {q}: {b:.2f}s -> {n:.2f}s ({r:.1f}x faster)")
 
     tb = sum(bq[q] for q in shared)
     tn = sum(nq[q] for q in shared)
-    print(f"shared {len(shared)} queries ({len(base_runs)} base / "
-          f"{len(new_runs)} new runs, medians): base {tb:.1f}s -> new {tn:.1f}s "
-          f"({tn / tb:.2f}x)" if tb else "no shared queries")
+    out(f"shared {len(shared)} queries ({len(base_runs)} base / "
+        f"{len(new_runs)} new runs, medians): base {tb:.1f}s -> new {tn:.1f}s "
+        f"({tn / tb:.2f}x)" if tb else "no shared queries")
+    return regression_failures, drift_failures
+
+
+def main():
+    argv = sys.argv[1:]
+    opts = dict(a.lstrip("-").split("=", 1) if "=" in a else (a.lstrip("-"), True)
+                for a in argv if a.startswith("--") and a != "--vs")
+    paths = [a for a in argv if not a.startswith("--") or a == "--vs"]
+    if "--vs" in paths:
+        cut = paths.index("--vs")
+        base_paths, new_paths = paths[:cut], paths[cut + 1:]
+    else:
+        if len(paths) != 2:
+            raise SystemExit(__doc__)
+        base_paths, new_paths = paths[:1], paths[1:]
+    if not base_paths or not new_paths:
+        raise SystemExit(__doc__)
+
+    def solo_dir(key):
+        if key in opts and opts[key] is not True:
+            files = sorted(glob.glob(os.path.join(opts[key], "run*.json")))
+            if not files:
+                raise SystemExit(f"--{key}={opts[key]}: no run*.json receipts")
+            return [load(p) for p in files]
+        return []
+    regression_failures, drift_failures = compare(
+        [load(p) for p in base_paths], [load(p) for p in new_paths],
+        solo=solo_dir("solo"), solo_base=solo_dir("solo-base"),
+        ratio=float(opts.get("ratio", 1.5)),
+        min_sec=float(opts.get("min-sec", 0.5)),
+        drift_ratio=float(opts.get("drift-ratio", 1.25)))
     sys.exit(1 if (regression_failures or drift_failures) else 0)
 
 
