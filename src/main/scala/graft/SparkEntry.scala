@@ -23,7 +23,10 @@ object SparkEntry {
     * count, money-exact sums).
     */
   def entry(spark: SparkSession): DataFrame =
-    Reports.yearInvoices(spark, "/root/testdata/sf0.001")
+    Reports.yearInvoices(spark, EntryDir)
+
+  /** The fixture directory [[entry]] reads. */
+  val EntryDir = "/root/testdata/sf0.001"
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

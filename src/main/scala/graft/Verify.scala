@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [comma-separated name filter (local iteration)]
+    // args: <sfDir> <outDir> [comma-separated name filter (local
+    // iteration; exact names, a trailing `*` for a prefix)]
     // the docs-table override is a bench-only control knob; a Verify run
     // with it set would compare Heaps-corpus results against a
     // documents-table oracle and fail (or worse, half-pass) with no
@@ -18,52 +18,23 @@ object Verify {
     }
     val sfDir  = args(0)
     val outDir = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has TIMESTAMP(NANOS); read as long, converted in io.Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local[32] with 128 GiB: 10MB default starves obvious broadcasts
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2).map(Harness.names)
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    // Sorted like Bench: shared caches fill on their owning query and are
-    // released after their last q01..q93-order consumer, so the storage
-    // pool never squeezes execution memory for the tail queries.
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        graft.queries.QueryCatalog.cacheReleaseAfter.get(name)
-          .foreach(_.foreach(release => release(spark, sfDir)))
-        // result fully written: drop its output-checkpoint blocks
-        graft.dedup.Checkpoints.releaseOutputs()
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val failed = Harness.runSorted(spark, sfDir, only) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    }.collect { case Harness.Outcome(name, _, Some(e)) =>
+      System.err.println(s"[verify] $name failed: $e")
+      name
+    }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -162,8 +162,9 @@ object Tables {
     * skewed values, coalescing small ones — scale-adaptive, no tuned
     * constant), so each task writes a handful of directories and file
     * sizes land near `spark.sql.adaptive.advisoryPartitionSizeInBytes`.
-    * Measured at sf0.1 (tools/AbPartitionedWrite): 5.5-19.5s flat vs
-    * 1.7-3.4s rebalanced for the q165 fact layout, identical 80 files.
+    * Measured at sf0.1, 3 runs each (receipt:
+    * tools/bench_r18/AB_PARTITIONED_WRITE.txt): 2.4-10.3s flat vs
+    * 1.3-2.0s rebalanced for the q165 fact layout, identical 80 files.
     */
   def overwritePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.hint("REBALANCE", partitionCols.map(org.apache.spark.sql.functions.col): _*)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -333,6 +333,11 @@ object ShapeDispatch {
     statsCache.invalidate(df.sparkSession,
       statsCacheKey(df, groupCols, valueCols))
 
+  /** Drop every memoized probe entry of session `s` — the memo's
+    * release in [[graft.queries.QueryCatalog.sessionCaches]] (its keys
+    * are plans, not directories). */
+  def invalidateSessionStats(s: SparkSession): Unit = statsCache.invalidateSession(s)
+
   /** The stats source the auto dials use: catalog stats ONLY when
     * [[trustCatalog]] holds for the statistic the dial decides on
     * (rows-per-group, or the distinct bound when `byDistinct`),
@@ -350,10 +355,11 @@ object ShapeDispatch {
       case _ =>
         def probed = { probeInvocations.incrementAndGet()
           probeStatsMulti(df, groupCols, valueCols) }
-        if (statsCacheOn(df))
+        if (statsCacheOn(df)) {
+          graft.queries.CacheAccess.record("shapeStats")
           statsCache.getOrElseUpdate(df.sparkSession,
             statsCacheKey(df, groupCols, valueCols))(probed)
-        else probed
+        } else probed
     }
   }
 

@@ -1003,7 +1003,7 @@ object QueryCatalog {
       s"cache $name: an early release at/after the last consumer is just the release")
   }
 
-  /** The six session caches and the queries that read them. Membership
+  /** The session caches and the queries that read them. Membership
     * is verified by CacheLifecycleSpec against recorded getter accesses
     * on a cold sorted sweep — edit the sets here when adding a consumer;
     * the release schedule follows.
@@ -1058,7 +1058,13 @@ object QueryCatalog {
       invalidate = (s, d) => {
         invalidatePqIndex(s, d, trained = false)
         invalidatePqIndex(s, d, trained = true)
-      }))
+      }),
+    // the auto dials' probe memo, keyed by input plan rather than
+    // directory: its release drops the whole session's memo
+    SessionCache("shapeStats",
+      consumers = Set("q129_equidepth_hist", "q137_top_parts_per_flag",
+        "q36_percentiles", "q53_rank_functions"),
+      invalidate = (s, _) => graft.ops.ShapeDispatch.invalidateSessionStats(s)))
 
   /** Derived release schedule: query name → releases to run after it
     * (each cache's last sorted consumer, plus declared early points).

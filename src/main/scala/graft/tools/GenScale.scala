@@ -142,13 +142,7 @@ object GenScale {
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
     val nDocs = 5000L * replicas
     val nVecs = 2000L * replicas
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(16)
     import spark.implicits._
 
     def write(df: => DataFrame, name: String): Unit =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Diagnostic main (not part of the library surface).
   *
@@ -9,11 +9,11 @@ import org.apache.spark.sql.SparkSession
   * Writes the FULL `.explain("formatted")` output of each named driver
   * query to `<outDir>/<query>_<suffix>.txt` — the optimization rounds'
   * plan-evidence files (plans/rN/<q>_{before,after}.txt). Runs
-  * under the same session shape as Bench (local[16] default, 16 shuffle
-  * partitions, 64m broadcast threshold) so the captured plan is the
-  * plan the bench executes, not a different-config cousin. Queries that
-  * do eager work at construction (localCheckpoint loops) execute that
-  * work here; the dump is the final frame's plan either way.
+  * under Bench's session ([[graft.Harness.session]], local[16] default)
+  * so the captured plan is the plan the bench executes, not a
+  * different-config cousin. Queries that do eager work at construction
+  * (localCheckpoint loops) execute that work here; the dump is the
+  * final frame's plan either way.
   *
   * With `--executed` (r19, VERDICT r18 item 1): each query is first
   * driven to completion through its own QueryExecution
@@ -29,25 +29,19 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <q1,q2,...> [sfDir] [--executed]")
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val names = Harness.names(args(2))
     val executed = args.contains("--executed")
     val dir = args.drop(3).filterNot(_.startsWith("--")).headOption
       .getOrElse("/root/testdata/sf0.1")
-    val threads = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_THREADS", "16").toInt)
-    val spark = SparkSession.builder().master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    Harness.requireKnown(names)
+    val spark = Harness.session(Harness.threads(defaultCpus = 16))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
-    names.foreach { q =>
-      val fn = graft.SparkEntry.queries.getOrElse(q,
-        sys.error(s"unknown query $q"))
-      val qe = fn(spark, dir).queryExecution
+    // sorted like Bench, releasing each query's caches and output
+    // checkpoints after its dump: a later query's final plan is then
+    // captured under the storage pressure the bench gives it
+    val failed = Harness.runSorted(spark, dir, Some(names)) { (q, df) =>
+      val qe = df.queryExecution
       if (executed) {
         // Execute THIS QueryExecution (a noop write would plan a separate
         // write command and leave this one's AdaptiveSparkPlan unfinalized).
@@ -59,7 +53,11 @@ object PlanDump {
       java.nio.file.Files.writeString(outDir.resolve(s"${q}_$suffix.txt"), txt)
       println(s"[plandump] wrote ${q}_$suffix.txt (${txt.length} chars)" +
         (if (executed) s" isFinalPlan=${txt.contains("isFinalPlan=true")}" else ""))
+    }.collect { case Harness.Outcome(q, _, Some(e)) =>
+      System.err.println(s"[plandump] $q failed: $e")
+      q
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Forked-JVM probe for the session-cache lifecycle (driven by
   * SessionStopSpec — it must run in its own JVM because it STOPS the
@@ -26,20 +26,10 @@ object SessionStopProbe {
 
   private def check(cond: Boolean, msg: => String): Unit = if (!cond) fail(msg)
 
-  private def newSession(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("session-stop-probe")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
 
-    val s1 = newSession()
-    s1.sparkContext.setLogLevel("WARN")
+    val s1 = Harness.session(4)
     graft.model.Star.build(s1, sfDir).dimCustomer.count()
     graft.queries.QueryCatalog.decontamination(s1, sfDir).count()
     check(graft.util.SessionScoped.totalEntries >= 2,
@@ -57,8 +47,7 @@ object SessionStopProbe {
       s"context stop must evict all entries; ${graft.util.SessionScoped.totalEntries} remain")
 
     // sequential second context in the same JVM: starts clean, rebuilds
-    val s2 = newSession()
-    s2.sparkContext.setLogLevel("WARN")
+    val s2 = Harness.session(4)
     check(s2 ne s1, "getOrCreate after stop must make a fresh session")
     check(s2.sparkContext.getPersistentRDDs.isEmpty,
       "a fresh context must start with no persisted RDDs")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main: print [[graft.ops.ShapeDispatch]]'s probe statistics
@@ -24,11 +24,7 @@ import org.apache.spark.sql.functions._
 object ShapeChoice {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sd = graft.ops.ShapeDispatch
     for (dir <- dirs) {

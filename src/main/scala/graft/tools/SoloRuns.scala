@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
 /** Diagnostic main: steady-state per-query timing — run named catalog
   * queries N times each INSIDE one JVM (same session/warmup/caches as
@@ -16,21 +16,11 @@ object SoloRuns {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val names = args.drop(2).headOption
-      .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Seq("q06_fct_line_value"))
-    val threads = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_THREADS", "16").toInt)
-    val spark = SparkSession.builder().master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val names = args.lift(2).map(Harness.names).getOrElse(Seq("q06_fct_line_value"))
+    Harness.requireKnown(names)
+    val spark = Harness.session(Harness.threads(defaultCpus = 16))
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("md5(cast(id as string)) h").groupBy("h").count().count()
-    spark.read.parquet(s"$dir/lineitem.parquet").limit(1000).count()
+    Harness.warmUp(spark, dir)
 
     val cpuNanos = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -61,31 +51,34 @@ object SoloRuns {
       prev
     }
 
-    val catalog = graft.SparkEntry.queries
+    var failures = 0
     for (name <- names) {
-      val fn = catalog.getOrElse(name,
-        sys.error(s"unknown query $name; known: ${catalog.keys.toSeq.sorted.take(5)}..."))
       var best = Double.MaxValue; var bestCpu = Double.MaxValue
       for (r <- 1 to runs) {
-        val c0 = settledCpu(s"q=$name run=$r start"); val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val c0 = settledCpu(s"q=$name run=$r start")
+        // one-query sweep: the harness releases this query's caches after
+        // every run, so each iteration re-pays the fill the bench charges it
+        val run = Harness.runSorted(spark, dir, Some(Seq(name))) { (_, df) =>
+          df.write.format("noop").mode("overwrite").save()
+        }.head
         val cpu = (settledCpu(s"q=$name run=$r end") - c0) / 1e9
-        // release per-query caches exactly as Bench does, so every
-        // iteration re-pays the fill the bench charges this query
-        graft.queries.QueryCatalog.cacheReleaseAfter.get(name)
-          .foreach(_.foreach(release => release(spark, dir)))
-        graft.dedup.Checkpoints.releaseOutputs()
-        if (r > 1) { best = math.min(best, sec); bestCpu = math.min(bestCpu, cpu) }
-        println(f"[solo] q=$name run=$r wall=$sec%.2fs cpu=$cpu%.1fs")
+        run.error match {
+          case Some(e) =>
+            failures += 1
+            println(s"[solo] q=$name run=$r FAILED: $e")
+          case None =>
+            if (r > 1) { best = math.min(best, run.seconds); bestCpu = math.min(bestCpu, cpu) }
+            println(f"[solo] q=$name run=$r wall=${run.seconds}%.2fs cpu=$cpu%.1fs")
+        }
       }
-      // runs < 2 leaves no steady-state sample: skip the line rather than
-      // print Double.MaxValue garbage (r18 ADVICE)
-      if (runs >= 2)
+      // no successful run after the first leaves no steady-state sample:
+      // skip the line rather than print Double.MaxValue garbage (r18 ADVICE)
+      if (best < Double.MaxValue)
         println(f"[solo] q=$name STEADY wall=$best%.2fs cpu=$bestCpu%.1fs (min over runs 2..$runs)")
       else
-        println(s"[solo] q=$name STEADY unavailable (runs=$runs < 2)")
+        println(s"[solo] q=$name STEADY unavailable (no successful run among 2..$runs)")
     }
     spark.stop()
+    if (failures > 0) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -33,10 +33,7 @@ object StreamTtlProbe {
   def main(args: Array[String]): Unit = {
     val nBatches = if (args.length > 0) args(0).toInt else 40
     val perBatch = if (args.length > 1) args(1).toInt else 50
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.streaming.EventStreams

@@ -68,6 +68,14 @@ object SessionScoped {
     def invalidate(s: SparkSession, key: String): Unit =
       entries.remove((SessionScoped.uuidOf(s), key)).foreach { case (_, v) => release(v) }
 
+    /** Remove and release every entry of session `s`, whatever its key
+      * (the invalidation for caches not keyed by directory). */
+    def invalidateSession(s: SparkSession): Unit = {
+      val id = SessionScoped.uuidOf(s)
+      entries.keys.filter(_._1 == id)
+        .foreach(k => entries.remove(k).foreach { case (_, v) => release(v) })
+    }
+
     def size: Int = entries.size
 
     private[SessionScoped] def dropContext(sc: SparkContext): Unit =

@@ -68,6 +68,16 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("a full release leaves no live session-cache entry after the " +
+       "auto-dial q53 (its shapeStats probe memo included)") {
+    QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
+    SparkEntry.queries("q53_rank_functions")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    assert(graft.util.SessionScoped.totalEntries > 0)
+    QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
+    assert(graft.util.SessionScoped.totalEntries == 0)
+  }
+
   test("LSH-family driver queries leak ZERO storage blocks once released " +
        "(q19/q25/q54/q89 executed end-to-end)") {
     // The r10 verdict's cache-pressure-roulette note: per-call checkpoint
