@@ -51,7 +51,7 @@ object Harness {
     * query doesn't absorb session start-up (~5-7s otherwise). */
   def warmUp(spark: SparkSession, dir: String): Unit = {
     spark.range(100000).selectExpr("md5(cast(id as string)) h").groupBy("h").count().count()
-    spark.read.parquet(s"$dir/lineitem.parquet").limit(1000).count()
+    graft.io.Tables.parquet(spark, s"$dir/lineitem.parquet").limit(1000).count()
   }
 
   /** Comma-separated query names: empty tokens from stray commas are

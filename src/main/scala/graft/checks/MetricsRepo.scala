@@ -36,7 +36,7 @@ object MetricsRepo {
 
   /** The full metric log: (run_seq, run_id, check, metric, passed). */
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.io.Tables.parquet(spark, path)
 
   /** Append every micro-batch's observed gate metrics from a finished or
     * running [[org.apache.spark.sql.streaming.StreamingQuery]]'s progress

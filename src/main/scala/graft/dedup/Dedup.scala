@@ -473,9 +473,9 @@ object Dedup {
   }
 
   /** Verification-shape plan for [[verifyPrefixCandidates]], computed ONCE
-    * from the checkpointed token/prefix frames so [[ssJoinPairsAuto]] can
-    * make its escape decision on the SAME numbers the pair-space guard
-    * acts on (two bookkeeping aggregates; no candidate materializes). */
+    * from the checkpointed prefix frame so [[ssJoinPairsAuto]] can make
+    * its escape decision on the SAME numbers the pair-space guard acts on
+    * (one bookkeeping aggregate; no candidate materializes). */
   private[graft] final case class VerifyPlan(idIsLong: Boolean,
                                              takeBroadcast: Boolean,
                                              estPairs: Double,
@@ -492,11 +492,29 @@ object Dedup {
     require(idIsLong || !broadcastVerify.contains(true),
       s"prefixFilterPairs(broadcastVerify=true): the id column must be " +
         s"LongType for the broadcast index, got ${stoks.schema("id").dataType.sql}")
-    // one bookkeeping agg over the checkpointed token table serves both
-    // the broadcast budget gate and the pair-space regime guard
-    val tokEst = stoks.agg(sum(col("sz")), count(lit(1))).head()
-    val totalTokens = if (tokEst.isNullAt(0)) 0L else tokEst.getLong(0)
-    val nDocs = tokEst.getLong(1)
+    // ONE bookkeeping aggregate over the prefix checkpoint serves both the
+    // broadcast budget gate and the pair-space regime guard. Every token-
+    // table document has exactly one rk = 1 prefix row carrying its sz
+    // (the prefix length sz − ⌈num·sz/den⌉ + 1 is at least 1 because
+    // num ≤ den), so the rk = 1 rows count the documents and sum their
+    // tokens inside the per-tokid grouping the pair estimate needs.
+    //
+    // Pair-space estimate (r15 — the regime guard's input), BEFORE any
+    // candidate materializes: the bucket join's output is Σ_t idxCnt_t·
+    // cnt_t, upper-bounded by Σ_t cnt_t·(cnt_t−1)/2 over prefix-token
+    // buckets. Double arithmetic: this is a regime detector, not an
+    // accountant, and the sums would overflow a long exactly where the
+    // guard matters most.
+    val est = prefix.groupBy("tokid")
+      .agg(count(lit(1)).as("__c"),
+        count(when(col("rk") === 1, lit(1))).as("__docs"),
+        sum(when(col("rk") === 1, col("sz"))).as("__toks"))
+      .agg(sum(expr("__c * (__c - 1d) / 2.0d")), sum(col("__toks")),
+        sum(col("__docs")))
+      .head()
+    val estPairs = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
+    val totalTokens = if (est.isNullAt(1)) 0L else est.getLong(1)
+    val nDocs = if (est.isNullAt(2)) 0L else est.getLong(2)
     val takeBroadcast = broadcastVerify.getOrElse {
       val bytes = totalTokens * 8L +
         nDocs * 96L // per-entry map + array-header overhead
@@ -511,17 +529,6 @@ object Dedup {
       // the caller owns the sizing.
       val driverCap = Runtime.getRuntime.maxMemory / 4
       idIsLong && bytes <= math.min(cap, driverCap)
-    }
-    // ---- pair-space estimate (r15 — the regime guard's input) ------------
-    // Estimated BEFORE any candidate materializes, from the prefix
-    // checkpoint: the bucket join's output is Σ_t idxCnt_t·cnt_t, upper-
-    // bounded by Σ_t cnt_t·(cnt_t−1)/2 over prefix-token buckets. Double
-    // arithmetic: this is a regime detector, not an accountant, and the
-    // sums would overflow a long exactly where the guard matters most.
-    val estPairs = {
-      val r = prefix.groupBy("tokid").agg(count(lit(1)).as("__c"))
-        .agg(sum(expr("__c * (__c - 1d) / 2.0d"))).head()
-      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     }
     val avgSz = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
     val estShuffle = pairShuffleBytes(estPairs, avgSz,

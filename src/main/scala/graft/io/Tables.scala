@@ -1,7 +1,14 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
+
+import scala.util.control.NonFatal
 
 /** Source/sink layer (reference SURVEY.md §2.1 S2-S11).
   *
@@ -35,8 +42,83 @@ object Tables {
           sys.env.getOrElse("SPARK_GRAFT_DOCS_TABLE", "documents")
         else name
       if (resolved != name) warnDocsOverrideOnce()
-      normalizeTimestamps(spark.read.parquet(s"$sfDir/$resolved.parquet"))
+      normalizeTimestamps(parquet(spark, s"$sfDir/$resolved.parquet"))
     }
+
+  /** The one parquet open in graft. `spark.read.parquet(path)` infers the
+    * schema by reading ONE footer, but it reads it inside a Spark job
+    * (`SchemaMergeUtils.mergeSchemasInParallel`). In a warm `local[4]`
+    * session on a 4-core VM that is a 77 ms median per open of an sf0.01
+    * table, against 7 ms with the schema supplied (50 opens each). Here
+    * the driver reads that same footer itself and passes the schema in,
+    * so the open starts no job.
+    *
+    * The schema is the one Spark infers: the same file is picked as in
+    * `ParquetUtils.inferSchema` (`_common_metadata`, then `_metadata`,
+    * then the first data file by path, after Spark's hidden-file rule),
+    * read with the footer reader Spark's inference uses, and converted
+    * by `ParquetFileFormat.readSchemaFromFooter` with the converter
+    * settings of `ParquetFileFormat.mergeSchemasInParallel` (IoSpec pins
+    * schema, metadata and rows against Spark's own inference). Anything
+    * else is left to `spark.read.parquet(path)`, so Spark's schema and
+    * errors stay exactly as they are: a path that is neither a file nor
+    * a directory of files only (partitioned layouts, streaming
+    * `_spark_metadata` sinks, a leftover `_temporary`), schema merging
+    * turned on, no data file, and any listing, footer read or conversion
+    * that throws (a missing path or a glob fails its status lookup).
+    * Nothing is cached: every call reads the footer again.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private val Summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+    ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** Spark's listing rule (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) &&
+      !name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val status = fs.getFileStatus(root)
+      val entries: Seq[FileStatus] =
+        if (status.isDirectory) fs.listStatus(root).toSeq else Seq(status)
+      if (entries.exists(_.isDirectory)) None
+      else {
+        val leaves = entries.filterNot(f => hidden(f.getPath.getName))
+          .sortBy(_.getPath.toString)
+        def named(n: String) = leaves.find(_.getPath.getName == n)
+        named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+          .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+          .orElse(leaves.find(f => !Summaries(f.getPath.getName)))
+          .map { f =>
+            val footer = ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, hadoopConf),
+              ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            // the named arguments are the ones mergeSchemasInParallel sets
+            // from the session; the rest keep their defaults there too
+            val converter = new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+            ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+          }
+      }
+    } catch { case NonFatal(_) => None }
+  }
 
   /** The override is a bench-only knob; results under it do NOT match the
     * DuckDB oracle (which always reads `documents`). Warn loudly ONCE per
@@ -85,7 +167,7 @@ object Tables {
     * Both flavors land on the same session-local TimestampType.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = parquet(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // integral `div`, NOT `/1000` — long/long promotes to double, and

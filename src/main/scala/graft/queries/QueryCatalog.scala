@@ -1205,7 +1205,7 @@ object QueryCatalog {
     Tables.writeCsv(src, s"$tmp/csv", encoding = "ISO-8859-1")
     val explicit = Tables.readCsv(s, s"$tmp/csv", Some(src.schema))
     Tables.overwriteParquet(explicit, s"$tmp/parquet")
-    val landed = s.read.parquet(s"$tmp/parquet")
+    val landed = Tables.parquet(s, s"$tmp/parquet")
     val inferredAligned = Tables.readCsv(s, s"$tmp/csv", None)
       .select(src.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .withColumn("inf_hit", lit(true))
@@ -4269,7 +4269,7 @@ object QueryCatalog {
     * oracle replays the same months from the unpartitioned base tables.
     */
   def dppStarScan(s: SparkSession, dir: String): DataFrame = {
-    val fct = s.read.parquet(dppFactPath(s, dir))
+    val fct = Tables.parquet(s, dppFactPath(s, dir))
     // month set straight off the orders scan, NOT the cached dim: the
     // values are identical (dim_datetime is the distinct order
     // timestamps), and AQE's dynamic-pruning filter planner must find a

@@ -250,7 +250,7 @@ object EventStreams {
   def funnelReadout(spark: org.apache.spark.sql.SparkSession, logPath: String,
                     steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "at least one funnel step")
-    val live = spark.read.parquet(logPath)
+    val live = graft.io.Tables.parquet(spark, logPath)
       .groupBy("user_id").agg(max(col("steps_reached")).as("steps_reached"))
     val counts = steps.indices.map(i =>
       sum(when(col("steps_reached") >= i + 1, 1L).otherwise(0L)).as(s"c$i"))

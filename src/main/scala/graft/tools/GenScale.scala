@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.Tables
 
 /** Deterministic sf1 fixture generator — 10× the driver's sf0.1 tables,
   * for the LOCAL scale-validation runs SCALE.md's 100×-claims are
@@ -148,12 +149,12 @@ object GenScale {
     def write(df: => DataFrame, name: String): Unit =
       if (only.forall(_.contains(name))) {
         df.write.mode(SaveMode.Overwrite).parquet(s"$out/$name.parquet")
-        println(s"[gen] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
+        println(s"[gen] $name: ${Tables.parquet(spark, s"$out/$name.parquet").count()} rows")
       } else println(s"[gen] $name: skipped (not in table filter)")
 
     val OFF = 10000000L
     def replicate(name: String, keyCols: Seq[String]): DataFrame = {
-      val base = spark.read.parquet(s"$src/$name.parquet")
+      val base = Tables.parquet(spark, s"$src/$name.parquet")
       (0 until replicas).map { r =>
         keyCols.foldLeft(base) { (d, c) =>
           d.withColumn(c, col(c) + lit(r * OFF)) }
@@ -161,8 +162,8 @@ object GenScale {
     }
 
     // fixed-size dims copy unchanged
-    write(spark.read.parquet(s"$src/region.parquet"), "region")
-    write(spark.read.parquet(s"$src/nation.parquet"), "nation")
+    write(Tables.parquet(spark, s"$src/region.parquet"), "region")
+    write(Tables.parquet(spark, s"$src/nation.parquet"), "nation")
     write(replicate("customer", Seq("c_custkey")), "customer")
     write(replicate("supplier", Seq("s_suppkey")), "supplier")
     write(replicate("part", Seq("p_partkey")), "part")

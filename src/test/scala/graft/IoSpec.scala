@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.io.Tables
@@ -232,5 +233,125 @@ class IoSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lines")
     }
+  }
+
+  // ---- Tables.parquet: Spark's inferred schema without Spark's job ---------
+
+  private def withConf(key: String, value: String)(body: => Unit): Unit = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Same schema (nullability and field metadata included), same JSON
+    * and the same rows as Spark's own inferring read of `path`. */
+  private def assertOpensLikeSpark(path: String, orderBy: String*): Unit = {
+    val ours = Tables.parquet(spark, path)
+    val theirs = spark.read.parquet(path)
+    assert(ours.schema == theirs.schema, path)
+    assert(ours.schema.json == theirs.schema.json, path)
+    def rows(df: DataFrame) =
+      (if (orderBy.isEmpty) df else df.orderBy(orderBy.map(col): _*)).collect().toSeq
+    assert(rows(ours) == rows(theirs), path)
+  }
+
+  /** Jobs started while `body` runs: a sentinel job tagged by a local
+    * property marks the end, so every event before it has been seen. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.witness") == "end"))
+          done.countDown()
+        else if (done.getCount > 0) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.witness", "end")
+      try spark.range(1).collect() finally sc.setLocalProperty("graft.witness", null)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.parquet: every testdata file opens with Spark's inferred schema and rows") {
+    val files = new java.io.File(sf).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(files.size == 10)
+    files.foreach(assertOpensLikeSpark(_))
+    for (nanosAsLong <- Seq("false", "true"))
+      withConf("spark.sql.legacy.parquet.nanosAsLong", nanosAsLong) {
+        assertOpensLikeSpark(s"$sf/events.parquet")
+        val viaTables = Tables.events(spark, sf)
+        assert(viaTables.schema("ts").dataType == TimestampType)
+      }
+  }
+
+  test("Tables.parquet: a Spark-written multi-file directory keeps nullability, metadata and NTZ") {
+    val dir = tmpDir() + "/multi"
+    val varchar = new MetadataBuilder()
+      .putString("__CHAR_VARCHAR_TYPE_STRING", "varchar(5)").build()
+    spark.range(0, 30, 1, 3)
+      .select(col("id").cast("int").as("k"),
+        concat(lit("v"), col("id").cast("string")).as("code", varchar),
+        expr("timestamp_ntz '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, id)").as("at"))
+      .write.parquet(dir)
+    val written = new java.io.File(dir).list().toSeq
+    assert(written.contains("_SUCCESS") &&
+      written.count(n => n.startsWith("part-") && n.endsWith(".parquet")) == 3, written)
+    // the footers carry Spark's own schema (a non-null int, the varchar(5)
+    // metadata on a string column, timestamp_ntz), which inference keeps
+    val footer = spark.read.parquet(dir).schema
+    assert(footer("code").metadata == varchar && footer("at").dataType == TimestampNTZType)
+    assertOpensLikeSpark(dir, "k")
+    assert(jobsStartedBy(Tables.parquet(spark, dir).schema) == 0)
+  }
+
+  test("Tables.parquet: partitioned and streaming-sink directories come back as Spark infers them") {
+    val parted = tmpDir() + "/parted"
+    Tables.overwritePartitioned(
+      Seq((2023, 1L, "a"), (2024, 2L, "b"), (2024, 3L, "c")).toDF("year", "v", "s"),
+      parted, Seq("year"))
+    assertOpensLikeSpark(parted, "v")
+    assert(Tables.parquet(spark, parted).schema.fieldNames.toSeq == Seq("v", "s", "year"))
+
+    // a file sink's _spark_metadata log names the committed files; a
+    // stray parquet file with another schema (sorting first) must not
+    // become the inferred schema
+    implicit val sqlCtx = spark.sqlContext
+    val sink = tmpDir() + "/sink"
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    source.addData(1L, 2L, 3L)
+    val q = source.toDF().withColumnRenamed("value", "n").writeStream
+      .format("parquet").option("checkpointLocation", tmpDir() + "/ckpt").start(sink)
+    try q.processAllAvailable() finally q.stop()
+    val strayDir = tmpDir() + "/stray"
+    Seq("x").toDF("stray").coalesce(1).write.parquet(strayDir)
+    val part = new java.io.File(strayDir).listFiles().find(_.getName.startsWith("part-")).get
+    Files.copy(part.toPath, java.nio.file.Paths.get(sink, "a-stray.parquet"))
+    assertOpensLikeSpark(sink, "n")
+    assert(Tables.parquet(spark, sink).schema.fieldNames.toSeq == Seq("n"))
+  }
+
+  test("Tables.parquet: a missing path raises Spark's own error") {
+    val missing = tmpDir() + "/absent.parquet"
+    val ours = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, missing))
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(missing))
+    assert(ours.getCondition == theirs.getCondition && ours.getCondition == "PATH_NOT_FOUND")
+  }
+
+  test("Tables.table on a testdata file starts no Spark job (the inferring read starts one)") {
+    assert(jobsStartedBy(spark.read.parquet(s"$sf/lineitem.parquet")) >= 1,
+      "the witness must see the inference job of a plain read")
+    assert(jobsStartedBy(Tables.table(spark, sf, "lineitem").schema) == 0)
+    assert(jobsStartedBy(Tables.table(spark, sf, "events").schema) == 0)
   }
 }

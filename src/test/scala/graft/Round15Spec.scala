@@ -199,6 +199,29 @@ class Round15Spec extends SparkSpec {
     assert(Dedup.pairShuffleBytes(0.0, 50.0, broadcastShape = false) == 0.0)
   }
 
+  test("planVerify: one aggregate over the prefix checkpoint, field-for-field the two-aggregate plan") {
+    import spark.implicits._
+    val zipf = Round9Spec.zipfCorpus(spark)
+    val docs = graft.io.Tables.table(spark, sf, "documents")
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    // expected values: the earlier planVerify (a token-table aggregate
+    // plus a per-tokid aggregate over the prefix) on the same fixtures
+    val cases = Seq(
+      ("Round9 zipf 1/2", zipf, 1, 2, false, Dedup.VerifyPlan(true, true, 1718.0, 25.845833333333335, 27488.0)),
+      ("Round9 zipf 1/2 suffix", zipf, 1, 2, true, Dedup.VerifyPlan(true, true, 1718.0, 25.845833333333335, 27488.0)),
+      ("documents 1/2", docs, 1, 2, false, Dedup.VerifyPlan(true, true, 1943.0, 53.806, 31088.0)),
+      ("documents 1/2 suffix", docs, 1, 2, true, Dedup.VerifyPlan(true, true, 1943.0, 53.806, 31088.0)),
+      ("documents 1/1", docs, 1, 1, false, Dedup.VerifyPlan(true, true, 2.0, 53.806, 32.0)),
+      ("documents 4/5", docs, 4, 5, false, Dedup.VerifyPlan(true, true, 317.0, 53.806, 5072.0)),
+      ("empty", empty, 1, 2, false, Dedup.VerifyPlan(true, true, 0.0, 0.0, 0.0)))
+    for ((name, d, num, den, suffix, want) <- cases) {
+      val (_, stoks, prefix, blocks) =
+        Dedup.prefixCandidates(d, "doc_id", "text", num, den, 3, suffix)
+      try assert(Dedup.planVerify(stoks, prefix, None) == want, name)
+      finally graft.dedup.Checkpoints.release(blocks)
+    }
+  }
+
   test("prefixFilterPairs: hard cap fails fast naming the LSH escape; warn cap leaves output intact") {
     val docs = graft.io.Tables.table(spark, sf, "documents")
     withConf(Dedup.MaxPairShuffleBytesKey, "1") {

@@ -95,29 +95,7 @@ class Round9Spec extends SparkSpec {
 
   test("PPJoin+ suffix filter prunes candidates on a Zipf corpus with recall unchanged") {
     import spark.implicits._
-    // power-law vocabulary: dense 3-gram collisions on the head words make
-    // prefix candidates plentiful — the regime the suffix filter exists for
-    val rng = new scala.util.Random(11)
-    val vocabSize = 60
-    def zipfWord(): String = {
-      // inverse-CDF over 1/r weights
-      val z = (1 to vocabSize).map(1.0 / _).sum
-      var u = rng.nextDouble() * z; var r = 1
-      while (u > 1.0 / r && r < vocabSize) { u -= 1.0 / r; r += 1 }
-      s"w$r"
-    }
-    // near-dup families: each base doc spawns variants with 0-6 word
-    // edits, so 3-gram overlap spans the whole Jaccard range — plenty of
-    // prefix candidates above AND below the 0.5 threshold
-    val docs = (0 until 60).flatMap { b =>
-      val baseWords = (1 to 28).map(_ => zipfWord()).toVector
-      (0 until 4).map { v =>
-        val edits = v * 2
-        val w = (0 until edits).foldLeft(baseWords)((acc, _) =>
-          acc.updated(rng.nextInt(acc.size), zipfWord()))
-        ((b * 4 + v + 1).toLong, w.mkString(" "))
-      }
-    }.toDF("doc_id", "text")
+    val docs = Round9Spec.zipfCorpus(spark)
 
     val (candsOff, _, _, blocksOff) = graft.dedup.Dedup.prefixCandidates(
       docs, "doc_id", "text", 1, 2, shingleN = 3, suffixFilter = false)
@@ -218,5 +196,37 @@ class Round9Spec extends SparkSpec {
     assert(r.getLong(r.fieldIndex("n")) == 3L, "n counts complete rows only")
     assert(r.getDouble(r.fieldIndex("slope")) == 10.0)
     assert(r.getDouble(r.fieldIndex("intercept")) == 0.0)
+  }
+}
+
+object Round9Spec {
+
+  /** The suffix-filter fixture: 60 near-dup families of 4 documents
+    * (0-6 word edits each) over a seeded 60-word Zipf vocabulary. */
+  def zipfCorpus(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    // power-law vocabulary: dense 3-gram collisions on the head words make
+    // prefix candidates plentiful — the regime the suffix filter exists for
+    val rng = new scala.util.Random(11)
+    val vocabSize = 60
+    def zipfWord(): String = {
+      // inverse-CDF over 1/r weights
+      val z = (1 to vocabSize).map(1.0 / _).sum
+      var u = rng.nextDouble() * z; var r = 1
+      while (u > 1.0 / r && r < vocabSize) { u -= 1.0 / r; r += 1 }
+      s"w$r"
+    }
+    // near-dup families: each base doc spawns variants with 0-6 word
+    // edits, so 3-gram overlap spans the whole Jaccard range — plenty of
+    // prefix candidates above AND below the 0.5 threshold
+    (0 until 60).flatMap { b =>
+      val baseWords = (1 to 28).map(_ => zipfWord()).toVector
+      (0 until 4).map { v =>
+        val edits = v * 2
+        val w = (0 until edits).foldLeft(baseWords)((acc, _) =>
+          acc.updated(rng.nextInt(acc.size), zipfWord()))
+        ((b * 4 + v + 1).toLong, w.mkString(" "))
+      }
+    }.toDF("doc_id", "text")
   }
 }

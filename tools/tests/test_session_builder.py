@@ -12,22 +12,22 @@ MAIN = os.path.join(ROOT, "src", "main", "scala")
 HARNESS = os.path.join("graft", "Harness.scala")
 
 
-def builder_files(main_dir):
-    """Paths, relative to main_dir, of the .scala files naming the builder."""
+def files_containing(main_dir, needle):
+    """Paths, relative to main_dir, of the .scala files containing needle."""
     hits = []
     for dirpath, _, files in os.walk(main_dir):
         for name in files:
             if name.endswith(".scala"):
                 path = os.path.join(dirpath, name)
                 with open(path, encoding="utf-8") as f:
-                    if "SparkSession.builder" in f.read():
+                    if needle in f.read():
                         hits.append(os.path.relpath(path, main_dir))
     return sorted(hits)
 
 
 class SessionBuilderGuard(unittest.TestCase):
     def test_builder_only_in_harness(self):
-        self.assertEqual(builder_files(MAIN), [HARNESS])
+        self.assertEqual(files_containing(MAIN, "SparkSession.builder"), [HARNESS])
 
 
 if __name__ == "__main__":
