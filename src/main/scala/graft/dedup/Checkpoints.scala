@@ -11,11 +11,19 @@ import org.apache.spark.sql.execution.LogicalRDD
   * [[LogicalRDD]] over exactly that RDD. Those blocks are NOT recomputable —
   * they exist only as long as they stay persisted — so releasing them is
   * only safe once nothing can reference the frame again, and identifying
-  * them must not guess: [[tracked]] reads the RDD straight out of the
-  * returned frame's plan, which stays correct under concurrent jobs on the
+  * them must not guess: [[blocks]] reads the RDD straight out of the
+  * frame's plan, which stays correct under concurrent jobs on the
   * same SparkContext (a getPersistentRDDs before/after diff does not).
+  *
+  * Every `localCheckpoint` in `src/main` goes through this object
+  * (`tools/tests/test_checkpoint_sites.py` fails on a raw call elsewhere).
   */
 object Checkpoints {
+
+  /** The checkpoint RDDs in `df`'s logical plan: the persisted blocks a
+    * `localCheckpoint` product, or a frame built over one, reads. */
+  def blocks(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 
   /** Eagerly localCheckpoint `df`; return the truncated-lineage frame plus
     * the persisted RDDs backing it (to pass to [[release]] when the frame
@@ -23,14 +31,20 @@ object Checkpoints {
     */
   def tracked(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
     val out = df.localCheckpoint()
-    val rdds = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-    (out, rdds)
+    (out, blocks(out))
   }
 
-  /** Drop the checkpoint blocks. Only call once the owning frame can never
-    * be evaluated again — the blocks are non-recomputable.
+  /** Drop the checkpoint blocks, without waiting. Only call once the
+    * owning frame can never be evaluated again — the blocks are
+    * non-recomputable.
     */
   def release(rdds: Seq[RDD[_]]): Unit = rdds.foreach(_.unpersist(false))
+
+  /** Drop `df`'s checkpoint blocks and wait for the removal: the
+    * session-cache release form (blocking, so the BlockManager work is
+    * charged to the release and not to the next query; see
+    * `QueryCatalog.SessionCache`). */
+  def drop(df: DataFrame): Unit = blocks(df).foreach(_.unpersist(true))
 
   // ---- output ledger -------------------------------------------------------
 
@@ -44,7 +58,7 @@ object Checkpoints {
     * one orphaned checkpoint per query call accumulate in the storage
     * pool (the r10 verdict's cache-pressure-roulette note). ONLY for
     * frames nothing caches across queries: session-scoped builders keep
-    * plain [[tracked]] and own their blocks via their invalidate hooks.
+    * plain [[tracked]] and own their blocks through their cache's release.
     *
     * Ledger entries are WEAK references: the result frame itself holds
     * the only strong RDD reference, so a library consumer who never

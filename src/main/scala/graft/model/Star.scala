@@ -32,7 +32,9 @@ object Star {
                               dimProduct: DataFrame, dimInvoice: DataFrame,
                               fct: DataFrame)
 
-  private val cache = graft.util.SessionScoped.cache[StarSchema]("star",
+  /** The persisted star per (session, dir); declared with its consumers
+    * in `QueryCatalog.sessionCaches`, whose release unpersists it. */
+  private[graft] val cache = graft.util.SessionScoped.cache[StarSchema]("star",
     s => Seq(s.dimCustomer, s.dimDatetime, s.dimProduct, s.dimInvoice, s.fct)
       .foreach(_.unpersist(blocking = true)))
 
@@ -45,8 +47,7 @@ object Star {
     * at 100 TB the equivalent step writes the fact to bucketed parquet
     * (Tables.overwritePartitioned) instead of caching it.
     */
-  def build(spark: SparkSession, sfDir: String): StarSchema = {
-    graft.queries.CacheAccess.record("star")
+  def build(spark: SparkSession, sfDir: String): StarSchema =
     cache.getOrElseUpdate(spark, sfDir) {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val dc = dimCustomer(spark, sfDir).persist(lvl)
@@ -56,11 +57,6 @@ object Star {
       val f  = fctFromDims(spark, sfDir, di, dp, dd).persist(lvl)
       StarSchema(dc, dd, dp, di, f)
     }
-  }
-
-  /** Drop the cached star for (session, dir) and unpersist its frames. */
-  def invalidate(spark: SparkSession, sfDir: String): Unit =
-    cache.invalidate(spark, sfDir)
 
   /** dim_customer (reference: include/dbt/models/transform/dim_customer.sql:1-13):
     * DISTINCT + not-null key filter + surrogate key + LEFT JOIN to the

@@ -427,10 +427,9 @@ object CoreOps {
     // materialization the counts job and the ranking job would each draw
     // their own boundaries and the offsets would not describe the
     // partitions the ranks are computed in (measured: ~86% of ranks off).
-    val parted = df
+    val (parted, _) = graft.dedup.Checkpoints.tracked(df
       .repartitionByRange(n, orderCols.map(c => asc(c)): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
     // per-partition counts: |partitions| rows — driver-side cumsum is
     // bounded by the partition count, never the data
     val counts = parted.groupBy("__pid").count()

@@ -248,8 +248,11 @@ object ShapeDispatch {
     * the context listener). A semantic-hash collision would serve
     * another input's stats — the blast radius is a wrong plan SHAPE,
     * never a wrong value (the dual-shape contract), the same trust
-    * level the dials already extend to catalog averages. */
-  private val statsCache =
+    * level the dials already extend to catalog averages. Released with
+    * the other session caches (`QueryCatalog.sessionCaches`): its keys
+    * are plans, not directories, so the release drops the session's
+    * whole memo. */
+  private[graft] val statsCache =
     graft.util.SessionScoped.cache[GroupStats]("shapeStats", _ => ())
 
   /** Probe invocations since JVM start (spec surface: Round16Spec pins
@@ -333,11 +336,6 @@ object ShapeDispatch {
     statsCache.invalidate(df.sparkSession,
       statsCacheKey(df, groupCols, valueCols))
 
-  /** Drop every memoized probe entry of session `s` — the memo's
-    * release in [[graft.queries.QueryCatalog.sessionCaches]] (its keys
-    * are plans, not directories). */
-  def invalidateSessionStats(s: SparkSession): Unit = statsCache.invalidateSession(s)
-
   /** The stats source the auto dials use: catalog stats ONLY when
     * [[trustCatalog]] holds for the statistic the dial decides on
     * (rows-per-group, or the distinct bound when `byDistinct`),
@@ -356,7 +354,6 @@ object ShapeDispatch {
         def probed = { probeInvocations.incrementAndGet()
           probeStatsMulti(df, groupCols, valueCols) }
         if (statsCacheOn(df)) {
-          graft.queries.CacheAccess.record("shapeStats")
           statsCache.getOrElseUpdate(df.sparkSession,
             statsCacheKey(df, groupCols, valueCols))(probed)
         } else probed

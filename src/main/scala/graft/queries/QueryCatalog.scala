@@ -8,7 +8,7 @@ import graft.io.Tables
 import graft.model.Star
 import graft.report.Reports
 import graft.text.TextOps
-import graft.dedup.Dedup
+import graft.dedup.{Checkpoints, Dedup}
 import graft.sim.Similarity
 import graft.multimodal.Multimodal
 import graft.streaming.EventStreams
@@ -163,28 +163,15 @@ object QueryCatalog {
     * it runs once per (session, dir), like [[Star.build]] and
     * [[cleanedCorpus]]. The frame is already eagerly checkpointed by
     * [[Dedup.minhashCandidatePairs]]; consumers must NOT release its
-    * blocks — [[invalidateCandidatePairs]] owns that.
+    * blocks — the cache's release owns that (non-recomputable, so only
+    * safe once no consumer can re-evaluate a frame derived from them).
     */
-  private def dropCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(true))
-
   private val pairsCache =
-    graft.util.SessionScoped.cache[DataFrame]("candidatePairs", dropCheckpointBlocks)
+    graft.util.SessionScoped.cache[DataFrame]("candidatePairs", Checkpoints.drop)
 
-  private def docCandidatePairs(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("candidatePairs")
+  private def docCandidatePairs(s: SparkSession, dir: String): DataFrame =
     pairsCache.getOrElseUpdate(s, dir)(
       Dedup.minhashCandidatePairs(t(s, dir, "documents"), "doc_id", "text"))
-  }
-
-  /** Drop the cached candidate pairs for (session, dir) and free their
-    * checkpoint blocks (non-recomputable — only safe once no consumer can
-    * re-evaluate a frame derived from them).
-    */
-  def invalidateCandidatePairs(s: SparkSession, dir: String): Unit =
-    pairsCache.invalidate(s, dir)
 
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
     docCandidatePairs(s, dir)
@@ -193,16 +180,14 @@ object QueryCatalog {
     * census) and q158 (incremental components) read the SAME graph, and
     * the gram explode + df join + pair self-join is its expensive
     * stage, so it builds once per (session, dir). Eagerly checkpointed
-    * (the [[pairsCache]] convention); [[invalidateRareGramEdges]] owns
-    * the block release, sequenced after the last sorted consumer.
+    * (the [[pairsCache]] convention); the cache's release owns the
+    * block release, sequenced after the last sorted consumer.
     */
   private val rareEdgesCache =
-    graft.util.SessionScoped.cache[DataFrame]("rareGramEdges", dropCheckpointBlocks)
+    graft.util.SessionScoped.cache[DataFrame]("rareGramEdges", Checkpoints.drop)
 
-  private def rareGramEdges(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("rareGramEdges")
+  private def rareGramEdges(s: SparkSession, dir: String): DataFrame =
     rareEdgesCache.getOrElseUpdate(s, dir) {
-      import graft.dedup.Checkpoints
       // gram identity rides xxhash64 longs, not 8-token strings: the
       // df/join/pair shuffles carry 8-byte keys (the splitGrams/q142
       // convention — edges depend only on gram EQUALITY, so the key
@@ -225,23 +210,19 @@ object QueryCatalog {
       Checkpoints.release(grBlocks)
       edges
     }
-  }
-
-  def invalidateRareGramEdges(s: SparkSession, dir: String): Unit =
-    rareEdgesCache.invalidate(s, dir)
 
   /** Session-scoped component map over the default verified near-dup
     * pairs — q54 (min-id clusters) and q106 (quality keepers) consume the
     * SAME doc→component assignment, and the pointer-jumping rounds are
     * the most expensive stage of the dedup family, so they run once per
     * (session, dir). The result is a localCheckpoint product (lineage
-    * already truncated per round); [[invalidateComponents]] owns the
+    * already truncated per round); the cache's release owns the
     * block release, sequenced after the last sorted-order consumer (q54).
     */
   /** The cached component map PLUS the verified-pair frame it was built
     * from: the pairs are a nearDupPairsFrom checkpoint whose blocks the
     * iterative-components plan does NOT reference (its result is a flat
-    * final-label checkpoint), so invalidate must drop them explicitly —
+    * final-label checkpoint), so the release must drop them explicitly —
     * collecting LogicalRDDs from the components plan alone would leak
     * them to ContextCleaner GC. (The small-graph path's plan DOES embed
     * the pairs RDD; holding the frame covers both paths.)
@@ -249,11 +230,10 @@ object QueryCatalog {
   private final case class CachedComponents(components: DataFrame, pairs: DataFrame)
   private val compCache =
     graft.util.SessionScoped.cache[CachedComponents]("components", c => {
-      dropCheckpointBlocks(c.components); dropCheckpointBlocks(c.pairs)
+      Checkpoints.drop(c.components); Checkpoints.drop(c.pairs)
     })
 
-  private def docComponents(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("components")
+  private def docComponents(s: SparkSession, dir: String): DataFrame =
     compCache.getOrElseUpdate(s, dir) {
       val docs  = t(s, dir, "documents")
       val pairs = Dedup.nearDupPairsFrom(docCandidatePairs(s, dir), docs,
@@ -263,12 +243,6 @@ object QueryCatalog {
           pairs, "doc_a", "doc_b", docs.select("doc_id"), "doc_id"),
         pairs)
     }.components
-  }
-
-  /** Drop the cached component map for (session, dir) and free its
-    * checkpoint blocks (non-recomputable; see invalidateCandidatePairs). */
-  def invalidateComponents(s: SparkSession, dir: String): Unit =
-    compCache.invalidate(s, dir)
 
   /** n-gram Jaccard between consecutive docs (by id) within each source —
     * a linear, oracle-checkable slice of the pairwise similarity operator.
@@ -320,16 +294,8 @@ object QueryCatalog {
   private val corpusCache =
     graft.util.SessionScoped.cache[CachedCorpus]("corpus", c => {
       c.clean.unpersist(blocking = true); c.deduped.unpersist(blocking = true)
-      dropCheckpointBlocks(c.nearDups)
+      Checkpoints.drop(c.nearDups)
     })
-
-  /** Drop the cached clean corpus for (session, dir) and unpersist both
-    * frames it holds — the mirror of Star.invalidate. Call after
-    * regenerating the underlying parquet in a live session; the cache has
-    * no implicit invalidation on data change.
-    */
-  def invalidateCorpus(s: SparkSession, dir: String): Unit =
-    corpusCache.invalidate(s, dir)
 
   /** Session-scoped trained coarse quantizer (dim 64, k=10, one
     * quantized-portable Lloyd iteration) — q68 (trained IVF), q104
@@ -343,15 +309,10 @@ object QueryCatalog {
     graft.util.SessionScoped.cache[DataFrame]("trainedCentroids",
       _.unpersist(blocking = true))
 
-  private def trainedCentroids(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("trainedCentroids")
+  private def trainedCentroids(s: SparkSession, dir: String): DataFrame =
     centroidsCache.getOrElseUpdate(s, dir)(
       Similarity.kmeansCentroids(t(s, dir, "embeddings"), dim = 64, k = 10,
         iters = 1, quantizedMeans = true))
-  }
-
-  def invalidateTrainedCentroids(s: SparkSession, dir: String): Unit =
-    centroidsCache.invalidate(s, dir)
 
   /** Session-scoped PQ index (codebooks + encoded corpus) per
     * (session, dir, trained) — q120/q122 share the stride-codebook index,
@@ -364,11 +325,10 @@ object QueryCatalog {
     */
   private val pqIndexCache =
     graft.util.SessionScoped.cache[Similarity.PqIndex]("pqIndex", i => {
-      dropCheckpointBlocks(i.cb); dropCheckpointBlocks(i.codes)
+      Checkpoints.drop(i.cb); Checkpoints.drop(i.codes)
     })
 
-  private def pqIndex(s: SparkSession, dir: String, trained: Boolean): Similarity.PqIndex = {
-    CacheAccess.record("pqIndex")
+  private def pqIndex(s: SparkSession, dir: String, trained: Boolean): Similarity.PqIndex =
     pqIndexCache.getOrElseUpdate(s, s"$dir|trained=$trained") {
       // pqBuildIndex checkpoints cb and codes eagerly itself (cb BEFORE
       // the encode plans against it — re-checkpointing the lazy frames
@@ -377,13 +337,8 @@ object QueryCatalog {
       Similarity.pqBuildIndex(t(s, dir, "embeddings"),
         trainCodebooks = trained, codebookSize = Some(64))
     }
-  }
-
-  def invalidatePqIndex(s: SparkSession, dir: String, trained: Boolean): Unit =
-    pqIndexCache.invalidate(s, s"$dir|trained=$trained")
 
   def cleanedCorpus(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("corpus")
     corpusCache.getOrElseUpdate(s, dir) {
       val docs = t(s, dir, "documents")
       val scored = docs.select(
@@ -944,23 +899,24 @@ object QueryCatalog {
     * per-doc. `n_toks` rides along so q100's length-bounded candidate
     * index (doc_id, n, min gram) is a pure projection of the cache.
     */
-  private def splitGramArrays(s: SparkSession, dir: String): DataFrame = {
-    CacheAccess.record("splitGrams")
+  private def splitGramArrays(s: SparkSession, dir: String): DataFrame =
     gramsCache.getOrElseUpdate(s, dir)(
       t(s, dir, "documents")
         .select(col("doc_id"), col("source"), splitCol(col("doc_id")).as("split"),
           Dedup.shingleHashSet(col("text"), 8).as("ghs"),
           TextOps.tokenCount(col("text")).as("n_toks"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
 
   private def splitGrams(s: SparkSession, dir: String): DataFrame =
     splitGramArrays(s, dir).select(col("doc_id"), col("source"), col("split"),
       explode(col("ghs")).as("gh"))
 
-  /** Drop the cached gram table for (session, dir) and unpersist it. */
-  def invalidateSplitGrams(s: SparkSession, dir: String): Unit =
-    gramsCache.invalidate(s, dir)
+  /** The q165 partitioned-fact path (see [[dppFactPath]]); its release
+    * deletes the layout. Declared here, above [[sessionCaches]], because
+    * object vals initialize in source order. */
+  private val dppFactCache =
+    graft.util.SessionScoped.cache[String]("dppFactPath",
+      path => deleteRecursively(new java.io.File(path)))
 
   /** Session-cache lifecycle for a SORTED full-catalog sweep (the bench /
     * verify shape): after the LAST sorted-order consumer of each cache
@@ -977,11 +933,21 @@ object QueryCatalog {
     * Release points are DERIVED from the declared consumer sets below,
     * not hand-maintained: adding a query to a cache's consumer set moves
     * the release automatically, and CacheLifecycleSpec verifies each
-    * declared set against INSTRUMENTED accesses recorded by the cache
-    * getters (see [[CacheAccess]]) — an undeclared consumer fails the
-    * spec instead of silently re-creating the round-5 eviction churn
-    * (the q100 incident: one new query name shifted a hand-maintained
-    * release point and cost q81 1.0s → 18.9s).
+    * declared set against the accesses every cache handle records
+    * ([[graft.util.SessionScoped.accesses]]) — an undeclared consumer
+    * fails the spec instead of silently re-creating the round-5 eviction
+    * churn (the q100 incident: one new query name shifted a
+    * hand-maintained release point and cost q81 1.0s → 18.9s).
+    *
+    * One declaration per cache: the handle carries the name, the access
+    * record and the release. [[SessionCache.invalidate]] drops EVERY
+    * entry of the session, whatever its key, so keyed variants (pqIndex's
+    * trained and stride indexes, shapeStats' plan-keyed probe memo) need
+    * no special case. Its `dir` argument is therefore not used: every
+    * caller runs one data directory per session (Verify, SoloRuns,
+    * PlanDump, perfbench and the specs; Bench drops the entry smoke's
+    * caches before it sweeps), so a session-wide release frees exactly
+    * what a per-directory one would.
     *
     * All releases unpersist BLOCKING: an async release overlaps its
     * BlockManager removal work with the NEXT query's execution and taxes
@@ -990,10 +956,13 @@ object QueryCatalog {
     * cost in the release call where it is attributed and bounded).
     */
   final case class SessionCache(
-      name: String,
+      cache: graft.util.SessionScoped.Cache[_],
       consumers: Set[String],
-      invalidate: (SparkSession, String) => Unit,
       earlyReleaseAfter: Set[String] = Set.empty) {
+    def name: String = cache.name
+    /** Release every entry session `s` holds in this cache (`dir` is
+      * unused: one directory per session, see above). */
+    def invalidate(s: SparkSession, dir: String): Unit = cache.invalidateSession(s)
     require(consumers.nonEmpty, s"cache $name declares no consumers")
     /** Last consumer in sorted sweep order — the derived release point. */
     def lastConsumer: String = consumers.max
@@ -1009,69 +978,55 @@ object QueryCatalog {
     * the release schedule follows.
     */
   val sessionCaches: Seq[SessionCache] = Seq(
-    SessionCache("star",
+    SessionCache(Star.cache,
       consumers = Set("q02_dim_customer", "q03_dim_datetime", "q04_dim_product",
         "q05_dim_invoice", "q06_fct_line_value", "q07_report_customer",
         "q08_report_product", "q09_report_year", "q165_dpp_star_scan",
-        "q23_checks_report"),
-      invalidate = (s, d) => Star.invalidate(s, d)),
+        "q23_checks_report")),
     // q100 sorts FIRST among the gram consumers (string order puts it
     // before q10): without an early release there, the gram cache it
     // builds would sit across the star family and the whole dedup middle
     // — exactly the r5 eviction-churn shape (measured: q81 1.0s → 18.9s
     // when q100 held the cache to q96). Releasing immediately costs one
     // rebuild at q44; the q44→q96 span is measured safe.
-    SessionCache("splitGrams",
+    SessionCache(gramsCache,
       consumers = Set("q100_containment_dups", "q44_decontamination",
         "q80_bloom_decontam", "q96_source_overlap"),
-      invalidate = (s, d) => invalidateSplitGrams(s, d),
       earlyReleaseAfter = Set("q100_containment_dups")),
     // q106 reads the pairs only transitively: it is the first sorted
     // component consumer, so it primes the component map FROM the pairs.
-    SessionCache("candidatePairs",
+    SessionCache(pairsCache,
       consumers = Set("q106_cluster_keepers", "q19_minhash_pairs",
-        "q60_edit_distance", "q86_pagerank", "q87_recursive_reach"),
-      invalidate = (s, d) => invalidateCandidatePairs(s, d)),
-    SessionCache("components",
+        "q60_edit_distance", "q86_pagerank", "q87_recursive_reach")),
+    SessionCache(compCache,
       consumers = Set("q106_cluster_keepers", "q110_best_copy_corpus",
-        "q169_leakage_safe_split", "q54_dedup_clusters"),
-      invalidate = (s, d) => invalidateComponents(s, d)),
-    SessionCache("corpus",
-      consumers = Set("q32_clean_corpus", "q49_training_corpus"),
-      invalidate = (s, d) => invalidateCorpus(s, d)),
-    SessionCache("rareGramEdges",
-      consumers = Set("q148_triangle_census", "q158_incremental_components"),
-      invalidate = (s, d) => invalidateRareGramEdges(s, d)),
-    SessionCache("trainedCentroids",
+        "q169_leakage_safe_split", "q54_dedup_clusters")),
+    SessionCache(corpusCache,
+      consumers = Set("q32_clean_corpus", "q49_training_corpus")),
+    SessionCache(rareEdgesCache,
+      consumers = Set("q148_triangle_census", "q158_incremental_components")),
+    SessionCache(centroidsCache,
       consumers = Set("q104_semantic_dedup", "q127_ivfpq_trained",
-        "q68_ivf_trained"),
-      invalidate = (s, d) => invalidateTrainedCentroids(s, d)),
-    // the partitioned-fact PATH (files, not blocks): invalidate deletes
+        "q68_ivf_trained")),
+    // the partitioned-fact PATH (files, not blocks): the release deletes
     // the layout so a fresh sweep rebuilds (and re-records) it
-    SessionCache("dppFactPath",
-      consumers = Set("q165_dpp_star_scan"),
-      invalidate = (s, d) => invalidateDppFact(s, d)),
-    // one registry entry covers both keyed variants (trained + stride)
-    SessionCache("pqIndex",
+    SessionCache(dppFactCache,
+      consumers = Set("q165_dpp_star_scan")),
+    SessionCache(pqIndexCache,
       consumers = Set("q120_pq_ann", "q122_ivfpq_ann", "q125_pq_trained",
-        "q127_ivfpq_trained"),
-      invalidate = (s, d) => {
-        invalidatePqIndex(s, d, trained = false)
-        invalidatePqIndex(s, d, trained = true)
-      }),
+        "q127_ivfpq_trained")),
     // the auto dials' probe memo, keyed by input plan rather than
-    // directory: its release drops the whole session's memo
-    SessionCache("shapeStats",
+    // directory
+    SessionCache(graft.ops.ShapeDispatch.statsCache,
       consumers = Set("q129_equidepth_hist", "q137_top_parts_per_flag",
-        "q36_percentiles", "q53_rank_functions"),
-      invalidate = (s, _) => graft.ops.ShapeDispatch.invalidateSessionStats(s)))
+        "q36_percentiles", "q53_rank_functions")))
 
   /** Derived release schedule: query name → releases to run after it
     * (each cache's last sorted consumer, plus declared early points).
     */
   val cacheReleaseAfter: Map[String, Seq[(SparkSession, String) => Unit]] =
     sessionCaches
-      .flatMap(c => (c.earlyReleaseAfter + c.lastConsumer).toSeq.map(_ -> c.invalidate))
+      .flatMap(c => (c.earlyReleaseAfter + c.lastConsumer).toSeq.map(_ -> (c.invalidate _)))
       .groupMap(_._1)(_._2)
 
   /** Train/heldout decontamination — the standard pre-training hygiene
@@ -1609,7 +1564,7 @@ object QueryCatalog {
   def editDistancePairs(s: SparkSession, dir: String): DataFrame = {
     val docs  = t(s, dir, "documents")
     // the session-cached candidate set (shared with q19/q54) — do NOT
-    // release its blocks; invalidateCandidatePairs owns that lifecycle
+    // release its blocks; the candidatePairs cache release owns that lifecycle
     val cands = docCandidatePairs(s, dir)
     val texts = docs.select(col("doc_id"), col("text"))
     val out = graft.dedup.Checkpoints.output(cands
@@ -2513,15 +2468,14 @@ object QueryCatalog {
     val words = t(s, dir, "documents")
       .select(explode(TextOps.tokens(lower(col("text")))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
-    var sym = words.select(col("freq"), bpeChars(col("tok")).as("sym"))
-      .localCheckpoint()
+    var sym = Checkpoints.output(words.select(col("freq"), bpeChars(col("tok")).as("sym")))
     val base = sym.select(explode(col("sym")).as("c")).distinct().count()
     val nMerges = math.min(math.max(targetVocab - base, 0L), maxMerges.toLong).toInt
 
     val steps = (1 to nMerges).map { i =>
-      val m = bpeTopPair(sym).localCheckpoint() // 1 row, eager; read twice below
+      val m = Checkpoints.output(bpeTopPair(sym)) // 1 row, eager; read twice below
       if (i < nMerges) {
-        sym = bpeApplyMerge(sym, m).select("freq", "sym").localCheckpoint()
+        sym = Checkpoints.output(bpeApplyMerge(sym, m).select("freq", "sym"))
       }
       m.select(lit(i).cast("int").as("step"), col("pair_a"), col("pair_b"),
         col("merged"), col("pair_count"), lit(base + i).as("vocab_size_after"))
@@ -2552,11 +2506,11 @@ object QueryCatalog {
     val words = t(s, dir, "documents")
       .select(explode(TextOps.tokens(lower(col("text")))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("freq"))
-    var sym = words.select(col("tok"), col("freq"), bpeChars(col("tok")).as("sym"))
-      .localCheckpoint()
+    var sym = Checkpoints.output(
+      words.select(col("tok"), col("freq"), bpeChars(col("tok")).as("sym")))
     (1 to nMerges).foreach { _ =>
-      val m = bpeTopPair(sym).localCheckpoint()
-      sym = bpeApplyMerge(sym, m).select("tok", "freq", "sym").localCheckpoint()
+      val m = Checkpoints.output(bpeTopPair(sym))
+      sym = Checkpoints.output(bpeApplyMerge(sym, m).select("tok", "freq", "sym"))
     }
     val encoded = sym.select(col("tok"),
       length(col("tok")).cast("long").as("nchr"),
@@ -2618,10 +2572,9 @@ object QueryCatalog {
     * consumers (sizes + both join sides), so it localCheckpoints once.
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
-    val grams = splitGrams(s, dir)
+    val grams = Checkpoints.output(splitGrams(s, dir)
       .select(col("source"), col("gh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val sizes = grams.groupBy("source").agg(count(lit(1)).as("n_grams"))
     val common = grams.select(col("source").as("source_a"), col("gh"))
       .join(grams.select(col("source").as("source_b"), col("gh")), Seq("gh"))
@@ -2692,8 +2645,8 @@ object QueryCatalog {
       least(floor(col("q") * nBins), lit((nBins - 1).toDouble)).cast("int").as("bin"))
     // sources×bins rows; localCheckpoint so the quality scan under it
     // runs once for its three consumers (source list, dense join, totals)
-    val sb = binned.groupBy("source", "bin").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val sb = Checkpoints.output(
+      binned.groupBy("source", "bin").agg(count(lit(1)).as("c")))
     // densify to every (source, bin) so the cumulative ECDFs align
     val dense = sb.select("source").distinct()
       .crossJoin(broadcast(s.range(nBins).select(col("id").cast("int").as("bin"))))
@@ -3415,19 +3368,18 @@ object QueryCatalog {
     // localCheckpoint: the day series feeds four plan branches (its own
     // median, the deviation frame, the MAD median, the output) — without
     // materialization the events scan + aggregation runs 4x
-    val daily = Tables.events(s, dir)
+    val daily = Checkpoints.output(Tables.events(s, dir)
       .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-      .agg(sumMoney(col("value")).as("revenue"), count(lit(1)).as("n_events"))
-      .localCheckpoint()
+      .agg(sumMoney(col("value")).as("revenue"), count(lit(1)).as("n_events")))
     // low median of a tiny frame: single-partition window is deliberate
     def lowMedian(df: DataFrame, valueCol: String, as: String): DataFrame =
       df.withColumn("rn", row_number().over(Window.orderBy(valueCol)))
         .withColumn("n", count(lit(1)).over(Window.partitionBy()))
         .filter(expr("rn = (n + 1) div 2"))
         .select(col(valueCol).as(as))
-    val dev = daily.crossJoin(broadcast(lowMedian(daily, "revenue", "med")))
-      .withColumn("abs_dev", abs(col("revenue") - col("med")))
-      .localCheckpoint()
+    val dev = Checkpoints.output(
+      daily.crossJoin(broadcast(lowMedian(daily, "revenue", "med")))
+        .withColumn("abs_dev", abs(col("revenue") - col("med"))))
     dev.crossJoin(broadcast(lowMedian(dev, "abs_dev", "mad")))
       .withColumn("robust_z", when(col("mad") > 0, col("abs_dev") / col("mad")))
       .withColumn("is_outlier",
@@ -4233,15 +4185,10 @@ object QueryCatalog {
     * the warehouse layout a 100 TB star lives in (Tables.
     * overwritePartitioned): fact files land under ym=YYYYMM directories,
     * so a month-bounded query reads ONLY its months' files. Path is
-    * session-cached (the Star.build convention); files live under the
-    * staging root the shutdown hook removes.
+    * session-cached in [[dppFactCache]]; files live under the staging
+    * root the shutdown hook removes.
     */
-  private val dppFactCache =
-    graft.util.SessionScoped.cache[String]("dppFactPath",
-      path => deleteRecursively(new java.io.File(path)))
-
-  private def dppFactPath(s: SparkSession, dir: String): String = {
-    CacheAccess.record("dppFactPath")
+  private def dppFactPath(s: SparkSession, dir: String): String =
     dppFactCache.getOrElseUpdate(s, dir) {
       val star = Star.build(s, dir)
       val path = s"${stagingDir(s, dir, "dpp_fact")}/fct"
@@ -4252,10 +4199,6 @@ object QueryCatalog {
         path, Seq("ym"))
       path
     }
-  }
-
-  def invalidateDppFact(s: SparkSession, dir: String): Unit =
-    dppFactCache.invalidate(s, dir)
 
   /** Dynamic partition pruning demo (q165): monthly revenue over the
     * partitioned fact, with the months selected by a FILTERED dim — the

@@ -5,6 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable.ArrayBuffer
 
 /** Registry of session-scoped caches (the Star/grams/pairs/components/
   * corpus materializations): entries are keyed by the session's UUID —
@@ -23,11 +24,47 @@ import scala.collection.concurrent.TrieMap
   * SessionStopSpec drives the full cycle in a forked JVM: fill caches,
   * stop the context, assert the registry is empty and a fresh context
   * starts clean.
+  *
+  * A cache's handle is its one owner: the name it registers under, the
+  * access record (every [[Cache.getOrElseUpdate]] logs the current
+  * query and the cache name) and the release (`invalidate*`).
+  * `QueryCatalog.sessionCaches` declares each handle's consumers, and
+  * CacheLifecycleSpec checks that declaration against the access log.
   */
 object SessionScoped {
 
   private val registry = TrieMap.empty[String, Cache[_]]
   private val hookedContexts = TrieMap.empty[String, Unit]
+
+  // ---- access log ----------------------------------------------------------
+
+  private val accessLog = ArrayBuffer.empty[(String, String)]
+  @volatile private var currentQuery: String = ""
+
+  /** Set the query name that later cache accesses are recorded under
+    * (sweep harness only; single-threaded by construction). Accesses
+    * happen at DataFrame CONSTRUCTION time — the getters run inside the
+    * query builder functions, not inside Spark jobs — so a sweep can
+    * record the whole catalog's accesses without executing a query.
+    */
+  def setQuery(name: String): Unit = currentQuery = name
+
+  /** All (query, cache name) accesses since the last [[clear]]. Only
+    * accesses made while a query is set are recorded, so a JVM that
+    * never runs a sweep keeps an empty log.
+    */
+  def accesses: Seq[(String, String)] =
+    accessLog.synchronized { accessLog.toVector }
+
+  def clear(): Unit = {
+    accessLog.synchronized { accessLog.clear() }
+    currentQuery = ""
+  }
+
+  private def record(cache: String): Unit = {
+    val q = currentQuery
+    if (q.nonEmpty) accessLog.synchronized { accessLog += ((q, cache)) }
+  }
 
   // weak-keyed fallback UUIDs: never pins a session, one id per object
   private val fallbackIds =
@@ -59,7 +96,10 @@ object SessionScoped {
   final class Cache[V] private[SessionScoped] (val name: String, release: V => Unit) {
     private val entries = TrieMap.empty[(String, String), (SparkSession, V)]
 
+    /** The entry for (session, key), built on first access. Every call,
+      * hit or fill, is recorded in the access log. */
     def getOrElseUpdate(s: SparkSession, key: String)(build: => V): V = {
+      record(name)
       hook(s)
       entries.getOrElseUpdate((SessionScoped.uuidOf(s), key), (s, build))._2
     }
@@ -90,6 +130,9 @@ object SessionScoped {
     registry.put(name, c)
     c
   }
+
+  /** Names of every registered cache (spec surface). */
+  def names: Set[String] = registry.keySet.toSet
 
   /** Total live entries across all registered caches (spec/probe surface). */
   def totalEntries: Int = registry.values.map(_.size).sum

@@ -1,10 +1,13 @@
 package graft
 
-import graft.queries.{CacheAccess, QueryCatalog}
+import graft.dedup.Checkpoints
+import graft.queries.QueryCatalog
+import graft.util.SessionScoped
 
 /** Verifies QueryCatalog.sessionCaches — the DECLARED cache→consumers
-  * sets the release schedule is derived from — against the INSTRUMENTED
-  * accesses the cache getters record during a cold sorted catalog sweep.
+  * sets the release schedule is derived from — against the accesses the
+  * cache handles record (SessionScoped.accesses) during a cold sorted
+  * catalog sweep.
   * The getters run at DataFrame construction time, so the sweep builds
   * every query (priming each cache once, at sf0.001) without executing
   * the query bodies.
@@ -28,18 +31,18 @@ class CacheLifecycleSpec extends SparkSpec {
     // accesses (e.g. q106 reaching candidatePairs through the components
     // builder only when components is cold)
     QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
-    CacheAccess.clear()
+    SessionScoped.clear()
 
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     sorted.foreach { case (name, fn) =>
-      CacheAccess.setQuery(name)
+      SessionScoped.setQuery(name)
       fn(spark, sf) // construction only — getters record here
       QueryCatalog.cacheReleaseAfter.get(name)
         .foreach(_.foreach(release => release(spark, sf)))
     }
-    val accessed: Map[String, Set[String]] = CacheAccess.accesses
+    val accessed: Map[String, Set[String]] = SessionScoped.accesses
       .groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
-    CacheAccess.clear()
+    SessionScoped.clear()
 
     val declared = QueryCatalog.sessionCaches.map(c => c.name -> c).toMap
     // 1. every recorded access is declared — no silent new consumer
@@ -68,6 +71,47 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  test("every registered session cache is declared in sessionCaches, once") {
+    val declared = QueryCatalog.sessionCaches.map(_.name)
+    assert(declared.distinct == declared, s"declared twice: ${declared.diff(declared.distinct)}")
+    assert(declared.size == 10)
+    assert(SessionScoped.names == declared.toSet)
+  }
+
+  test("each cache's release after its first sorted consumer leaves an " +
+       "empty handle and none of the fill's blocks (or dppFactPath's files)") {
+    val sc = spark.sparkContext
+    def releaseAll(): Unit = {
+      QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
+      Checkpoints.releaseOutputs()
+    }
+    for (c <- QueryCatalog.sessionCaches) {
+      releaseAll()
+      val pre = sc.getPersistentRDDs.keySet
+      val first = SparkEntry.queries(c.consumers.min)(spark, sf)
+      first.write.format("noop").mode("overwrite").save()
+      // the result's output checkpoints and every OTHER cache the query
+      // primed go first, so what stays persisted is this cache's fill
+      Checkpoints.releaseOutputs()
+      QueryCatalog.sessionCaches.filterNot(_ eq c).foreach(_.invalidate(spark, sf))
+      assert(c.cache.size > 0, s"${c.consumers.min} did not fill '${c.name}'")
+      val staged = first.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.collect {
+        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          h.location.rootPaths.map(p => new java.io.File(p.toUri))
+      }.flatten.filter(_.getPath.contains("dpp_fact"))
+      assert((c.name == "dppFactPath") == staged.nonEmpty)
+      assert(staged.forall(_.exists))
+      c.invalidate(spark, sf)
+      assert(c.cache.size == 0, s"'${c.name}' keeps ${c.cache.size} entries after its release")
+      val leaked = sc.getPersistentRDDs.keySet -- pre
+      assert(leaked.isEmpty, s"'${c.name}' leaked persisted RDDs " +
+        leaked.toSeq.sorted.map(id => s"$id ${sc.getPersistentRDDs(id).name}").mkString("; "))
+      staged.foreach(d => assert(!d.exists, s"'${c.name}' left staged files at $d"))
+    }
+  }
+
   test("a full release leaves no live session-cache entry after the " +
        "auto-dial q53 (its shapeStats probe memo included)") {
     QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
@@ -85,13 +129,16 @@ class CacheLifecycleSpec extends SparkSpec {
     // owned — by a session cache (released at its invalidate) or by the
     // output ledger (released after the consuming action) — so a full
     // execute → release → invalidate cycle must leave the storage pool
-    // exactly as it found it.
+    // exactly as it found it. q94/q96/q99/q118/q123 ride along: their
+    // intermediate checkpoints are output-ledger entries, not GC-reclaimed.
     val sc = spark.sparkContext
     QueryCatalog.sessionCaches.foreach(_.invalidate(spark, sf))
     graft.dedup.Checkpoints.releaseOutputs()
     val pre = sc.getPersistentRDDs.keySet
     for (name <- Seq("q19_minhash_pairs", "q25_lsh_ann_topk",
-                     "q54_dedup_clusters", "q89_incremental_ingest")) {
+                     "q54_dedup_clusters", "q89_incremental_ingest",
+                     "q94_bpe_vocab", "q96_source_overlap", "q99_quality_drift",
+                     "q118_outlier_days", "q123_bpe_encode")) {
       SparkEntry.queries(name)(spark, sf)
         .write.format("noop").mode("overwrite").save()
       QueryCatalog.cacheReleaseAfter.get(name)
