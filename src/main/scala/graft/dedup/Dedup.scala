@@ -468,83 +468,6 @@ object Dedup {
     val (cands, stoks, prefix, blocks) =
       prefixCandidates(docs, idCol, textCol, thrNum, thrDen, shingleN,
         suffixFilter, suffixDepth)
-    verifyPrefixCandidates(cands, stoks, prefix, blocks, thrNum, thrDen,
-      broadcastVerify)
-  }
-
-  /** Verification-shape plan for [[verifyPrefixCandidates]], computed ONCE
-    * from the checkpointed prefix frame so [[ssJoinPairsAuto]] can make
-    * its escape decision on the SAME numbers the pair-space guard acts on
-    * (one bookkeeping aggregate; no candidate materializes). */
-  private[graft] final case class VerifyPlan(idIsLong: Boolean,
-                                             takeBroadcast: Boolean,
-                                             estPairs: Double,
-                                             avgSz: Double,
-                                             estShuffle: Double)
-
-  private[graft] def planVerify(stoks: DataFrame, prefix: DataFrame,
-                                broadcastVerify: Option[Boolean]): VerifyPlan = {
-    val spark = stoks.sparkSession
-    val idIsLong = stoks.schema("id").dataType ==
-      org.apache.spark.sql.types.LongType
-    // A caller FORCING the broadcast shape on a non-long id would get a
-    // silent downgrade to the join shape — fail loud instead (r14 ADVICE).
-    require(idIsLong || !broadcastVerify.contains(true),
-      s"prefixFilterPairs(broadcastVerify=true): the id column must be " +
-        s"LongType for the broadcast index, got ${stoks.schema("id").dataType.sql}")
-    // ONE bookkeeping aggregate over the prefix checkpoint serves both the
-    // broadcast budget gate and the pair-space regime guard. Every token-
-    // table document has exactly one rk = 1 prefix row carrying its sz
-    // (the prefix length sz − ⌈num·sz/den⌉ + 1 is at least 1 because
-    // num ≤ den), so the rk = 1 rows count the documents and sum their
-    // tokens inside the per-tokid grouping the pair estimate needs.
-    //
-    // Pair-space estimate (r15 — the regime guard's input), BEFORE any
-    // candidate materializes: the bucket join's output is Σ_t idxCnt_t·
-    // cnt_t, upper-bounded by Σ_t cnt_t·(cnt_t−1)/2 over prefix-token
-    // buckets. Double arithmetic: this is a regime detector, not an
-    // accountant, and the sums would overflow a long exactly where the
-    // guard matters most.
-    val est = prefix.groupBy("tokid")
-      .agg(count(lit(1)).as("__c"),
-        count(when(col("rk") === 1, lit(1))).as("__docs"),
-        sum(when(col("rk") === 1, col("sz"))).as("__toks"))
-      .agg(sum(expr("__c * (__c - 1d) / 2.0d")), sum(col("__toks")),
-        sum(col("__docs")))
-      .head()
-    val estPairs = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
-    val totalTokens = if (est.isNullAt(1)) 0L else est.getLong(1)
-    val nDocs = if (est.isNullAt(2)) 0L else est.getLong(2)
-    val takeBroadcast = broadcastVerify.getOrElse {
-      val bytes = totalTokens * 8L +
-        nDocs * 96L // per-entry map + array-header overhead
-      val cap = spark.conf.getOption(BroadcastVerifyBytesKey)
-        .map(_.toLong).getOrElse(DefaultBroadcastVerifyBytes)
-      // The estimate is the index's RESIDENT size; building it and the
-      // torrent-broadcast serialization both transiently hold more. Never
-      // let the auto gate commit more than a quarter of the driver's heap
-      // regardless of the configured cap (r14 ADVICE: a cap tuned for one
-      // deployment OOMed a smaller driver where the join shape — slowly —
-      // succeeded). Forcing broadcastVerify=Some(true) bypasses this:
-      // the caller owns the sizing.
-      val driverCap = Runtime.getRuntime.maxMemory / 4
-      idIsLong && bytes <= math.min(cap, driverCap)
-    }
-    val avgSz = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
-    val estShuffle = pairShuffleBytes(estPairs, avgSz,
-      broadcastShape = takeBroadcast && idIsLong)
-    VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle)
-  }
-
-  /** The verification stage of [[prefixFilterPairs]] over prebuilt
-    * [[prefixCandidates]] output — split out so [[ssJoinPairsAuto]] can
-    * estimate the pair space FIRST (via [[planVerify]]) and only then
-    * commit to the exact shape. Releases `blocks` after the output
-    * checkpoint materializes. */
-  private[graft] def verifyPrefixCandidates(cands: DataFrame, stoks: DataFrame,
-      prefix: DataFrame, blocks: Seq[org.apache.spark.rdd.RDD[_]],
-      thrNum: Int, thrDen: Int, broadcastVerify: Option[Boolean],
-      plan: Option[VerifyPlan] = None): DataFrame = {
     val spark = cands.sparkSession
     // Verification merge-intersects the per-doc SORTED arrays — tokid
     // ranks with the suffix filter on, sorted gram hashes off; either way
@@ -570,7 +493,7 @@ object Dedup {
     //    dedup-first. Same gate-with-fallback pattern as the Similarity
     //    codebook inlining.
     val VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle) =
-      plan.getOrElse(planVerify(stoks, prefix, broadcastVerify))
+      planVerify(stoks, prefix, broadcastVerify)
     // ---- pair-space regime guard (r15 — the q142 escape hatch) -----------
     val hardCap = spark.conf.getOption(MaxPairShuffleBytesKey).map(_.toLong)
     val warnCap = spark.conf.getOption(PairShuffleWarnBytesKey)
@@ -581,18 +504,18 @@ object Dedup {
         f"prefixFilterPairs: estimated candidate shuffle $estShuffle%.3g B " +
           f"(~$estPairs%.3g candidate pairs) exceeds $MaxPairShuffleBytesKey=" +
           s"${hardCap.get} — the exact SSJoin is pair-bound on this corpus. " +
-          "Use LSH banding (Dedup.minhashCandidatePairs / q19 — probabilistic recall " +
-          "per the banding curve) or dedup-first to shrink the corpus, or " +
-          "raise the cap to accept the shuffle.")
+          "Use LSH banding (Dedup.lshVerifiedPairs, or Dedup.minhashCandidatePairs " +
+          "/ q19 — probabilistic recall per the banding curve) or dedup-first " +
+          "to shrink the corpus, or raise the cap to accept the shuffle.")
     } else if (estShuffle > warnCap) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         f"prefixFilterPairs: estimated candidate shuffle $estShuffle%.3g B " +
           f"(~$estPairs%.3g candidate pairs, avg $avgSz%.1f tokens/doc) is " +
           "in the pair-bound regime for an exact set-similarity join. It " +
           "will complete but scales with the pair space; consider LSH " +
-          "banding (Dedup.minhashCandidatePairs / q19 — probabilistic recall per " +
-          "the banding curve) or dedup-first. Hard cap: " +
-          s"$MaxPairShuffleBytesKey.")
+          "banding (Dedup.lshVerifiedPairs, or Dedup.minhashCandidatePairs / " +
+          "q19 — probabilistic recall per the banding curve) or dedup-first. " +
+          s"Hard cap: $MaxPairShuffleBytesKey.")
     }
     var bIndex: Option[org.apache.spark.broadcast.Broadcast[
       scala.collection.mutable.LongMap[Array[Long]]]] = None
@@ -670,27 +593,72 @@ object Dedup {
     out
   }
 
-  /** The two physical answers to a set-similarity join, for
-    * [[ssJoinPairsAuto]]'s dispatch (the [[graft.ops.ShapeDispatch]]
-    * pattern applied to the dedup family). */
-  sealed trait SsJoinShape
-  /** the lossless PPJoin+ prefix-filter join — every true pair, exactly
-    * ([[prefixFilterPairs]]). */
-  case object ExactSsJoin extends SsJoinShape
-  /** MinHash-LSH candidate generation + the SAME exact integer
-    * verification — precision 1, recall follows the banding curve
-    * 1−(1−s^r)^b on each true pair's similarity s. */
-  case object LshSsJoin extends SsJoinShape
+  /** Verification-shape plan for [[prefixFilterPairs]], computed ONCE
+    * from the checkpointed prefix frame (one bookkeeping aggregate; no
+    * candidate materializes). A caller can price the exact join's pair
+    * space with it before choosing between [[prefixFilterPairs]] and
+    * [[lshVerifiedPairs]]; `tools/ShapeChoice` prints it. */
+  private[graft] final case class VerifyPlan(idIsLong: Boolean,
+                                             takeBroadcast: Boolean,
+                                             estPairs: Double,
+                                             avgSz: Double,
+                                             estShuffle: Double)
 
-  /** Session-wide override for [[ssJoinPairsAuto]]: "exact" | "lsh". */
-  val SsJoinForceKey = "spark.graft.ssjoin.force"
-  /** OPT-IN escape threshold (bytes) for [[ssJoinPairsAuto]]: when set,
-    * an estimated exact-verify candidate shuffle above it dispatches to
-    * the LSH shape. Unset (the default) = always exact — sub-unit recall
-    * is never a silent default. */
-  val SsJoinLshEscapeBytesKey = "spark.graft.ssjoin.lshEscapeBytes"
+  private[graft] def planVerify(stoks: DataFrame, prefix: DataFrame,
+                                broadcastVerify: Option[Boolean]): VerifyPlan = {
+    val spark = stoks.sparkSession
+    val idIsLong = stoks.schema("id").dataType ==
+      org.apache.spark.sql.types.LongType
+    // A caller FORCING the broadcast shape on a non-long id would get a
+    // silent downgrade to the join shape — fail loud instead (r14 ADVICE).
+    require(idIsLong || !broadcastVerify.contains(true),
+      s"prefixFilterPairs(broadcastVerify=true): the id column must be " +
+        s"LongType for the broadcast index, got ${stoks.schema("id").dataType.sql}")
+    // ONE bookkeeping aggregate over the prefix checkpoint serves both the
+    // broadcast budget gate and the pair-space regime guard. Every token-
+    // table document has exactly one rk = 1 prefix row carrying its sz
+    // (the prefix length sz − ⌈num·sz/den⌉ + 1 is at least 1 because
+    // num ≤ den), so the rk = 1 rows count the documents and sum their
+    // tokens inside the per-tokid grouping the pair estimate needs.
+    //
+    // Pair-space estimate (r15 — the regime guard's input), BEFORE any
+    // candidate materializes: the bucket join's output is Σ_t idxCnt_t·
+    // cnt_t, upper-bounded by Σ_t cnt_t·(cnt_t−1)/2 over prefix-token
+    // buckets. Double arithmetic: this is a regime detector, not an
+    // accountant, and the sums would overflow a long exactly where the
+    // guard matters most.
+    val est = prefix.groupBy("tokid")
+      .agg(count(lit(1)).as("__c"),
+        count(when(col("rk") === 1, lit(1))).as("__docs"),
+        sum(when(col("rk") === 1, col("sz"))).as("__toks"))
+      .agg(sum(expr("__c * (__c - 1d) / 2.0d")), sum(col("__toks")),
+        sum(col("__docs")))
+      .head()
+    val estPairs = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
+    val totalTokens = if (est.isNullAt(1)) 0L else est.getLong(1)
+    val nDocs = if (est.isNullAt(2)) 0L else est.getLong(2)
+    val takeBroadcast = broadcastVerify.getOrElse {
+      val bytes = totalTokens * 8L +
+        nDocs * 96L // per-entry map + array-header overhead
+      val cap = spark.conf.getOption(BroadcastVerifyBytesKey)
+        .map(_.toLong).getOrElse(DefaultBroadcastVerifyBytes)
+      // The estimate is the index's RESIDENT size; building it and the
+      // torrent-broadcast serialization both transiently hold more. Never
+      // let the auto gate commit more than a quarter of the driver's heap
+      // regardless of the configured cap (r14 ADVICE: a cap tuned for one
+      // deployment OOMed a smaller driver where the join shape — slowly —
+      // succeeded). Forcing broadcastVerify=Some(true) bypasses this:
+      // the caller owns the sizing.
+      val driverCap = Runtime.getRuntime.maxMemory / 4
+      idIsLong && bytes <= math.min(cap, driverCap)
+    }
+    val avgSz = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
+    val estShuffle = pairShuffleBytes(estPairs, avgSz,
+      broadcastShape = takeBroadcast && idIsLong)
+    VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle)
+  }
 
-  /** [[LshSsJoin]]'s materialization: MinHash-LSH candidates
+  /** The LSH answer to a set-similarity join: MinHash-LSH candidates
     * ([[minhashCandidatePairsTracked]]) re-scored by the SAME integer
     * predicate as [[prefixFilterPairs]] (inter·den ≥ num·union over
     * distinct-gram sets), emitting the SAME output contract
@@ -705,13 +673,25 @@ object Dedup {
     * `rowsPerBand` to raise recall at the cost of more candidates
     * (r=1 → miss probability (1−s)^32 ≤ 2⁻³² at s ≥ 0.5, but every
     * pair sharing ONE minhash becomes a candidate — the dial trades
-    * candidate volume, which is the very thing the escape bounds).
+    * candidate volume, which is the very thing this shape bounds).
     * Scale: candidates form only inside band buckets
     * (never the n²/V exact-prefix pair space this shape escapes), and
-    * verification tokenizes only candidate-incident docs. */
-  private[graft] def lshVerifiedPairs(docs: DataFrame, idCol: String,
-      textCol: String, thrNum: Int, thrDen: Int, shingleN: Int,
-      k: Int, rowsPerBand: Int, maxBucket: Int): DataFrame = {
+    * verification tokenizes only candidate-incident docs.
+    *
+    * Exact or LSH is the CALLER's choice, never a session default: the
+    * two shapes return different rows. Take this shape when the exact
+    * join is pair-bound — its warn/hard-cap guard names the regime, and
+    * [[planVerify]] prices it up front — and the banding-curve recall
+    * is acceptable. At the corpus sizes where that happens the exact
+    * join's candidate space is ~n²/V and no filter ladder changes the
+    * asymptote (the r14 sf4 grid measured it filling the disk); a
+    * bounded-recall answer that completes beats an exact one that does
+    * not. Callers needing exactness at that scale shrink the corpus
+    * first (exact dedup / span dedup), then run exact. */
+  def lshVerifiedPairs(docs: DataFrame, idCol: String, textCol: String,
+                       thrNum: Int, thrDen: Int, shingleN: Int = 1,
+                       k: Int = 32, rowsPerBand: Int = 4,
+                       maxBucket: Int = Int.MaxValue): DataFrame = {
     val (cands, candBlocks) = minhashCandidatePairsTracked(
       docs, idCol, textCol, shingleN, k, rowsPerBand, maxBucket)
     // shingle ONLY candidate-incident docs (the nearDupPairsFrom shape):
@@ -739,83 +719,6 @@ object Dedup {
           col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard")))
     Checkpoints.release(candBlocks)
     out
-  }
-
-  /** Stat-driven set-similarity join (the q142 escape, productized —
-    * VERDICT r14 item 3's "ideally"): [[prefixFilterPairs]] while the
-    * estimated candidate shuffle stays tractable, the LSH-verified shape
-    * ([[lshVerifiedPairs]]) once the exact join enters the pair-bound
-    * regime — IF the caller opted in. Selection ladder, mirroring
-    * [[graft.ops.ShapeDispatch]]:
-    *
-    *  1. per-call `force`;
-    *  2. session conf `spark.graft.ssjoin.force` = "exact" | "lsh";
-    *  3. `spark.graft.ssjoin.lshEscapeBytes` UNSET → always exact (the
-    *     warn/hard-cap guards in [[prefixFilterPairs]] still apply);
-    *  4. set → build the prefix structures once, estimate the verify
-    *     shuffle on the SAME numbers the guard uses ([[planVerify]]:
-    *     Σ c·(c−1)/2 over prefix buckets × the shape's per-pair bytes);
-    *     above the threshold, release the prefix checkpoints and take
-    *     the LSH shape; otherwise continue into the exact verification
-    *     with nothing recomputed.
-    *
-    * The RECALL CONTRACT when the escape fires: precision stays 1 (the
-    * verification is the same integer arithmetic), recall on a true pair
-    * at similarity s drops to the banding curve 1−(1−s^r)^b. That loss
-    * is deliberate and opt-in — at the corpus sizes that trigger the
-    * escape, the exact join's candidate space is ~n²/V and no filter
-    * ladder changes the asymptote (the r14 sf4 grid measured it filling
-    * the disk); a bounded-recall answer that completes beats an exact
-    * one that does not. Callers needing exactness at that scale shrink
-    * the corpus first (exact dedup / span dedup), then run exact. */
-  def ssJoinPairsAuto(docs: DataFrame, idCol: String, textCol: String,
-                      thrNum: Int, thrDen: Int, shingleN: Int = 1,
-                      force: Option[SsJoinShape] = None,
-                      broadcastVerify: Option[Boolean] = None,
-                      lshK: Int = 32, lshRowsPerBand: Int = 4,
-                      maxBucket: Int = Int.MaxValue): DataFrame = {
-    val conf = docs.sparkSession.conf
-    // an unrecognized force value fails loud (r15 ADVICE): a user who
-    // typo'd "LSH" believes they forced a shape — silently taking the
-    // auto ladder instead is the one outcome they explicitly ruled out
-    val chosen = force.orElse(conf.getOption(SsJoinForceKey).map {
-      case "exact" => ExactSsJoin
-      case "lsh"   => LshSsJoin
-      case other => throw new IllegalArgumentException(
-        s"$SsJoinForceKey: unknown value '$other' (valid: exact | lsh)")
-    })
-    def lshShape(): DataFrame = lshVerifiedPairs(docs, idCol, textCol,
-      thrNum, thrDen, shingleN, lshK, lshRowsPerBand, maxBucket)
-    chosen match {
-      case Some(ExactSsJoin) =>
-        prefixFilterPairs(docs, idCol, textCol, thrNum, thrDen, shingleN,
-          broadcastVerify = broadcastVerify)
-      case Some(LshSsJoin) => lshShape()
-      case None =>
-        conf.getOption(SsJoinLshEscapeBytesKey).map(_.toLong) match {
-          case None => // escape not opted into: exact, unconditionally
-            prefixFilterPairs(docs, idCol, textCol, thrNum, thrDen, shingleN,
-              broadcastVerify = broadcastVerify)
-          case Some(escapeBytes) =>
-            val (cands, stoks, prefix, blocks) = prefixCandidates(
-              docs, idCol, textCol, thrNum, thrDen, shingleN,
-              suffixFilter = false, suffixDepth = 1)
-            val vp = planVerify(stoks, prefix, broadcastVerify)
-            if (vp.estShuffle > escapeBytes) {
-              Checkpoints.release(blocks)
-              org.slf4j.LoggerFactory.getLogger(getClass).info(
-                f"ssJoinPairsAuto: estimated exact-verify shuffle " +
-                  f"${vp.estShuffle}%.3g B (~${vp.estPairs}%.3g candidate " +
-                  f"pairs) exceeds $SsJoinLshEscapeBytesKey=$escapeBytes — " +
-                  s"dispatching to the LSH shape (k=$lshK, r=$lshRowsPerBand; " +
-                  "precision 1, recall per the banding curve)")
-              lshShape()
-            } else {
-              verifyPrefixCandidates(cands, stoks, prefix, blocks,
-                thrNum, thrDen, broadcastVerify, Some(vp))
-            }
-        }
-    }
   }
 
   /** Candidate generation for [[prefixFilterPairs]], split out so the

@@ -25,15 +25,14 @@ import org.apache.spark.sql.functions._
   *
   * Selection inputs, in priority order:
   *  - an explicit per-call override (`force`) — the old manual dial;
-  *  - the session conf `spark.graft.shape.force` = `window` | `ranged`
-  *    (one global switch for A/Bs and regression hunts);
+  *  - caller-supplied statistics (`stats`), used as-is;
   *  - catalog/CBO statistics when the optimized plan carries a row
   *    count and distinct counts for the group columns (ANALYZE'd
   *    tables; zero probe cost). Catalog stats see AVERAGES, not skew —
   *    so the dials trust them only when decisive under
-  *    `spark.graft.shape.catalogSkewHeadroom` ([[trustCatalog]]): an
-  *    average within headroom× below the cutover falls through to the
-  *    exact probe instead of silently window-shaping a skewed table;
+  *    [[CatalogSkewHeadroom]] ([[trustCatalog]]): an average within
+  *    headroom× below the cutover falls through to the exact probe
+  *    instead of silently window-shaping a skewed table;
   *  - else ONE probe aggregation: `groupBy(group).count()` reduced to
   *    (rows, groups, max rows per group) — a map-side-combined hash
   *    aggregate plus a bookkeeping-sized second stage, scale-safe at
@@ -43,6 +42,8 @@ import org.apache.spark.sql.functions._
   * Both sides of every dial are bit-identical (Round12/13/14Spec pins
   * + the q36/q166 and q53/q170 driver-query pairs under shared DuckDB
   * oracles), so dispatch can never change values — only plan shape.
+  * The cutovers are constants from those A/Bs; a caller who knows its
+  * distribution passes `force` or `stats` per call.
   */
 object ShapeDispatch {
 
@@ -66,16 +67,14 @@ object ShapeDispatch {
       math.min(maxDistinctPerGroup, maxRowsPerGroup)
   }
 
-  /** rows-per-group cutover for the ranking/top-k dials — default from
-    * the committed 3-scale q53 A/B (crossover at sf1 ≈ 2M rows/group). */
-  val RowsPerGroupCutoverKey = "spark.graft.shape.rowsPerGroupCutover"
-  val DefaultRowsPerGroupCutover: Long = 2L * 1000 * 1000
+  /** rows-per-group cutover for the ranking and equi-depth dials — the
+    * committed 3-scale q53 A/B (crossover at sf1 ≈ 2M rows/group). */
+  val RowsPerGroupCutover: Long = 2L * 1000 * 1000
 
   /** distinct-values-per-group cutover for the percentile dial — the
     * q36 Scaladoc rule (~50 B per distinct value of single-task
     * aggregation buffer at merge: 10⁷ ≈ 500 MB, the practical ceiling). */
-  val DistinctPerGroupCutoverKey = "spark.graft.shape.distinctPerGroupCutover"
-  val DefaultDistinctPerGroupCutover: Long = 10L * 1000 * 1000
+  val DistinctPerGroupCutover: Long = 10L * 1000 * 1000
 
   /** rows-per-group cutover for the TOP-K dial specifically. The top-k
     * heap has no exchange, no checkpoint and ≤ k rows of state per
@@ -84,21 +83,16 @@ object ShapeDispatch {
     * receipt (tools/bench_r16/AB_TOPK_BOUNDARY.txt: 4 groups, k=10,
     * 1M/2M/4M/8M rows per group, after the TopKBuffer copy-gate fix)
     * measures the heap at parity at 1M and 2.4–3.1× faster from 2M up
-    * while the window form grows with group size. Default 1M: strict
-    * `>` keeps small-group frames on the one-exchange window sort,
-    * engages the heap from the first scale where it measurably wins. */
-  val TopKRowsPerGroupCutoverKey = "spark.graft.shape.topkRowsPerGroupCutover"
-  val DefaultTopKRowsPerGroupCutover: Long = 1000L * 1000
+    * while the window form grows with group size. 1M: strict `>` keeps
+    * small-group frames on the one-exchange window sort, engages the
+    * heap from the first scale where it measurably wins. */
+  val TopKRowsPerGroupCutover: Long = 1000L * 1000
 
   /** Upper bound on k for the AUTO top-k heap: the heap holds k rows PER
     * GROUP per task, so a `k = 50_000_000` must keep WindowExec's sort
-    * (which spills) rather than pin groups × k rows in memory. Default
-    * 1M (≈ tens of MB per group at typical row widths). */
-  val MaxKKey = "spark.graft.topk.maxK"
-  val DefaultMaxK: Long = 1000L * 1000
-
-  /** Session-wide override: "window" | "ranged" (anything else ignored). */
-  val ForceKey = "spark.graft.shape.force"
+    * (which spills) rather than pin groups × k rows in memory. 1M ≈ tens
+    * of MB per group at typical row widths. */
+  val MaxK: Long = 1000L * 1000
 
   /** Catalog stats see AVERAGES, not skew — their maxRowsPerGroup is
     * ⌈rows/groups⌉. The r14 ADVICE scenario: an ANALYZE'd table with one
@@ -111,8 +105,7 @@ object ShapeDispatch {
     * shape (an average above the cutover means the max is above it too —
     * skew only strengthens that verdict). In the undecided band the
     * exact probe runs, same as on un-ANALYZE'd tables. */
-  val CatalogSkewHeadroomKey = "spark.graft.shape.catalogSkewHeadroom"
-  val DefaultCatalogSkewHeadroom: Long = 10L
+  val CatalogSkewHeadroom: Long = 10L
 
   /** The ranking/top-k predicate, pure and spec-testable: the ranged
     * shape exactly when the largest group outruns the cutover. */
@@ -131,16 +124,6 @@ object ShapeDispatch {
     * headroom-fold skew). Anywhere in between → probe. */
   def trustCatalog(statValue: Long, cutover: Long, headroom: Long): Boolean =
     statValue > cutover || statValue <= cutover / math.max(headroom, 1L)
-
-  private def confLong(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-
-  private def confForce(df: DataFrame): Option[Shape] =
-    df.sparkSession.conf.getOption(ForceKey).flatMap {
-      case "window" => Some(WindowShape)
-      case "ranged" => Some(RangedShape)
-      case _        => None
-    }
 
   /** Catalog/CBO statistics, when the optimized plan carries them:
     * rowCount plus a distinct count for EVERY group column (missing
@@ -220,29 +203,17 @@ object ShapeDispatch {
       source = "probe")
   }
 
-  /** Catalog stats when complete, else the probe — UNGUARDED: trusts a
-    * complete catalog unconditionally. The auto dials go through
-    * [[guardedStats]] instead, which only trusts the catalog's
-    * skew-blind averages when they are decisive either way. */
-  def groupStats(df: DataFrame, groupCols: Seq[String],
-                 valueCol: Option[String] = None): GroupStats =
-    catalogStats(df, groupCols, valueCol)
-      .getOrElse(probeStats(df, groupCols, valueCol))
-
-  /** Conf: memoize [[guardedStats]]' probe result per (session, input
-    * plan, group/value columns) — default ON, "false" disables. The
-    * probe is a full column-pruned scan; without the memo every auto
-    * dial invocation on the same input re-pays it (the r15 sf10 cell
-    * measured ~13s of a 41s query — real money at 100×). File
-    * overwrites under an unchanged plan invalidate STRUCTURALLY since
-    * r17 ([[inputFingerprint]] is part of the key); "false" remains
-    * the blanket opt-out, and [[invalidateStats]] the surgical one (a
-    * stale entry can only mis-pick the SHAPE — both sides of every
-    * dial are bit-identical, so values never change). */
-  val StatsCacheKey = "spark.graft.shape.statsCache"
-
-  /** Probe memo, keyed by the ANALYZED plan's canonical semantic hash +
-    * the file-leaf fingerprint ([[inputFingerprint]] — overwrites
+  /** [[guardedStats]]' probe memo, always on. The probe is a full
+    * column-pruned scan; without the memo every auto dial invocation on
+    * the same input re-pays it (the r15 sf10 cell measured ~13s of a
+    * 41s query — real money at 100×). File overwrites under an
+    * unchanged plan invalidate STRUCTURALLY since r17
+    * ([[inputFingerprint]] is part of the key), and [[invalidateStats]]
+    * drops one entry (a stale entry can only mis-pick the SHAPE — both
+    * sides of every dial are bit-identical, so values never change).
+    *
+    * Keyed by the ANALYZED plan's canonical semantic hash + the
+    * file-leaf fingerprint ([[inputFingerprint]] — overwrites
     * re-probe structurally) + the probed columns, session-scoped (the
     * star/PQ-index lifecycle: entries die with the session, evicted by
     * the context listener). A semantic-hash collision would serve
@@ -258,17 +229,6 @@ object ShapeDispatch {
   /** Probe invocations since JVM start (spec surface: Round16Spec pins
     * that a second auto-dial call on the same input runs ZERO probes). */
   private[graft] val probeInvocations = new java.util.concurrent.atomic.AtomicLong
-
-  private def statsCacheOn(df: DataFrame): Boolean =
-    // case-insensitive like Spark's own boolean confs (r17 ADVICE:
-    // exact-lowercase-only was a compat regression vs `.toBoolean`);
-    // still fails loud on anything that isn't a boolean spelling
-    df.sparkSession.conf.getOption(StatsCacheKey).map(_.toLowerCase) match {
-      case None | Some("true") => true
-      case Some("false")       => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"$StatsCacheKey must be 'true' or 'false', got '$other'")
-    }
 
   /** Fingerprint of the plan's file-source leaves: per leaf the file
     * count, total bytes, max modificationTime and a hash of the file
@@ -325,10 +285,9 @@ object ShapeDispatch {
       s"|g=${groupCols.mkString(",")}|v=${valueCols.mkString(",")}"
 
   /** Drop the memoized probe entry for exactly this (input plan,
-    * columns) — the surgical alternative to `statsCache=false` for a
-    * caller who mutated an input mid-session and wants ONE entry gone
-    * instead of the memo off globally (r16 ADVICE). A no-op when no
-    * entry exists. File overwrites are already invalidated structurally
+    * columns) — for a caller who mutated an input mid-session and wants
+    * that ONE entry re-probed (r16 ADVICE). A no-op when no entry
+    * exists. File overwrites are already invalidated structurally
     * by [[inputFingerprint]]; this covers the rest (e.g. an appended
     * in-place mutation the caller knows about before re-reading). */
   def invalidateStats(df: DataFrame, groupCols: Seq[String],
@@ -339,41 +298,30 @@ object ShapeDispatch {
   /** The stats source the auto dials use: catalog stats ONLY when
     * [[trustCatalog]] holds for the statistic the dial decides on
     * (rows-per-group, or the distinct bound when `byDistinct`),
-    * else the exact probe — memoized per (session, plan, columns)
-    * unless `spark.graft.shape.statsCache=false`. Headroom from
-    * `spark.graft.shape.catalogSkewHeadroom` (default 10×). */
+    * else the exact probe, memoized per (session, plan, columns). */
   def guardedStats(df: DataFrame, groupCols: Seq[String],
                    valueCols: Seq[String], cutover: Long,
-                   byDistinct: Boolean): GroupStats = {
-    val headroom = confLong(df, CatalogSkewHeadroomKey, DefaultCatalogSkewHeadroom)
+                   byDistinct: Boolean): GroupStats =
     catalogStatsMulti(df, groupCols, valueCols) match {
       case Some(cs) if trustCatalog(
           if (byDistinct) cs.distinctBound else cs.maxRowsPerGroup,
-          cutover, headroom) => cs
+          cutover, CatalogSkewHeadroom) => cs
       case _ =>
-        def probed = { probeInvocations.incrementAndGet()
-          probeStatsMulti(df, groupCols, valueCols) }
-        if (statsCacheOn(df)) {
-          statsCache.getOrElseUpdate(df.sparkSession,
-            statsCacheKey(df, groupCols, valueCols))(probed)
-        } else probed
+        statsCache.getOrElseUpdate(df.sparkSession,
+            statsCacheKey(df, groupCols, valueCols)) {
+          probeInvocations.incrementAndGet()
+          probeStatsMulti(df, groupCols, valueCols)
+        }
     }
-  }
-
-  private def choose(df: DataFrame, force: Option[Shape],
-                     decideFrom: GroupStats => Shape,
-                     stats: => GroupStats): Shape =
-    force.orElse(confForce(df)).getOrElse(decideFrom(stats))
 
   // ---- dial 1: the ranking family ------------------------------------------
 
   /** [[CoreOps.groupedRankFunctions]] with the shape CHOSEN by the
     * engine: `windowRankFunctions` when every group fits a task,
     * the ranged bookkeeping form when the largest group outruns
-    * `spark.graft.shape.rowsPerGroupCutover` (default 2M — the
-    * committed q53 crossover). Identical output columns and values
-    * either way (spec-pinned); `force`/conf override for callers who
-    * know their distribution.
+    * [[RowsPerGroupCutover]] (2M — the committed q53 crossover).
+    * Identical output columns and values either way (spec-pinned);
+    * `force` or `stats` for callers who know their distribution.
     */
   def rankFunctionsAuto(df: DataFrame, groupCols: Seq[String],
                         peerCols: Seq[String], tieCols: Seq[String],
@@ -381,10 +329,8 @@ object ShapeDispatch {
                         numPartitions: Int = 0,
                         stats: Option[GroupStats] = None,
                         force: Option[Shape] = None): DataFrame = {
-    val cut = confLong(df, RowsPerGroupCutoverKey, DefaultRowsPerGroupCutover)
-    choose(df, force, decideByRows(_, cut),
-        stats.getOrElse(guardedStats(df, groupCols, Nil, cut,
-          byDistinct = false))) match {
+    force.getOrElse(decideByRows(stats.getOrElse(guardedStats(df, groupCols,
+        Nil, RowsPerGroupCutover, byDistinct = false)), RowsPerGroupCutover)) match {
       case WindowShape =>
         CoreOps.windowRankFunctions(df, groupCols, peerCols, tieCols)
       case RangedShape =>
@@ -416,11 +362,11 @@ object ShapeDispatch {
 
   /** Exact per-group percentiles with the shape CHOSEN by the engine:
     * the buffering aggregate while the largest group's distinct-value
-    * count fits one task's merge buffer
-    * (`spark.graft.shape.distinctPerGroupCutover`, default 10⁷ — the
-    * q36 rule), else [[CoreOps.rankedPercentiles]]. The probe measures
-    * max per-group `approx_count_distinct(value)` directly; catalog
-    * stats bound it by the value column's global distinct count.
+    * count fits one task's merge buffer ([[DistinctPerGroupCutover]],
+    * 10⁷ — the q36 rule), else [[CoreOps.rankedPercentiles]]. The probe
+    * measures max per-group `approx_count_distinct(value)` directly;
+    * catalog stats bound it by the value column's global distinct
+    * count.
     */
   def percentilesAuto(df: DataFrame, groupCols: Seq[String],
                       valueCol: String, ps: Seq[Double],
@@ -460,11 +406,9 @@ object ShapeDispatch {
                            stats: Option[GroupStats] = None,
                            force: Option[Shape] = None): DataFrame = {
     require(specs.nonEmpty, "at least one percentile spec")
-    val cut = confLong(df, DistinctPerGroupCutoverKey,
-      DefaultDistinctPerGroupCutover)
-    choose(df, force, decideByDistinct(_, cut),
-        stats.getOrElse(guardedStats(df, groupCols, specs.map(_.valueCol),
-          cut, byDistinct = true))) match {
+    force.getOrElse(decideByDistinct(stats.getOrElse(guardedStats(df,
+        groupCols, specs.map(_.valueCol), DistinctPerGroupCutover,
+        byDistinct = true)), DistinctPerGroupCutover)) match {
       case WindowShape =>
         val aggs = specs.flatMap(sp => sp.ps.zip(sp.outCols).map {
           case (p, o) => percentile(col(sp.valueCol), lit(p)).as(o) })
@@ -601,10 +545,8 @@ object ShapeDispatch {
                              buckets: Int,
                              stats: Option[GroupStats] = None,
                              force: Option[Shape] = None): DataFrame = {
-    val cut = confLong(df, RowsPerGroupCutoverKey, DefaultRowsPerGroupCutover)
-    val shape = choose(df, force, decideByRows(_, cut),
-      stats.getOrElse(guardedStats(df, groupCols, Nil, cut,
-        byDistinct = false)))
+    val shape = force.getOrElse(decideByRows(stats.getOrElse(guardedStats(df,
+      groupCols, Nil, RowsPerGroupCutover, byDistinct = false)), RowsPerGroupCutover))
     CoreOps.equiDepthHistogram(df, groupCols, valueCol, tieCols, buckets,
       rangedRanks = shape == RangedShape)
   }
@@ -618,15 +560,14 @@ object ShapeDispatch {
     *  - window `row_number() ≤ k` when groups are small (one exchange,
     *    group-sized sorts);
     *  - the `topk_structs` bounded heap when the largest group outruns
-    *    `spark.graft.shape.topkRowsPerGroupCutover` (default 1M — the
-    *    r16 boundary receipt, this dial's OWN constant since r16: the
-    *    heap measured 2.4–3.1× faster from 2M rows/group up once the
-    *    copy-gate fix landed, and it has no checkpoint to amortize):
-    *    ≤ k rows of aggregation state per group at every node, never a
-    *    group-sized sort. The auto decision additionally refuses to
-    *    heap a k above `spark.graft.topk.maxK` (O(k) inserts and
-    *    groups×k state stop being "bounded" there — WindowExec's
-    *    spillable sort is the safe shape); a forced shape
+    *    [[TopKRowsPerGroupCutover]] (1M — the r16 boundary receipt,
+    *    this dial's OWN constant since r16: the heap measured 2.4–3.1×
+    *    faster from 2M rows/group up once the copy-gate fix landed, and
+    *    it has no checkpoint to amortize): ≤ k rows of aggregation
+    *    state per group at every node, never a group-sized sort. The
+    *    auto decision additionally refuses to heap a k above [[MaxK]]
+    *    (O(k) inserts and groups×k state stop being "bounded" there —
+    *    WindowExec's spillable sort is the safe shape); a forced shape
     *    is the caller's own sizing and bypasses the guard.
     *
     * Output: the input columns + `rnCol` (int, 1-based). Identical
@@ -650,19 +591,16 @@ object ShapeDispatch {
     require(orderCols.intersect(groupCols).isEmpty,
       s"topKPerGroupAuto: orderCols ${orderCols.mkString(",")} must not " +
         s"overlap groupCols ${groupCols.mkString(",")}")
-    val cut = confLong(df, TopKRowsPerGroupCutoverKey,
-      DefaultTopKRowsPerGroupCutover)
     // the AUTO decision never heaps a huge k (O(k) insert, groups×k
     // state); an explicit force is the caller's own sizing and is
-    // honored either way. k > maxK decides
+    // honored either way. k > MaxK decides
     // WindowShape unconditionally, so short-circuit BEFORE touching
     // stats — a cold memo would otherwise pay a full probe scan whose
     // result is predetermined to be ignored (r16 ADVICE).
-    val maxK = confLong(df, MaxKKey, DefaultMaxK)
-    (force.orElse(confForce(df)).getOrElse {
-      if (k > maxK) WindowShape
+    (force.getOrElse {
+      if (k > MaxK) WindowShape
       else decideByRows(stats.getOrElse(guardedStats(df, groupCols, Nil,
-        cut, byDistinct = false)), cut)
+        TopKRowsPerGroupCutover, byDistinct = false)), TopKRowsPerGroupCutover)
     }) match {
       case WindowShape =>
         val w = Window.partitionBy(groupCols.map(col): _*)

@@ -2812,11 +2812,13 @@ object QueryCatalog {
     * equi-join back on the bigram stream (shuffles bounded by distinct
     * bigrams, never doc×doc) → per-doc integer sums. The bucket cut is
     * integer rank math (rn·3 vs n) with a doc_id tiebreak, so the
-    * boundary is engine-exact. The global row_number is the one
-    * deliberate non-scale choice, mirroring CCNet's corpus-wide
-    * percentile cut; the 100 TB path replaces it with a broadcast
-    * t-digest threshold (q69) — flagging against an approximate quantile
-    * instead of a total order — which changes only the boundary docs.
+    * boundary is engine-exact. The corpus-wide rank, mirroring CCNet's
+    * corpus-wide percentile cut, is [[graft.ops.CoreOps.globalRowNumber]]
+    * (range-partitioned — no single-partition window sorts every scored
+    * document). It orders ascending, so the descending predictability
+    * order ranks by its negation: predictability = sum_pair/sum_head is a
+    * finite double > 0 (every bigram's head count is ≥ 1), and negating a
+    * double is exact.
     */
   def bigramPredictability(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
@@ -2846,8 +2848,10 @@ object QueryCatalog {
       (col("sum_pair").cast("double") / col("sum_head").cast("double"))
         .as("predictability"))
     val nScored = scored.agg(count(lit(1)).as("n_scored"))
-    val rn = row_number().over(Window.orderBy(desc("predictability"), asc("doc_id")))
-    val bucketed = scored.withColumn("rn", rn)
+    val ranked = graft.ops.CoreOps.globalRowNumber(
+      scored.withColumn("neg_predictability", -col("predictability")),
+      Seq("neg_predictability", "doc_id"), rankCol = "rn")
+    val bucketed = ranked
       .crossJoin(broadcast(nScored))
       .select(col("doc_id"), col("n_bigrams"), col("predictability"),
         when(col("rn") * 3 <= col("n_scored"), lit("head"))
@@ -3723,25 +3727,19 @@ object QueryCatalog {
       .orderBy("promo_id")
   }
 
-  /** Exact set-similarity join (q142) through the r15 dispatcher
-    * [[graft.dedup.Dedup.ssJoinPairsAuto]], PINNED to
-    * [[graft.dedup.Dedup.ExactSsJoin]]:
+  /** Exact set-similarity join (q142):
     * [[graft.dedup.Dedup.prefixFilterPairs]] at 3-gram Jaccard ≥ 1/2 —
     * the no-false-negative dual of the MinHash (q19) and SimHash (q52)
     * probabilistic families, with the threshold held in integer
     * arithmetic end to end. The oracle replays the whole construction
-    * (df ranks, prefix bound, length filter, integer verification) —
-    * which is exactly why this GATED query pins the shape (r15 ADVICE):
-    * a session-wide `spark.graft.ssjoin.force=lsh` or an opt-in
-    * `lshEscapeBytes` a user sets for their OWN joins must not silently
-    * change a frozen-hash catalog query's recall in the same session.
-    * Sub-unit recall can never pass this oracle, or a user who didn't
-    * choose it; the conf-sensitive auto ladder stays covered by
-    * Round15/16Spec on the API path.
+    * (df ranks, prefix bound, length filter, integer verification), so
+    * the query calls the exact shape itself: the LSH shape
+    * ([[graft.dedup.Dedup.lshVerifiedPairs]]) returns a subset and
+    * could never pass this oracle.
     */
   def prefixFilterPairsQuery(s: SparkSession, dir: String): DataFrame =
-    Dedup.ssJoinPairsAuto(t(s, dir, "documents"), "doc_id", "text", 1, 2,
-        shingleN = 3, force = Some(Dedup.ExactSsJoin))
+    Dedup.prefixFilterPairs(t(s, dir, "documents"), "doc_id", "text", 1, 2,
+        shingleN = 3)
       .orderBy("doc_a", "doc_b")
 
   /** Per-group OLS (q143): price-vs-quantity trend per return flag from

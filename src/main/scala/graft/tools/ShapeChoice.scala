@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   *  - topk (q137/q172): the per-(flag, part) revenue AGGREGATE frame —
   *    the dial sees parts-per-flag, which grows with the part table,
   *    not the fact table
+  *  - ssjoin (q142): the exact join's estimated candidate shuffle against
+  *    the pair-shuffle warn budget (exact vs LSH is the caller's choice)
   */
 object ShapeChoice {
   def main(args: Array[String]): Unit = {
@@ -34,13 +36,13 @@ object ShapeChoice {
         Seq("l_returnflag"))
       println(s"[shape:rank] dir=$dir rows=${rank.rows} groups=${rank.groups} " +
         s"maxRowsPerGroup=${rank.maxRowsPerGroup} " +
-        s"cutover=${sd.DefaultRowsPerGroupCutover} " +
-        s"choice=${sd.decideByRows(rank, sd.DefaultRowsPerGroupCutover)}")
+        s"cutover=${sd.RowsPerGroupCutover} " +
+        s"choice=${sd.decideByRows(rank, sd.RowsPerGroupCutover)}")
 
       println(s"[shape:equidepth] dir=$dir rows=${rank.rows} groups=${rank.groups} " +
         s"maxRowsPerGroup=${rank.maxRowsPerGroup} " +
-        s"cutover=${sd.DefaultRowsPerGroupCutover} " +
-        s"choice=${sd.decideByRows(rank, sd.DefaultRowsPerGroupCutover)}")
+        s"cutover=${sd.RowsPerGroupCutover} " +
+        s"choice=${sd.decideByRows(rank, sd.RowsPerGroupCutover)}")
 
       val pct = sd.probeStatsMulti(
         li.select("l_returnflag", "l_quantity", "l_extendedprice"),
@@ -48,34 +50,32 @@ object ShapeChoice {
       println(s"[shape:percentile] dir=$dir rows=${pct.rows} groups=${pct.groups} " +
         s"maxDistinctPerGroup=${pct.maxDistinctPerGroup} " +
         s"distinctBound=${pct.distinctBound} " +
-        s"cutover=${sd.DefaultDistinctPerGroupCutover} " +
-        s"choice=${sd.decideByDistinct(pct, sd.DefaultDistinctPerGroupCutover)}")
+        s"cutover=${sd.DistinctPerGroupCutover} " +
+        s"choice=${sd.decideByDistinct(pct, sd.DistinctPerGroupCutover)}")
 
       val rev = li.groupBy("l_returnflag", "l_partkey")
         .agg(sum(col("l_extendedprice").cast("decimal(18,4)")).as("rev"))
       val topk = sd.probeStats(rev, Seq("l_returnflag"))
       println(s"[shape:topk] dir=$dir rows=${topk.rows} groups=${topk.groups} " +
         s"maxRowsPerGroup=${topk.maxRowsPerGroup} " +
-        s"cutover=${sd.DefaultTopKRowsPerGroupCutover} " + // r16: topk's own dial
-        s"choice=${sd.decideByRows(topk, sd.DefaultTopKRowsPerGroupCutover)}")
+        s"cutover=${sd.TopKRowsPerGroupCutover} " + // r16: topk's own dial
+        s"choice=${sd.decideByRows(topk, sd.TopKRowsPerGroupCutover)}")
 
-      // ssjoin dial (q142's construction): the pair-space estimate
-      // ssJoinPairsAuto decides on, priced for the shape the exact
-      // verify would take, against a representative opt-in escape
-      // threshold (the default warn level). The receipt shows where the
-      // exact join's candidate shuffle enters the pair-bound regime.
+      // q142's construction: the exact join's pair-space estimate, priced
+      // for the verify shape it would take, against the warn budget. The
+      // receipt shows where the candidate shuffle enters the pair-bound
+      // regime, where a caller would choose Dedup.lshVerifiedPairs.
       val docs = graft.io.Tables.table(spark, dir, "documents")
       val (_, stoks, prefix, blocks) = graft.dedup.Dedup.prefixCandidates(
         docs, "doc_id", "text", 1, 2, shingleN = 3,
         suffixFilter = false, suffixDepth = 1)
       val vp = graft.dedup.Dedup.planVerify(stoks, prefix, None)
       graft.dedup.Checkpoints.release(blocks)
-      val escape = graft.dedup.Dedup.DefaultPairShuffleWarnBytes
-      val ssChoice = if (vp.estShuffle > escape) "LshSsJoin" else "ExactSsJoin"
+      val warn = graft.dedup.Dedup.DefaultPairShuffleWarnBytes
       println(f"[shape:ssjoin] dir=$dir estPairs=${vp.estPairs}%.4g " +
         f"avgTokensPerDoc=${vp.avgSz}%.1f broadcastShape=${vp.takeBroadcast} " +
-        f"estShuffleBytes=${vp.estShuffle}%.4g escapeBytesIfOptedIn=$escape " +
-        s"choice=$ssChoice")
+        f"estShuffleBytes=${vp.estShuffle}%.4g warnBytes=$warn " +
+        s"pairBound=${vp.estShuffle > warn}")
     }
     spark.stop()
   }

@@ -59,21 +59,14 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("all metric checks evaluate in a single aggregation pass (one job)") {
-    val counting = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counting)
-    try {
+    val jobs = jobsStartedBy {
       CheckSuite.evaluate(df, Seq(NoDuplicates("id"), NoMissing("name"),
         InRange("price", 0, 10), MinAtLeast("price", 0),
         NoFailedRows("neg", col("price") < 0)))
-      Thread.sleep(500) // let listener events drain
-      // 5 metric checks must NOT cost 5 scans; one agg plan (+AQE child
-      // jobs) stays well under one-job-per-check.
-      assert(counting.jobs.get() < 5, s"expected fused aggregation, got ${counting.jobs.get()} jobs for 5 checks")
-    } finally spark.sparkContext.removeSparkListener(counting)
+    }
+    // 5 metric checks must NOT cost 5 scans; one agg plan (+AQE child
+    // jobs) stays well under one-job-per-check.
+    assert(jobs < 5, s"expected fused aggregation, got $jobs jobs for 5 checks")
   }
 
   test("observed(): the gate rides the consumer's action — zero extra scans") {
@@ -81,18 +74,10 @@ class ChecksSpec extends SparkSpec {
       MinAtLeast("price", -5), NoFailedRows("neg2", col("price") < -2),
       NoDuplicates("id"), RequiredColumns(Seq("id", "name")))
     val (obs, handle) = CheckSuite.observed(df, checks)
-    val counting = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(counting)
-    try {
+    val actionJobs = jobsStartedBy {
       obs.write.format("noop").mode("overwrite").save() // the consumer's OWN action
-      Thread.sleep(500)
-      val actionJobs = counting.jobs.get()
-      assert(actionJobs <= 2, s"observed gate must not add scan jobs, saw $actionJobs")
-    } finally spark.sparkContext.removeSparkListener(counting)
+    }
+    assert(actionJobs <= 2, s"observed gate must not add scan jobs, saw $actionJobs")
     val results = CheckSuite.observedResults(obs, handle, checks)
     val byName = results.map(r => r.check -> r).toMap
     assert(byName(NoMissing("name").name).metric == 1 && !byName(NoMissing("name").name).passed)

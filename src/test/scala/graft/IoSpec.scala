@@ -237,16 +237,6 @@ class IoSpec extends SparkSpec {
 
   // ---- Tables.parquet: Spark's inferred schema without Spark's job ---------
 
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Same schema (nullability and field metadata included), same JSON
     * and the same rows as Spark's own inferring read of `path`. */
   private def assertOpensLikeSpark(path: String, orderBy: String*): Unit = {
@@ -259,36 +249,13 @@ class IoSpec extends SparkSpec {
     assert(rows(ours) == rows(theirs), path)
   }
 
-  /** Jobs started while `body` runs: a sentinel job tagged by a local
-    * property marks the end, so every event before it has been seen. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("graft.witness") == "end"))
-          done.countDown()
-        else if (done.getCount > 0) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.witness", "end")
-      try spark.range(1).collect() finally sc.setLocalProperty("graft.witness", null)
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job not seen")
-      jobs.get()
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("Tables.parquet: every testdata file opens with Spark's inferred schema and rows") {
     val files = new java.io.File(sf).listFiles().map(_.getPath)
       .filter(_.endsWith(".parquet")).sorted.toSeq
     assert(files.size == 10)
     files.foreach(assertOpensLikeSpark(_))
     for (nanosAsLong <- Seq("false", "true"))
-      withConf("spark.sql.legacy.parquet.nanosAsLong", nanosAsLong) {
+      withConf("spark.sql.legacy.parquet.nanosAsLong" -> nanosAsLong) {
         assertOpensLikeSpark(s"$sf/events.parquet")
         val viaTables = Tables.events(spark, sf)
         assert(viaTables.schema("ts").dataType == TimestampType)

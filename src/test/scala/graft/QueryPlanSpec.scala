@@ -344,6 +344,24 @@ class QueryPlanSpec extends SparkSpec {
       s"no window may sort the whole table in one partition:\n${plan.take(1500)}")
   }
 
+  test("q103 predictability buckets: no WindowExec without a partition spec") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = QueryCatalog.bigramPredictability(spark, sf)
+    val plan = executedPlan(df)
+    // walk the AQE-final plan: query stages hide their subtrees from collect
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    val windows = nodes(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, s"the rank must run as a window per range partition:\n${plan.take(2000)}")
+    assert(windows.forall(_.partitionSpec.nonEmpty),
+      s"no window may rank every scored document in one partition:\n${plan.take(2000)}")
+  }
+
   test("q134 erasure cascade: key sets flow through semi joins, fact tables never cross") {
     val plan = executedPlan(QueryCatalog.erasureCascade(spark, sf))
     assert(plan.contains("LeftSemi"),

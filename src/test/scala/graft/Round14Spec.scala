@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
 /** Round-14: stat-driven dual-shape selection ([[ShapeDispatch]]).
   * Pins, for each of the three dials (ranking family, percentiles,
   * top-k): (a) the two shapes are value-identical on the adversarial
-  * fixture, (b) the dispatcher CHOOSES the documented shape in each
-  * regime — asserted on the predicate AND on the produced plan — and
-  * (c) the override ladder (per-call force > session conf > stats)
-  * resolves in that order.
+  * fixture, and (b) the dispatcher CHOOSES the documented shape in each
+  * regime — asserted on the predicate AND on the produced plan.
   */
 class Round14Spec extends SparkSpec {
 
@@ -30,16 +28,6 @@ class Round14Spec extends SparkSpec {
       (g, v, i.toLong)
     }
     rows.toDF("grp", "value", "id")
-  }
-
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   // ---- the predicates --------------------------------------------------
@@ -71,7 +59,7 @@ class Round14Spec extends SparkSpec {
   }
 
   test("catalogStats: ANALYZE'd table + CBO supplies stats with no probe") {
-    withConf("spark.sql.cbo.enabled", "true") {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       fixture.write.mode("overwrite").saveAsTable("r14_stats_t")
       spark.sql("ANALYZE TABLE r14_stats_t COMPUTE STATISTICS FOR COLUMNS grp, value")
       val df = spark.table("r14_stats_t")
@@ -85,8 +73,9 @@ class Round14Spec extends SparkSpec {
       assert(st.get.maxRowsPerGroup >= 1250 && st.get.maxRowsPerGroup <= 1700)
       // global distinct(value) ≈ 49-50 bounds the per-group distinct
       assert(st.get.maxDistinctPerGroup > 30 && st.get.maxDistinctPerGroup < 70)
-      // groupStats prefers the catalog (zero probe) when complete
-      assert(ShapeDispatch.groupStats(df, Seq("grp"), Some("value")).source == "catalog")
+      // the dials take a complete, decisive catalog (zero probe)
+      assert(ShapeDispatch.guardedStats(df, Seq("grp"), Seq("value"),
+        ShapeDispatch.RowsPerGroupCutover, byDistinct = false).source == "catalog")
       spark.sql("DROP TABLE r14_stats_t")
     }
   }
@@ -107,42 +96,23 @@ class Round14Spec extends SparkSpec {
     val windowPlan = windowPick.queryExecution.executedPlan.toString
     assert("windowspecdefinition\\(grp#\\d+, value#".r.findFirstIn(windowPlan).isDefined,
       s"expected the raw-frame window shape:\n${windowPlan.take(1500)}")
-    // regime 2: cutover 0 → every group is 'huge' → ranged shape (the
-    // local-stat windows ran inside the eager checkpoint; the result plan
-    // carries only the __pid-ordered bookkeeping windows)
-    withConf(ShapeDispatch.RowsPerGroupCutoverKey, "0") {
-      val rangedPick = ShapeDispatch.rankFunctionsAuto(fixture, Seq("grp"),
-        Seq("value"), Seq("id"), stats = Some(lo))
-      val rangedPlan = rangedPick.queryExecution.executedPlan.toString
-      assert("windowspecdefinition\\(grp#\\d+, value#".r.findFirstIn(rangedPlan).isEmpty,
-        s"ranged pick must not window the raw frame by grp:\n${rangedPlan.take(1500)}")
-      assert(rangedPlan.contains("windowspecdefinition(grp") &&
-        rangedPlan.contains("__pid"),
-        "ranged pick must carry the __pid-ordered bookkeeping windows")
-      // value identity across the dial
-      val a = rankOut(windowPick)
-      val b = rankOut(rangedPick)
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        "the two regimes' outputs diverge")
-    }
-  }
-
-  test("rankFunctionsAuto override ladder: per-call force beats session conf") {
-    withConf(ShapeDispatch.ForceKey, "window") {
-      val forced = ShapeDispatch.rankFunctionsAuto(fixture, Seq("grp"),
-        Seq("value"), Seq("id"), force = Some(RangedShape))
-      val plan = forced.queryExecution.executedPlan.toString
-      assert("windowspecdefinition\\(grp#\\d+, value#".r.findFirstIn(plan).isEmpty,
-        "per-call force=RangedShape must beat conf force=window")
-      // conf alone: window shape even with cutover 0
-      withConf(ShapeDispatch.RowsPerGroupCutoverKey, "0") {
-        val conf = ShapeDispatch.rankFunctionsAuto(fixture, Seq("grp"),
-          Seq("value"), Seq("id"))
-        assert("windowspecdefinition\\(grp#\\d+, value#".r
-            .findFirstIn(conf.queryExecution.executedPlan.toString).isDefined,
-          "conf force=window must beat the stats decision")
-      }
-    }
+    // regime 2: the largest group one row past the cutover → ranged
+    // shape (the local-stat windows ran inside the eager checkpoint; the
+    // result plan carries only the __pid-ordered bookkeeping windows)
+    val hi = lo.copy(maxRowsPerGroup = ShapeDispatch.RowsPerGroupCutover + 1)
+    val rangedPick = ShapeDispatch.rankFunctionsAuto(fixture, Seq("grp"),
+      Seq("value"), Seq("id"), stats = Some(hi))
+    val rangedPlan = rangedPick.queryExecution.executedPlan.toString
+    assert("windowspecdefinition\\(grp#\\d+, value#".r.findFirstIn(rangedPlan).isEmpty,
+      s"ranged pick must not window the raw frame by grp:\n${rangedPlan.take(1500)}")
+    assert(rangedPlan.contains("windowspecdefinition(grp") &&
+      rangedPlan.contains("__pid"),
+      "ranged pick must carry the __pid-ordered bookkeeping windows")
+    // value identity across the dial
+    val a = rankOut(windowPick)
+    val b = rankOut(rangedPick)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      "the two regimes' outputs diverge")
   }
 
   test("q53 (auto) == q170 (forced ranged) on real lineitem") {
@@ -160,7 +130,7 @@ class Round14Spec extends SparkSpec {
       .select("l_returnflag", "l_quantity")
     val st = ShapeDispatch.probeStats(li, Seq("l_returnflag"))
     assert(ShapeDispatch.decideByRows(st,
-      ShapeDispatch.DefaultRowsPerGroupCutover) == WindowShape)
+      ShapeDispatch.RowsPerGroupCutover) == WindowShape)
     val plan = QueryCatalog.rankFunctions(spark, sf)
       .queryExecution.executedPlan.toString
     assert("windowspecdefinition\\(l_returnflag#\\d+, l_quantity#".r
@@ -195,13 +165,14 @@ class Round14Spec extends SparkSpec {
     val auto = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value", ps, outs)
     assert(auto.queryExecution.executedPlan.toString.contains("percentile"),
       "auto must pick the buffering aggregate at 50 distinct values per group")
-    // and with the cutover floored, the ranked form
-    withConf(ShapeDispatch.DistinctPerGroupCutoverKey, "0") {
-      val forced = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value", ps, outs)
-      assert(!forced.queryExecution.executedPlan.toString.contains("percentile("),
-        "cutover 0 must pick the ranked form")
-      assert(forced.orderBy("grp").collect().toSeq == a.toSeq)
-    }
+    // and with the largest group's distinct count past the cutover, the
+    // ranked form
+    val past = ShapeDispatch.DistinctPerGroupCutover + 1
+    val ranked = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value",
+      ps, outs, stats = Some(GroupStats(5010, 5, past, past, "test")))
+    assert(!ranked.queryExecution.executedPlan.toString.contains("percentile("),
+      "a distinct bound past the cutover must pick the ranked form")
+    assert(ranked.orderBy("grp").collect().toSeq == a.toSeq)
   }
 
   test("equiDepthHistogramAuto: both regimes identical on the fixture") {

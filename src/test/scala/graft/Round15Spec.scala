@@ -12,21 +12,11 @@ import org.apache.spark.sql.functions._
   * multi-column percentile dial q36 now rides, (c) the q129/q171 and
   * q137/q172 auto/forced pairs' shapes, (d) the prefixFilterPairs
   * pair-space regime guard and broadcast-verify hardening, (e) the
-  * nearDupStream explicit-lateness contract, (f) ssJoinPairsAuto — the
-  * opt-in stat-driven escape from the exact SSJoin to the LSH-verified
-  * shape (precision 1, recall per the banding curve).
+  * nearDupStream explicit-lateness contract, (f) the two SSJoin shapes a
+  * caller chooses between: q142 is the exact join, and the LSH-verified
+  * shape has precision 1 and recall per the banding curve.
   */
 class Round15Spec extends SparkSpec {
-
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   // ---- (a) catalog-skew headroom guard ------------------------------------
 
@@ -52,7 +42,7 @@ class Round15Spec extends SparkSpec {
     val rows = (0 until 900).map(i => ("big", i.toLong)) ++
       (0 until 100).map(i => (s"g${i % 10}", i.toLong))
     val df = rows.toDF("grp", "id")
-    withConf("spark.sql.cbo.enabled", "true") {
+    withConf("spark.sql.cbo.enabled" -> "true") {
       df.write.mode("overwrite").saveAsTable("r15_skew_t")
       spark.sql("ANALYZE TABLE r15_skew_t COMPUTE STATISTICS FOR COLUMNS grp")
       val t = spark.table("r15_skew_t")
@@ -224,7 +214,7 @@ class Round15Spec extends SparkSpec {
 
   test("prefixFilterPairs: hard cap fails fast naming the LSH escape; warn cap leaves output intact") {
     val docs = graft.io.Tables.table(spark, sf, "documents")
-    withConf(Dedup.MaxPairShuffleBytesKey, "1") {
+    withConf(Dedup.MaxPairShuffleBytesKey -> "1") {
       val e = intercept[IllegalStateException] {
         Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
       }
@@ -236,7 +226,7 @@ class Round15Spec extends SparkSpec {
     // same verified pair set as the unguarded run
     val unguarded = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
       shingleN = 3)
-    withConf(Dedup.PairShuffleWarnBytesKey, "1") {
+    withConf(Dedup.PairShuffleWarnBytesKey -> "1") {
       val warned = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
         shingleN = 3)
       assert(warned.exceptAll(unguarded).isEmpty &&
@@ -261,79 +251,36 @@ class Round15Spec extends SparkSpec {
     assert(auto.count() == 1)
   }
 
-  // ---- (f) ssJoinPairsAuto: the opt-in LSH escape ---------------------------
+  // ---- (f) the two SSJoin shapes ------------------------------------------
 
-  test("ssJoinPairsAuto: the default ladder is exact — multiset-identical to prefixFilterPairs (q142's frozen shape)") {
+  test("q142 is the exact join: multiset-identical to prefixFilterPairs") {
     val docs = graft.io.Tables.table(spark, sf, "documents")
     val exact = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
-    val auto = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2, shingleN = 3)
-    assert(auto.columns.toSeq == exact.columns.toSeq)
-    assert(auto.exceptAll(exact).isEmpty && exact.exceptAll(auto).isEmpty,
-      "with no force and no escape conf the dispatcher must be the exact join")
+    val q142 = QueryCatalog.prefixFilterPairsQuery(spark, sf)
+    assert(q142.columns.toSeq == exact.columns.toSeq)
+    assert(q142.exceptAll(exact).isEmpty && exact.exceptAll(q142).isEmpty,
+      "q142 must return every exact pair and nothing else")
   }
 
-  test("ssJoinPairsAuto: escape fires above the opt-in threshold — precision 1, bit-identical rows on emitted pairs") {
+  test("lshVerifiedPairs: precision 1, bit-identical rows on emitted pairs; r=1 covers every true pair") {
     val docs = graft.io.Tables.table(spark, sf, "documents")
     val exact = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
-    withConf(Dedup.SsJoinLshEscapeBytesKey, "1") {
-      val lsh = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2, shingleN = 3)
-      assert(lsh.columns.toSeq == exact.columns.toSeq,
-        "both shapes must share the output contract")
-      // precision 1: the verification is the same integer arithmetic, so
-      // every emitted row (ids, inter, union_sz, jaccard) must appear in
-      // the exact output verbatim
-      assert(lsh.exceptAll(exact).isEmpty,
-        "the LSH shape must never emit a row the exact join would not")
-      // r=1 over 64 bands: any true pair at J >= 1/2 misses all bands
-      // with model probability (1-s)^64 <= 2^-64 — on this fixed corpus
-      // and hash family the candidate cover is total, so recall is
-      // exactly 1 (deterministic; re-proven every run)
-      val full = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-        shingleN = 3, lshRowsPerBand = 1)
-      assert(full.exceptAll(exact).isEmpty && exact.exceptAll(full).isEmpty,
-        "r=1 banding must cover every true pair on the fixture")
-    }
-  }
-
-  test("ssJoinPairsAuto: selection ladder — per-call force > session conf > escape conf > exact") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "x y z w"))
-      .toDF("doc_id", "text")
-    // the hard-cap guard lives ONLY in the exact verify path: with the
-    // cap at 1 byte, a run that throws took the exact shape and a run
-    // that completes took the LSH shape — an unambiguous plan witness
-    withConf(Dedup.MaxPairShuffleBytesKey, "1") {
-      intercept[IllegalStateException] { // default ladder: exact
-        Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2)
-      }
-      // forced LSH skips the exact path (and its guard) entirely
-      val viaLsh = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-        force = Some(Dedup.LshSsJoin), lshRowsPerBand = 1)
-      assert(viaLsh.count() == 1)
-      withConf(Dedup.SsJoinForceKey, "lsh") { // session conf alone: LSH
-        assert(Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-          lshRowsPerBand = 1).count() == 1)
-        intercept[IllegalStateException] { // per-call force beats the conf
-          Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-            force = Some(Dedup.ExactSsJoin))
-        }
-      }
-      withConf(Dedup.SsJoinForceKey, "exact") {
-        withConf(Dedup.SsJoinLshEscapeBytesKey, "1") {
-          intercept[IllegalStateException] { // force conf beats the escape
-            Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2)
-          }
-        }
-      }
-      // an escape threshold the estimate stays UNDER resolves to exact
-      // (the guard proves the exact path ran; the estimate was computed
-      // before it — ladder step 4's under-threshold branch)
-      withConf(Dedup.SsJoinLshEscapeBytesKey, "1000000000000000000") {
-        intercept[IllegalStateException] {
-          Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2)
-        }
-      }
-    }
+    val lsh = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
+    assert(lsh.columns.toSeq == exact.columns.toSeq,
+      "both shapes must share the output contract")
+    // precision 1: the verification is the same integer arithmetic, so
+    // every emitted row (ids, inter, union_sz, jaccard) must appear in
+    // the exact output verbatim
+    assert(lsh.exceptAll(exact).isEmpty,
+      "the LSH shape must never emit a row the exact join would not")
+    // r=1 over 32 bands: any true pair at J >= 1/2 misses all bands
+    // with model probability (1-s)^32 <= 2^-32 — on this fixed corpus
+    // and hash family the candidate cover is total, so recall is
+    // exactly 1 (deterministic; re-proven every run)
+    val full = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 1, 2,
+      shingleN = 3, rowsPerBand = 1)
+    assert(full.exceptAll(exact).isEmpty && exact.exceptAll(full).isEmpty,
+      "r=1 banding must cover every true pair on the fixture")
   }
 
   // ---- (e) nearDupStream explicit-lateness contract ------------------------

@@ -3,54 +3,19 @@ package graft
 import graft.dedup.Dedup
 import graft.ops.ShapeDispatch
 import graft.ops.ShapeDispatch.{PercentileSpec, RangedShape}
-import graft.queries.QueryCatalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-16 pins: (a) ssJoinPairsAuto's force conf fails loud on an
-  * unknown value, (b) null/empty-text docs never enter LSH banding (the
-  * quadratic null-bucket hazard), (c) the gated q142 catalog query is
-  * conf-insensitive (pinned exact), (d) guardedStats' probe is memoized
+/** Round-16 pins: (b) null/empty-text docs never enter LSH banding (the
+  * quadratic null-bucket hazard), (d) guardedStats' probe is memoized
   * per (session, plan, columns) — the second auto-dial call runs zero
   * probes, (e) the fused multi-column ranked-percentile pass is
   * value-identical to the per-column join form it replaces.
   */
 class Round16Spec extends SparkSpec {
 
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   private def sameMultiset(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-
-  // ---- (a) force conf fails loud ------------------------------------------
-
-  test("ssJoinPairsAuto: unknown spark.graft.ssjoin.force value throws, naming the valid values") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
-    for (bad <- Seq("LSH", "Exact", "lshh", "")) {
-      withConf(Dedup.SsJoinForceKey, bad) {
-        val e = intercept[IllegalArgumentException] {
-          Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2)
-        }
-        assert(e.getMessage.contains(Dedup.SsJoinForceKey) &&
-          e.getMessage.contains("exact") && e.getMessage.contains("lsh"),
-          s"error must name the key and both valid values, got: ${e.getMessage}")
-      }
-    }
-    // a per-call force never consults the conf — even a bad value is moot
-    withConf(Dedup.SsJoinForceKey, "LSH") {
-      assert(Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-        force = Some(Dedup.ExactSsJoin)).count() == 0L)
-    }
-  }
 
   // ---- (b) null/empty text never bands ------------------------------------
 
@@ -85,28 +50,15 @@ class Round16Spec extends SparkSpec {
           (103L, "unrelated words entirely disjoint token stream here")))
       .toDF("doc_id", "text")
     val exact = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
-    val lsh = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2, shingleN = 3,
-      force = Some(Dedup.LshSsJoin), lshRowsPerBand = 1)
+    val lsh = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 1, 2, shingleN = 3,
+      rowsPerBand = 1)
     assert(sameMultiset(lsh, exact),
       "r=1 banding on a null-heavy corpus must still equal the exact join")
   }
 
-  // ---- (c) q142 is conf-insensitive ---------------------------------------
-
-  test("q142 catalog query pins the exact shape: session ssjoin confs cannot change its recall") {
-    val baseline = QueryCatalog.prefixFilterPairsQuery(spark, sf)
-    withConf(Dedup.SsJoinForceKey, "lsh") {
-      withConf(Dedup.SsJoinLshEscapeBytesKey, "1") {
-        val pinned = QueryCatalog.prefixFilterPairsQuery(spark, sf)
-        assert(sameMultiset(pinned, baseline),
-          "a gated frozen-hash query must not react to session-wide ssjoin confs")
-      }
-    }
-  }
-
   // ---- (d) stats-cache: the probe is memoized -----------------------------
 
-  test("guardedStats memo: second auto-dial call on the same input runs zero probes; opt-out re-probes") {
+  test("guardedStats memo: second auto-dial call on the same input runs zero probes") {
     import spark.implicits._
     val df = (0 until 500).map(i => (s"g${i % 7}", i.toLong, i % 13))
       .toDF("grp", "id", "v")
@@ -130,14 +82,6 @@ class Round16Spec extends SparkSpec {
     assert(probes {
       ShapeDispatch.percentilesAuto(df, Seq("grp"), "v", Seq(0.5), Seq("p50"))
     } == 0L)
-    // opt-out: every call probes
-    withConf(ShapeDispatch.StatsCacheKey, "false") {
-      assert(probes {
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      } == 2L, "statsCache=false must disable the memo")
-    }
-    // ... and the cached entry still serves when re-enabled
     assert(probes {
       ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 3)
     } == 0L, "the rank dial's (grp, no value cols) entry serves top-k too")
@@ -146,23 +90,14 @@ class Round16Spec extends SparkSpec {
   test("guardedStats memo: zero Spark jobs on the cached call (listener witness)") {
     import spark.implicits._
     val df = (0 until 300).map(i => (s"k${i % 5}", i.toLong)).toDF("grp", "id")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // warm the memo (first call probes), then listen across the second
+    // warm the memo (first call probes), then count across the second
     ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    // building the shaped frame is lazy — any job seen here came from a
+    // probe
+    val jobs = jobsStartedBy {
       ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      // building the shaped frame is lazy — any job seen here came from
-      // a probe. The listener bus is async; give a stray job-start event
-      // ample time to surface before asserting none arrived.
-      Thread.sleep(1500)
-      assert(jobs.get() == 0,
-        s"cached auto-dial call must launch no jobs, saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"cached auto-dial call must launch no jobs, saw $jobs")
   }
 
   // ---- (e) fused multi-column ranked percentiles --------------------------
@@ -245,36 +180,37 @@ class Round16Spec extends SparkSpec {
     val df = (0 until 400).map(i => (s"g${i % 4}", i.toLong, (i * 31 % 97).toLong))
       .toDF("grp", "id", "v")
     def planOf(d: DataFrame) = d.queryExecution.executedPlan.toString
-    // tiny groups: window either way under defaults
+    // tiny groups: the probe keeps the window shape
     val auto = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5)
     assert(!planOf(auto).contains("topk_structs"))
-    // the TOPK key at 0 flips the dial to the heap…
-    withConf(ShapeDispatch.TopKRowsPerGroupCutoverKey, "0") {
-      val heap = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5)
-      assert(planOf(heap).contains("topk_structs"),
-        "topkRowsPerGroupCutover=0 must engage the bounded heap")
-      // …and the copy-gated buffer is value-identical to the window form
-      val w = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5,
-        force = Some(ShapeDispatch.WindowShape))
-      assert(heap.exceptAll(w).isEmpty && w.exceptAll(heap).isEmpty)
-      // the auto decision refuses a k above spark.graft.topk.maxK…
-      withConf(ShapeDispatch.MaxKKey, "4") {
-        val guarded = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"),
-          Seq("v", "id"), 5)
-        assert(!planOf(guarded).contains("topk_structs"),
-          "auto must not heap k > maxK")
-        // …but an explicit force is the caller's own sizing
-        val forced = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"),
-          Seq("v", "id"), 5, force = Some(ShapeDispatch.RangedShape))
-        assert(planOf(forced).contains("topk_structs"))
-      }
-    }
-    // the RANK dial's shared key no longer moves the topk dial
-    withConf(ShapeDispatch.RowsPerGroupCutoverKey, "0") {
-      val still = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5)
-      assert(!planOf(still).contains("topk_structs"),
-        "rowsPerGroupCutover is the rank dial's key, not top-k's")
-    }
+    def stats(maxPer: Long) =
+      ShapeDispatch.GroupStats(400, 4, maxPer, Long.MaxValue, "test")
+    val cut = ShapeDispatch.TopKRowsPerGroupCutover
+    def autoWith(maxPer: Long, k: Int = 5) = ShapeDispatch.topKPerGroupAuto(
+      df, Seq("grp"), Seq("v", "id"), k, stats = Some(stats(maxPer)))
+    // the TOPK cutover is strict: at it, window; one row past it, heap…
+    assert(!planOf(autoWith(cut)).contains("topk_structs"))
+    val heap = autoWith(cut + 1)
+    assert(planOf(heap).contains("topk_structs"),
+      "a group past TopKRowsPerGroupCutover must engage the bounded heap")
+    // …and the copy-gated buffer is value-identical to the window form
+    val w = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5,
+      force = Some(ShapeDispatch.WindowShape))
+    assert(heap.exceptAll(w).isEmpty && w.exceptAll(heap).isEmpty)
+    // the auto decision refuses a k above MaxK…
+    val bigK = (ShapeDispatch.MaxK + 1).toInt
+    assert(!planOf(autoWith(cut + 1, k = bigK)).contains("topk_structs"),
+      "auto must not heap k > maxK")
+    // …but an explicit force is the caller's own sizing
+    val forced = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"),
+      Seq("v", "id"), bigK, force = Some(ShapeDispatch.RangedShape))
+    assert(planOf(forced).contains("topk_structs"))
+    // the RANK dial keeps its own cutover: the same stats that heap the
+    // top-k leave the ranking dial on the window shape
+    val ranks = ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("v"),
+      Seq("id"), stats = Some(stats(cut + 1)))
+    assert(!planOf(ranks).contains("__pid"),
+      "RowsPerGroupCutover, not TopKRowsPerGroupCutover, drives the rank dial")
   }
 
   test("TopKBuffer.wouldAccept mirrors insert: rejects at-or-below tail when full, accepts otherwise") {
@@ -303,15 +239,15 @@ class Round16Spec extends SparkSpec {
     val n = 200
     val docs = graft.tools.AbLshRecallCurve.plantedDocs(spark, n)
       .persist()
-    val exact = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-      shingleN = 1, force = Some(Dedup.ExactSsJoin)).select("doc_a", "doc_b")
+    val exact = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
+      shingleN = 1).select("doc_a", "doc_b")
       .persist()
     assert(exact.count() == 4L * n,
       "exact join must recover exactly the planted pairs")
     for (r <- Seq(4, 1)) {
       val b = 32 / r
-      val lsh = Dedup.ssJoinPairsAuto(docs, "doc_id", "text", 1, 2,
-        shingleN = 1, force = Some(Dedup.LshSsJoin), lshRowsPerBand = r)
+      val lsh = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 1, 2,
+        shingleN = 1, rowsPerBand = r)
         .select("doc_a", "doc_b")
       assert(lsh.exceptAll(exact).isEmpty, s"precision must be 1 at r=$r")
       val found = lsh.intersect(exact)

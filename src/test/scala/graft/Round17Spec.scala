@@ -11,21 +11,10 @@ import org.apache.spark.sql.functions._
   * as the surgical per-entry drop, (b) percentilesAutoMulti's ranged
   * reduce-join is null-safe on the group keys — a null-key group now
   * survives ALL THREE shapes identically (buffered ≡ per-column joined ≡
-  * fused), (c) PercentileSpec fails loud on p outside [0,1], (d) a bad
-  * spark.graft.shape.statsCache value throws naming the key, (e) the
+  * fused), (c) PercentileSpec fails loud on p outside [0,1], (e) the
   * top-k auto dial's k > maxK short-circuit runs zero probes.
   */
 class Round17Spec extends SparkSpec {
-
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   private def probes(body: => Unit): Long = {
     val before = ShapeDispatch.probeInvocations.get()
@@ -141,23 +130,6 @@ class Round17Spec extends SparkSpec {
     PercentileSpec("a", Seq(0.0, 1.0), Seq("lo", "hi"))
   }
 
-  // ---- (d) statsCache conf fails loud ---------------------------------------
-
-  test("bad spark.graft.shape.statsCache value throws naming the key and valid values") {
-    import spark.implicits._
-    val df = (0 until 100).map(i => (s"r17c${i % 3}", i.toLong)).toDF("grp", "id")
-    for (bad <- Seq("0", "off", "TRUE ")) {
-      withConf(ShapeDispatch.StatsCacheKey, bad) {
-        val e = intercept[IllegalArgumentException] {
-          ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-        }
-        assert(e.getMessage.contains(ShapeDispatch.StatsCacheKey) &&
-          e.getMessage.contains("true") && e.getMessage.contains("false"),
-          s"error must name the key and the valid values, got: ${e.getMessage}")
-      }
-    }
-  }
-
   // ---- (f) TopKBuffer is a bounded max-heap (k=1000 cliff fix) --------------
 
   test("TopKBuffer heap: kept multiset == brute-force k smallest, across inserts and merges") {
@@ -183,14 +155,13 @@ class Round17Spec extends SparkSpec {
     import spark.implicits._
     val df = (0 until 3000).map(i => (s"hg${i % 3}", i.toLong, (i * 2654435761L % 7919)))
       .toDF("grp", "id", "v")
-    withConf(ShapeDispatch.TopKRowsPerGroupCutoverKey, "0") {
-      val heap = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 1000)
-      assert(heap.queryExecution.executedPlan.toString.contains("topk_structs"))
-      val w = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 1000,
-        force = Some(WindowShape))
-      assert(heap.exceptAll(w).isEmpty && w.exceptAll(heap).isEmpty,
-        "heap and window top-1000 must be identical multisets")
-    }
+    val heap = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 1000,
+      force = Some(RangedShape))
+    assert(heap.queryExecution.executedPlan.toString.contains("topk_structs"))
+    val w = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 1000,
+      force = Some(WindowShape))
+    assert(heap.exceptAll(w).isEmpty && w.exceptAll(heap).isEmpty,
+      "heap and window top-1000 must be identical multisets")
   }
 
   // ---- (e) k > maxK short-circuits before the probe -------------------------
@@ -200,12 +171,11 @@ class Round17Spec extends SparkSpec {
     // distinct literals → a fresh plan → cold memo entry by construction
     val df = (0 until 220).map(i => (s"r17k${i % 4}", i.toLong, (i * 17 % 41).toLong))
       .toDF("grp", "id", "v")
-    withConf(ShapeDispatch.MaxKKey, "4") {
-      assert(probes {
-        val out = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 5)
-        assert(!out.queryExecution.executedPlan.toString.contains("topk_structs"))
-      } == 0L, "a predetermined window decision must not pay a probe scan")
-    }
+    assert(probes {
+      val out = ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"),
+        (ShapeDispatch.MaxK + 1).toInt)
+      assert(!out.queryExecution.executedPlan.toString.contains("topk_structs"))
+    } == 0L, "a predetermined window decision must not pay a probe scan")
     // same input below maxK: the decision needs stats → exactly one probe
     assert(probes {
       ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 3)

@@ -2,57 +2,18 @@ package graft
 
 import graft.ops.ShapeDispatch
 
-/** Round-18 pins for the r17 ADVICE closures: (a) the statsCache conf
-  * is case-insensitive again (Spark boolean-conf convention; exact
-  * lowercase-only was an r17 compat regression) while still failing
-  * loud on non-boolean spellings, (b) the input fingerprint is stable
-  * across fresh reads of unchanged files (order-insensitive path hash
-  * — a re-listing in any order must serve the memo, not re-probe) and
-  * never performs a live filesystem listing for non-caching FileIndex
-  * types (those contribute a constant).
+/** Round-18 pins for the r17 ADVICE closures: the input fingerprint is
+  * stable across fresh reads of unchanged files (order-insensitive path
+  * hash — a re-listing in any order must serve the memo, not re-probe)
+  * and never performs a live filesystem listing for non-caching
+  * FileIndex types (those contribute a constant).
   */
 class Round18Spec extends SparkSpec {
-
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   private def probes(body: => Unit): Long = {
     val before = ShapeDispatch.probeInvocations.get()
     body
     ShapeDispatch.probeInvocations.get() - before
-  }
-
-  test("statsCache conf accepts case-insensitive booleans; still throws on non-booleans") {
-    import spark.implicits._
-    val df = (0 until 200).map(i => (s"r18c${i % 3}", i.toLong)).toDF("grp", "id")
-    // uppercase/mixed-case spellings must behave exactly like their
-    // lowercase forms: TRUE/True -> memo on, FALSE/False -> memo off
-    for (on <- Seq("TRUE", "True")) withConf(ShapeDispatch.StatsCacheKey, on) {
-      ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      assert(probes {
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      } == 0L, s"statsCache=$on must keep the memo ON (second call zero probes)")
-    }
-    for (off <- Seq("FALSE", "False")) withConf(ShapeDispatch.StatsCacheKey, off) {
-      assert(probes {
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      } == 2L, s"statsCache=$off must disable the memo (two calls, two probes)")
-    }
-    // non-boolean spellings still fail loud, naming key and valid values
-    for (bad <- Seq("0", "on", "TRUE ")) withConf(ShapeDispatch.StatsCacheKey, bad) {
-      val e = intercept[IllegalArgumentException] {
-        ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      }
-      assert(e.getMessage.contains(ShapeDispatch.StatsCacheKey), e.getMessage)
-    }
   }
 
   test("input fingerprint: stable across fresh reads; multi-file path identical under re-listing") {

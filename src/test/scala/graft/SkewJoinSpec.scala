@@ -20,16 +20,6 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   */
 class SkewJoinSpec extends SparkSpec {
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the planted skewed partition; results equal the unsplit join") {
     // half of 200k rows land on key 0 → one shuffle partition dwarfs the
     // rest; thresholds are tuned down so test-sized data crosses them the
