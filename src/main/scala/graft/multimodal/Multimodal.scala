@@ -42,16 +42,9 @@ object Multimodal {
   /** Feature-vector length every modality folds to. */
   val FeatureDim = 8
 
-  /** Shannon entropy of the byte distribution, bits ∈ [0, 8] — a
-    * modality-independent payload statistic (corrupt-media triage,
-    * compression detection). Histogram built with a primitive index
-    * loop (an `Array[Byte].foreach` boxes every byte — Function1 isn't
-    * specialized on Byte); the entropy fold over the ≤256-entry
-    * histogram is unchanged, so the value is bit-identical to r13.
-    */
-  def byteEntropy(bytes: Array[Byte]): Double =
-    entropyFromCounts(byteCounts(bytes), bytes.length)
-
+  /** Byte histogram, built with a primitive index loop (an
+    * `Array[Byte].foreach` boxes every byte — Function1 isn't
+    * specialized on Byte). */
   private def byteCounts(bytes: Array[Byte]): Array[Long] = {
     val counts = new Array[Long](256)
     var i = 0
@@ -59,6 +52,9 @@ object Multimodal {
     counts
   }
 
+  /** Shannon entropy of a byte histogram over `n` bytes, bits ∈ [0, 8] —
+    * a modality-independent payload statistic (corrupt-media triage,
+    * compression detection). */
   private def entropyFromCounts(counts: Array[Long], n: Int): Double = {
     if (n == 0) return 0.0
     counts.filter(_ > 0).map { c =>

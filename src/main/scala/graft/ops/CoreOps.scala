@@ -380,26 +380,6 @@ object CoreOps {
       .select(col(keyCol), col("change"))
   }
 
-  /** SCALE-CORRECT global row numbering — the distributed form of
-    * `row_number() OVER (ORDER BY …)`, which Spark plans as a
-    * SINGLE-partition window (WindowExec even warns about it): every row
-    * of a 100 TB table through one task. Here:
-    *
-    *   1. `repartitionByRange` on the order columns (range boundaries
-    *      from Spark's sampler) + sort-within-partitions — the standard
-    *      distributed total sort;
-    *   2. per-partition counts (one tiny aggregate over partition ids);
-    *   3. cumulative offsets over the |partitions|-row count table —
-    *      driver-side, bounded by the partition count, never by rows;
-    *   4. global rank = broadcast offset + local row_number within the
-    *      partition (each window sorts ONE partition).
-    *
-    * The output ranks are a pure function of the TOTAL order (order
-    * columns must include a tie-break), so they are identical whatever
-    * boundaries the sampler picks — only task sizing varies. This is the
-    * primitive to reach for wherever a global rank/ntile/equi-depth over
-    * one giant ordered stream is needed.
-    */
   /** The ranged-rank family injects `__`-prefixed working columns; an
     * input frame already carrying one would be silently corrupted (the
     * r12 advisory) — reject it up front.
@@ -412,24 +392,50 @@ object CoreOps {
         clash.toSeq.sorted.mkString(", "))
   }
 
+  /** The one partitioning under every ranged order statistic:
+    * `repartitionByRange` on `keys` (boundaries from Spark's sampler)
+    * into the session's shuffle-partition count, each row tagged with
+    * its partition id as `__pid`. The sampler draws NEW boundaries on
+    * every job (its seed involves the RDD id), so a caller that reads
+    * the partitioning from two jobs materializes it first.
+    */
+  private def rangeParted(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
+        keys.map(c => asc(c)): _*)
+      .withColumn("__pid", spark_partition_id())
+
+  /** SCALE-CORRECT global row numbering — the distributed form of
+    * `row_number() OVER (ORDER BY …)`, which Spark plans as a
+    * SINGLE-partition window (WindowExec even warns about it): every row
+    * of a 100 TB table through one task. Here:
+    *
+    *   1. [[rangeParted]] on the order columns + sort-within-partitions
+    *      — the standard distributed total sort;
+    *   2. per-partition counts (one tiny aggregate over partition ids);
+    *   3. cumulative offsets over the |partitions|-row count table —
+    *      driver-side, bounded by the partition count, never by rows;
+    *   4. global rank = broadcast offset + local row_number within the
+    *      partition (each window sorts ONE partition).
+    *
+    * The output ranks are a pure function of the TOTAL order (order
+    * columns must include a tie-break), so they are identical whatever
+    * boundaries the sampler picks — only task sizing varies. This is the
+    * primitive to reach for wherever a global rank/ntile/equi-depth over
+    * one giant ordered stream is needed.
+    */
   def globalRowNumber(df: DataFrame, orderCols: Seq[String],
-                      numPartitions: Int = 0,
                       rankCol: String = "rank"): DataFrame = {
     require(orderCols.nonEmpty, "orderCols must include a total order")
     requireNoReserved(df, Seq("__pid", "__local", "__offset", rankCol),
       "globalRowNumber")
     val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
     // localCheckpoint MATERIALIZES the range partitioning before anything
     // reads it: RangePartitioner's boundary sampling is nondeterministic
     // ACROSS jobs (the sampling seed involves the RDD id), so without a
     // materialization the counts job and the ranking job would each draw
     // their own boundaries and the offsets would not describe the
     // partitions the ranks are computed in (measured: ~86% of ranks off).
-    val (parted, _) = graft.dedup.Checkpoints.tracked(df
-      .repartitionByRange(n, orderCols.map(c => asc(c)): _*)
-      .withColumn("__pid", spark_partition_id()))
+    val (parted, _) = graft.dedup.Checkpoints.tracked(rangeParted(df, orderCols))
     // per-partition counts: |partitions| rows — driver-side cumsum is
     // bounded by the partition count, never the data
     val counts = parted.groupBy("__pid").count()
@@ -452,29 +458,19 @@ object CoreOps {
     * (`row_number() OVER (PARTITION BY group ORDER BY …)`) moves every
     * row of a group through ONE task, which is exactly the global-sort
     * trap again whenever groups are few and huge (a 100 TB fact grouped
-    * by a 3-value flag = three 33 TB sorts). Here:
-    *
-    *   1. `repartitionByRange` on (group…, order…) + local sort — groups
-    *      span CONTIGUOUS partition ranges, each partition sampler-sized;
-    *   2. per-(partition, group) counts — at most |partitions| + |groups|
-    *      rows, because each partition holds a contiguous slice of group
-    *      ranges;
-    *   3. per-group running offsets over that bookkeeping frame (window
-    *      over counts, never over data), broadcast back;
-    *   4. rank = offset + local row_number within (partition, group).
-    *
-    * Ranks are a pure function of the total order within each group
-    * (orderCols must carry a tie-break), so they are identical whatever
-    * boundaries the sampler draws. Joins back are NULL-SAFE on the group
-    * columns, matching window semantics where a null group is a normal
-    * partition. Use the plain window form when groups are many and small
-    * (one shuffle, no checkpoint); use this when groups are few and huge.
+    * by a 3-value flag = three 33 TB sorts). A row number is the running
+    * sum of `1L`, so this is [[rangedRunningSum]] over a literal one:
+    * ranks are `long`, a pure function of the total order within each
+    * group (orderCols must carry a tie-break), identical whatever
+    * boundaries the sampler draws. Use the plain window form when groups
+    * are many and small (one shuffle, no checkpoint); use this when
+    * groups are few and huge.
     */
   def groupedRowNumber(df: DataFrame, groupCols: Seq[String],
-                       orderCols: Seq[String], numPartitions: Int = 0,
+                       orderCols: Seq[String],
                        rankCol: String = "rank"): DataFrame =
-    groupedRowNumberImpl(df, groupCols, orderCols, numPartitions, rankCol,
-      nCol = None)._1
+    rangedRunningSum(df, groupCols, orderCols, lit(1L), rankCol,
+      totalsCol = None, "groupedRowNumber")._1
 
   /** [[groupedRowNumber]] plus the per-group TOTALS as a second (tiny)
     * frame — FUSED from the same per-(partition, group) bookkeeping
@@ -483,65 +479,103 @@ object CoreOps {
     * rankedPercentiles' group totals were a full re-scan of the input;
     * equiDepthHistogram's were an aggregate over the ranked output).
     * Totals = sum of the bookkeeping counts = exactly `count(*)` per
-    * group — bit-identical to the aggregate it replaces. The bookkeeping
-    * frame is itself checkpoint-materialized (≤ |partitions| + |groups|
-    * rows) so the offsets window and the totals aggregate both read it
-    * without re-aggregating the data.
+    * group — bit-identical to the aggregate it replaces.
     */
   def groupedRowNumberAndTotals(df: DataFrame, groupCols: Seq[String],
-                                orderCols: Seq[String], numPartitions: Int = 0,
+                                orderCols: Seq[String],
                                 rankCol: String = "rank",
                                 nCol: String = "__n"): (DataFrame, DataFrame) =
-    groupedRowNumberImpl(df, groupCols, orderCols, numPartitions, rankCol,
-      nCol = Some(nCol))
+    rangedRunningSum(df, groupCols, orderCols, lit(1L), rankCol,
+      totalsCol = Some(nCol), "groupedRowNumber")
 
-  private def groupedRowNumberImpl(df: DataFrame, groupCols: Seq[String],
-                                   orderCols: Seq[String], numPartitions: Int,
-                                   rankCol: String,
-                                   nCol: Option[String]): (DataFrame, DataFrame) = {
+  /** SCALE-CORRECT per-group RUNNING SUM — the distributed form of
+    * `sum(value) OVER (PARTITION BY group ORDER BY … ROWS UNBOUNDED
+    * PRECEDING)`, which single-tasks each group exactly like the ranking
+    * trap [[groupedRowNumber]] kills (q56's per-source packing prefix
+    * sum was the last raw-frame site).
+    *
+    * Bit-identity contract: exact for integral and decimal values
+    * (addition is associative, and Spark's sum widens identically in
+    * both shapes); for DOUBLE values the split changes FP summation
+    * order — use the window form or scale to longs first. Null values
+    * contribute nothing, and a row whose prefix holds only nulls gets a
+    * null running sum — exactly the window semantics (pinned in
+    * Round13Spec). orderCols must complete a within-group total order,
+    * or the prefix (like the window form's) is nondeterministic.
+    */
+  def groupedRunningSum(df: DataFrame, groupCols: Seq[String],
+                        orderCols: Seq[String], valueCol: String,
+                        cumCol: String = "cum"): DataFrame =
+    rangedRunningSum(df, groupCols, orderCols, col(valueCol), cumCol,
+      totalsCol = None, "groupedRunningSum")._1
+
+  /** The one ranged kernel under per-group ranks and running sums: the
+    * running sum of `value` within each group, in (order…) order.
+    *
+    *   1. [[rangeParted]] on (group…, order…), materialized — groups
+    *      span CONTIGUOUS partition ranges, each partition sampler-sized,
+    *      and the two jobs below read one set of boundaries (the
+    *      globalRowNumber lesson);
+    *   2. per-(partition, group) sums — at most |partitions| + |groups|
+    *      rows, because each partition holds a contiguous slice of group
+    *      ranges;
+    *   3. exclusive per-group running offsets over that bookkeeping
+    *      frame (a window over sums, never over data), broadcast back
+    *      and joined NULL-SAFELY on the group columns (a null group is a
+    *      normal partition, as in the window form);
+    *   4. result = offset + local running sum within (partition, group).
+    *
+    * `sum` ignores nulls, so either side is null only when its whole
+    * range held no non-null value: the combine keeps an all-null prefix
+    * null, and a group's first partition (no offset) takes its local
+    * sum. `totalsCol` also returns the per-group sums as a second frame;
+    * the bookkeeping frame is then materialized too (≤ |partitions| +
+    * |groups| rows), because the offsets and the totals both read it.
+    */
+  private def rangedRunningSum(df: DataFrame, groupCols: Seq[String],
+                               orderCols: Seq[String], value: Column,
+                               outCol: String, totalsCol: Option[String],
+                               fn: String): (DataFrame, DataFrame) = {
     require(groupCols.nonEmpty, "groupCols must be non-empty (use globalRowNumber)")
     require(orderCols.nonEmpty, "orderCols must include a within-group total order")
+    // outCol is as much a working name as the __-prefixed ones: an input
+    // frame already carrying it would be silently overwritten (r13 advisory)
     requireNoReserved(df,
-      Seq("__pid", "__local", "__offset", "__cnt", rankCol) ++ nCol ++
+      Seq("__pid", "__local", "__psum", "__offset", outCol) ++ totalsCol ++
         groupCols.map(c => s"__g_$c"),
-      "groupedRowNumber")
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    // materialize the range partitioning before TWO jobs read it — the
-    // globalRowNumber lesson (sampler boundaries differ across jobs);
+      fn)
     // output-ledgered so Bench/Verify release the blocks after the query
-    val parted = graft.dedup.Checkpoints.output(
-      df.repartitionByRange(n, (groupCols ++ orderCols).map(c => asc(c)): _*)
-        .withColumn("__pid", spark_partition_id()))
-    val counts0 = parted
-      .groupBy(("__pid" +: groupCols).map(col): _*)
-      .agg(count(lit(1)).as("__cnt"))
-    // only the fused variant materializes the bookkeeping frame (it has
-    // two consumers there); the plain rank path keeps its r12 plan shape
-    val counts =
-      if (nCol.isDefined) graft.dedup.Checkpoints.output(counts0) else counts0
+    val parted = graft.dedup.Checkpoints.output(rangeParted(df, groupCols ++ orderCols))
+    val pidGroup = ("__pid" +: groupCols).map(col)
+    val sums0 = parted.groupBy(pidGroup: _*).agg(sum(value).as("__psum"))
+    // only the totals variant materializes the bookkeeping frame (it has
+    // two consumers there); the other paths keep their r12 plan shape
+    val sums =
+      if (totalsCol.isDefined) graft.dedup.Checkpoints.output(sums0) else sums0
     val wOff = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(asc("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__offset", coalesce(sum(col("__cnt")).over(wOff), lit(0L)))
+    val offsets = sums
+      .withColumn("__offset", sum(col("__psum")).over(wOff))
       .select((col("__pid") +: groupCols.map(c => col(c).as(s"__g_$c"))) :+ col("__offset"): _*)
-    val wLocal = Window.partitionBy(("__pid" +: groupCols).map(col): _*)
+    val wLocal = Window.partitionBy(pidGroup: _*)
       .orderBy(orderCols.map(c => asc(c)): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val joinCond = groupCols
       .map(c => parted(c) <=> offsets(s"__g_$c"))
       .foldLeft(parted("__pid") === offsets("__pid"))(_ && _)
-    val ranked = parted
-      .withColumn("__local", row_number().over(wLocal))
+    val out = parted
+      .withColumn("__local", sum(value).over(wLocal))
       .join(broadcast(offsets), joinCond)
-      .withColumn(rankCol, (col("__offset") + col("__local")).cast("long"))
+      .withColumn(outCol,
+        when(col("__offset").isNull, col("__local"))
+          .when(col("__local").isNull, col("__offset"))
+          .otherwise(col("__offset") + col("__local")))
       .drop(offsets("__pid"))
       .drop((groupCols.map(c => s"__g_$c") ++ Seq("__pid", "__local", "__offset")): _*)
-    val totals = nCol.map(nc =>
-      counts.groupBy(groupCols.map(col): _*)
-        .agg(sum(col("__cnt")).as(nc))).orNull
-    (ranked, totals)
+    val totals = totalsCol.map(t =>
+      sums.groupBy(groupCols.map(col): _*).agg(sum(col("__psum")).as(t))).orNull
+    (out, totals)
   }
 
   /** SCALE-CORRECT ranking-function FAMILY — rank / dense_rank (and via
@@ -585,137 +619,110 @@ object CoreOps {
     * bookkeeping frame, broadcast back, combined per row with integer
     * arithmetic.
     *
-    *  - `peersUnique = true` declares that peerCols alone are unique
-    *    within every group (e.g. the ORDER BY ends in the table key):
-    *    then rank == dense_rank == row_number, and the boundary
-    *    machinery collapses to [[groupedRowNumber]] + group totals.
-    *
     * Output: input columns + `row_number`, `rank`, `dense_rank` (long),
     * `n_group` (group size, long), `n_peers` (peer-class size, long).
     * Use the plain window form when groups are many and small (the
     * established dual-shape rule).
     */
   def groupedRankFunctions(df: DataFrame, groupCols: Seq[String],
-                           peerCols: Seq[String], tieCols: Seq[String],
-                           peersUnique: Boolean = false,
-                           numPartitions: Int = 0): DataFrame = {
+                           peerCols: Seq[String],
+                           tieCols: Seq[String]): DataFrame = {
     require(peerCols.nonEmpty, "peerCols must carry the ORDER BY expressions")
-    val outNames = Seq("row_number", "rank", "dense_rank", "n_group", "n_peers")
-    requireNoReserved(df, outNames, "groupedRankFunctions")
-    if (peersUnique) {
-      requireNoReserved(df, groupCols.map(c => s"__t_$c"), "groupedRankFunctions")
-      val rn = groupedRowNumber(df, groupCols, peerCols ++ tieCols,
-        numPartitions = numPartitions, rankCol = "row_number")
-      val totals = rn.groupBy(groupCols.map(col): _*)
-        .agg(count(lit(1)).as("n_group"))
-        .select(groupCols.map(c => col(c).as(s"__t_$c")) :+ col("n_group"): _*)
-      val tCond = groupCols.map(c => rn(c) <=> totals(s"__t_$c")).reduce(_ && _)
-      rn.join(broadcast(totals), tCond)
-        .drop(groupCols.map(c => s"__t_$c"): _*)
-        .withColumn("rank", col("row_number"))
-        .withColumn("dense_rank", col("row_number"))
-        .withColumn("n_peers", lit(1L))
-    } else {
-      // the full working-name set, including every column the bk/b2/bsel
-      // bookkeeping frames create with withColumn/agg aliases — a group
-      // column named like one of those would be silently REPLACED, the
-      // exact corruption class this guard closes (r13 advisory)
-      requireNoReserved(df,
-        Seq("__pid", "__local", "__lrank", "__ldense", "__lcnt",
-          "__cnt", "__nf", "__cfirst", "__clast", "__firstP", "__lastP",
-          "__offset", "__s", "__genf", "__cumg", "__tsc", "__pts",
-          "__ngc", "__ngs", "__gn", "__bcnt", "__b_pid", "__cend") ++
-          groupCols.map(c => s"__g_$c"),
-        "groupedRankFunctions")
-      val spark = df.sparkSession
-      val n = if (numPartitions > 0) numPartitions
-              else spark.sessionState.conf.numShufflePartitions
-      val orderCols = peerCols ++ tieCols
-      val peersStruct = struct(peerCols.map(col): _*)
-      val pidGroup = ("__pid" +: groupCols).map(col)
-      val wRows  = Window.partitionBy(pidGroup: _*)
-        .orderBy(orderCols.map(c => asc(c)): _*)
-      val wPeers = Window.partitionBy(pidGroup: _*)
-        .orderBy(peerCols.map(c => asc(c)): _*)
-      val wClass = Window.partitionBy((pidGroup ++ peerCols.map(col)): _*)
-      val parted = graft.dedup.Checkpoints.output(df
-        .repartitionByRange(n, (groupCols ++ orderCols).map(c => asc(c)): _*)
-        .withColumn("__pid", spark_partition_id())
-        .withColumn("__local", row_number().over(wRows))
-        .withColumn("__lrank", rank().over(wPeers).cast("long"))
-        .withColumn("__ldense", dense_rank().over(wPeers).cast("long"))
-        .withColumn("__lcnt", count(lit(1)).over(wClass)))
-      // bookkeeping: one row per (partition, group) — first/last class
-      // peer tuples and sizes, all from the local stats above (min_by /
-      // max_by on the local class index: class 1 is the first class,
-      // max(__ldense) the last)
-      val bk = parted.groupBy(pidGroup: _*).agg(
-        count(lit(1)).as("__cnt"),
-        max(col("__ldense")).as("__nf"),
-        min_by(col("__lcnt"), col("__ldense")).as("__cfirst"),
-        max_by(col("__lcnt"), col("__ldense")).as("__clast"),
-        min_by(peersStruct, col("__ldense")).as("__firstP"),
-        max_by(peersStruct, col("__ldense")).as("__lastP"))
-      val wPrev = Window.partitionBy(groupCols.map(col): _*)
-        .orderBy(asc("__pid")).rowsBetween(Window.unboundedPreceding, -1)
-      val wLag = Window.partitionBy(groupCols.map(col): _*).orderBy(asc("__pid"))
-      val wFwd = Window.partitionBy(groupCols.map(col): _*)
-        .orderBy(asc("__pid")).rowsBetween(1, Window.unboundedFollowing)
-      val wG = Window.partitionBy(groupCols.map(col): _*)
-      val b2 = bk
-        .withColumn("__offset", coalesce(sum(col("__cnt")).over(wPrev), lit(0L)))
-        // does this partition's FIRST class start here, or continue the
-        // previous partition's last class? (first partition: no lag → true)
-        .withColumn("__s", !(col("__firstP") <=> lag(col("__lastP"), 1).over(wLag)))
-        .withColumn("__genf",
-          col("__nf") - when(col("__s"), 0L).otherwise(1L))
-        .withColumn("__cumg", coalesce(sum(col("__genf")).over(wPrev), lit(0L)))
-        // running start of the last class: defined where the last class
-        // starts LOCALLY (genuine first class, or ≥ 2 local classes);
-        // partitions wholly inside a chaining class contribute null and
-        // inherit the running max — the class' true origin
-        .withColumn("__tsc",
-          when(col("__s") || col("__nf") > 1,
-            col("__offset") + col("__cnt") - col("__clast") + 1))
-        .withColumn("__pts", max(col("__tsc")).over(wPrev))
-        // first GENUINE class start within this partition (null when the
-        // whole partition continues an earlier class)
-        .withColumn("__ngc",
-          when(col("__s"), col("__offset") + 1)
-            .when(col("__nf") > 1, col("__offset") + col("__cfirst") + 1))
-        .withColumn("__ngs", min(col("__ngc")).over(wFwd))
-        .withColumn("__gn", sum(col("__cnt")).over(wG))
-      val bsel = b2.select(
-        (col("__pid").as("__b_pid") +: groupCols.map(c => col(c).as(s"__g_$c"))) ++
-          Seq(col("__cnt").as("__bcnt"), col("__offset"), col("__s"),
-            col("__cumg"), col("__pts"), col("__ngs"), col("__gn")): _*)
-      val joinCond = groupCols
-        .map(c => parted(c) <=> bsel(s"__g_$c"))
-        .foldLeft(parted("__pid") === bsel("__b_pid"))(_ && _)
-      parted.join(broadcast(bsel), joinCond)
-        .withColumn("row_number", (col("__offset") + col("__local")).cast("long"))
-        // a class starting locally ranks at offset + local class start;
-        // a continuing first class inherits the chain's running origin
-        .withColumn("rank",
-          when(col("__s") || col("__lrank") > 1, col("__offset") + col("__lrank"))
-            .otherwise(col("__pts")))
-        .withColumn("dense_rank",
-          col("__cumg") + col("__ldense") - when(col("__s"), 0L).otherwise(1L))
-        // class end: local when the class closes before the partition
-        // boundary; else the next genuine start (anywhere later in the
-        // group) minus one, or the group's last row
-        .withColumn("__cend",
-          when(col("__lrank") + col("__lcnt") - 1 < col("__bcnt"),
-            col("__offset") + col("__lrank") + col("__lcnt") - 1)
-            .otherwise(coalesce(col("__ngs") - 1, col("__gn"))))
-        .withColumn("n_peers", col("__cend") - col("rank") + 1)
-        .withColumn("n_group", col("__gn"))
-        .drop(bsel("__b_pid"))
-        .drop((groupCols.map(c => s"__g_$c") ++ Seq(
-          "__pid", "__local", "__lrank", "__ldense", "__lcnt",
-          "__bcnt", "__offset", "__s", "__cumg", "__pts", "__ngs", "__gn",
-          "__cend")): _*)
-    }
+    // the full working-name set, including every column the bk/b2/bsel
+    // bookkeeping frames create with withColumn/agg aliases — a group
+    // column named like one of those would be silently REPLACED, the
+    // exact corruption class this guard closes (r13 advisory)
+    requireNoReserved(df,
+      Seq("row_number", "rank", "dense_rank", "n_group", "n_peers",
+        "__pid", "__local", "__lrank", "__ldense", "__lcnt",
+        "__cnt", "__nf", "__cfirst", "__clast", "__firstP", "__lastP",
+        "__offset", "__s", "__genf", "__cumg", "__tsc", "__pts",
+        "__ngc", "__ngs", "__gn", "__bcnt", "__b_pid", "__cend") ++
+        groupCols.map(c => s"__g_$c"),
+      "groupedRankFunctions")
+    val orderCols = peerCols ++ tieCols
+    val peersStruct = struct(peerCols.map(col): _*)
+    val pidGroup = ("__pid" +: groupCols).map(col)
+    val wRows  = Window.partitionBy(pidGroup: _*)
+      .orderBy(orderCols.map(c => asc(c)): _*)
+    val wPeers = Window.partitionBy(pidGroup: _*)
+      .orderBy(peerCols.map(c => asc(c)): _*)
+    val wClass = Window.partitionBy((pidGroup ++ peerCols.map(col)): _*)
+    val parted = graft.dedup.Checkpoints.output(rangeParted(df, groupCols ++ orderCols)
+      .withColumn("__local", row_number().over(wRows))
+      .withColumn("__lrank", rank().over(wPeers).cast("long"))
+      .withColumn("__ldense", dense_rank().over(wPeers).cast("long"))
+      .withColumn("__lcnt", count(lit(1)).over(wClass)))
+    // bookkeeping: one row per (partition, group) — first/last class
+    // peer tuples and sizes, all from the local stats above (min_by /
+    // max_by on the local class index: class 1 is the first class,
+    // max(__ldense) the last)
+    val bk = parted.groupBy(pidGroup: _*).agg(
+      count(lit(1)).as("__cnt"),
+      max(col("__ldense")).as("__nf"),
+      min_by(col("__lcnt"), col("__ldense")).as("__cfirst"),
+      max_by(col("__lcnt"), col("__ldense")).as("__clast"),
+      min_by(peersStruct, col("__ldense")).as("__firstP"),
+      max_by(peersStruct, col("__ldense")).as("__lastP"))
+    val wPrev = Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(asc("__pid")).rowsBetween(Window.unboundedPreceding, -1)
+    val wLag = Window.partitionBy(groupCols.map(col): _*).orderBy(asc("__pid"))
+    val wFwd = Window.partitionBy(groupCols.map(col): _*)
+      .orderBy(asc("__pid")).rowsBetween(1, Window.unboundedFollowing)
+    val wG = Window.partitionBy(groupCols.map(col): _*)
+    val b2 = bk
+      .withColumn("__offset", coalesce(sum(col("__cnt")).over(wPrev), lit(0L)))
+      // does this partition's FIRST class start here, or continue the
+      // previous partition's last class? (first partition: no lag → true)
+      .withColumn("__s", !(col("__firstP") <=> lag(col("__lastP"), 1).over(wLag)))
+      .withColumn("__genf",
+        col("__nf") - when(col("__s"), 0L).otherwise(1L))
+      .withColumn("__cumg", coalesce(sum(col("__genf")).over(wPrev), lit(0L)))
+      // running start of the last class: defined where the last class
+      // starts LOCALLY (genuine first class, or ≥ 2 local classes);
+      // partitions wholly inside a chaining class contribute null and
+      // inherit the running max — the class' true origin
+      .withColumn("__tsc",
+        when(col("__s") || col("__nf") > 1,
+          col("__offset") + col("__cnt") - col("__clast") + 1))
+      .withColumn("__pts", max(col("__tsc")).over(wPrev))
+      // first GENUINE class start within this partition (null when the
+      // whole partition continues an earlier class)
+      .withColumn("__ngc",
+        when(col("__s"), col("__offset") + 1)
+          .when(col("__nf") > 1, col("__offset") + col("__cfirst") + 1))
+      .withColumn("__ngs", min(col("__ngc")).over(wFwd))
+      .withColumn("__gn", sum(col("__cnt")).over(wG))
+    val bsel = b2.select(
+      (col("__pid").as("__b_pid") +: groupCols.map(c => col(c).as(s"__g_$c"))) ++
+        Seq(col("__cnt").as("__bcnt"), col("__offset"), col("__s"),
+          col("__cumg"), col("__pts"), col("__ngs"), col("__gn")): _*)
+    val joinCond = groupCols
+      .map(c => parted(c) <=> bsel(s"__g_$c"))
+      .foldLeft(parted("__pid") === bsel("__b_pid"))(_ && _)
+    parted.join(broadcast(bsel), joinCond)
+      .withColumn("row_number", (col("__offset") + col("__local")).cast("long"))
+      // a class starting locally ranks at offset + local class start;
+      // a continuing first class inherits the chain's running origin
+      .withColumn("rank",
+        when(col("__s") || col("__lrank") > 1, col("__offset") + col("__lrank"))
+          .otherwise(col("__pts")))
+      .withColumn("dense_rank",
+        col("__cumg") + col("__ldense") - when(col("__s"), 0L).otherwise(1L))
+      // class end: local when the class closes before the partition
+      // boundary; else the next genuine start (anywhere later in the
+      // group) minus one, or the group's last row
+      .withColumn("__cend",
+        when(col("__lrank") + col("__lcnt") - 1 < col("__bcnt"),
+          col("__offset") + col("__lrank") + col("__lcnt") - 1)
+          .otherwise(coalesce(col("__ngs") - 1, col("__gn"))))
+      .withColumn("n_peers", col("__cend") - col("rank") + 1)
+      .withColumn("n_group", col("__gn"))
+      .drop(bsel("__b_pid"))
+      .drop((groupCols.map(c => s"__g_$c") ++ Seq(
+        "__pid", "__local", "__lrank", "__ldense", "__lcnt",
+        "__bcnt", "__offset", "__s", "__cumg", "__pts", "__ngs", "__gn",
+        "__cend")): _*)
   }
 
   /** The MANY-SMALL-GROUPS side of the ranking dial: the same five
@@ -785,72 +792,6 @@ object CoreOps {
     expr(
       s"""CASE WHEN $rnCol <= $thr THEN ($rnCol - 1) DIV ($bs + 1) + 1
          |     ELSE $rem + 1 + ($rnCol - $thr - 1) DIV $bs END""".stripMargin)
-  }
-
-  /** SCALE-CORRECT per-group RUNNING SUM — the distributed form of
-    * `sum(value) OVER (PARTITION BY group ORDER BY … ROWS UNBOUNDED
-    * PRECEDING)`, which single-tasks each group exactly like the ranking
-    * trap [[groupedRowNumber]] kills (q56's per-source packing prefix
-    * sum was the last raw-frame site). Same skeleton: range partition on
-    * (group…, order…) + checkpoint; per-(partition, group) VALUE sums as
-    * the bookkeeping frame (≤ |partitions| + |groups| rows); per-group
-    * running offsets over that frame; result = offset + local running
-    * sum within (partition, group).
-    *
-    * Bit-identity contract: exact for integral and decimal values
-    * (addition is associative, and Spark's sum widens identically in
-    * both shapes); for DOUBLE values the split changes FP summation
-    * order — use the window form or scale to longs first. Null values
-    * contribute nothing, and a row whose prefix holds only nulls gets a
-    * null running sum — exactly the window semantics (pinned in
-    * Round13Spec). orderCols must complete a within-group total order,
-    * or the prefix (like the window form's) is nondeterministic.
-    */
-  def groupedRunningSum(df: DataFrame, groupCols: Seq[String],
-                        orderCols: Seq[String], valueCol: String,
-                        cumCol: String = "cum",
-                        numPartitions: Int = 0): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
-    require(orderCols.nonEmpty, "orderCols must include a within-group total order")
-    // cumCol is as much a working name as the __-prefixed ones: an input
-    // frame already carrying it would be silently overwritten (r13 advisory)
-    requireNoReserved(df,
-      Seq("__pid", "__local", "__psum", "__offset", cumCol) ++
-        groupCols.map(c => s"__g_$c"),
-      "groupedRunningSum")
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val parted = graft.dedup.Checkpoints.output(
-      df.repartitionByRange(n, (groupCols ++ orderCols).map(c => asc(c)): _*)
-        .withColumn("__pid", spark_partition_id()))
-    val sums = parted
-      .groupBy(("__pid" +: groupCols).map(col): _*)
-      .agg(sum(col(valueCol)).as("__psum"))
-    val wOff = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(asc("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sums
-      .withColumn("__offset", sum(col("__psum")).over(wOff))
-      .select((col("__pid") +: groupCols.map(c => col(c).as(s"__g_$c"))) :+ col("__offset"): _*)
-    val wLocal = Window.partitionBy(("__pid" +: groupCols).map(col): _*)
-      .orderBy(orderCols.map(c => asc(c)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joinCond = groupCols
-      .map(c => parted(c) <=> offsets(s"__g_$c"))
-      .foldLeft(parted("__pid") === offsets("__pid"))(_ && _)
-    parted
-      .withColumn("__local", sum(col(valueCol)).over(wLocal))
-      .join(broadcast(offsets), joinCond)
-      // sum ignores nulls: either side is null only when its whole range
-      // held no non-null value — combine so the all-null prefix stays
-      // null, exactly like the single-window form
-      .withColumn(cumCol,
-        when(col("__offset").isNull, col("__local"))
-          .when(col("__local").isNull, col("__offset"))
-          .otherwise(col("__offset") + col("__local")))
-      .drop(offsets("__pid"))
-      .drop((groupCols.map(c => s"__g_$c") ++ Seq("__pid", "__local", "__offset")): _*)
   }
 
   /** SCALE-CORRECT exact interpolated percentiles per group — the

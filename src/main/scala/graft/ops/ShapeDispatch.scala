@@ -130,21 +130,14 @@ object ShapeDispatch {
     * any → None → probe). groups = min(∏ distinct, rows) — the
     * standard independence estimate; maxRowsPerGroup = ⌈rows/groups⌉
     * (an average: catalog stats cannot see skew — documented trade).
-    * maxDistinctPerGroup for a value column is bounded by that
-    * column's GLOBAL distinct count when present.
+    * maxDistinctPerGroup is bounded by the value columns' GLOBAL
+    * distinct counts (the q36 shape spans l_quantity AND
+    * l_extendedprice): the MAX over them — the worst single-column
+    * buffer governs — and unknown (Long.MaxValue) if ANY value column
+    * lacks catalog stats, since the unknown column might be the worst.
     */
   def catalogStats(df: DataFrame, groupCols: Seq[String],
-                   valueCol: Option[String] = None): Option[GroupStats] =
-    catalogStatsMulti(df, groupCols, valueCol.toSeq)
-
-  /** [[catalogStats]] over several value columns at once (the q36 shape:
-    * one percentile call spanning l_quantity AND l_extendedprice). The
-    * distinct bound is the MAX over the columns' global distinct counts
-    * — the worst single-column buffer governs — and collapses to
-    * unknown (Long.MaxValue) if ANY column lacks catalog stats, since
-    * the unknown column might be the worst one. */
-  def catalogStatsMulti(df: DataFrame, groupCols: Seq[String],
-                        valueCols: Seq[String]): Option[GroupStats] = {
+                   valueCols: Seq[String] = Nil): Option[GroupStats] = {
     val st = df.queryExecution.optimizedPlan.stats
     val byName = st.attributeStats.toSeq
       .map { case (attr, cs) => attr.name -> cs }.toMap
@@ -170,21 +163,15 @@ object ShapeDispatch {
 
   /** ONE probe pass: per-group counts (hash aggregate, map-side
     * combined) reduced to (rows, groups, max rows per group) — and,
-    * when `valueCol` is given, the max per-group
-    * `approx_count_distinct(value)` (±2%, HLL state per group), the
-    * exact statistic the percentile dial needs. Cost: one
-    * column-pruned scan + a bookkeeping-sized second stage — the
-    * insurance premium against shipping a 33 TB group into one task.
+    * when `valueCols` are given, the max per-group
+    * `approx_count_distinct` of the worst value column (±2%, HLL state
+    * per group; the sketches ride the same hash aggregate), the exact
+    * statistic the percentile dial needs. Cost: one column-pruned scan
+    * + a bookkeeping-sized second stage — the insurance premium against
+    * shipping a 33 TB group into one task.
     */
   def probeStats(df: DataFrame, groupCols: Seq[String],
-                 valueCol: Option[String] = None): GroupStats =
-    probeStatsMulti(df, groupCols, valueCol.toSeq)
-
-  /** [[probeStats]] over several value columns: per group the probe
-    * takes the worst column's approx-distinct (still ONE aggregation
-    * pass — the HLL sketches ride the same hash aggregate). */
-  def probeStatsMulti(df: DataFrame, groupCols: Seq[String],
-                      valueCols: Seq[String]): GroupStats = {
+                 valueCols: Seq[String] = Nil): GroupStats = {
     val dCol = valueCols.map(v => approx_count_distinct(col(v))) match {
       case Seq()    => lit(0L)
       case Seq(one) => one
@@ -302,7 +289,7 @@ object ShapeDispatch {
   def guardedStats(df: DataFrame, groupCols: Seq[String],
                    valueCols: Seq[String], cutover: Long,
                    byDistinct: Boolean): GroupStats =
-    catalogStatsMulti(df, groupCols, valueCols) match {
+    catalogStats(df, groupCols, valueCols) match {
       case Some(cs) if trustCatalog(
           if (byDistinct) cs.distinctBound else cs.maxRowsPerGroup,
           cutover, CatalogSkewHeadroom) => cs
@@ -310,8 +297,21 @@ object ShapeDispatch {
         statsCache.getOrElseUpdate(df.sparkSession,
             statsCacheKey(df, groupCols, valueCols)) {
           probeInvocations.incrementAndGet()
-          probeStatsMulti(df, groupCols, valueCols)
+          probeStats(df, groupCols, valueCols)
         }
+    }
+
+  /** The shape decision all four dials share: the caller's `force`,
+    * else its `stats`, else [[guardedStats]] — judged against `cutover`
+    * on the distinct bound when `byDistinct`, else on rows per group. */
+  private def decide(df: DataFrame, groupCols: Seq[String],
+                     valueCols: Seq[String], cutover: Long,
+                     byDistinct: Boolean, stats: Option[GroupStats],
+                     force: Option[Shape]): Shape =
+    force.getOrElse {
+      val st = stats.getOrElse(
+        guardedStats(df, groupCols, valueCols, cutover, byDistinct))
+      if (byDistinct) decideByDistinct(st, cutover) else decideByRows(st, cutover)
     }
 
   // ---- dial 1: the ranking family ------------------------------------------
@@ -325,58 +325,19 @@ object ShapeDispatch {
     */
   def rankFunctionsAuto(df: DataFrame, groupCols: Seq[String],
                         peerCols: Seq[String], tieCols: Seq[String],
-                        peersUnique: Boolean = false,
-                        numPartitions: Int = 0,
                         stats: Option[GroupStats] = None,
-                        force: Option[Shape] = None): DataFrame = {
-    force.getOrElse(decideByRows(stats.getOrElse(guardedStats(df, groupCols,
-        Nil, RowsPerGroupCutover, byDistinct = false)), RowsPerGroupCutover)) match {
+                        force: Option[Shape] = None): DataFrame =
+    decide(df, groupCols, Nil, RowsPerGroupCutover, byDistinct = false,
+        stats, force) match {
       case WindowShape =>
         CoreOps.windowRankFunctions(df, groupCols, peerCols, tieCols)
       case RangedShape =>
-        CoreOps.groupedRankFunctions(df, groupCols, peerCols, tieCols,
-          peersUnique, numPartitions)
+        CoreOps.groupedRankFunctions(df, groupCols, peerCols, tieCols)
     }
-  }
 
   // ---- dial 2: exact per-group percentiles ---------------------------------
 
-  /** The buffering side of the percentile dial, as
-    * [[CoreOps.rankedPercentiles]]' exact contract: one row per group
-    * with ≥ 1 non-null value (the aggregate's null row for an all-null
-    * group is dropped — the ranked form emits no row there), outputs
-    * double. Bit-identical to the ranked form (Round12Spec pins the
-    * interpolation arithmetic on q36's shape).
-    */
-  def bufferPercentiles(df: DataFrame, groupCols: Seq[String],
-                        valueCol: String, ps: Seq[Double],
-                        outCols: Seq[String]): DataFrame = {
-    require(ps.nonEmpty && ps.length == outCols.length,
-      "one output column name per percentile")
-    df.groupBy(groupCols.map(col): _*)
-      .agg(percentile(col(valueCol), lit(ps.head)).as(outCols.head),
-        ps.tail.zip(outCols.tail).map { case (p, o) =>
-          percentile(col(valueCol), lit(p)).as(o) }: _*)
-      .filter(col(outCols.head).isNotNull)
-  }
-
-  /** Exact per-group percentiles with the shape CHOSEN by the engine:
-    * the buffering aggregate while the largest group's distinct-value
-    * count fits one task's merge buffer ([[DistinctPerGroupCutover]],
-    * 10⁷ — the q36 rule), else [[CoreOps.rankedPercentiles]]. The probe
-    * measures max per-group `approx_count_distinct(value)` directly;
-    * catalog stats bound it by the value column's global distinct
-    * count.
-    */
-  def percentilesAuto(df: DataFrame, groupCols: Seq[String],
-                      valueCol: String, ps: Seq[Double],
-                      outCols: Seq[String],
-                      stats: Option[GroupStats] = None,
-                      force: Option[Shape] = None): DataFrame =
-    percentilesAutoMulti(df, groupCols,
-      Seq(PercentileSpec(valueCol, ps, outCols)), stats, force)
-
-  /** One value column's percentile requests for [[percentilesAutoMulti]]. */
+  /** One value column's percentile requests for [[percentilesAuto]]. */
   final case class PercentileSpec(valueCol: String, ps: Seq[Double],
                                   outCols: Seq[String]) {
     require(ps.nonEmpty && ps.length == outCols.length,
@@ -388,27 +349,30 @@ object ShapeDispatch {
     require(ps.forall(p => p >= 0.0 && p <= 1.0), s"percentiles in [0,1]: $ps")
   }
 
-  /** [[percentilesAuto]] spanning SEVERAL value columns under one
-    * decision (the q36 shape: quantity p50/p90 + price p99 in one
-    * call). Window shape: ONE buffering aggregate computes every
-    * requested percentile in a single pass — q36's historical plan.
-    * Ranged shape: one [[CoreOps.rankedPercentiles]] pass per value
-    * column, inner-joined on the group keys — q166's plan. Contract
-    * either way: one row per group with ≥ 1 non-null value in EVERY
-    * value column (the buffer form drops the aggregate's null outputs;
-    * the ranked form's inner join drops the same groups — a group
-    * all-null in one column has no order statistics there).
-    * The probe measures the WORST column's per-group distinct count,
-    * still in one aggregation pass.
+  /** Exact per-group percentiles with the shape CHOSEN by the engine:
+    * the buffering aggregate while the largest group's distinct-value
+    * count fits one task's merge buffer ([[DistinctPerGroupCutover]],
+    * 10⁷ — the q36 rule), else [[CoreOps.rankedPercentiles]]. One
+    * decision spans every value column (the q36 shape: quantity p50/p90
+    * + price p99 in one call); the probe measures the WORST column's
+    * per-group `approx_count_distinct`, still in one aggregation pass,
+    * and catalog stats bound it by the columns' global distinct counts.
+    * Window shape: ONE buffering aggregate computes every requested
+    * percentile in a single pass — q36's historical plan. Ranged shape:
+    * one [[CoreOps.rankedPercentiles]] pass per value column,
+    * inner-joined on the group keys — q166's plan. Contract either way:
+    * one row per group with ≥ 1 non-null value in EVERY value column
+    * (the buffer form drops the aggregate's null outputs; the ranked
+    * form's inner join drops the same groups — a group all-null in one
+    * column has no order statistics there).
     */
-  def percentilesAutoMulti(df: DataFrame, groupCols: Seq[String],
-                           specs: Seq[PercentileSpec],
-                           stats: Option[GroupStats] = None,
-                           force: Option[Shape] = None): DataFrame = {
+  def percentilesAuto(df: DataFrame, groupCols: Seq[String],
+                      specs: Seq[PercentileSpec],
+                      stats: Option[GroupStats] = None,
+                      force: Option[Shape] = None): DataFrame = {
     require(specs.nonEmpty, "at least one percentile spec")
-    force.getOrElse(decideByDistinct(stats.getOrElse(guardedStats(df,
-        groupCols, specs.map(_.valueCol), DistinctPerGroupCutover,
-        byDistinct = true)), DistinctPerGroupCutover)) match {
+    decide(df, groupCols, specs.map(_.valueCol), DistinctPerGroupCutover,
+        byDistinct = true, stats, force) match {
       case WindowShape =>
         val aggs = specs.flatMap(sp => sp.ps.zip(sp.outCols).map {
           case (p, o) => percentile(col(sp.valueCol), lit(p)).as(o) })
@@ -419,19 +383,15 @@ object ShapeDispatch {
           .filter(keep)
       case RangedShape =>
         // one rankedPercentiles pass per value column + join — MEASURED
-        // as the right default (r16): each pass's scan is column-pruned,
+        // as the right shape (r16): each pass's scan is column-pruned,
         // so the per-column "duplicated upstream" costs ~nothing on
-        // columnar inputs, and the melted one-exchange alternative
-        // ([[rankedPercentilesFused]]) moves the same shuffle bytes
-        // (+6%) and the same scan bytes (+8%) while only halving the
-        // job count (tools/bench_r16/AB_MULTIPCT_FUSION.txt). Callers
-        // whose INPUT LINEAGE is expensive per evaluation (heavy
-        // compute, non-prunable row-oriented checkpoints) should call
-        // the fused form directly — it evaluates that lineage once.
-        // The reduce-join is NULL-SAFE on the group keys (r16 ADVICE):
-        // a USING join drops null-key groups, but groupBy keeps them —
-        // both sibling shapes (buffered aggregate, fused melt) emit the
-        // null-key group, so the per-column form must too.
+        // columnar inputs; a melted one-exchange alternative moved the
+        // same shuffle bytes (+6%) and the same scan bytes (+8%) while
+        // only halving the job count (tools/bench_r16/
+        // AB_MULTIPCT_FUSION.txt). The reduce-join is NULL-SAFE on the
+        // group keys (r16 ADVICE): a USING join drops null-key groups,
+        // but groupBy keeps them — the buffered sibling emits the
+        // null-key group, so the ranged form must too.
         specs.map(sp => CoreOps.rankedPercentiles(df, groupCols,
             sp.valueCol, sp.ps, sp.outCols))
           .reduce { (a, b) =>
@@ -441,97 +401,6 @@ object ShapeDispatch {
             a.join(r, cond).drop(groupCols.map(c => s"__rg_$c"): _*)
           }
     }
-  }
-
-  /** The ranged percentile shape over SEVERAL value columns in ONE
-    * ranked pass: the value columns MELT into (group…, __spec, __v)
-    * long form — numSpecs× the rows, two narrow columns — and a single
-    * [[CoreOps.groupedRowNumberAndTotals]] pass keyed by (group…, spec)
-    * ranks them all: one range exchange, one bookkeeping aggregate, one
-    * broadcast rank-lookup chain, and — the property that matters — the
-    * INPUT LINEAGE evaluated once instead of once per column.
-    *
-    * NOT the dial's default, on the record (r16,
-    * tools/bench_r16/AB_MULTIPCT_FUSION.txt): the r15 advisory's
-    * premise was that the per-column form "pays one full ranked pass
-    * per value column", but on columnar inputs each of those passes is
-    * COLUMN-PRUNED — measured at sf1, the q166 shape reads 2,401 MB
-    * under the per-column form vs 2,592 MB melted and shuffles 149 vs
-    * 158 MB, so this form moves slightly MORE data and only halves the
-    * job count (26 → 13). Reach for it when the shared upstream is
-    * genuinely expensive per evaluation — heavy per-row compute, a
-    * non-prunable row-oriented materialization — where "lineage × once"
-    * beats "pruned scan × numSpecs". MEASURED r17 on a sha2-chain
-    * upstream feeding both value columns: the fused form costs 0.50×
-    * the per-column join's executor CPU (44.2 vs 88.4 min cpuSec, 14
-    * vs 28 jobs, the heavy base read once vs twice —
-    * tools/bench_r17/AB_MULTIPCT_FUSION_HEAVY.txt).
-    *
-    * Values are bit-identical to the per-column form (same
-    * cast-to-double, same per-(group,spec) rank order statistics, same
-    * `Percentile.getPercentile` interpolation arithmetic — the ranks of
-    * column A are computed within its own __spec slice, so melting
-    * cannot mix columns), and the keep-filter reproduces the inner
-    * join's semantics: a group all-null in ANY column has no order
-    * statistics there and drops. Round16Spec pins fused ≡ joined ≡
-    * buffered on skewed + null-bearing fixtures.
-    */
-  def rankedPercentilesFused(df: DataFrame, groupCols: Seq[String],
-                             specs: Seq[PercentileSpec]): DataFrame = {
-    require(specs.sizeIs >= 2, "fused form needs >= 2 specs (use rankedPercentiles)")
-    val allOut = specs.flatMap(_.outCols)
-    require(allOut.distinct.sizeIs == allOut.size,
-      s"output column names must be unique across specs: $allOut")
-    // melt: one row per (input row, spec), nulls dropped per slice —
-    // exactly the per-column form's pre-rank null filter
-    val meltArr = array(specs.zipWithIndex.map { case (sp, i) =>
-      struct(lit(i).as("__spec"), col(sp.valueCol).cast("double").as("__v")) }: _*)
-    val melted = df
-      .select(groupCols.map(col) :+ explode(meltArr).as("__e"): _*)
-      .select(groupCols.map(col) :+ col("__e.__spec").as("__spec") :+
-        col("__e.__v").as("__v"): _*)
-      .filter(col("__v").isNotNull)
-    val gs = groupCols :+ "__spec"
-    val (ranked, totals) = CoreOps.groupedRowNumberAndTotals(melted, gs,
-      Seq("__v"), rankCol = "__rk", nCol = "__n")
-    // per-(group, spec) targets: explode THAT spec's (p, out) list,
-    // selected from an array-of-arrays literal by the spec index
-    val perSpec = element_at(
-      array(specs.map(sp => array(sp.ps.zip(sp.outCols).map { case (p, o) =>
-        struct(lit(p).as("__p"), lit(o).as("__out")) }: _*)): _*),
-      col("__spec") + 1)
-    val targets = totals
-      .select(gs.map(col) :+ col("__n") :+ explode(perSpec).as("__e"): _*)
-      .select(gs.map(col) :+ col("__n") :+ col("__e.__p").as("__p") :+
-        col("__e.__out").as("__out"): _*)
-      .withColumn("__pos", (col("__n") - lit(1L)) * col("__p"))
-      .withColumn("__lo", floor(col("__pos")).cast("long"))
-      .withColumn("__hi", ceil(col("__pos")).cast("long"))
-    // targets are |groups|·|specs|·|ps| rows — broadcast side by
-    // construction; each attach is a broadcast hash filter-join over
-    // the ONE ranked stream (the rankedPercentiles shape, shared here)
-    def attach(t: DataFrame, rank0: String, as: String): DataFrame = {
-      val r = ranked.select(gs.map(c => col(c).as(s"__r_$c")) :+
-        col("__rk").as("__r_rk") :+ col("__v").as(as): _*)
-      val cond = gs.map(c => t(c) <=> r(s"__r_$c"))
-        .foldLeft(t(rank0) + lit(1L) === r("__r_rk"))(_ && _)
-      r.join(broadcast(t), cond)
-        .drop("__r_rk")
-        .drop(gs.map(c => s"__r_$c"): _*)
-    }
-    val withLo = attach(targets, "__lo", "__loVal")
-    val both = attach(withLo, "__hi", "__hiVal")
-    val interp = when(col("__lo") === col("__hi"), col("__loVal"))
-      .otherwise((col("__hi") - col("__pos")) * col("__loVal") +
-                 (col("__pos") - col("__lo")) * col("__hiVal"))
-    val vals = both.withColumn("__val", interp)
-    val keep = specs.map(sp => col(sp.outCols.head).isNotNull).reduce(_ && _)
-    vals.groupBy(groupCols.map(col): _*)
-      .agg(
-        max(when(col("__out") === allOut.head, col("__val"))).as(allOut.head),
-        allOut.tail.map(o =>
-          max(when(col("__out") === o, col("__val"))).as(o)): _*)
-      .filter(keep)
   }
 
   /** [[CoreOps.equiDepthHistogram]] with `rangedRanks` CHOSEN by the
@@ -545,8 +414,8 @@ object ShapeDispatch {
                              buckets: Int,
                              stats: Option[GroupStats] = None,
                              force: Option[Shape] = None): DataFrame = {
-    val shape = force.getOrElse(decideByRows(stats.getOrElse(guardedStats(df,
-      groupCols, Nil, RowsPerGroupCutover, byDistinct = false)), RowsPerGroupCutover))
+    val shape = decide(df, groupCols, Nil, RowsPerGroupCutover,
+      byDistinct = false, stats, force)
     CoreOps.equiDepthHistogram(df, groupCols, valueCol, tieCols, buckets,
       rangedRanks = shape == RangedShape)
   }
@@ -597,11 +466,9 @@ object ShapeDispatch {
     // WindowShape unconditionally, so short-circuit BEFORE touching
     // stats — a cold memo would otherwise pay a full probe scan whose
     // result is predetermined to be ignored (r16 ADVICE).
-    (force.getOrElse {
-      if (k > MaxK) WindowShape
-      else decideByRows(stats.getOrElse(guardedStats(df, groupCols, Nil,
-        TopKRowsPerGroupCutover, byDistinct = false)), TopKRowsPerGroupCutover)
-    }) match {
+    (if (force.isEmpty && k > MaxK) WindowShape
+     else decide(df, groupCols, Nil, TopKRowsPerGroupCutover,
+       byDistinct = false, stats, force)) match {
       case WindowShape =>
         val w = Window.partitionBy(groupCols.map(col): _*)
           .orderBy(orderCols.map(c => asc(c)): _*)

@@ -656,13 +656,13 @@ object QueryCatalog {
     * q69 (t-digest) remain the approximate scale paths.
     */
   def percentiles(s: SparkSession, dir: String): DataFrame = {
-    // r15: q36 rides percentilesAutoMulti — the engine CHOOSES between
+    // r15: q36 rides percentilesAuto — the engine CHOOSES between
     // the one-pass buffering aggregate (this data, every gate SF: the
     // probe sees small per-group distinct counts) and the ranked order-
     // statistics form q166 keeps FORCED under the same oracle. The
     // window branch plans exactly the historical single groupBy/agg.
     import graft.ops.ShapeDispatch
-    ShapeDispatch.percentilesAutoMulti(
+    ShapeDispatch.percentilesAuto(
         t(s, dir, "lineitem")
           .select("l_returnflag", "l_quantity", "l_extendedprice"),
         Seq("l_returnflag"),
@@ -685,16 +685,14 @@ object QueryCatalog {
     * entries jointly prove the cutover rule swaps plan shape, never
     * values. r16: rides the dial's forced ranged branch (one
     * column-pruned rankedPercentiles pass per value column + join) —
-    * MEASURED as the right multi-column default over the melted
-    * one-exchange alternative, which moves slightly more scan AND
+    * MEASURED as the right multi-column shape over a melted
+    * one-exchange alternative, which moved slightly more scan AND
     * shuffle bytes on columnar inputs
-    * (tools/bench_r16/AB_MULTIPCT_FUSION.txt; the fused form stays
-    * available as [[graft.ops.ShapeDispatch.rankedPercentilesFused]]
-    * for expensive-upstream callers, value-equality spec-pinned).
+    * (tools/bench_r16/AB_MULTIPCT_FUSION.txt).
     */
   def rankedPercentilesQuery(s: SparkSession, dir: String): DataFrame = {
     import graft.ops.ShapeDispatch
-    ShapeDispatch.percentilesAutoMulti(
+    ShapeDispatch.percentilesAuto(
         t(s, dir, "lineitem")
           .select("l_returnflag", "l_quantity", "l_extendedprice"),
         Seq("l_returnflag"),
@@ -2847,10 +2845,12 @@ object QueryCatalog {
     val scored = perDoc.select(col("doc_id"), col("n_bigrams"),
       (col("sum_pair").cast("double") / col("sum_head").cast("double"))
         .as("predictability"))
-    val nScored = scored.agg(count(lit(1)).as("n_scored"))
     val ranked = graft.ops.CoreOps.globalRowNumber(
       scored.withColumn("neg_predictability", -col("predictability")),
       Seq("neg_predictability", "doc_id"), rankCol = "rn")
+    // count the RANKED frame: it reads globalRowNumber's checkpoint, where
+    // counting `scored` re-runs the tokenize → explode → join pipeline
+    val nScored = ranked.agg(count(lit(1)).as("n_scored"))
     val bucketed = ranked
       .crossJoin(broadcast(nScored))
       .select(col("doc_id"), col("n_bigrams"), col("predictability"),

@@ -44,7 +44,7 @@ object ShapeChoice {
         s"cutover=${sd.RowsPerGroupCutover} " +
         s"choice=${sd.decideByRows(rank, sd.RowsPerGroupCutover)}")
 
-      val pct = sd.probeStatsMulti(
+      val pct = sd.probeStats(
         li.select("l_returnflag", "l_quantity", "l_extendedprice"),
         Seq("l_returnflag"), Seq("l_quantity", "l_extendedprice"))
       println(s"[shape:percentile] dir=$dir rows=${pct.rows} groups=${pct.groups} " +

@@ -131,22 +131,24 @@ class CoreOpsSpec extends SparkSpec {
     import spark.implicits._
     val rng = new scala.util.Random(11)
     val df = (1L to 5000L).map(i => (i, rng.nextDouble())).toDF("id", "v")
-    val dist = graft.ops.CoreOps.globalRowNumber(df, Seq("v", "id"), numPartitions = 7)
-      .select("id", "rank").as[(Long, Long)].collect().toMap
-    val naive = df.withColumn("rank",
-        org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("id"))))
-      .select("id", "rank").as[(Long, Int)].collect().map { case (i, r) => i -> r.toLong }.toMap
-    assert(dist == naive, "distributed ranks diverged from the global window")
-    // and the window is PARTITIONED (by __pid) — never the global
-    // single-partition window this operator exists to avoid (AQE may
-    // still coalesce tiny test shuffles, so assert the plan, not the
-    // runtime partition count)
-    val ranked = graft.ops.CoreOps.globalRowNumber(df, Seq("v", "id"), numPartitions = 7)
-    ranked.write.format("noop").mode("overwrite").save()
-    val plan = ranked.queryExecution.executedPlan.toString
-    assert(plan.contains("windowspecdefinition(__pid"),
-      s"window must partition by __pid:\n${plan.take(1500)}")
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val dist = graft.ops.CoreOps.globalRowNumber(df, Seq("v", "id"))
+        .select("id", "rank").as[(Long, Long)].collect().toMap
+      val naive = df.withColumn("rank",
+          org.apache.spark.sql.functions.row_number().over(
+            org.apache.spark.sql.expressions.Window.orderBy(col("v"), col("id"))))
+        .select("id", "rank").as[(Long, Int)].collect().map { case (i, r) => i -> r.toLong }.toMap
+      assert(dist == naive, "distributed ranks diverged from the global window")
+      // and the window is PARTITIONED (by __pid) — never the global
+      // single-partition window this operator exists to avoid (AQE may
+      // still coalesce tiny test shuffles, so assert the plan, not the
+      // runtime partition count)
+      val ranked = graft.ops.CoreOps.globalRowNumber(df, Seq("v", "id"))
+      ranked.write.format("noop").mode("overwrite").save()
+      val plan = ranked.queryExecution.executedPlan.toString
+      assert(plan.contains("windowspecdefinition(__pid"),
+        s"window must partition by __pid:\n${plan.take(1500)}")
+    }
   }
 
   test("equiDepthHistogram: equal-population buckets, contiguous disjoint ranges") {

@@ -344,22 +344,37 @@ class QueryPlanSpec extends SparkSpec {
       s"no window may sort the whole table in one partition:\n${plan.take(1500)}")
   }
 
-  test("q103 predictability buckets: no WindowExec without a partition spec") {
-    import org.apache.spark.sql.execution.SparkPlan
+  /** Every node of the AQE-final plan: query stages hide their subtrees
+    * from `collect`, so walk through them. */
+  private def finalNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+      case q: QueryStageExec        => finalNodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(finalNodes)
+    }
+  }
+
+  test("q103 predictability buckets: no WindowExec without a partition spec") {
     import org.apache.spark.sql.execution.window.WindowExec
     val df = QueryCatalog.bigramPredictability(spark, sf)
     val plan = executedPlan(df)
-    // walk the AQE-final plan: query stages hide their subtrees from collect
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec        => nodes(q.plan)
-      case other => other +: (other.children ++ other.subqueries).flatMap(nodes)
-    }
-    val windows = nodes(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
+    val windows = finalNodes(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
     assert(windows.nonEmpty, s"the rank must run as a window per range partition:\n${plan.take(2000)}")
     assert(windows.forall(_.partitionSpec.nonEmpty),
       s"no window may rank every scored document in one partition:\n${plan.take(2000)}")
+  }
+
+  test("q103 predictability buckets: the scored count reads the ranked checkpoint, no bigram explode re-runs") {
+    import org.apache.spark.sql.execution.GenerateExec
+    val df = QueryCatalog.bigramPredictability(spark, sf)
+    val plan = executedPlan(df)
+    // the scoring pipeline (tokenize → explode → join) runs once, inside
+    // globalRowNumber's checkpoint; everything after it reads that block
+    val generates = finalNodes(df.queryExecution.executedPlan).collect { case g: GenerateExec => g }
+    assert(generates.isEmpty,
+      s"no Generate may survive in q103's final plan:\n${plan.take(3000)}")
   }
 
   test("q134 erasure cascade: key sets flow through semi joins, fact tables never cross") {

@@ -75,12 +75,13 @@ class Round12Spec extends SparkSpec {
     val e = CoreOps.groupedRowNumber(empty, Seq("grp"), Seq("value", "id"))
     assert(e.columns.contains("rank") && e.count() == 0)
     // a single range partition degenerates to the plain window — ranks agree
-    val one = CoreOps.groupedRowNumber(fixture, Seq("grp"), Seq("value", "id"),
-      numPartitions = 1)
-    val w = Window.partitionBy("grp").orderBy(asc("value"), asc("id"))
-    val ww = fixture.withColumn("rank", row_number().over(w).cast("long"))
-    assert(one.select("grp", "value", "id", "rank")
-      .exceptAll(ww.select("grp", "value", "id", "rank")).isEmpty)
+    withConf("spark.sql.shuffle.partitions" -> "1") {
+      val one = CoreOps.groupedRowNumber(fixture, Seq("grp"), Seq("value", "id"))
+      val w = Window.partitionBy("grp").orderBy(asc("value"), asc("id"))
+      val ww = fixture.withColumn("rank", row_number().over(w).cast("long"))
+      assert(one.select("grp", "value", "id", "rank")
+        .exceptAll(ww.select("grp", "value", "id", "rank")).isEmpty)
+    }
     // one group spanning every partition exercises the offset chain
     val mono = fixture.withColumn("grp", lit("only"))
     val g = CoreOps.groupedRowNumber(mono, Seq("grp"), Seq("value", "id"))

@@ -70,34 +70,19 @@ class Round13Spec extends SparkSpec {
     assert(ranged.exceptAll(windowFamily(many)).isEmpty)
   }
 
-  test("peersUnique fast path == general path when the peers ARE unique") {
-    // peers = (value, id) is a total order: the fast path must be an
-    // exact shortcut, and both must equal the window family where peers
-    // are the full ORDER BY (rank == dense_rank == row_number there)
-    val outCols = Seq("grp", "value", "id",
-      "row_number", "rank", "dense_rank", "n_group", "n_peers")
-    val fast = CoreOps.groupedRankFunctions(fixture, Seq("grp"),
-        peerCols = Seq("value", "id"), tieCols = Nil, peersUnique = true)
-      .select(outCols.map(col): _*)
-    val general = CoreOps.groupedRankFunctions(fixture, Seq("grp"),
-        peerCols = Seq("value", "id"), tieCols = Nil)
-      .select(outCols.map(col): _*)
-    assert(fast.exceptAll(general).isEmpty && general.exceptAll(fast).isEmpty,
-      "peersUnique must be a pure shortcut")
-    val w = Window.partitionBy("grp").orderBy(asc("value"), asc("id"))
-    val windowed = fixture.select(col("grp"), col("value"), col("id"),
-      row_number().over(w).cast("long").as("row_number"),
-      rank().over(w).cast("long").as("rank"),
-      dense_rank().over(w).cast("long").as("dense_rank"))
-    assert(fast.select("grp", "value", "id", "row_number", "rank", "dense_rank")
-      .exceptAll(windowed).isEmpty)
-  }
-
   test("ntileFromRanks == window ntile for B in {1, 3, 4, 7, 5000}") {
     // covers n % B = 0, front-loaded remainders, and B > group size
     val w = Window.partitionBy("grp").orderBy(asc("value"), asc("id"))
     val rn = CoreOps.groupedRankFunctions(fixture, Seq("grp"),
-      peerCols = Seq("value", "id"), tieCols = Nil, peersUnique = true)
+      peerCols = Seq("value", "id"), tieCols = Nil)
+    // peers = (value, id) is a total order: rank == dense_rank ==
+    // row_number, each equal to the window form over the full ORDER BY
+    val windowed = fixture.select(col("grp"), col("value"), col("id"),
+      row_number().over(w).cast("long").as("row_number"),
+      rank().over(w).cast("long").as("rank"),
+      dense_rank().over(w).cast("long").as("dense_rank"))
+    assert(rn.select("grp", "value", "id", "row_number", "rank", "dense_rank")
+      .exceptAll(windowed).isEmpty)
     for (b <- Seq(1, 3, 4, 7, 5000)) {
       val ranged = rn.select(col("grp"), col("value"), col("id"),
         CoreOps.ntileFromRanks("row_number", "n_group", b).cast("int").as("nt"))
@@ -134,13 +119,14 @@ class Round13Spec extends SparkSpec {
     val e = CoreOps.groupedRunningSum(empty, Seq("grp"), Seq("id"), "v")
     assert(e.columns.contains("cum") && e.count() == 0)
     val lf = fixture.select(col("grp"), col("id"), lit(3L).as("v"))
-    val one = CoreOps.groupedRunningSum(lf, Seq("grp"), Seq("id"), "v",
-      numPartitions = 1)
-    val w = Window.partitionBy("grp").orderBy(asc("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ww = lf.withColumn("cum", sum(col("v")).over(w))
-    assert(one.select("grp", "id", "v", "cum")
-      .exceptAll(ww.select("grp", "id", "v", "cum")).isEmpty)
+    withConf("spark.sql.shuffle.partitions" -> "1") {
+      val one = CoreOps.groupedRunningSum(lf, Seq("grp"), Seq("id"), "v")
+      val w = Window.partitionBy("grp").orderBy(asc("id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val ww = lf.withColumn("cum", sum(col("v")).over(w))
+      assert(one.select("grp", "id", "v", "cum")
+        .exceptAll(ww.select("grp", "id", "v", "cum")).isEmpty)
+    }
     val mono = lf.withColumn("grp", lit("only"))
     val g = CoreOps.groupedRunningSum(mono, Seq("grp"), Seq("id"), "v")
     val mx = g.agg(max("cum")).head.getLong(0)

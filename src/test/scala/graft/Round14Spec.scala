@@ -51,7 +51,7 @@ class Round14Spec extends SparkSpec {
     assert(st.groups == 4) // null is a group, as in windows/groupBy
     assert(st.maxRowsPerGroup == 1250)
     assert(st.maxDistinctPerGroup == Long.MaxValue) // no value column probed
-    val sv = ShapeDispatch.probeStats(fixture, Seq("grp"), Some("value"))
+    val sv = ShapeDispatch.probeStats(fixture, Seq("grp"), Seq("value"))
     // each group's i walks a step-4 progression, so i·K mod 50 hits ~25
     // residues; HLL ±2%: assert the loose envelope, not a point value
     assert(sv.maxDistinctPerGroup > 15 && sv.maxDistinctPerGroup < 40,
@@ -63,7 +63,7 @@ class Round14Spec extends SparkSpec {
       fixture.write.mode("overwrite").saveAsTable("r14_stats_t")
       spark.sql("ANALYZE TABLE r14_stats_t COMPUTE STATISTICS FOR COLUMNS grp, value")
       val df = spark.table("r14_stats_t")
-      val st = ShapeDispatch.catalogStats(df, Seq("grp"), Some("value"))
+      val st = ShapeDispatch.catalogStats(df, Seq("grp"), Seq("value"))
       assert(st.isDefined, "catalog stats must resolve after ANALYZE under CBO")
       assert(st.get.source == "catalog")
       assert(st.get.rows == 5000)
@@ -147,12 +147,12 @@ class Round14Spec extends SparkSpec {
     val withNullGrp = fixture.union(
       (0 until 10).map(i => ("d", null: java.lang.Double, 90000L + i))
         .toDF("grp", "value", "id"))
-    val ps = Seq(0.25, 0.5, 0.99)
-    val outs = Seq("p25", "p50", "p99")
-    val buf = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value",
-      ps, outs, force = Some(WindowShape))
-    val rk = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value",
-      ps, outs, force = Some(RangedShape))
+    val specs = Seq(ShapeDispatch.PercentileSpec("value",
+      Seq(0.25, 0.5, 0.99), Seq("p25", "p50", "p99")))
+    val buf = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), specs,
+      force = Some(WindowShape))
+    val rk = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), specs,
+      force = Some(RangedShape))
     val a = buf.orderBy("grp").collect()
     val b = rk.orderBy("grp").collect()
     // the fixture's 4 groups (null is a group WITH values) survive; the
@@ -162,14 +162,14 @@ class Round14Spec extends SparkSpec {
     assert(a.toSeq == b.toSeq, // Row equality = element equality incl. exact doubles
       s"percentile shapes diverge:\n${a.mkString("\n")}\nvs\n${b.mkString("\n")}")
     // the auto decision on this data: ~50 distinct per group → buffer form
-    val auto = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value", ps, outs)
+    val auto = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), specs)
     assert(auto.queryExecution.executedPlan.toString.contains("percentile"),
       "auto must pick the buffering aggregate at 50 distinct values per group")
     // and with the largest group's distinct count past the cutover, the
     // ranked form
     val past = ShapeDispatch.DistinctPerGroupCutover + 1
-    val ranked = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), "value",
-      ps, outs, stats = Some(GroupStats(5010, 5, past, past, "test")))
+    val ranked = ShapeDispatch.percentilesAuto(withNullGrp, Seq("grp"), specs,
+      stats = Some(GroupStats(5010, 5, past, past, "test")))
     assert(!ranked.queryExecution.executedPlan.toString.contains("percentile("),
       "a distinct bound past the cutover must pick the ranked form")
     assert(ranked.orderBy("grp").collect().toSeq == a.toSeq)

@@ -80,8 +80,8 @@ class Round15Spec extends SparkSpec {
     val df = (0 until 1000).map(i =>
         (s"g${i % 4}", (i % 2).toDouble, (i % 997).toDouble))
       .toDF("grp", "a", "b")
-    val both = ShapeDispatch.probeStatsMulti(df, Seq("grp"), Seq("a", "b"))
-    val aOnly = ShapeDispatch.probeStatsMulti(df, Seq("grp"), Seq("a"))
+    val both = ShapeDispatch.probeStats(df, Seq("grp"), Seq("a", "b"))
+    val aOnly = ShapeDispatch.probeStats(df, Seq("grp"), Seq("a"))
     assert(aOnly.maxDistinctPerGroup <= 3)
     assert(both.maxDistinctPerGroup > 200,
       s"multi-col probe must see the worst column: $both")
@@ -100,15 +100,15 @@ class Round15Spec extends SparkSpec {
     val specs = Seq(
       ShapeDispatch.PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),
       ShapeDispatch.PercentileSpec("b", Seq(0.99), Seq("b99")))
-    val buf = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val buf = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(WindowShape)).orderBy("grp").collect()
-    val rk = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val rk = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(RangedShape)).orderBy("grp").collect()
     assert(buf.toSeq == rk.toSeq,
       s"multi-col percentile shapes diverge:\n${buf.mkString("\n")}\nvs\n${rk.mkString("\n")}")
     // window branch plans ONE aggregate over both columns (q36's
     // historical single-pass plan), not a join of two
-    val bufPlan = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val bufPlan = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(WindowShape)).queryExecution.executedPlan.toString
     assert(!bufPlan.contains("Join"), s"buffer shape must not join:\n$bufPlan")
   }
@@ -122,9 +122,9 @@ class Round15Spec extends SparkSpec {
     val specs = Seq(
       ShapeDispatch.PercentileSpec("a", Seq(0.5), Seq("a50")),
       ShapeDispatch.PercentileSpec("b", Seq(0.5), Seq("b50")))
-    val buf = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val buf = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(WindowShape)).collect()
-    val rk = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val rk = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(RangedShape)).collect()
     assert(buf.length == 1 && buf.head.getString(0) == "ok")
     assert(rk.length == 1 && rk.head.getString(0) == "ok")

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 /** Round-16 pins: (b) null/empty-text docs never enter LSH banding (the
   * quadratic null-bucket hazard), (d) guardedStats' probe is memoized
   * per (session, plan, columns) — the second auto-dial call runs zero
-  * probes, (e) the fused multi-column ranked-percentile pass is
-  * value-identical to the per-column join form it replaces.
+  * probes, (e) the percentile dial's ranged branch is the per-column
+  * rankedPercentiles + join form, value-identical to the buffering
+  * aggregate.
   */
 class Round16Spec extends SparkSpec {
 
@@ -77,10 +78,12 @@ class Round16Spec extends SparkSpec {
     // a different dial on the same input but different probed columns is
     // a different memo entry — one fresh probe, then cached
     assert(probes {
-      ShapeDispatch.percentilesAuto(df, Seq("grp"), "v", Seq(0.5), Seq("p50"))
+      ShapeDispatch.percentilesAuto(df, Seq("grp"),
+        Seq(PercentileSpec("v", Seq(0.5), Seq("p50"))))
     } == 1L)
     assert(probes {
-      ShapeDispatch.percentilesAuto(df, Seq("grp"), "v", Seq(0.5), Seq("p50"))
+      ShapeDispatch.percentilesAuto(df, Seq("grp"),
+        Seq(PercentileSpec("v", Seq(0.5), Seq("p50"))))
     } == 0L)
     assert(probes {
       ShapeDispatch.topKPerGroupAuto(df, Seq("grp"), Seq("v", "id"), 3)
@@ -100,7 +103,7 @@ class Round16Spec extends SparkSpec {
     assert(jobs == 0, s"cached auto-dial call must launch no jobs, saw $jobs")
   }
 
-  // ---- (e) fused multi-column ranked percentiles --------------------------
+  // ---- (e) multi-column ranked percentiles --------------------------------
 
   private def fixtureDf(): DataFrame = {
     import spark.implicits._
@@ -114,40 +117,28 @@ class Round16Spec extends SparkSpec {
     rows.toDF("grp", "a", "b")
   }
 
-  test("rankedPercentilesFused == per-column rankedPercentiles + join (values, rows, schema)") {
+  test("percentilesAutoMulti ranged branch keeps the per-column form; the fused API is value-identical to it") {
     val df = fixtureDf()
     val specs = Seq(
       PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),
       PercentileSpec("b", Seq(0.25, 0.99), Seq("b25", "b99")))
-    val fused = ShapeDispatch.rankedPercentilesFused(df, Seq("grp"), specs)
+    // the dial's ranged shape stays the measured winner (per-column
+    // pruned passes + join — AB_MULTIPCT_FUSION.txt)
+    val viaDial = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
+      force = Some(RangedShape))
     val joined = graft.ops.CoreOps.rankedPercentiles(df, Seq("grp"),
         "a", Seq(0.5, 0.9), Seq("a50", "a90"))
       .join(graft.ops.CoreOps.rankedPercentiles(df, Seq("grp"),
         "b", Seq(0.25, 0.99), Seq("b25", "b99")), Seq("grp"))
-    assert(fused.columns.toSeq == joined.columns.toSeq)
-    val f = fused.orderBy("grp").collect()
+    assert(viaDial.columns.toSeq == joined.columns.toSeq)
+    val d = viaDial.orderBy("grp").collect()
     val j = joined.orderBy("grp").collect()
-    assert(f.toSeq == j.toSeq,
-      s"fused and joined forms must be bit-identical:\n${f.toSeq}\n${j.toSeq}")
+    assert(d.toSeq == j.toSeq,
+      s"dial and explicit per-column join must be bit-identical:\n${d.toSeq}\n${j.toSeq}")
     // the all-null-in-b group dropped (inner-join semantics), others kept
-    assert(f.map(_.getString(0)).toSeq == Seq("big", "mid", "one"))
-  }
-
-  test("percentilesAutoMulti ranged branch keeps the per-column form; the fused API is value-identical to it") {
-    val df = fixtureDf()
-    val specs = Seq(
-      PercentileSpec("a", Seq(0.5), Seq("a50")),
-      PercentileSpec("b", Seq(0.5), Seq("b50")))
-    // the dial's ranged default stays the measured winner (per-column
-    // pruned passes + join — AB_MULTIPCT_FUSION.txt); the fused
-    // one-exchange form is the opt-in API and must agree value-for-value
-    val viaDial = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
-      force = Some(RangedShape))
-    val fused = ShapeDispatch.rankedPercentilesFused(df, Seq("grp"), specs)
-    assert(viaDial.orderBy("grp").collect().toSeq ==
-      fused.orderBy("grp").collect().toSeq)
+    assert(d.map(_.getString(0)).toSeq == Seq("big", "mid", "one"))
     // single spec: same values as the direct per-column call
-    val one = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"),
+    val one = ShapeDispatch.percentilesAuto(df, Seq("grp"),
       Seq(PercentileSpec("a", Seq(0.9), Seq("a90"))), force = Some(RangedShape))
     val direct = graft.ops.CoreOps.rankedPercentiles(df, Seq("grp"),
       "a", Seq(0.9), Seq("a90"))
@@ -155,21 +146,21 @@ class Round16Spec extends SparkSpec {
       direct.orderBy("grp").collect().toSeq)
   }
 
-  test("rankedPercentilesFused matches the buffering aggregate (cross-shape, q36/q166 contract)") {
+  test("percentilesAuto per-column ranged shape matches the buffering aggregate (cross-shape, q36/q166 contract)") {
     val df = fixtureDf()
     val specs = Seq(
       PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),
       PercentileSpec("b", Seq(0.25, 0.99), Seq("b25", "b99")))
-    val fused = ShapeDispatch.rankedPercentilesFused(df, Seq("grp"), specs)
-      .orderBy("grp").collect()
-    val buffered = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val ranged = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
+      force = Some(RangedShape)).orderBy("grp").collect()
+    val buffered = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(ShapeDispatch.WindowShape)).orderBy("grp").collect()
-    assert(fused.length == buffered.length)
-    fused.zip(buffered).foreach { case (fr, br) =>
-      assert(fr.getString(0) == br.getString(0))
+    assert(ranged.length == buffered.length)
+    ranged.zip(buffered).foreach { case (rr, br) =>
+      assert(rr.getString(0) == br.getString(0))
       for (i <- 1 to 4)
-        assert(math.abs(fr.getDouble(i) - br.getDouble(i)) < 1e-9,
-          s"col $i differs for ${fr.getString(0)}: ${fr.getDouble(i)} vs ${br.getDouble(i)}")
+        assert(math.abs(rr.getDouble(i) - br.getDouble(i)) < 1e-9,
+          s"col $i differs for ${rr.getString(0)}: ${rr.getDouble(i)} vs ${br.getDouble(i)}")
     }
   }
 
@@ -268,18 +259,5 @@ class Round16Spec extends SparkSpec {
       }
     }
     exact.unpersist(); docs.unpersist()
-  }
-
-  test("rankedPercentilesFused rejects duplicate output names and <2 specs") {
-    val df = fixtureDf()
-    intercept[IllegalArgumentException] {
-      ShapeDispatch.rankedPercentilesFused(df, Seq("grp"),
-        Seq(PercentileSpec("a", Seq(0.5), Seq("p")),
-          PercentileSpec("b", Seq(0.5), Seq("p"))))
-    }
-    intercept[IllegalArgumentException] {
-      ShapeDispatch.rankedPercentilesFused(df, Seq("grp"),
-        Seq(PercentileSpec("a", Seq(0.5), Seq("p"))))
-    }
   }
 }

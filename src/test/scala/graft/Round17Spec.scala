@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 /** Round-17 pins: (a) the stats memo invalidates STRUCTURALLY when the
   * input files are overwritten under an unchanged plan (the file-leaf
   * fingerprint in the cache key), with [[ShapeDispatch.invalidateStats]]
-  * as the surgical per-entry drop, (b) percentilesAutoMulti's ranged
-  * reduce-join is null-safe on the group keys — a null-key group now
-  * survives ALL THREE shapes identically (buffered ≡ per-column joined ≡
-  * fused), (c) PercentileSpec fails loud on p outside [0,1], (e) the
-  * top-k auto dial's k > maxK short-circuit runs zero probes.
+  * as the surgical per-entry drop, (b) percentilesAuto's ranged
+  * reduce-join is null-safe on the group keys — a null-key group
+  * survives both shapes identically (buffered ≡ per-column joined),
+  * (c) PercentileSpec fails loud on p outside [0,1], (e) the top-k auto
+  * dial's k > maxK short-circuit runs zero probes.
   */
 class Round17Spec extends SparkSpec {
 
@@ -60,18 +60,20 @@ class Round17Spec extends SparkSpec {
     // warm two entries: (grp; no value cols) and (grp; v)
     assert(probes {
       ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
-      ShapeDispatch.percentilesAuto(df, Seq("grp"), "v", Seq(0.5), Seq("p50"))
+      ShapeDispatch.percentilesAuto(df, Seq("grp"),
+        Seq(PercentileSpec("v", Seq(0.5), Seq("p50"))))
     } == 2L)
     ShapeDispatch.invalidateStats(df, Seq("grp"))
     assert(probes {
       ShapeDispatch.rankFunctionsAuto(df, Seq("grp"), Seq("id"), Seq("id"))
     } == 1L, "the invalidated entry must re-probe")
     assert(probes {
-      ShapeDispatch.percentilesAuto(df, Seq("grp"), "v", Seq(0.5), Seq("p50"))
+      ShapeDispatch.percentilesAuto(df, Seq("grp"),
+        Seq(PercentileSpec("v", Seq(0.5), Seq("p50"))))
     } == 0L, "the sibling (grp; v) entry must be untouched")
   }
 
-  // ---- (b) null group keys survive all three percentile shapes -------------
+  // ---- (b) null group keys survive both percentile shapes ------------------
 
   private def nullKeyFixture(): DataFrame = {
     import spark.implicits._
@@ -90,21 +92,18 @@ class Round17Spec extends SparkSpec {
     val specs = Seq(
       PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),
       PercentileSpec("b", Seq(0.25, 0.99), Seq("b25", "b99")))
-    val buffered = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val buffered = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(WindowShape))
-    val joined = ShapeDispatch.percentilesAutoMulti(df, Seq("grp"), specs,
+    val joined = ShapeDispatch.percentilesAuto(df, Seq("grp"), specs,
       force = Some(RangedShape))
-    val fused = ShapeDispatch.rankedPercentilesFused(df, Seq("grp"), specs)
     def rows(d: DataFrame) =
       d.orderBy(asc_nulls_first("grp")).collect().toSeq
-    val b = rows(buffered); val j = rows(joined); val f = rows(fused)
-    // the null-key group is present in every shape — the r16 USING join
+    val b = rows(buffered); val j = rows(joined)
+    // the null-key group is present in both shapes — the r16 USING join
     // silently dropped it from the ranged branch
     assert(b.exists(_.isNullAt(0)), "buffered must keep the null-key group")
     assert(j.exists(_.isNullAt(0)),
       "ranged per-column reduce-join must keep the null-key group (null-safe join)")
-    assert(f.exists(_.isNullAt(0)), "fused must keep the null-key group")
-    assert(j == f, s"joined and fused must be bit-identical:\n$j\n$f")
     assert(b.length == j.length)
     b.zip(j).foreach { case (br, jr) =>
       assert(br.isNullAt(0) == jr.isNullAt(0) &&
