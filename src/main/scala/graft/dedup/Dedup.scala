@@ -203,7 +203,9 @@ object Dedup {
     * inherent pair work, never the corpus. Bucket size comes from a count
     * window over the SAME bucket-column partitioning (exchange reused),
     * before any array materializes. maxBucket == Int.MaxValue ⇒ one block
-    * per bucket (the oracle-checked default).
+    * per bucket (the oracle-checked default). Salted rows keep their
+    * `__salt`, so a self-join consumer can keep each pair only in its
+    * canonical block (min salt, max salt).
     */
   private def triangleBlocked(banded: DataFrame, bucketCols: Seq[String],
                               idCol: String, maxBucket: Int): DataFrame =
@@ -218,7 +220,7 @@ object Dedup {
         .withColumn("__blk", explode(transform(
           sequence(lit(0), col("__g") - 1),
           t => least(col("__salt"), t).cast("long") * 1000000 + greatest(col("__salt"), t))))
-        .drop("__g", "__salt")
+        .drop("__g")
     }
 
   /** Candidate near-dup pairs from LSH buckets. NOT a bucket self-join
@@ -446,20 +448,6 @@ object Dedup {
     if (broadcastShape) estPairs * 16.0
     else estPairs * (2.0 * avgTokensPerDoc * 8.0 + 32.0)
 
-  /** Merge-intersection count of two sorted-distinct long arrays — the
-    * plain-JVM twin of [[graft.functions.SortedIntersect]] (same
-    * definition on the same contract, so both verification paths count
-    * identical integers). */
-  private[graft] def intersectCount(a: Array[Long], b: Array[Long]): Int = {
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
-      if (a(i) == b(j)) { n += 1; i += 1; j += 1 }
-      else if (a(i) < b(j)) i += 1
-      else j += 1
-    }
-    n
-  }
-
   def prefixFilterPairs(docs: DataFrame, idCol: String, textCol: String,
                         thrNum: Int, thrDen: Int, shingleN: Int = 1,
                         suffixFilter: Boolean = false,
@@ -475,7 +463,7 @@ object Dedup {
     // gram identities with probability ~sz²·2⁻⁶⁴ per pair; the
     // string-exact oracle replay re-proves absence on every gated corpus).
     //
-    // TWO physical shapes, identical output (the r14 sf4 grid's finding):
+    // TWO physical shapes of one join plan (the r14 sf4 grid's finding):
     //  - join-verify: attach both token arrays to every candidate pair.
     //    On a SATURATING corpus candidates grow ~n²/V (sf4 fixed-vocab:
     //    ~310M pairs), and pairs × arrays is a terabyte-class shuffle —
@@ -484,14 +472,15 @@ object Dedup {
     //  - broadcast-verify: when the whole token table fits the budget
     //    (spark.graft.prefix.broadcastVerifyBytes, default 1.5 GB — a
     //    normal executor broadcast allowance — AND at most a quarter of
-    //    the driver heap, whichever is smaller), candidates shuffle as bare
-    //    16-byte id pairs and verify against a broadcast doc→tokens map:
-    //    the array shuffle disappears entirely. Above the budget the join
-    //    shape returns (arrays genuinely too big to replicate) — at THAT
-    //    scale an exact SSJoin on a saturating corpus is inherently
-    //    pair-bound, and the engine's documented answer is LSH (q19) or
-    //    dedup-first. Same gate-with-fallback pattern as the Similarity
-    //    codebook inlining.
+    //    the driver heap, whichever is smaller), the same joins take a
+    //    broadcast() hint on the token table ([[verifyPairs]]):
+    //    candidates shuffle as bare 16-byte id pairs and Spark's
+    //    BroadcastHashJoin attaches the arrays, so the array shuffle
+    //    disappears entirely. Above the budget the join shape returns
+    //    (arrays genuinely too big to replicate) — at THAT scale an exact
+    //    SSJoin on a saturating corpus is inherently pair-bound, and the
+    //    engine's documented answer is LSH (q19) or dedup-first. Same
+    //    gate-with-fallback pattern as the Similarity codebook inlining.
     val VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle) =
       planVerify(stoks, prefix, broadcastVerify)
     // ---- pair-space regime guard (r15 — the q142 escape hatch) -----------
@@ -517,80 +506,40 @@ object Dedup {
           "q19 — probabilistic recall per the banding curve) or dedup-first. " +
           s"Hard cap: $MaxPairShuffleBytesKey.")
     }
-    var bIndex: Option[org.apache.spark.broadcast.Broadcast[
-      scala.collection.mutable.LongMap[Array[Long]]]] = None
-    val verified: DataFrame =
-      if (takeBroadcast && idIsLong) {
-        import spark.implicits._
-        // Stream the index in partition-at-a-time (toLocalIterator via the
-        // primitive-typed Dataset): peak driver demand is the LongMap plus
-        // ONE partition of rows, not a full collected Row[] alongside a
-        // boxed-key Map (the r14 ADVICE transient-overhead finding).
-        // LongMap keys are unboxed longs; values are the primitive arrays.
-        val index = new scala.collection.mutable.LongMap[Array[Long]]()
-        val localIt = stoks.select(col("id"), col("stoks"))
-          .as[(Long, Array[Long])].toLocalIterator()
-        while (localIt.hasNext) {
-          val kv = localIt.next(); index.update(kv._1, kv._2)
-        }
-        val bc = spark.sparkContext.broadcast(index)
-        bIndex = Some(bc)
-        cands.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-          .as[(Long, Long)]
-          .mapPartitions { it =>
-            val m = bc.value
-            def tokensOf(id: Long): Array[Long] = {
-              val t = m.getOrNull(id)
-              if (t == null) throw new IllegalStateException(
-                s"prefixFilterPairs broadcast-verify: candidate doc id $id " +
-                  "is missing from the token index — candidates and the " +
-                  "index must derive from the same corpus frame")
-              t
-            }
-            it.flatMap { case (a, b) =>
-              val ta = tokensOf(a); val tb = tokensOf(b)
-              val inter = intersectCount(ta, tb)
-              // same integer predicate as the join shape's filter;
-              // Option fields make the encoder's schema NULLABLE, so
-              // both verify shapes write the identical parquet schema
-              // (a when(true,…) wrapper would fold away inside the
-              // output checkpoint's optimized plan)
-              if (inter.toLong * thrDen >=
-                  (ta.length.toLong + tb.length - inter) * thrNum)
-                Some((Option(a), Option(b), Option(inter),
-                  Option(ta.length), Option(tb.length)))
-              else None
-            }
-          }
-          .toDF("doc_a", "doc_b", "inter", "sz_a", "sz_b")
-          .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
-      } else {
-        cands
-          .join(stoks.select(col("id").as("doc_a"), col("stoks").as("tk_a"), col("sz").as("sz_a")), Seq("doc_a"))
-          .join(stoks.select(col("id").as("doc_b"), col("stoks").as("tk_b"), col("sz").as("sz_b")), Seq("doc_b"))
-          .withColumn("inter",
-            graft.functions.SortedIntersect.sorted_intersect_count(col("tk_a"), col("tk_b")))
-          .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
-          .filter(col("inter") * thrDen >= col("union_sz") * thrNum)
-      }
-    // candidate pairs are SIZE-oriented (a = smaller, the indexing-prefix
-    // orientation); the output contract is id-ordered doc_a < doc_b.
-    // Both shapes land here with identical (doc_a, doc_b, inter,
-    // union_sz) integers; jaccard is computed by the SAME Column
-    // expressions either way, so the FP result is bit-identical.
-    val out = Checkpoints.output(verified
+    val out = Checkpoints.output(
+      verifyPairs(cands, stoks, takeBroadcast && idIsLong, thrNum, thrDen))
+    Checkpoints.release(blocks)
+    out
+  }
+
+  /** The verify plan of [[prefixFilterPairs]], one for both shapes: the
+    * candidate id pairs join the token table twice and keep the pairs
+    * whose merge-intersection passes the integer threshold. With
+    * `broadcastTokens` the table carries a broadcast() hint, so both joins
+    * read ONE BroadcastExchange (the second is its reuse) and the
+    * candidates shuffle as bare id pairs; without it Spark plans the joins
+    * by size, shuffling token arrays once the table outgrows a broadcast.
+    * Candidate pairs are SIZE-oriented (a = smaller, the indexing-prefix
+    * orientation); the output contract is id-ordered doc_a < doc_b.
+    */
+  private[graft] def verifyPairs(cands: DataFrame, stoks: DataFrame,
+                                 broadcastTokens: Boolean,
+                                 thrNum: Int, thrDen: Int): DataFrame = {
+    val tk = stoks.select(col("id"), col("stoks"), col("sz"))
+    val tokens = if (broadcastTokens) broadcast(tk) else tk
+    cands
+      .join(tokens.as("ta"), col("doc_a") === col("ta.id"))
+      .join(tokens.as("tb"), col("doc_b") === col("tb.id"))
+      .select(col("doc_a"), col("doc_b"), col("ta.sz").as("sz_a"), col("tb.sz").as("sz_b"),
+        graft.functions.SortedIntersect.sorted_intersect_count(
+          col("ta.stoks"), col("tb.stoks")).as("inter"))
+      .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
+      .filter(col("inter") * thrDen >= col("union_sz") * thrNum)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"),
         col("inter"), col("union_sz"),
         graft.ops.CoreOps.roundPortable(
-          col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard")))
-    // the output checkpoint above is EAGER, so nothing can re-read the
-    // broadcast index: free its driver + executor copies now instead of
-    // waiting on ContextCleaner (r14 ADVICE — the index is the single
-    // biggest driver-side allocation in the dedup family)
-    bIndex.foreach(_.destroy())
-    Checkpoints.release(blocks)
-    out
+          col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard"))
   }
 
   /** Verification-shape plan for [[prefixFilterPairs]], computed ONCE
@@ -639,7 +588,7 @@ object Dedup {
     val nDocs = if (est.isNullAt(2)) 0L else est.getLong(2)
     val takeBroadcast = broadcastVerify.getOrElse {
       val bytes = totalTokens * 8L +
-        nDocs * 96L // per-entry map + array-header overhead
+        nDocs * 96L // per-row hash-relation + array-header overhead
       val cap = spark.conf.getOption(BroadcastVerifyBytesKey)
         .map(_.toLong).getOrElse(DefaultBroadcastVerifyBytes)
       // The estimate is the index's RESIDENT size; building it and the
@@ -992,46 +941,64 @@ object Dedup {
     * same never-form-the-pair-space shape as MinHash LSH. Shift is
     * arithmetic + mask (identical to a logical shift once masked), which
     * both engines spell the same way.
+    *
+    * The plan is the oracle's: a self equi-join of the banded rows on
+    * (band, key, block) with doc_a < doc_b and the hamming bound, so it
+    * runs on the plain join operators inside whole-stage codegen (a
+    * broadcast of the banded rows when small; a sort-merge join whose two
+    * sides read one reused exchange at scale) instead of an object
+    * aggregate plus a lambda pair expansion. Each row pair is emitted
+    * exactly once by construction: only from its LOWEST agreeing band (a
+    * per-pair predicate on h_a XOR h_b) and, under salting, only in its
+    * canonical triangle block (min salt, max salt). The closing
+    * `distinct()` therefore removes nothing unless `idCol` repeats — two
+    * rows of one doc_id can then yield the same (doc_a, doc_b, hamming) —
+    * and keeps the set semantics of the oracle's SELECT DISTINCT. It
+    * runs over a range partitioning on (doc_a, doc_b), so a caller's
+    * `orderBy("doc_a", "doc_b")` (q52's) sorts locally instead of paying a
+    * second exchange.
+    *
+    * @param maxBucket poison-bucket guard: buckets larger than this (a
+    *   degenerate 16-bit band value on a boilerplate-heavy corpus) are
+    *   SALTED into triangle blocks ([[triangleBlocked]]), bounding the
+    *   rows any one join key carries; the output is unchanged.
     */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, "4 bands give exact recall only for hamming <= 3")
-    // One simhash pass, one shuffle on (band, key), in-bucket pair
-    // expansion — the same single-aggregation shape as
-    // minhashCandidatePairs, NOT a bucket self-join (which reads the
-    // simhash projection twice and historically leaked a persisted frame
-    // per invocation). Buckets group docs agreeing on one 16-bit band:
-    // tiny when the corpus is clean, and the (doc_id, h) structs they
-    // collect are 16 bytes/doc. A degenerate band value (boilerplate-heavy
-    // corpora hash many docs to the same 16-bit band) is guarded by the
-    // same triangle-block salting as the MinHash path — set maxBucket at
-    // scale to bound per-task collect/expansion state.
     val banded = docs
       .select(col(idCol).as("doc_id"), simhash64(col(textCol)).as("h"))
       .select(col("doc_id"), col("h"), explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-               shiftright(col("h"), b * 16).bitwiseAND(lit(0xffffL)).as("key"))
+        struct(lit(b).as("band"), band16(col("h"), b).as("key"))
       }: _*)).as("bk"))
       .select(col("doc_id"), col("h"), col("bk.band"), col("bk.key"))
-    val buckets = triangleBlocked(banded, Seq("band", "key"), "doc_id", maxBucket)
-      .groupBy("band", "key", "__blk")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("h")))).as("ds"))
-      .filter(size(col("ds")) > 1)
-    // ordered pairs (ds[i], ds[j]) for i < j; structs sort by doc_id first.
-    // doc_a ≤ doc_b with equality only under duplicate input ids — the
-    // =!= filter below keeps the oracle's strict doc_a < doc_b semantics.
-    val pairs = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + 2, size(col("ds"))),
-        y => struct(x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
-                    hamming64(x.getField("h"), y.getField("h")).as("hamming")))))
-    buckets
-      .select(explode(pairs).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.hamming"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .filter(col("hamming") <= maxHamming)
+    val blocked = triangleBlocked(banded, Seq("band", "key"), "doc_id", maxBucket)
+    val (l, r) = (blocked.as("l"), blocked.as("r"))
+    val x = col("l.h").bitwiseXOR(col("r.h"))
+    // the lowest band on which the pair agrees; the join key guarantees
+    // the pair agrees on this row's band, so "lowest == band" holds on
+    // exactly one of the ≤ 4 band rows the join finds for the pair
+    val lowestAgreeing = (0 until 3).foldRight(lit(3)) { (b, rest) =>
+      when(band16(x, b) === 0L, lit(b)).otherwise(rest)
+    }
+    val canonicalBlock =
+      if (maxBucket == Int.MaxValue) lit(true)
+      else col("l.__blk") === least(col("l.__salt"), col("r.__salt")).cast("long") *
+        1000000 + greatest(col("l.__salt"), col("r.__salt"))
+    l.join(r, col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
+        col("l.__blk") === col("r.__blk") && col("l.doc_id") < col("r.doc_id") &&
+        hamming64(col("l.h"), col("r.h")) <= maxHamming &&
+        lowestAgreeing === col("l.band") && canonicalBlock)
+      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
+        hamming64(col("l.h"), col("r.h")).as("hamming"))
+      .repartitionByRange(col("doc_a"), col("doc_b"))
       .distinct()
   }
+
+  /** Band `b` (bits 16b .. 16b+15) of a 64-bit simhash as a long. */
+  private def band16(h: Column, b: Int): Column =
+    shiftright(h, b * 16).bitwiseAND(lit(0xffffL))
 
   /** Exact duplicated-SUBSTRING-span removal — the span-granular dedup of
     * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models

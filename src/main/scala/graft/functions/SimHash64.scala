@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -14,10 +14,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * Semantics match the built-in composition in Dedup.simhash64's previous
   * form (two 32-bit halves of the first 16 md5 hex chars) — but one pass
   * per row instead of 64 interpreted aggregate folds, each of which
-  * re-walked the token array.
+  * re-walked the token array. Generated code calls the same
+  * [[SimHash64.hash]], so the expression stays inside whole-stage codegen
+  * (a CodegenFallback expression splits its operator out of the stage and
+  * compiles a projection or predicate of its own).
   */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -28,8 +30,18 @@ case class SimHash64(child: Expression)
     }
   }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr   = input.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(input: Any): Any =
+    java.lang.Long.valueOf(SimHash64.hash(input.asInstanceOf[ArrayData]))
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.SimHash64.hash($a)")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+  def hash(arr: ArrayData): Long = {
     val n     = arr.numElements()
     val votes = new Array[Int](64)
     val md    = java.security.MessageDigest.getInstance("MD5")
@@ -54,14 +66,9 @@ case class SimHash64(child: Expression)
       if (votes(bit) > 0) out |= (1L << bit)
       bit += 1
     }
-    java.lang.Long.valueOf(out)
+    out
   }
 
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-object SimHash64 {
   def simhash64(tokens: Column): Column =
     GraftShim.column(SimHash64(GraftShim.expression(tokens)))
 }

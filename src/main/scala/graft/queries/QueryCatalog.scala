@@ -2700,15 +2700,16 @@ object QueryCatalog {
     // former full-gram-table groupBy-min shuffle, then a separate
     // corpus tokenize pass, both gone); only the few length-bounded
     // rows join back to documents, so their `joined` text tokenizes on
-    // matched rows only. The checkpoint holds just those rows (two
-    // consumers: the gram join, the final left join).
+    // matched rows only.
     val candIdx = splitGramArrays(s, dir)
       .filter(col("n_toks") >= 8 && col("n_toks") <= maxLen)
       .select(col("doc_id"), col("n_toks").as("n"), array_min(col("ghs")).as("gh"))
-    val cands = graft.dedup.Checkpoints.output(candIdx
-      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
+    // one document-text table for both text joins (candidate and host),
+    // so a broadcast of it is built once and reused
+    val text = docs.select(col("doc_id"), col("text"))
+    val cands = candIdx.join(text, Seq("doc_id"))
       .select(col("doc_id"), col("n"),
-        concat_ws(" ", TextOps.tokens(lower(col("text")))).as("joined"), col("gh")))
+        concat_ws(" ", TextOps.tokens(lower(col("text")))).as("joined"), col("gh"))
     val grams = splitGrams(s, dir).select("doc_id", "gh")
     // candidate⋈gram FIRST on the slim (host_id, gh) table; host TEXT
     // tokenizes only after the hit join — hits are bounded by the docs
@@ -2717,19 +2718,23 @@ object QueryCatalog {
     // matches only, never corpus-wide
     val hits = cands
       .join(grams.withColumnRenamed("doc_id", "host_id"), Seq("gh"))
-    val verified = hits
-      .join(docs.select(col("doc_id").as("host_id"), col("text").as("host_text")),
-        Seq("host_id"))
+    val verified = hits.as("h")
+      .join(text.as("ht"), col("h.host_id") === col("ht.doc_id"))
       // tokenize ABOVE the join so it evaluates on matched rows only
-      .withColumn("host_t", TextOps.tokens(lower(col("host_text"))))
+      .select(col("h.doc_id"), col("h.n"), col("h.joined"),
+        TextOps.tokens(lower(col("ht.text"))).as("host_t"))
       .filter(size(col("host_t")) > col("n"))
       .filter(instr(concat(lit(" "), concat_ws(" ", col("host_t")), lit(" ")),
         concat(lit(" "), col("joined"), lit(" "))) > 0)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hosts"))
-    cands.join(verified, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n").as("n_tokens"),
-        coalesce(col("n_hosts"), lit(0L)).as("n_hosts"),
-        (coalesce(col("n_hosts"), lit(0L)) > 0).as("is_contained"))
+    // one row per candidate (0 hosts) plus one per verified (doc, host)
+    // hit, counted in ONE aggregate over the output's range partitioning:
+    // no left join back to the candidates, and the final sort is local
+    candIdx.select(col("doc_id"), col("n"), lit(0L).as("hit"))
+      .unionByName(verified.select(col("doc_id"), lit(null).cast("int").as("n"), lit(1L).as("hit")))
+      .repartitionByRange(col("doc_id"))
+      .groupBy("doc_id")
+      .agg(max(col("n")).as("n_tokens"), sum(col("hit")).as("n_hosts"))
+      .withColumn("is_contained", col("n_hosts") > 0)
       .orderBy("doc_id")
   }
 

@@ -9,6 +9,10 @@ import graft.Harness
   * per-query codegen-compile/first-run cost (run 1) from the
   * steady-state cost (min of later runs), and the min-estimator CPU
   * seconds are immune to the box's rotating wall-clock straggler.
+  * Each run line also prints `compiles=N`, the Janino compilations the
+  * run paid (the `CodegenMetrics` compilation count delta): run 1 in a
+  * fresh JVM gives the query's distinct generated-class keys while they
+  * fit Spark's codegen cache, and runs 2+ its steady recompiles.
   *
   *   runMain graft.tools.SoloRuns <sfDir> <runs> <q1,q2,...>
   */
@@ -51,24 +55,29 @@ object SoloRuns {
       prev
     }
 
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     var failures = 0
     for (name <- names) {
       var best = Double.MaxValue; var bestCpu = Double.MaxValue
       for (r <- 1 to runs) {
         val c0 = settledCpu(s"q=$name run=$r start")
+        val k0 = compiles()
         // one-query sweep: the harness releases this query's caches after
         // every run, so each iteration re-pays the fill the bench charges it
         val run = Harness.runSorted(spark, dir, Some(Seq(name))) { (_, df) =>
           df.write.format("noop").mode("overwrite").save()
         }.head
         val cpu = (settledCpu(s"q=$name run=$r end") - c0) / 1e9
+        val k = compiles() - k0
         run.error match {
           case Some(e) =>
             failures += 1
             println(s"[solo] q=$name run=$r FAILED: $e")
           case None =>
             if (r > 1) { best = math.min(best, run.seconds); bestCpu = math.min(bestCpu, cpu) }
-            println(f"[solo] q=$name run=$r wall=${run.seconds}%.2fs cpu=$cpu%.1fs")
+            println(f"[solo] q=$name run=$r wall=${run.seconds}%.2fs cpu=$cpu%.1fs compiles=$k")
         }
       }
       // no successful run after the first leaves no steady-state sample:

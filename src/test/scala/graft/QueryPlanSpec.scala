@@ -356,6 +356,29 @@ class QueryPlanSpec extends SparkSpec {
     }
   }
 
+  test("q52 simhash near-dups: a band self-join, no object aggregate, collect_list or pair-array Generate") {
+    import org.apache.spark.sql.catalyst.expressions.CreateArray
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.joins.HashJoin
+    val df = QueryCatalog.simhashNearDups(spark, sf)
+    df.collect() // finalizes this frame's own AdaptiveSparkPlan
+    val nodes = finalNodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!nodes.exists(_.isInstanceOf[ObjectHashAggregateExec]),
+      s"no object aggregate may collect band buckets:\n${plan.take(2500)}")
+    assert(!nodes.exists(_.expressions.exists(_.find(_.isInstanceOf[CollectList]).isDefined)),
+      s"no collect_list may build bucket arrays:\n${plan.take(2500)}")
+    // the only Generate explodes one row's four band structs — never a
+    // per-bucket pair array
+    val gens = nodes.collect { case g: GenerateExec => g }
+    assert(gens.forall(_.generator.children.forall(_.isInstanceOf[CreateArray])),
+      s"a Generate expands something other than the band structs:\n${plan.take(2500)}")
+    assert(nodes.exists(_.isInstanceOf[HashJoin]),
+      s"candidate pairs must come from the band equi-join:\n${plan.take(2500)}")
+  }
+
   test("q103 predictability buckets: no WindowExec without a partition spec") {
     import org.apache.spark.sql.execution.window.WindowExec
     val df = QueryCatalog.bigramPredictability(spark, sf)

@@ -217,7 +217,8 @@ class Round14Spec extends SparkSpec {
     // the two verification shapes must agree on the exact output contract
     // (pairs, integer inter/union, the rounded jaccard) — the r14 sf4
     // grid found join-verify shuffling pairs × token-arrays (828s at
-    // sf4); broadcast-verify ships 16-byte pairs against a broadcast map
+    // sf4); broadcast-verify ships 16-byte pairs against a broadcast
+    // token table
     val docs = graft.io.Tables.table(spark, sf, "documents")
     val joinForm = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text",
       1, 2, shingleN = 3, broadcastVerify = Some(false))
@@ -233,22 +234,39 @@ class Round14Spec extends SparkSpec {
     val auto = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text",
       1, 2, shingleN = 3)
     assert(auto.exceptAll(joinForm).isEmpty && joinForm.exceptAll(auto).isEmpty)
-  }
 
-  test("intersectCount == SortedIntersect on sorted-distinct arrays") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    val rows = (0 until 200).map { _ =>
-      val a = rnd.shuffle((0L until 400L).toVector).take(rnd.nextInt(50) + 1)
-        .distinct.sorted.toArray
-      val b = rnd.shuffle((0L until 400L).toVector).take(rnd.nextInt(50) + 1)
-        .distinct.sorted.toArray
-      (a, b, graft.dedup.Dedup.intersectCount(a, b))
+    // the hinted shape's plan: the token table broadcasts ONCE (one
+    // BroadcastExchange, the second join reads its reuse) and no shuffle
+    // carries a token array — candidates travel as bare id pairs
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
     }
-    val df = rows.toDF("a", "b", "jvm")
-    val diff = df.withColumn("expr",
-        graft.functions.SortedIntersect.sorted_intersect_count(col("a"), col("b")))
-      .filter(col("expr") =!= col("jvm"))
-    assert(diff.isEmpty, s"counts diverge:\n${diff.limit(5).collect().mkString("\n")}")
+    val (cands, stoks, _, blocks) = graft.dedup.Dedup.prefixCandidates(
+      docs, "doc_id", "text", 1, 2, 3, suffixFilter = false)
+    val hinted = graft.dedup.Dedup.verifyPairs(cands, stoks, broadcastTokens = true, 1, 2)
+    try {
+      hinted.collect() // finalizes this frame's own AdaptiveSparkPlan
+      val plan = nodes(hinted.queryExecution.executedPlan)
+      val planStr = hinted.queryExecution.executedPlan.toString
+      val arrayCols = stoks.schema.fields.filter(
+        _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]).map(_.name).toSet
+      assert(arrayCols.nonEmpty)
+      val tokenBroadcasts = plan.collect {
+        case b: BroadcastExchangeExec if b.output.exists(a => arrayCols(a.name)) => b }
+      assert(tokenBroadcasts.size == 1,
+        s"the token table must broadcast once:\n${planStr.take(3000)}")
+      assert(plan.exists {
+        case r: ReusedExchangeExec => r.child.isInstanceOf[BroadcastExchangeExec]
+        case _ => false }, s"the second join must reuse the broadcast:\n${planStr.take(3000)}")
+      assert(!plan.exists {
+        case e: ShuffleExchangeExec => e.output.exists(
+          _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
+        case _ => false }, s"a shuffle carries token arrays:\n${planStr.take(3000)}")
+    } finally graft.dedup.Checkpoints.release(blocks)
   }
 }

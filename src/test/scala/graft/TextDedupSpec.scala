@@ -222,6 +222,60 @@ class TextDedupSpec extends SparkSpec {
     assert(capped == uncapped, s"salting must preserve recall: ${capped.size} vs ${uncapped.size}")
   }
 
+  /** (doc_a, doc_b, hamming) rows of [[Dedup.simhashNearDups]], as a list
+    * (duplicates kept), and the brute-force reference over every row pair
+    * of the input: doc_a < doc_b, hamming <= 3, distinct. */
+  private def simhashRows(df: org.apache.spark.sql.DataFrame, maxBucket: Int = Int.MaxValue) = {
+    val got = Dedup.simhashNearDups(df, "doc_id", "text", maxBucket = maxBucket)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toList
+    val hs = df.select(col("doc_id"), Dedup.simhash64(col("text")))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val ref = (for { (a, ha) <- hs; (b, hb) <- hs if a < b
+                     d = java.lang.Long.bitCount(ha ^ hb) if d <= 3 } yield (a, b, d)).toSet
+    (got, ref, hs.toMap)
+  }
+
+  test("simhashNearDups: a pair agreeing on several bands appears once") {
+    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
+    val far  = (500 to 560).map(i => s"zzz$i").mkString(" ")
+    val df = Seq((1L, base), (2L, base), (3L, near), (4L, far)).toDF("doc_id", "text")
+    val (got, ref, h) = simhashRows(df)
+    def bands(a: Long, b: Long) =
+      (0 until 4).count(k => ((h(a) ^ h(b)) >>> (16 * k) & 0xffffL) == 0L)
+    assert(bands(1L, 2L) == 4, "identical texts agree on every band")
+    assert(got.contains((1L, 2L, 0)))
+    assert(got.size == got.distinct.size, s"a pair was emitted more than once: $got")
+    assert(got.toSet == ref, s"got $got, brute force $ref")
+  }
+
+  test("simhashNearDups maxBucket salting gives the uncapped rows on a poison bucket") {
+    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
+    // 20 identical docs → a poison 20-doc bucket in every band; plus a pair
+    val hot  = (1L to 20L).map(i => (i, base))
+    val pair = Seq((100L, "x y z w v u t s"), (101L, "x y z w v u t s"))
+    val df = (hot ++ pair).toDF("doc_id", "text")
+    val (uncapped, ref, _) = simhashRows(df)
+    assert(uncapped.size == 190 + 1) // C(20,2) hot pairs + the planted pair
+    assert(uncapped.toSet == ref)
+    val (capped, _, _) = simhashRows(df, maxBucket = 2)
+    assert(capped.sorted == uncapped.sorted,
+      s"salting must give the uncapped rows: ${capped.size} vs ${uncapped.size}")
+  }
+
+  test("simhashNearDups keeps DISTINCT rows when doc ids repeat") {
+    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val near = (1 to 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
+    // doc 1 appears three times (twice verbatim), doc 2 twice: several row
+    // pairs of docs 1 and 2 share one (doc_a, doc_b, hamming) row
+    val df = Seq((1L, base), (1L, base), (1L, near), (2L, base), (2L, near), (3L, base))
+      .toDF("doc_id", "text")
+    val (got, ref, _) = simhashRows(df)
+    assert(got.size == got.distinct.size, s"duplicate rows: $got")
+    assert(got.toSet == ref, s"got $got, brute force $ref")
+    assert(ref.contains((1L, 2L, 0)) && ref.contains((1L, 3L, 0)))
+  }
+
   test("minhash_sig is SQL-callable after GraftFunctions.register") {
     graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
