@@ -369,6 +369,36 @@ object Dedup {
     out
   }
 
+  /** Conf key: token-table budget (bytes) under which [[prefixFilterPairs]]
+    * verifies candidates against a broadcast() hinted token table instead
+    * of shuffling token arrays. See the r14 scale note in the method. */
+  val BroadcastVerifyBytesKey = "spark.graft.prefix.broadcastVerifyBytes"
+  val DefaultBroadcastVerifyBytes: Long = 1500L * 1000 * 1000
+
+  /** Conf keys: the PAIR-SPACE regime guard (r15). An exact set-similarity
+    * join on a saturating fixed-vocabulary corpus has an inherent ~n²/V
+    * candidate space — no filter ladder changes that asymptote, and the
+    * r14 sf4 grid measured where it lands (310M candidates; the
+    * array-carrying verify filled the disk). The guard estimates the
+    * candidate shuffle volume BEFORE any pair materializes, from the
+    * already-checkpointed prefix frame: Σ over prefix tokens of
+    * cnt·(cnt−1)/2 upper-bounds the bucket join's output multiset.
+    * Above the warn threshold it logs the documented escape (LSH q19 /
+    * dedup-first, with the recall contract stated); above the hard cap
+    * (default off) it fails fast — the alternative the cap replaces is
+    * hours of shuffle ending in a full disk. */
+  val PairShuffleWarnBytesKey = "spark.graft.prefix.pairShuffleWarnBytes"
+  val DefaultPairShuffleWarnBytes: Long = 100L * 1000 * 1000 * 1000
+  val MaxPairShuffleBytesKey = "spark.graft.prefix.maxPairShuffleBytes"
+
+  /** Estimated candidate-verification shuffle volume (pure, spec-pinned):
+    * the broadcast shape ships 16-byte id pairs; the join shape attaches
+    * both token arrays (8 B/token + tuple overhead) to every candidate. */
+  def pairShuffleBytes(estPairs: Double, avgTokensPerDoc: Double,
+                       broadcastShape: Boolean): Double =
+    if (broadcastShape) estPairs * 16.0
+    else estPairs * (2.0 * avgTokensPerDoc * 8.0 + 32.0)
+
   /** EXACT set-similarity self-join via global-frequency prefix filtering
     * (the PPJoin/Vernica-Carey-Li MapReduce construction): every pair of
     * documents whose distinct-token Jaccard is ≥ thrNum/thrDen, with NO
@@ -400,65 +430,15 @@ object Dedup {
     * hot tokens out of most prefixes (a stopword enters a prefix only
     * for documents made almost entirely of stopwords). The df table is
     * vocabulary-sized; the per-document ranking window partitions by
-    * document (doc-sized groups). DedupSpec proves the no-false-negative
+    * document (doc-sized groups). Round8Spec proves the no-false-negative
     * claim against the brute-force all-pairs join on random corpora.
-    *
-    * `suffixFilter` adds the PPJoin+ suffix level (lossless — see
-    * [[prefixCandidates]]). It is a DENSITY dial, off by default: the
-    * setup (a materialized global token rank + per-doc rank arrays)
-    * pays only when prefix candidates are plentiful relative to true
-    * pairs — measured 17% candidate drop with recall unchanged on a
-    * Zipf near-dup fixture (Round9Spec), but a 2× slowdown on the
-    * synthetic q142 corpus whose candidate set is already just 3% of
-    * the pair space. Enable on power-law / boilerplate-heavy corpora
-    * where verification dominates. `suffixDepth = 2` is the dial's next
-    * notch: a second recursive window split (two more pivots + binary
-    * searches per pair) that subsumes depth 1, stays lossless, and
-    * prunes candidates whose token distributions align at half- but not
-    * quarter-window granularity — the class depth 1 cannot see
-    * (Round10Spec's saturation fixture; 8.9% further pruned on Zipf).
     */
-  /** Conf key: token-table budget (bytes) under which [[prefixFilterPairs]]
-    * verifies candidates against a BROADCAST doc→tokens map instead of two
-    * array-carrying joins. See the r14 scale note in the method doc. */
-  val BroadcastVerifyBytesKey = "spark.graft.prefix.broadcastVerifyBytes"
-  val DefaultBroadcastVerifyBytes: Long = 1500L * 1000 * 1000
-
-  /** Conf keys: the PAIR-SPACE regime guard (r15). An exact set-similarity
-    * join on a saturating fixed-vocabulary corpus has an inherent ~n²/V
-    * candidate space — no filter ladder changes that asymptote, and the
-    * r14 sf4 grid measured where it lands (310M candidates; the
-    * array-carrying verify filled the disk). The guard estimates the
-    * candidate shuffle volume BEFORE any pair materializes, from the
-    * already-checkpointed prefix frame: Σ over prefix tokens of
-    * cnt·(cnt−1)/2 upper-bounds the bucket join's output multiset.
-    * Above the warn threshold it logs the documented escape (LSH q19 /
-    * dedup-first, with the recall contract stated); above the hard cap
-    * (default off) it fails fast — the alternative the cap replaces is
-    * hours of shuffle ending in a full disk. */
-  val PairShuffleWarnBytesKey = "spark.graft.prefix.pairShuffleWarnBytes"
-  val DefaultPairShuffleWarnBytes: Long = 100L * 1000 * 1000 * 1000
-  val MaxPairShuffleBytesKey = "spark.graft.prefix.maxPairShuffleBytes"
-
-  /** Estimated candidate-verification shuffle volume (pure, spec-pinned):
-    * the broadcast shape ships 16-byte id pairs; the join shape attaches
-    * both token arrays (8 B/token + tuple overhead) to every candidate. */
-  def pairShuffleBytes(estPairs: Double, avgTokensPerDoc: Double,
-                       broadcastShape: Boolean): Double =
-    if (broadcastShape) estPairs * 16.0
-    else estPairs * (2.0 * avgTokensPerDoc * 8.0 + 32.0)
-
   def prefixFilterPairs(docs: DataFrame, idCol: String, textCol: String,
-                        thrNum: Int, thrDen: Int, shingleN: Int = 1,
-                        suffixFilter: Boolean = false,
-                        suffixDepth: Int = 1,
-                        broadcastVerify: Option[Boolean] = None): DataFrame = {
+                        thrNum: Int, thrDen: Int, shingleN: Int = 1): DataFrame = {
     val (cands, stoks, prefix, blocks) =
-      prefixCandidates(docs, idCol, textCol, thrNum, thrDen, shingleN,
-        suffixFilter, suffixDepth)
+      prefixCandidates(docs, idCol, textCol, thrNum, thrDen, shingleN)
     val spark = cands.sparkSession
-    // Verification merge-intersects the per-doc SORTED arrays — tokid
-    // ranks with the suffix filter on, sorted gram hashes off; either way
+    // Verification merge-intersects the per-doc SORTED gram-hash arrays —
     // longs in bijection with the grams (xxhash64 collisions could merge
     // gram identities with probability ~sz²·2⁻⁶⁴ per pair; the
     // string-exact oracle replay re-proves absence on every gated corpus).
@@ -467,8 +447,7 @@ object Dedup {
     //  - join-verify: attach both token arrays to every candidate pair.
     //    On a SATURATING corpus candidates grow ~n²/V (sf4 fixed-vocab:
     //    ~310M pairs), and pairs × arrays is a terabyte-class shuffle —
-    //    measured 828s median at sf4, and the suffix-filter variant
-    //    (which attaches arrays a second time to prune) filled the disk.
+    //    measured 828s median at sf4.
     //  - broadcast-verify: when the whole token table fits the budget
     //    (spark.graft.prefix.broadcastVerifyBytes, default 1.5 GB — a
     //    normal executor broadcast allowance — AND at most a quarter of
@@ -481,8 +460,8 @@ object Dedup {
     //    SSJoin on a saturating corpus is inherently pair-bound, and the
     //    engine's documented answer is LSH (q19) or dedup-first. Same
     //    gate-with-fallback pattern as the Similarity codebook inlining.
-    val VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle) =
-      planVerify(stoks, prefix, broadcastVerify)
+    val VerifyPlan(takeBroadcast, estPairs, avgSz, estShuffle) =
+      planVerify(stoks, prefix)
     // ---- pair-space regime guard (r15 — the q142 escape hatch) -----------
     val hardCap = spark.conf.getOption(MaxPairShuffleBytesKey).map(_.toLong)
     val warnCap = spark.conf.getOption(PairShuffleWarnBytesKey)
@@ -507,32 +486,45 @@ object Dedup {
           s"Hard cap: $MaxPairShuffleBytesKey.")
     }
     val out = Checkpoints.output(
-      verifyPairs(cands, stoks, takeBroadcast && idIsLong, thrNum, thrDen))
+      verifyPairs(cands, stoks, takeBroadcast, thrNum, thrDen))
     Checkpoints.release(blocks)
     out
   }
 
-  /** The verify plan of [[prefixFilterPairs]], one for both shapes: the
-    * candidate id pairs join the token table twice and keep the pairs
-    * whose merge-intersection passes the integer threshold. With
+  /** The verify plan of [[prefixFilterPairs]] and [[lshVerifiedPairs]],
+    * one for both shapes: the candidate id pairs join the token table
+    * `(id, stoks, sz)` twice and keep the pairs whose merge-intersection
+    * passes the integer threshold ([[verifiedJaccard]]). With
     * `broadcastTokens` the table carries a broadcast() hint, so both joins
     * read ONE BroadcastExchange (the second is its reuse) and the
     * candidates shuffle as bare id pairs; without it Spark plans the joins
     * by size, shuffling token arrays once the table outgrows a broadcast.
-    * Candidate pairs are SIZE-oriented (a = smaller, the indexing-prefix
-    * orientation); the output contract is id-ordered doc_a < doc_b.
+    * The hint works for any id type.
     */
   private[graft] def verifyPairs(cands: DataFrame, stoks: DataFrame,
                                  broadcastTokens: Boolean,
                                  thrNum: Int, thrDen: Int): DataFrame = {
     val tk = stoks.select(col("id"), col("stoks"), col("sz"))
     val tokens = if (broadcastTokens) broadcast(tk) else tk
-    cands
+    verifiedJaccard(cands
       .join(tokens.as("ta"), col("doc_a") === col("ta.id"))
       .join(tokens.as("tb"), col("doc_b") === col("tb.id"))
       .select(col("doc_a"), col("doc_b"), col("ta.sz").as("sz_a"), col("tb.sz").as("sz_b"),
-        graft.functions.SortedIntersect.sorted_intersect_count(
-          col("ta.stoks"), col("tb.stoks")).as("inter"))
+        col("ta.stoks").as("tk_a"), col("tb.stoks").as("tk_b")), thrNum, thrDen)
+  }
+
+  /** The integer-Jaccard verification every pair path shares (the exact
+    * join, the LSH shape, sorted neighborhood): over `pairs` carrying
+    * doc_a, doc_b, their set sizes sz_a/sz_b and SORTED distinct gram
+    * arrays tk_a/tk_b, keep inter·den ≥ union·num and emit the output
+    * contract (doc_a < doc_b, inter, union_sz, jaccard rounded to 6).
+    * Pairs may arrive in either orientation (the prefix join's are
+    * size-oriented, a = smaller); the output is id-ordered.
+    */
+  private def verifiedJaccard(pairs: DataFrame, thrNum: Int, thrDen: Int): DataFrame =
+    pairs
+      .withColumn("inter",
+        graft.functions.SortedIntersect.sorted_intersect_count(col("tk_a"), col("tk_b")))
       .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
       .filter(col("inter") * thrDen >= col("union_sz") * thrNum)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
@@ -540,29 +532,19 @@ object Dedup {
         col("inter"), col("union_sz"),
         graft.ops.CoreOps.roundPortable(
           col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard"))
-  }
 
   /** Verification-shape plan for [[prefixFilterPairs]], computed ONCE
     * from the checkpointed prefix frame (one bookkeeping aggregate; no
     * candidate materializes). A caller can price the exact join's pair
     * space with it before choosing between [[prefixFilterPairs]] and
     * [[lshVerifiedPairs]]; `tools/ShapeChoice` prints it. */
-  private[graft] final case class VerifyPlan(idIsLong: Boolean,
-                                             takeBroadcast: Boolean,
+  private[graft] final case class VerifyPlan(takeBroadcast: Boolean,
                                              estPairs: Double,
                                              avgSz: Double,
                                              estShuffle: Double)
 
-  private[graft] def planVerify(stoks: DataFrame, prefix: DataFrame,
-                                broadcastVerify: Option[Boolean]): VerifyPlan = {
+  private[graft] def planVerify(stoks: DataFrame, prefix: DataFrame): VerifyPlan = {
     val spark = stoks.sparkSession
-    val idIsLong = stoks.schema("id").dataType ==
-      org.apache.spark.sql.types.LongType
-    // A caller FORCING the broadcast shape on a non-long id would get a
-    // silent downgrade to the join shape — fail loud instead (r14 ADVICE).
-    require(idIsLong || !broadcastVerify.contains(true),
-      s"prefixFilterPairs(broadcastVerify=true): the id column must be " +
-        s"LongType for the broadcast index, got ${stoks.schema("id").dataType.sql}")
     // ONE bookkeeping aggregate over the prefix checkpoint serves both the
     // broadcast budget gate and the pair-space regime guard. Every token-
     // table document has exactly one rk = 1 prefix row carrying its sz
@@ -586,37 +568,32 @@ object Dedup {
     val estPairs = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
     val totalTokens = if (est.isNullAt(1)) 0L else est.getLong(1)
     val nDocs = if (est.isNullAt(2)) 0L else est.getLong(2)
-    val takeBroadcast = broadcastVerify.getOrElse {
-      val bytes = totalTokens * 8L +
-        nDocs * 96L // per-row hash-relation + array-header overhead
-      val cap = spark.conf.getOption(BroadcastVerifyBytesKey)
-        .map(_.toLong).getOrElse(DefaultBroadcastVerifyBytes)
-      // The estimate is the index's RESIDENT size; building it and the
-      // torrent-broadcast serialization both transiently hold more. Never
-      // let the auto gate commit more than a quarter of the driver's heap
-      // regardless of the configured cap (r14 ADVICE: a cap tuned for one
-      // deployment OOMed a smaller driver where the join shape — slowly —
-      // succeeded). Forcing broadcastVerify=Some(true) bypasses this:
-      // the caller owns the sizing.
-      val driverCap = Runtime.getRuntime.maxMemory / 4
-      idIsLong && bytes <= math.min(cap, driverCap)
-    }
+    val bytes = totalTokens * 8L +
+      nDocs * 96L // per-row hash-relation + array-header overhead
+    val cap = spark.conf.getOption(BroadcastVerifyBytesKey)
+      .map(_.toLong).getOrElse(DefaultBroadcastVerifyBytes)
+    // The estimate is the table's RESIDENT size; building it and the
+    // torrent-broadcast serialization both transiently hold more. Never
+    // commit more than a quarter of the driver's heap regardless of the
+    // configured cap (r14 ADVICE: a cap tuned for one deployment OOMed a
+    // smaller driver where the join shape — slowly — succeeded).
+    val driverCap = Runtime.getRuntime.maxMemory / 4
+    val takeBroadcast = bytes <= math.min(cap, driverCap)
     val avgSz = if (nDocs == 0) 0.0 else totalTokens.toDouble / nDocs
-    val estShuffle = pairShuffleBytes(estPairs, avgSz,
-      broadcastShape = takeBroadcast && idIsLong)
-    VerifyPlan(idIsLong, takeBroadcast, estPairs, avgSz, estShuffle)
+    val estShuffle = pairShuffleBytes(estPairs, avgSz, broadcastShape = takeBroadcast)
+    VerifyPlan(takeBroadcast, estPairs, avgSz, estShuffle)
   }
 
   /** The LSH answer to a set-similarity join: MinHash-LSH candidates
-    * ([[minhashCandidatePairsTracked]]) re-scored by the SAME integer
-    * predicate as [[prefixFilterPairs]] (inter·den ≥ num·union over
-    * distinct-gram sets), emitting the SAME output contract
-    * (doc_a < doc_b, inter, union_sz, jaccard — bit-identical values on
-    * every emitted pair, since both shapes count set identities under
-    * the same xxhash64 gram bijection and round with the same
-    * expression). What differs is COVERAGE: only pairs that collide in
-    * ≥1 of the b bands appear, so recall on a true pair at similarity s
-    * is 1−(1−s^r)^b — the banding curve; precision stays 1. Defaults
+    * ([[minhashCandidatePairsTracked]]) re-scored by the SAME verify
+    * plan as [[prefixFilterPairs]] ([[verifyPairs]]: inter·den ≥
+    * num·union over distinct-gram sets), emitting the SAME output
+    * contract (doc_a < doc_b, inter, union_sz, jaccard — bit-identical
+    * values on every emitted pair, since both shapes count set
+    * identities under the same xxhash64 gram bijection). What differs
+    * is COVERAGE: only pairs that collide in ≥1 of the b bands appear,
+    * so recall on a true pair at similarity s is 1−(1−s^r)^b — the
+    * banding curve; precision stays 1. Defaults
     * (k=32 — the native minhash_sig ceiling — r=4 → b=8) give ~0.40
     * recall AT a 0.5 threshold and ≥0.95 at s ≥ 0.75; lower
     * `rowsPerBand` to raise recall at the cost of more candidates
@@ -651,31 +628,20 @@ object Dedup {
     val sets = docs.select(col(idCol).as("id"), col(textCol))
       .join(candIds, Seq("id"), "left_semi")
       .select(col("id"),
-        sort_array(shingleHashSet(col(textCol), shingleN)).as("tk"))
-    val out = Checkpoints.output(cands
-      .join(sets.select(col("id").as("doc_a"), col("tk").as("tk_a")), Seq("doc_a"))
-      .join(sets.select(col("id").as("doc_b"), col("tk").as("tk_b")), Seq("doc_b"))
-      .withColumn("sz_a", size(col("tk_a")))
-      .withColumn("sz_b", size(col("tk_b")))
-      .withColumn("inter",
-        graft.functions.SortedIntersect.sorted_intersect_count(col("tk_a"), col("tk_b")))
-      .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
-      .filter(col("inter") * thrDen >= col("union_sz") * thrNum)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        col("inter"), col("union_sz"),
-        graft.ops.CoreOps.roundPortable(
-          col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard")))
+        sort_array(shingleHashSet(col(textCol), shingleN)).as("stoks"))
+      .withColumn("sz", size(col("stoks")))
+    val out = Checkpoints.output(
+      verifyPairs(cands, sets, broadcastTokens = false, thrNum, thrDen))
     Checkpoints.release(candBlocks)
     out
   }
 
-  /** Candidate generation for [[prefixFilterPairs]], split out so the
-    * pruning power of each filter level is countable (Round9Spec's
-    * Zipf-fixture measurement). Returns (candidates, per-doc sorted
-    * token-rank arrays, the checkpointed per-doc prefix-token frame —
-    * the pair-space guard's input — and checkpoint blocks, which the
-    * caller releases after the last consumer).
+  /** Candidate generation for [[prefixFilterPairs]], split out so specs
+    * can count candidates (HeapsGrowthSpec's growth pin). Returns
+    * (candidates, the per-doc sorted gram-hash table `(id, sz, stoks)`,
+    * the checkpointed per-doc prefix-token frame — the pair-space
+    * guard's input — and checkpoint blocks, which the caller releases
+    * after the last consumer).
     *
     * Filter ladder, every level LOSSLESS for J ≥ thrNum/thrDen:
     *   1. length filter — min·den ≥ max·num;
@@ -684,33 +650,19 @@ object Dedup {
     *      common token follows it in both docs, so
     *      overlap ≤ 1 + min(szₐ−i, sz_b−j); required overlap is
     *      α = ⌈num·(szₐ+sz_b)/(num+den)⌉. Min-ranks per pair only
-    *      over-estimate the bound — never drop a true pair;
-    *   3. PPJoin+ SUFFIX filter (Xiao et al. TODS'11 §4.2, one level) —
-    *      all common tokens lie in the rank-windows a[ia..szₐ],
-    *      b[ib..sz_b] of the GLOBAL (df, th) token order; partitioning
-    *      both windows at a's middle token m bounds the overlap by
-    *      min(left sizes) + min(right sizes). The probe into b is one
-    *      O(log sz) binary search ([[graft.functions.SortedSearch]]),
-    *      paid per candidate PAIR — the verification intersect it
-    *      replaces walks both full arrays.
+    *      over-estimate the bound — never drop a true pair.
     *
-    * The global token order materializes as `tokid` = rank of (df, th)
-    * via [[graft.ops.CoreOps.globalRowNumber]] (range-partitioned — the
-    * vocabulary never sorts in one task), and each doc stores its tokens
-    * as the ASCENDING tokid array `stoks`, which triple-serves as prefix
-    * source, suffix-probe target and verification array.
+    * The global token order is (df, th) and serves directly as the
+    * per-document rank window's order, so the vocabulary never sorts
+    * globally; `tokid` is the gram hash itself.
     */
   private[graft] def prefixCandidates(docs: DataFrame, idCol: String, textCol: String,
-                                      thrNum: Int, thrDen: Int, shingleN: Int,
-                                      suffixFilter: Boolean,
-                                      suffixDepth: Int = 1)
+                                      thrNum: Int, thrDen: Int, shingleN: Int)
       : (DataFrame, DataFrame, DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
     require(thrNum > 0 && thrDen > 0 && thrNum <= thrDen,
       s"threshold must be a fraction in (0,1]: $thrNum/$thrDen")
-    require(suffixDepth == 1 || suffixDepth == 2,
-      s"suffixDepth must be 1 or 2, got $suffixDepth")
-    // base feeds dfreq, the rank window and (suffix off) verification —
-    // checkpoint once or the shingle+hash pipeline recomputes per consumer
+    // base feeds dfreq, the rank window and verification — checkpoint
+    // once or the shingle+hash pipeline recomputes per consumer
     val (base, baseBlocks) = Checkpoints.tracked(
       docs.select(col(idCol).as("id"),
           sort_array(shingleHashSet(col(textCol), shingleN)).as("ths"))
@@ -721,37 +673,14 @@ object Dedup {
     // tok holds DISTINCT (id, gram) pairs, so count == document frequency
     // (collisions merge gram identities — candidates only grow)
     val dfreq = tok.groupBy("th").agg(count(lit(1)).as("df"))
-    // The suffix filter needs a MATERIALIZED global token rank (tokid) so
-    // per-doc arrays binary-search consistently; without it the (df, th)
-    // window order serves directly and the vocabulary never globally
-    // sorts. The setup is the filter's price of admission — only pay it
-    // when candidate density warrants (see [[prefixFilterPairs]] doc).
-    val ranked =
-      if (suffixFilter) {
-        val vocab = graft.ops.CoreOps.globalRowNumber(dfreq, Seq("df", "th"),
-          rankCol = "tokid")
-        tok.join(vocab.select("th", "tokid"), Seq("th"))
-          .withColumn("rk",
-            row_number().over(Window.partitionBy("id").orderBy(asc("tokid"))))
-      } else
-        tok.join(dfreq, Seq("th"))
-          .withColumn("tokid", col("th"))
-          .withColumn("rk",
-            row_number().over(Window.partitionBy("id").orderBy(asc("df"), asc("th"))))
-    // stoks is read by the suffix probe AND both verification joins.
-    // With the filter on it is the tokid arrays (own checkpoint); off, it
-    // is just `base`'s gram hashes renamed — same blocks, no new
-    // materialization. Both shapes are sorted ascending (tokid arrays by
-    // array_sort, gram hashes at base build), the contract the native
-    // merge-intersection verification relies on.
-    val (stoks, stoksBlocks) =
-      if (suffixFilter)
-        Checkpoints.tracked(ranked
-          .groupBy(col("id"), col("sz"))
-          .agg(array_sort(collect_list(col("tokid"))).as("stoks")))
-      else
-        (base.select(col("id"), col("sz"), col("ths").as("stoks")),
-          Seq.empty[org.apache.spark.rdd.RDD[_]])
+    val ranked = tok.join(dfreq, Seq("th"))
+      .withColumn("tokid", col("th"))
+      .withColumn("rk",
+        row_number().over(Window.partitionBy("id").orderBy(asc("df"), asc("th"))))
+    // the verification table is `base`'s gram hashes renamed — same
+    // blocks, no new materialization, sorted ascending at base build (the
+    // contract the native merge-intersection verification relies on)
+    val stoks = base.select(col("id"), col("sz"), col("ths").as("stoks"))
     // prefix length = sz − ⌈num·sz/den⌉ + 1, all integer
     val (prefix, prefixBlocks) = Checkpoints.tracked(ranked
       .filter(col("rk") <= col("sz") - expr(s"($thrNum * sz + ${thrDen - 1}) DIV $thrDen") + 1)
@@ -774,7 +703,7 @@ object Dedup {
     // both generation prefixes), so the positional min-ranks stay exact.
     val idxPrefix = prefix.filter(col("rk") <=
       col("sz") - expr(s"(2 * $thrNum * sz + ${thrNum + thrDen - 1}) DIV ${thrNum + thrDen}") + 1)
-    val positional = idxPrefix.as("a").join(prefix.as("b"),
+    val cands = idxPrefix.as("a").join(prefix.as("b"),
         col("a.tokid") === col("b.tokid") &&
         (col("a.sz") < col("b.sz") ||
           (col("a.sz") === col("b.sz") && col("a.id") < col("b.id"))))
@@ -784,59 +713,8 @@ object Dedup {
         first(col("a.sz")).as("__sza"), first(col("b.sz")).as("__szb"))
       .filter(lit(1) + least(col("__sza") - col("__ia"), col("__szb") - col("__ib")) >=
         expr(s"($thrNum * (__sza + __szb) + ${thrNum + thrDen - 1}) DIV ${thrNum + thrDen}"))
-    val cands =
-      if (!suffixFilter) positional.select(col("doc_a"), col("doc_b"))
-      else {
-        val alpha = expr(s"($thrNum * (__sza + __szb) + ${thrNum + thrDen - 1}) DIV ${thrNum + thrDen}")
-        // pivot = a's middle window token; both windows split at its
-        // VALUE, so left parts share at most min(left sizes), right parts
-        // min(right sizes) — an upper bound on the true overlap. The
-        // per-doc arrays are sorted ascending with distinct values, so
-        // a's rank slices ARE its value intervals.
-        val pa = expr("(__ia + __sza) DIV 2")
-        val base2 = positional
-          .join(stoks.select(col("id").as("doc_a"), col("stoks").as("__sa")), Seq("doc_a"))
-          .join(stoks.select(col("id").as("doc_b"), col("stoks").as("__sb")), Seq("doc_b"))
-          .withColumn("__pa", pa)
-          .withColumn("__m", element_at(col("__sa"), col("__pa").cast("int")))
-          .withColumn("__lb", graft.functions.SortedSearch.sorted_count_less_from(
-            col("__sb"), col("__ib").cast("int"), col("__m")))
-        val filtered =
-          if (suffixDepth == 1)
-            base2.filter(
-              least(col("__pa") - col("__ia"), col("__lb")) +
-              least(col("__sza") - col("__pa") + 1,
-                (col("__szb") - col("__ib") + 1) - col("__lb")) >= alpha)
-          else {
-            // SECOND recursion level (Xiao et al. §4.2, maxdepth 2):
-            // re-split each half at ITS OWN middle pivot — the value
-            // partition refines to four intervals (−∞,m₁), [m₁,m),
-            // [m,m₂), [m₂,∞), and the overlap bound Σ min(part sizes)
-            // can only TIGHTEN (min(x+y, u+v) ≥ min(x,u) + min(y,v)),
-            // so depth 2 subsumes the level-1 filter and stays lossless
-            // by the same partition argument. Cost per pair: two more
-            // element_at pivots + two more O(log sz) binary searches —
-            // b's < m elements occupy positions [ib, ib+lb), so the
-            // right-half probe starts at ib+lb.
-            base2
-              .withColumn("__pa1", expr("(__ia + __pa) DIV 2"))
-              .withColumn("__pa2", expr("(__pa + __sza) DIV 2"))
-              .withColumn("__m1", element_at(col("__sa"), col("__pa1").cast("int")))
-              .withColumn("__m2", element_at(col("__sa"), col("__pa2").cast("int")))
-              .withColumn("__lb1", graft.functions.SortedSearch.sorted_count_less_from(
-                col("__sb"), col("__ib").cast("int"), col("__m1")))
-              .withColumn("__rb1", graft.functions.SortedSearch.sorted_count_less_from(
-                col("__sb"), (col("__ib") + col("__lb")).cast("int"), col("__m2")))
-              .filter(
-                least(col("__pa1") - col("__ia"), col("__lb1")) +
-                least(col("__pa") - col("__pa1"), col("__lb") - col("__lb1")) +
-                least(col("__pa2") - col("__pa"), col("__rb1")) +
-                least(col("__sza") - col("__pa2") + 1,
-                  (col("__szb") - col("__ib") + 1) - col("__lb") - col("__rb1")) >= alpha)
-          }
-        filtered.select(col("doc_a"), col("doc_b"))
-      }
-    (cands, stoks, prefix, baseBlocks ++ stoksBlocks ++ prefixBlocks)
+      .select(col("doc_a"), col("doc_b"))
+    (cands, stoks, prefix, baseBlocks ++ prefixBlocks)
   }
 
   /** Sorted-neighborhood (SNM) near-dup pairs — the third blocking
@@ -881,20 +759,11 @@ object Dedup {
       .select(col("a.id").as("doc_a"), col("c.id").as("doc_b"),
         col("a.sz").as("sz_a"), col("c.sz").as("sz_b"),
         col("a.ths").as("tk_a"), col("c.ths").as("tk_b"))
-    val out = Checkpoints.output(cands
-      // length filter first: J ≥ t needs min·den ≥ max·num — prunes
-      // mismatched-size neighbors before any array intersection
-      .filter(least(col("sz_a"), col("sz_b")) * thrDen >=
-              greatest(col("sz_a"), col("sz_b")) * thrNum)
-      .withColumn("inter",
-        graft.functions.SortedIntersect.sorted_intersect_count(col("tk_a"), col("tk_b")))
-      .withColumn("union_sz", col("sz_a") + col("sz_b") - col("inter"))
-      .filter(col("inter") * thrDen >= col("union_sz") * thrNum)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-        col("inter"), col("union_sz"),
-        graft.ops.CoreOps.roundPortable(
-          col("inter").cast("double") / col("union_sz").cast("double"), 6).as("jaccard")))
+    // length filter first: J ≥ t needs min·den ≥ max·num — prunes
+    // mismatched-size neighbors before any array intersection
+    val out = Checkpoints.output(verifiedJaccard(
+      cands.filter(least(col("sz_a"), col("sz_b")) * thrDen >=
+                   greatest(col("sz_a"), col("sz_b")) * thrNum), thrNum, thrDen))
     Checkpoints.release(wbBlocks)
     out
   }

@@ -15,8 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB oracle replays — but without materializing the 32-char hex
   * string and re-parsing it per row.
   *
-  * Unlike the deliberate-CodegenFallback natives (MinHashSig — heavy
-  * per-row loops where dispatch cost vanishes), this one is
+  * Unlike the CodegenFallback natives (MinHashSig — heavy per-row
+  * loops where dispatch cost vanishes, in operators that leave
+  * whole-stage codegen), this one is
   * FULLY CODEGEN'D: `doGenCode` emits a static call inside the
   * surrounding whole-stage projection, the per-row work is one digest,
   * and the digest object is thread-local (no per-row allocation).

@@ -36,10 +36,13 @@ import org.apache.spark.sql.GraftShim
   * and adds (Mersenne reduction). Bit-equality with the BigInteger
   * definition is property-pinned in TextDedupSpec.
   *
-  * CodegenFallback is deliberate: the per-row work (|shingles| digests +
-  * k·|shingles| long mixes) dwarfs codegen's per-row dispatch savings,
-  * and the fallback keeps the expression inside any surrounding
-  * whole-stage-codegen projection.
+  * CodegenFallback keeps the per-row work (|shingles| digests +
+  * k·|shingles| long mixes) in interpreted `eval`, where codegen's
+  * per-row dispatch savings are small beside it. The price is the
+  * operator, not the expression: Spark's `CollapseCodegenStages` takes
+  * any operator holding a CodegenFallback expression out of whole-stage
+  * codegen, so its Project or Filter runs unfused in a stage of its own
+  * (see [[SimHash64]], which generates a static call to avoid that).
   */
 case class MinHashSig(child: Expression, k: Int)
     extends UnaryExpression with CodegenFallback {
@@ -96,8 +99,9 @@ case class MinHashSig(child: Expression, k: Int)
   * distinct set cannot move a component (min over a multiset equals min
   * over its support); and a short doc's single whole-text window is
   * [[graft.dedup.Dedup.shingles]]'s short-doc convention. Pinned by
-  * TextDedupSpec against the composed form. Same CodegenFallback
-  * rationale as [[MinHashSig]]; empty token array → null (the oracle's
+  * TextDedupSpec against the composed form. CodegenFallback with the
+  * same trade as [[MinHashSig]], its operator included: it leaves
+  * whole-stage codegen. Empty token array → null (the oracle's
   * convention), though whitespace tokenization never produces one.
   */
 case class MinHashSigTokens(child: Expression, n: Int, k: Int)

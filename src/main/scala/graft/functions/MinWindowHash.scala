@@ -25,10 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * text (the engine portability contract already assumes BMP — DuckDB
   * enumerates by codepoint).
   *
-  * CodegenFallback is deliberate, same call as MinHashSig: the
-  * arithmetic loop dwarfs the dispatch cost. (A CodegenFallback
-  * expression does take its operator out of whole-stage codegen; see
-  * [[SimHash64]], which generates a static call for that reason.)
+  * CodegenFallback, the same trade as [[MinHashSig]]: the arithmetic
+  * loop dwarfs the dispatch cost, and the operator holding it leaves
+  * whole-stage codegen.
   */
 case class MinWindowHash(child: Expression, window: Int)
     extends UnaryExpression with CodegenFallback {

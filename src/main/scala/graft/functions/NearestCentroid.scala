@@ -25,8 +25,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * with centroid norms pre-folded driver-side in the same IEEE order.
   * SimilaritySpec pins equality against the join+aggregation path.
   *
-  * CodegenFallback (the MinHashSig rationale): per-row work is k·dim
-  * flops — dispatch cost vanishes. Null for a null vector/norm or an
+  * CodegenFallback (the [[MinHashSig]] trade): per-row work is k·dim
+  * flops, so dispatch cost vanishes, but the operator holding it leaves
+  * whole-stage codegen. Null for a null vector/norm or an
   * empty codebook (callers filter, mirroring the empty join result).
   */
 case class NearestCentroid(vec: Expression, nrm: Expression,

@@ -67,9 +67,8 @@ object ShapeChoice {
       // regime, where a caller would choose Dedup.lshVerifiedPairs.
       val docs = graft.io.Tables.table(spark, dir, "documents")
       val (_, stoks, prefix, blocks) = graft.dedup.Dedup.prefixCandidates(
-        docs, "doc_id", "text", 1, 2, shingleN = 3,
-        suffixFilter = false, suffixDepth = 1)
-      val vp = graft.dedup.Dedup.planVerify(stoks, prefix, None)
+        docs, "doc_id", "text", 1, 2, shingleN = 3)
+      val vp = graft.dedup.Dedup.planVerify(stoks, prefix)
       graft.dedup.Checkpoints.release(blocks)
       val warn = graft.dedup.Dedup.DefaultPairShuffleWarnBytes
       println(f"[shape:ssjoin] dir=$dir estPairs=${vp.estPairs}%.4g " +

@@ -28,7 +28,7 @@ class HeapsGrowthSpec extends SparkSpec {
   private def candidateCount(nDocs: Long): Long = {
     val docs = GenScale.heapsCorpus(spark, nDocs)
     val (cands, _, _, blocks) = Dedup.prefixCandidates(
-      docs, "doc_id", "text", 1, 2, 3, suffixFilter = false)
+      docs, "doc_id", "text", 1, 2, 3)
     val n = cands.count()
     Checkpoints.release(blocks)
     n

@@ -218,22 +218,20 @@ class Round14Spec extends SparkSpec {
     // (pairs, integer inter/union, the rounded jaccard) — the r14 sf4
     // grid found join-verify shuffling pairs × token-arrays (828s at
     // sf4); broadcast-verify ships 16-byte pairs against a broadcast
-    // token table
+    // token table. A zero budget steers the join shape; the auto gate
+    // takes the broadcast shape on this (tiny) corpus.
     val docs = graft.io.Tables.table(spark, sf, "documents")
-    val joinForm = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text",
-      1, 2, shingleN = 3, broadcastVerify = Some(false))
+    val joinForm = withConf(graft.dedup.Dedup.BroadcastVerifyBytesKey -> "0") {
+      graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
+    }
     val bcastForm = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text",
-      1, 2, shingleN = 3, broadcastVerify = Some(true))
+      1, 2, shingleN = 3)
     assert(joinForm.schema == bcastForm.schema,
       s"schemas diverge:\n${joinForm.schema}\nvs\n${bcastForm.schema}")
     assert(joinForm.exceptAll(bcastForm).isEmpty &&
            bcastForm.exceptAll(joinForm).isEmpty,
       "verify shapes diverge")
     assert(joinForm.count() > 0, "fixture must produce pairs")
-    // the auto gate takes the broadcast shape on this (tiny) corpus
-    val auto = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text",
-      1, 2, shingleN = 3)
-    assert(auto.exceptAll(joinForm).isEmpty && joinForm.exceptAll(auto).isEmpty)
 
     // the hinted shape's plan: the token table broadcasts ONCE (one
     // BroadcastExchange, the second join reads its reuse) and no shuffle
@@ -246,8 +244,14 @@ class Round14Spec extends SparkSpec {
       case q: QueryStageExec        => nodes(q.plan)
       case other => other +: other.children.flatMap(nodes)
     }
-    val (cands, stoks, _, blocks) = graft.dedup.Dedup.prefixCandidates(
-      docs, "doc_id", "text", 1, 2, 3, suffixFilter = false)
+    val (cands, stoks, prefix, blocks) = graft.dedup.Dedup.prefixCandidates(
+      docs, "doc_id", "text", 1, 2, 3)
+    assert(graft.dedup.Dedup.planVerify(stoks, prefix).takeBroadcast,
+      "the auto gate must pick the broadcast shape on the fixture")
+    withConf(graft.dedup.Dedup.BroadcastVerifyBytesKey -> "0") {
+      assert(!graft.dedup.Dedup.planVerify(stoks, prefix).takeBroadcast,
+        "a zero budget must pick the join shape")
+    }
     val hinted = graft.dedup.Dedup.verifyPairs(cands, stoks, broadcastTokens = true, 1, 2)
     try {
       hinted.collect() // finalizes this frame's own AdaptiveSparkPlan

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * guardedStats fall-through on ANALYZE'd skewed tables), (b) the
   * multi-column percentile dial q36 now rides, (c) the q129/q171 and
   * q137/q172 auto/forced pairs' shapes, (d) the prefixFilterPairs
-  * pair-space regime guard and broadcast-verify hardening, (e) the
+  * pair-space regime guard and broadcast-verify shape, (e) the
   * nearDupStream explicit-lateness contract, (f) the two SSJoin shapes a
   * caller chooses between: q142 is the exact join, and the LSH-verified
   * shape has precision 1 and recall per the banding curve.
@@ -180,7 +180,7 @@ class Round15Spec extends SparkSpec {
     }
   }
 
-  // ---- (d) pair-space regime guard + broadcast-verify hardening ------------
+  // ---- (d) pair-space regime guard + broadcast-verify shape ---------------
 
   test("pairShuffleBytes: broadcast ships bare pairs, join ships both arrays") {
     assert(Dedup.pairShuffleBytes(1e6, 50.0, broadcastShape = true) == 16e6)
@@ -197,17 +197,15 @@ class Round15Spec extends SparkSpec {
     // expected values: the earlier planVerify (a token-table aggregate
     // plus a per-tokid aggregate over the prefix) on the same fixtures
     val cases = Seq(
-      ("Round9 zipf 1/2", zipf, 1, 2, false, Dedup.VerifyPlan(true, true, 1718.0, 25.845833333333335, 27488.0)),
-      ("Round9 zipf 1/2 suffix", zipf, 1, 2, true, Dedup.VerifyPlan(true, true, 1718.0, 25.845833333333335, 27488.0)),
-      ("documents 1/2", docs, 1, 2, false, Dedup.VerifyPlan(true, true, 1943.0, 53.806, 31088.0)),
-      ("documents 1/2 suffix", docs, 1, 2, true, Dedup.VerifyPlan(true, true, 1943.0, 53.806, 31088.0)),
-      ("documents 1/1", docs, 1, 1, false, Dedup.VerifyPlan(true, true, 2.0, 53.806, 32.0)),
-      ("documents 4/5", docs, 4, 5, false, Dedup.VerifyPlan(true, true, 317.0, 53.806, 5072.0)),
-      ("empty", empty, 1, 2, false, Dedup.VerifyPlan(true, true, 0.0, 0.0, 0.0)))
-    for ((name, d, num, den, suffix, want) <- cases) {
+      ("Round9 zipf 1/2", zipf, 1, 2, Dedup.VerifyPlan(true, 1718.0, 25.845833333333335, 27488.0)),
+      ("documents 1/2", docs, 1, 2, Dedup.VerifyPlan(true, 1943.0, 53.806, 31088.0)),
+      ("documents 1/1", docs, 1, 1, Dedup.VerifyPlan(true, 2.0, 53.806, 32.0)),
+      ("documents 4/5", docs, 4, 5, Dedup.VerifyPlan(true, 317.0, 53.806, 5072.0)),
+      ("empty", empty, 1, 2, Dedup.VerifyPlan(true, 0.0, 0.0, 0.0)))
+    for ((name, d, num, den, want) <- cases) {
       val (_, stoks, prefix, blocks) =
-        Dedup.prefixCandidates(d, "doc_id", "text", num, den, 3, suffix)
-      try assert(Dedup.planVerify(stoks, prefix, None) == want, name)
+        Dedup.prefixCandidates(d, "doc_id", "text", num, den, 3)
+      try assert(Dedup.planVerify(stoks, prefix) == want, name)
       finally graft.dedup.Checkpoints.release(blocks)
     }
   }
@@ -234,21 +232,27 @@ class Round15Spec extends SparkSpec {
     }
   }
 
-  test("prefixFilterPairs: forcing broadcastVerify on a non-long id fails loud") {
-    import spark.implicits._
-    val docs = Seq((1, "a b c"), (2, "a b d")).toDF("doc_id", "text")
-    assert(docs.schema("doc_id").dataType ==
-      org.apache.spark.sql.types.IntegerType)
-    val e = intercept[IllegalArgumentException] {
-      Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 1,
-        broadcastVerify = Some(true))
-    }
-    assert(e.getMessage.contains("LongType"))
-    // the auto gate on the same input silently (and correctly) takes the
-    // join shape — non-long ids only reject the FORCED broadcast
-    val auto = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
-      shingleN = 1)
-    assert(auto.count() == 1)
+  test("prefixFilterPairs: string ids take the broadcast shape and return the long-id rows") {
+    val docs = graft.io.Tables.table(spark, sf, "documents")
+    val strDocs = docs.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+    // the broadcast shape is a hint on a plain join, so the budget alone
+    // decides it, whatever the id type
+    val (_, stoks, prefix, blocks) =
+      Dedup.prefixCandidates(strDocs, "doc_id", "text", 1, 2, 3)
+    try assert(Dedup.planVerify(stoks, prefix).takeBroadcast,
+      "string ids must take the broadcast shape on the fixture")
+    finally graft.dedup.Checkpoints.release(blocks)
+    val longRows = Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)
+    val strRows = Dedup.prefixFilterPairs(strDocs, "doc_id", "text", 1, 2, shingleN = 3)
+    assert(strRows.schema("doc_a").dataType == org.apache.spark.sql.types.StringType)
+    // string ids order lexicographically: re-orient each pair numerically
+    val a = col("doc_a").cast("long")
+    val b = col("doc_b").cast("long")
+    val asLong = strRows.select(least(a, b).as("doc_a"), greatest(a, b).as("doc_b"),
+      col("inter"), col("union_sz"), col("jaccard"))
+    assert(longRows.count() > 0, "fixture must produce pairs")
+    assert(asLong.exceptAll(longRows).isEmpty && longRows.exceptAll(asLong).isEmpty,
+      "string and long ids must verify the same pairs")
   }
 
   // ---- (f) the two SSJoin shapes ------------------------------------------
@@ -281,6 +285,35 @@ class Round15Spec extends SparkSpec {
       shingleN = 3, rowsPerBand = 1)
     assert(full.exceptAll(exact).isEmpty && exact.exceptAll(full).isEmpty,
       "r=1 banding must cover every true pair on the fixture")
+  }
+
+  test("lshVerifiedPairs and q156 (sortedNeighborPairs) return their frozen rows on the documents fixture") {
+    // frozen rows; on this fixture both shapes and the exact join find
+    // the same 28 pairs
+    val want = Seq(
+      (0L, 50L, 20, 21, 0.952381), (0L, 82L, 21, 22, 0.954545),
+      (5L, 450L, 40, 41, 0.97561), (8L, 12L, 74, 76, 0.973684),
+      (8L, 120L, 73, 74, 0.986486), (8L, 360L, 74, 75, 0.986667),
+      (12L, 120L, 73, 76, 0.960526), (12L, 360L, 75, 76, 0.986842),
+      (16L, 369L, 84, 85, 0.988235), (26L, 176L, 86, 87, 0.988506),
+      (33L, 436L, 8, 9, 0.888889), (45L, 487L, 27, 28, 0.964286),
+      (50L, 82L, 20, 22, 0.909091), (56L, 157L, 53, 54, 0.981481),
+      (77L, 459L, 77, 78, 0.987179), (89L, 114L, 13, 14, 0.928571),
+      (99L, 174L, 83, 84, 0.988095), (110L, 467L, 91, 92, 0.98913),
+      (119L, 425L, 34, 35, 0.971429), (120L, 360L, 73, 75, 0.973333),
+      (144L, 161L, 87, 88, 0.988636), (211L, 404L, 64, 65, 0.984615),
+      (229L, 263L, 22, 23, 0.956522), (260L, 391L, 88, 89, 0.988764),
+      (270L, 329L, 83, 84, 0.988095), (328L, 428L, 38, 39, 0.974359),
+      (349L, 411L, 51, 52, 0.980769), (474L, 498L, 93, 94, 0.989362))
+    val schema = "struct<doc_a:bigint,doc_b:bigint,inter:int,union_sz:int,jaccard:double>"
+    def rows(df: DataFrame) = {
+      assert(df.schema.simpleString == schema)
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3),
+        r.getDouble(4))).toSeq.sorted
+    }
+    val docs = graft.io.Tables.table(spark, sf, "documents")
+    assert(rows(Dedup.lshVerifiedPairs(docs, "doc_id", "text", 1, 2, shingleN = 3)) == want)
+    assert(rows(QueryCatalog.sortedNeighborPairsQuery(spark, sf)) == want)
   }
 
   // ---- (e) nearDupStream explicit-lateness contract ------------------------

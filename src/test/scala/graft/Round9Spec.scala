@@ -93,56 +93,6 @@ class Round9Spec extends SparkSpec {
     assert(out == Seq(1, 9, 1, 9, 1, 9, 1, 9))
   }
 
-  test("PPJoin+ suffix filter prunes candidates on a Zipf corpus with recall unchanged") {
-    import spark.implicits._
-    val docs = Round9Spec.zipfCorpus(spark)
-
-    val (candsOff, _, _, blocksOff) = graft.dedup.Dedup.prefixCandidates(
-      docs, "doc_id", "text", 1, 2, shingleN = 3, suffixFilter = false)
-    val nOff = candsOff.count()
-    val (candsOn, _, _, blocksOn) = graft.dedup.Dedup.prefixCandidates(
-      docs, "doc_id", "text", 1, 2, shingleN = 3, suffixFilter = true)
-    val nOn = candsOn.count()
-    assert(nOn < nOff,
-      s"suffix filter must prune candidates: $nOn !< $nOff")
-
-    val pairsOff = graft.dedup.Dedup.prefixFilterPairs(
-        docs, "doc_id", "text", 1, 2, shingleN = 3, suffixFilter = false)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val pairsOn = graft.dedup.Dedup.prefixFilterPairs(
-        docs, "doc_id", "text", 1, 2, shingleN = 3, suffixFilter = true)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(pairsOn == pairsOff,
-      s"suffix filter is an upper-bound filter — recall must be unchanged " +
-      s"(on=${pairsOn.size} off=${pairsOff.size})")
-    graft.dedup.Checkpoints.release(blocksOff)
-    graft.dedup.Checkpoints.release(blocksOn)
-    info(s"candidates without suffix filter: $nOff, with: $nOn " +
-      f"(${100.0 * (nOff - nOn) / math.max(nOff, 1)}%.1f%% pruned), true pairs: ${pairsOn.size}")
-  }
-
-  test("suffix filter is lossless across random corpora (three seeds, both shingle widths)") {
-    import spark.implicits._
-    for (seed <- Seq(3, 19, 41); n <- Seq(1, 3)) {
-      val rng = new scala.util.Random(seed)
-      val docs = (0 until 30).flatMap { b =>
-        val base = (1 to 20).map(_ => s"t${rng.nextInt(25)}").toVector
-        (0 until 3).map { v =>
-          val w = (0 until v * 3).foldLeft(base)((acc, _) =>
-            acc.updated(rng.nextInt(acc.size), s"t${rng.nextInt(25)}"))
-          ((b * 3 + v + 1).toLong, w.mkString(" "))
-        }
-      }.toDF("doc_id", "text")
-      val off = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
-          shingleN = n, suffixFilter = false)
-        .select("doc_a", "doc_b", "jaccard").collect().map(_.toSeq).toSet
-      val on = graft.dedup.Dedup.prefixFilterPairs(docs, "doc_id", "text", 1, 2,
-          shingleN = n, suffixFilter = true)
-        .select("doc_a", "doc_b", "jaccard").collect().map(_.toSeq).toSet
-      assert(on == off, s"seed=$seed shingleN=$n: suffix filter changed the output")
-    }
-  }
-
   test("PQ results are identical with a prebuilt index and with inline build") {
     val e = graft.io.Tables.table(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 5)
@@ -201,12 +151,12 @@ class Round9Spec extends SparkSpec {
 
 object Round9Spec {
 
-  /** The suffix-filter fixture: 60 near-dup families of 4 documents
+  /** A dense-candidate fixture: 60 near-dup families of 4 documents
     * (0-6 word edits each) over a seeded 60-word Zipf vocabulary. */
   def zipfCorpus(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     // power-law vocabulary: dense 3-gram collisions on the head words make
-    // prefix candidates plentiful — the regime the suffix filter exists for
+    // prefix candidates plentiful relative to true pairs
     val rng = new scala.util.Random(11)
     val vocabSize = 60
     def zipfWord(): String = {

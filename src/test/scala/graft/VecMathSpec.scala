@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{SortedSearch, VecMath}
+import graft.functions.VecMath
 
 /** Direct contracts for the round-9 native expressions: the codegen'd
   * loops must be bit-identical to the interpreted HOF folds they
@@ -58,24 +58,6 @@ class VecMathSpec extends SparkSpec {
     assert(out(1L) == Some(0.0))
     assert(out(2L) == Some(1.0 * 3.0 + 2.0 * 4.0))
     assert(out(3L) == None, "null input propagates null")
-  }
-
-  test("sorted_count_less_from: binary search equals the linear definition") {
-    val rng = new scala.util.Random(17)
-    val rows = (1 to 200).map { i =>
-      val arr = Array.fill(1 + rng.nextInt(40))(rng.nextLong() % 1000).sorted
-      val from = 1 + rng.nextInt(arr.length + 2)   // may exceed the array
-      val v = rng.nextLong() % 1000
-      (i.toLong, arr, from, v)
-    }
-    val out = rows.toDF("id", "arr", "from", "v")
-      .select(col("id"), SortedSearch.sorted_count_less_from(
-        col("arr"), col("from"), col("v")).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    rows.foreach { case (id, arr, from, v) =>
-      val expect = arr.drop(math.min(from - 1, arr.length)).count(_ < v)
-      assert(out(id) == expect, s"id=$id arr=${arr.toSeq} from=$from v=$v")
-    }
   }
 
   test("sorted_intersect_count equals size(array_intersect) on sorted distinct arrays") {
