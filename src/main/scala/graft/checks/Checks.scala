@@ -14,6 +14,12 @@ import org.apache.spark.sql.types.DataType
   * (one job, one scan over the table — at 100 TB you cannot afford one
   * scan per check, which is what Soda does with one SQL query per check).
   * Schema checks are metadata-only and free.
+  *
+  * A result's `metric` is a Double: the violation count for C1-C5 and C7,
+  * the column's true minimum for C6 (a minimum price of 2.5 reads 2.5).
+  * Over no rows, a count check reads 0 and passes, while [[MinAtLeast]]
+  * has no minimum: it reads NaN and FAILS — a gate over an empty table
+  * does not pass on a vacuous bound.
   */
 sealed trait Check { def name: String }
 
@@ -59,7 +65,7 @@ final case class NoFailedRows(label: String, predicate: Column) extends Check {
   val name = s"failed_rows[$label]"
 }
 
-final case class CheckResult(check: String, metric: Long, passed: Boolean)
+final case class CheckResult(check: String, metric: Double, passed: Boolean)
 
 final case class CheckFailedException(failures: Seq[CheckResult])
     extends RuntimeException(
@@ -72,11 +78,11 @@ object CheckSuite {
       case c @ RequiredColumns(cols) =>
         val present = df.schema.fieldNames.toSet
         val missing = cols.count(!present.contains(_))
-        CheckResult(c.name, missing.toLong, missing == 0)
+        CheckResult(c.name, missing.toDouble, missing == 0)
       case c @ ColumnTypes(expected) =>
         val actual = df.schema.fields.map(f => f.name -> f.dataType).toMap
         val wrong  = expected.count { case (n, t) => !actual.get(n).contains(t) }
-        CheckResult(c.name, wrong.toLong, wrong == 0)
+        CheckResult(c.name, wrong.toDouble, wrong == 0)
     }
 
   /** Each metric check → one named aggregate Column (`m0..mN`), plus the
@@ -104,25 +110,23 @@ object CheckSuite {
         c -> sum(when(col(colName).isNull, 1L).otherwise(0L))
       case c @ InRange(colName, lo, hi) =>
         c -> sum(when(col(colName) < lo || col(colName) > hi, 1L).otherwise(0L))
-      case c: MinAtLeast =>
-        c -> lit(0L) // real aggregate substituted below (needs raw min)
+      case c @ MinAtLeast(colName, _) =>
+        c -> min(col(colName)).cast("double") // the raw min, not a violation count
       case c @ NoFailedRows(_, pred) =>
         c -> sum(when(pred, 1L).otherwise(0L))
     }
-    // MinAtLeast needs the raw min, not a violation count — handled apart
-    // but still inside the same single aggregation.
     val aggExprs = metricChecks.zipWithIndex.map {
-      case ((MinAtLeast(colName, _), _), i) => min(col(colName)).cast("double").as(s"m$i")
-      case ((_, expr), i)                   => coalesce(expr.cast("long"), lit(0L)).as(s"m$i")
+      case ((_: MinAtLeast, expr), i) => expr.as(s"m$i")
+      case ((_, expr), i)             => coalesce(expr.cast("long"), lit(0L)).as(s"m$i")
     }
     val decode = (row: org.apache.spark.sql.Row) =>
       metricChecks.zipWithIndex.map {
         case ((c @ MinAtLeast(_, bound), _), i) =>
           val v = if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
-          CheckResult(c.name, v.toLong, !v.isNaN && v >= bound)
+          CheckResult(c.name, v, !v.isNaN && v >= bound)
         case ((c, _), i) =>
           val v = row.getLong(i)
-          CheckResult(c.name, v, v == 0L)
+          CheckResult(c.name, v.toDouble, v == 0L)
       }
     (aggExprs, decode)
   }

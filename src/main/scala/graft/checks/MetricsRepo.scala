@@ -34,7 +34,7 @@ object MetricsRepo {
       .write.mode("append").parquet(path)
   }
 
-  /** The full metric log: (run_seq, run_id, check, metric, passed). */
+  /** The full metric log: (run_seq, run_id, check, metric: double, passed). */
   def load(spark: SparkSession, path: String): DataFrame =
     graft.io.Tables.parquet(spark, path)
 
@@ -146,8 +146,8 @@ object MetricsRepo {
       .withColumn("prev_metric", lag(col("metric"), 1).over(w))
       .withColumn("is_drift",
         col("prev_metric").isNotNull &&
-          abs(col("metric") - col("prev_metric")).cast("double") >
-            greatest(col("prev_metric").cast("double"), lit(1.0)) * lit(tolerance))
+          abs(col("metric") - col("prev_metric")) >
+            greatest(col("prev_metric"), lit(1.0)) * lit(tolerance))
       .select(col("run_seq"), col("run_id"), col("check"), col("metric"),
         col("prev_metric"), col("is_drift"))
   }

@@ -18,7 +18,8 @@ import graft.ops.CoreOps._
   *   dim_product   include/dbt/models/transform/dim_product.sql:1-8
   *   dim_invoice   include/dbt/models/transform/dim_invoice.sql:1-16
   *   fct           include/dbt/models/transform/fct_invoice_line_value.sql:1-22
-  *   reports       include/dbt/models/report/report_*.sql
+  *   reports       include/dbt/models/report/report_*.sql (year:
+  *                 graft.report.Reports.yearInvoicesFrom)
   */
 object Retail {
 
@@ -172,14 +173,4 @@ object Retail {
       .agg(sum(col("quantity")).as("total_quantity_sold"))
       .orderBy(desc("total_quantity_sold"), asc("product_key"))
       .limit(10)
-
-  /** report_year_invoices.sql — per (year, month) exact invoice counts (A5)
-    * + revenue, ordered (A8). */
-  def reportYearInvoices(fct: DataFrame, dimDt: DataFrame): DataFrame =
-    fct
-      .join(broadcast(dimDt.select("date_key", "year", "month")), Seq("date_key"))
-      .groupBy("year", "month")
-      .agg(countDistinct(col("invoice_key")).as("num_invoices"),
-           sumMoney(col("total_price")).as("total_revenue"))
-      .orderBy(asc("year"), asc("month"))
 }

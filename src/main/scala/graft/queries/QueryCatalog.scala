@@ -1184,15 +1184,23 @@ object QueryCatalog {
       expr(s"approx_percentile(l_quantity, 0.5, $acc)").as("a50"),
       expr(s"approx_percentile(l_quantity, 0.9, $acc)").as("a90"),
       expr(s"approx_percentile(l_extendedprice, 0.99, $acc)").as("a99"))
+    rankErrorContract(li, ap, _ / acc)
+  }
+
+  /** The rank-error contract q39 and q69 return (see [[approxPercentiles]]):
+    * `sketches` holds one (a50, a90, a99) row per return flag, and `slack`
+    * maps a flag's row count (as double) to its rank slack. */
+  private def rankErrorContract(li: DataFrame, sketches: DataFrame,
+                                slack: Column => Column): DataFrame = {
     def okExpr(value: Column, approx: Column, p: Double): Column = {
       val n   = count(lit(1))
       val lo  = sum(when(value < approx, 1L).otherwise(0L))
       val hi  = sum(when(value <= approx, 1L).otherwise(0L))
-      val eps = n.cast("double") / acc
+      val eps = slack(n.cast("double"))
       val tgt = n.cast("double") * p
       (lo.cast("double") + 1 <= tgt + eps + 1) && (hi.cast("double") >= tgt - eps - 1)
     }
-    li.join(broadcast(ap), Seq("l_returnflag"))
+    li.join(broadcast(sketches), Seq("l_returnflag"))
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n_rows"),
@@ -1740,22 +1748,7 @@ object QueryCatalog {
         element_at(col("tq"), 1).as("a50"),
         element_at(col("tq"), 2).as("a90"),
         element_at(col("tp"), 1).as("a99"))
-    def okExpr(value: Column, approx: Column, p: Double): Column = {
-      val n   = count(lit(1))
-      val lo  = sum(when(value < approx, 1L).otherwise(0L))
-      val hi  = sum(when(value <= approx, 1L).otherwise(0L))
-      val eps = n.cast("double") * lit(6.0 / comp)
-      val tgt = n.cast("double") * p
-      (lo.cast("double") + 1 <= tgt + eps + 1) && (hi.cast("double") >= tgt - eps - 1)
-    }
-    li.join(broadcast(td), Seq("l_returnflag"))
-      .groupBy("l_returnflag")
-      .agg(
-        count(lit(1)).as("n_rows"),
-        okExpr(col("l_quantity"), col("a50"), 0.5).as("p50_ok"),
-        okExpr(col("l_quantity"), col("a90"), 0.9).as("p90_ok"),
-        okExpr(col("l_extendedprice"), col("a99"), 0.99).as("p99_ok"))
-      .orderBy("l_returnflag")
+    rankErrorContract(li, td, _ * lit(6.0 / comp))
   }
 
   /** Per-document OOV rate (q70): fraction of tokens outside the top-K
@@ -4242,79 +4235,42 @@ object QueryCatalog {
   // ---- checks engine as a query ------------------------------------------
 
   /** C3-C7 as one result table (check_name, metric, passed) — the Soda-gate
-    * analog over the star schema, SQL-mirrored in the oracle.
+    * analog over the star schema, SQL-mirrored in the oracle. Six
+    * `(table, checks)` suites on [[CheckSuite.evaluateAll]]: one
+    * aggregation pass per gated table, the six jobs concurrent. Each
+    * `Check` is paired with its report name; a gate's output is ten
+    * scalars, so the report is assembled on the driver in suite order.
     */
   def checksReport(s: SparkSession, dir: String): DataFrame = {
+    import graft.checks._
+    import org.apache.spark.sql.types._
     val star = Star.build(s, dir)
-    // One aggregation pass per gated table (the CheckSuite design, §2.6):
-    // each table's checks compute in a single agg row, exploded into
-    // (check_name, metric, passed) rows. Both fact-level checks derive
-    // from ONE pass over the fact (per-group negative counts + revenue
-    // sums, then re-aggregated) — 5 scans total for 10 checks, vs 10
-    // scans in the one-query-per-check (Soda) shape. The five table
-    // gates then EVALUATE CONCURRENTLY (the CheckSuite.evaluateAll
-    // shape): as a lazy 5-branch union, each branch's codegen compile
-    // and job submission serialized on the driver thread (~1.5s of
-    // fixed overhead for ~10 scalar metrics — the r10 verdict's q23
-    // item); one collect job per gated table on a bounded pool overlaps
-    // them, and on a cluster overlaps the scans too. A gate's output IS
-    // ten scalars, so assembling the report locally is the operator's
-    // honest shape — the values are the same branch plans' results,
-    // bit-identical, row order = the former union order.
-    def dup(keyCol: String): Column =
-      (count(col(keyCol)) - count_distinct(col(keyCol))).cast("double")
-    def missing(keyCol: String): Column =
-      coalesce(sum(when(col(keyCol).isNull, 1L).otherwise(0L)), lit(0L)).cast("double")
-    def checkRow(name: String, metric: Column, passed: Column): Column =
-      struct(lit(name).as("check_name"), metric.as("metric"), passed.as("passed"))
-    def explodeChecks(agg: DataFrame, rows: Column*): DataFrame =
-      agg.select(explode(array(rows: _*)).as("c")).select(col("c.*"))
-
-    val dimcChecks = explodeChecks(
-      star.dimCustomer.agg(dup("customer_key").as("m_dup"), missing("customer_key").as("m_miss")),
-      checkRow("dup_customer_key", col("m_dup"), col("m_dup") === 0.0),
-      checkRow("missing_customer_key", col("m_miss"), col("m_miss") === 0.0))
-
-    val dimdChecks = explodeChecks(
-      star.dimDatetime.agg(
-        dup("date_key").as("m_dup"),
-        coalesce(sum(when(col("weekday") < 1 || col("weekday") > 7, 1L).otherwise(0L)), lit(0L))
-          .cast("double").as("m_inv")),
-      checkRow("dup_date_key", col("m_dup"), col("m_dup") === 0.0),
-      checkRow("invalid_weekday", col("m_inv"), col("m_inv") === 0.0))
-
-    val dimpChecks = explodeChecks(
-      star.dimProduct.agg(dup("product_key").as("m_dup"), min(col("price")).cast("double").as("m_min")),
-      checkRow("dup_product_key", col("m_dup"), col("m_dup") === 0.0),
-      checkRow("min_price", col("m_min"), col("m_min") > 0.0))
-
-    val dimiChecks = explodeChecks(
-      star.dimInvoice.agg(dup("invoice_key").as("m_dup"), missing("invoice_key").as("m_miss")),
-      checkRow("dup_invoice_key", col("m_dup"), col("m_dup") === 0.0),
-      checkRow("missing_invoice_key", col("m_miss"), col("m_miss") === 0.0))
-
-    // single fact pass: per-(year,month) revenue sums + negative-row counts,
-    // re-aggregated to the two fact-level metrics
-    val grouped = star.fct
-      .join(star.dimDatetime.select("date_key", "year", "month"), Seq("date_key"))
-      .groupBy("year", "month")
-      .agg(graft.ops.CoreOps.sumMoney(col("total_price")).as("total_revenue"),
-           coalesce(sum(when(col("total_price") < 0, 1L).otherwise(0L)), lit(0L)).as("neg_count"))
-    val fctChecks = explodeChecks(
-      grouped.agg(sum(col("neg_count")).cast("double").as("m_neg"),
-                  min(col("total_revenue")).cast("double").as("m_minrev")),
-      checkRow("fct_negative_total_price", col("m_neg"), col("m_neg") === 0.0),
-      checkRow("report_year_min_revenue", col("m_minrev"), col("m_minrev") >= 0.0))
-
-    val branches = Seq(dimcChecks, dimdChecks, dimpChecks, dimiChecks, fctChecks)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.length)
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: Seq[java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]]] =
-        branches.map(b => (() => b.collect().toSeq):
-          java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]])
-      val rows = pool.invokeAll(tasks.asJava).asScala.toSeq.flatMap(_.get())
-      s.createDataFrame(rows.asJava, branches.head.schema)
-    } finally pool.shutdown()
+    val suites: Seq[(DataFrame, Seq[(String, Check)])] = Seq(
+      star.dimCustomer -> Seq(
+        "dup_customer_key" -> NoDuplicates("customer_key"),
+        "missing_customer_key" -> NoMissing("customer_key")),
+      star.dimDatetime -> Seq(
+        "dup_date_key" -> NoDuplicates("date_key"),
+        "invalid_weekday" -> InRange("weekday", 1, 7)),
+      // for a double, >= the least positive double is exactly > 0
+      star.dimProduct -> Seq(
+        "dup_product_key" -> NoDuplicates("product_key"),
+        "min_price" -> MinAtLeast("price", Double.MinPositiveValue)),
+      star.dimInvoice -> Seq(
+        "dup_invoice_key" -> NoDuplicates("invoice_key"),
+        "missing_invoice_key" -> NoMissing("invoice_key")),
+      star.fct -> Seq(
+        "fct_negative_total_price" -> NoFailedRows("total_price < 0", col("total_price") < 0)),
+      Reports.yearInvoicesFrom(star.fct, star.dimDatetime) -> Seq(
+        "report_year_min_revenue" -> MinAtLeast("total_revenue", 0.0)))
+    val results = CheckSuite.evaluateAll(suites.map { case (df, cs) => df -> cs.map(_._2) })
+    val rows = suites.flatMap(_._2.map(_._1)).zip(results.flatten).map {
+      case (name, r) => org.apache.spark.sql.Row(name, r.metric, r.passed)
+    }
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("check_name", StringType, nullable = false),
+      StructField("metric", DoubleType, nullable = false),
+      StructField("passed", BooleanType, nullable = false))))
   }
 }

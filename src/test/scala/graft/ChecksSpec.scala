@@ -44,6 +44,12 @@ class ChecksSpec extends SparkSpec {
   test("C6 MinAtLeast: aggregate bound") {
     assert(!CheckSuite.evaluate(df, Seq(MinAtLeast("price", 0))).head.passed)
     assert(CheckSuite.evaluate(df.filter($"price" > 0), Seq(MinAtLeast("price", 0))).head.passed)
+    // the metric is the true minimum, not a truncated one
+    val frac = CheckSuite.evaluate(Seq(2.5, 4.0).toDF("price"), Seq(MinAtLeast("price", 0))).head
+    assert(frac.passed && frac.metric == 2.5, s"min metric ${frac.metric}")
+    // no rows, no minimum: the gate fails rather than pass vacuously
+    val empty = CheckSuite.evaluate(df.filter($"price" > 100), Seq(MinAtLeast("price", 0))).head
+    assert(!empty.passed && empty.metric.isNaN)
   }
 
   test("C7 NoFailedRows: predicate rows fail the check") {
@@ -97,6 +103,23 @@ class ChecksSpec extends SparkSpec {
     intercept[IllegalStateException] {
       CheckSuite.observedResults(obs, handle, Seq(NoMissing("name")))
     }
+  }
+
+  test("q23 gate report: ten rows from CheckSuite suites, order and schema pinned") {
+    val report = graft.queries.QueryCatalog.checksReport(spark, sf)
+    assert(report.schema == StructType(Seq(
+      StructField("check_name", StringType, nullable = false),
+      StructField("metric", DoubleType, nullable = false),
+      StructField("passed", BooleanType, nullable = false))))
+    val rows = report.collect().map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2))).toSeq
+    // the rows q23 returned on testdata before it ran on CheckSuite
+    assert(rows == Seq(
+      ("dup_customer_key", 0.0, true), ("missing_customer_key", 0.0, true),
+      ("dup_date_key", 0.0, true), ("invalid_weekday", 0.0, true),
+      ("dup_product_key", 0.0, true), ("min_price", 900.0, true),
+      ("dup_invoice_key", 0.0, true), ("missing_invoice_key", 0.0, true),
+      ("fct_negative_total_price", 0.0, true),
+      ("report_year_min_revenue", 244175.0584, true)))
   }
 
   test("reference Soda gate port: star-schema checks all pass on testdata") {

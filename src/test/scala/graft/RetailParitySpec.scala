@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.Retail
+import graft.report.Reports
 import graft.checks._
 
 /** Reference-fidelity spec: replay the reference pipeline on its OWN schema
@@ -101,7 +102,7 @@ class RetailParitySpec extends SparkSpec {
   test("Soda gate 3: report checks (report/*.yml, 3 files)") {
     val rc = Retail.reportCustomerInvoices(fct, dimInv, dimCust)
     val rp = Retail.reportProductInvoices(fct, dimProd)
-    val ry = Retail.reportYearInvoices(fct, dimDt)
+    val ry = Reports.yearInvoicesFrom(fct, dimDt)
     CheckSuite.run(rc, Seq(NoMissing("country"), MinAtLeast("total_invoices", 1)))
     CheckSuite.run(rp, Seq(NoMissing("stock_code"), MinAtLeast("total_quantity_sold", 1)))
     CheckSuite.run(ry, Seq(MinAtLeast("num_invoices", 0)))
@@ -143,7 +144,7 @@ class RetailParitySpec extends SparkSpec {
     // UK fct lines: 536365×2 + 536368×1 (dup collapsed in dims but fct keeps
     // both physical lines? No — fct is built from raw lines, dup row = 2 lines)
     assert(uk.getLong(2) >= 3, s"UK line count ${uk.getLong(2)}")
-    val ry = Retail.reportYearInvoices(fct, dimDt).collect()
+    val ry = Reports.yearInvoicesFrom(fct, dimDt).collect()
     assert(ry.forall(r => r.getLong(2) <= fct.count()))
   }
 }

@@ -169,14 +169,14 @@ class Round8Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("metrics_repo").toString
     import graft.checks.{CheckResult, MetricsRepo}
     MetricsRepo.append(spark, dir, 1L, "build-1",
-      Seq(CheckResult("dup_rows", 0L, passed = true), CheckResult("n_rows", 1000L, passed = true)))
+      Seq(CheckResult("dup_rows", 0.0, passed = true), CheckResult("n_rows", 1000.0, passed = true)))
     MetricsRepo.append(spark, dir, 2L, "build-2",
-      Seq(CheckResult("dup_rows", 0L, passed = true), CheckResult("n_rows", 1100L, passed = true)))
+      Seq(CheckResult("dup_rows", 0.0, passed = true), CheckResult("n_rows", 1100.0, passed = true)))
     MetricsRepo.append(spark, dir, 3L, "build-3",
-      Seq(CheckResult("dup_rows", 40L, passed = false), CheckResult("n_rows", 1150L, passed = true)))
+      Seq(CheckResult("dup_rows", 40.0, passed = false), CheckResult("n_rows", 1150.0, passed = true)))
     val drift = MetricsRepo.drift(spark, dir, tolerance = 0.5)
       .select("run_seq", "check", "metric", "prev_metric", "is_drift")
-      .as[(Long, String, Long, Option[Long], Boolean)].collect()
+      .as[(Long, String, Double, Option[Double], Boolean)].collect()
     assert(drift.length == 6)
     // first observations: no predecessor, never flagged
     assert(drift.filter(_._1 == 1L).forall(r => r._4.isEmpty && !r._5))
@@ -186,8 +186,8 @@ class Round8Spec extends SparkSpec {
     // n_rows 1000 → 1100 (10%) and 1100 → 1150 (4.5%): inside 50% tolerance
     assert(drift.filter(_._2 == "n_rows").forall(!_._5))
     // zero-metric floor: a 0 → 1 wobble within tolerance*1 is not drift
-    MetricsRepo.append(spark, dir + "_w", 1L, "a", Seq(CheckResult("wobble", 0L, passed = true)))
-    MetricsRepo.append(spark, dir + "_w", 2L, "b", Seq(CheckResult("wobble", 0L, passed = true)))
+    MetricsRepo.append(spark, dir + "_w", 1L, "a", Seq(CheckResult("wobble", 0.0, passed = true)))
+    MetricsRepo.append(spark, dir + "_w", 2L, "b", Seq(CheckResult("wobble", 0.0, passed = true)))
     val w = MetricsRepo.drift(spark, dir + "_w", tolerance = 1.0)
       .filter(col("run_seq") === 2L).select("is_drift").as[Boolean].collect()
     assert(w.sameElements(Array(false)))
@@ -199,10 +199,10 @@ class Round8Spec extends SparkSpec {
     // 35 runs of 2 checks; dup_rows jumps at run 34 (inside the window)
     // and at run 7 (inside the coarsened history)
     (1L to 35L).foreach { seq =>
-      val dup = if (seq == 34L || seq == 7L) 50L else 0L
+      val dup = if (seq == 34L || seq == 7L) 50.0 else 0.0
       MetricsRepo.append(spark, dir, seq, s"build-$seq",
-        Seq(CheckResult("dup_rows", dup, passed = dup == 0L),
-            CheckResult("n_rows", 1000L + seq, passed = true)))
+        Seq(CheckResult("dup_rows", dup, passed = dup == 0.0),
+            CheckResult("n_rows", 1000.0 + seq, passed = true)))
     }
     MetricsRepo.compact(spark, dir, keepRuns = 10, coarsenEvery = 8L)
     val kept = MetricsRepo.load(spark, dir)

@@ -390,11 +390,11 @@ class StreamingSpec extends SparkSpec {
         sinceBatch = last) == last)
       val log = MetricsRepo.load(spark, repo)
         .select("run_seq", "check", "metric")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
       // batch 0: one null event_type, no negatives; batch 1: two negatives
-      assert(log.contains((0L, checks.head.name, 1L)))
-      assert(log.contains((0L, checks(1).name, 0L)))
-      assert(log.contains((1L, checks(1).name, 2L)))
+      assert(log.contains((0L, checks.head.name, 1.0)))
+      assert(log.contains((0L, checks(1).name, 0.0)))
+      assert(log.contains((1L, checks(1).name, 2.0)))
       // the drift diff runs unchanged over the streaming log: neg_value
       // 0 → 2 is a flagged jump
       val d = MetricsRepo.drift(spark, repo, tolerance = 0.5)
