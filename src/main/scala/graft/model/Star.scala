@@ -32,8 +32,10 @@ object Star {
                               dimProduct: DataFrame, dimInvoice: DataFrame,
                               fct: DataFrame)
 
-  /** The persisted star per (session, dir); declared with its consumers
-    * in `QueryCatalog.sessionCaches`, whose release unpersists it. */
+  /** The persisted star per (session, dir). Each query that reads it
+    * names it in its declaration (`OracleCatalog.declarations`);
+    * `QueryCatalog.sessionCaches` derives its release, which unpersists
+    * it, from those. */
   private[graft] val cache = graft.util.SessionScoped.cache[StarSchema]("star",
     s => Seq(s.dimCustomer, s.dimDatetime, s.dimProduct, s.dimInvoice, s.fct)
       .foreach(_.unpersist(blocking = true)))

@@ -207,9 +207,9 @@ object ShapeDispatch {
     * another input's stats — the blast radius is a wrong plan SHAPE,
     * never a wrong value (the dual-shape contract), the same trust
     * level the dials already extend to catalog averages. Released with
-    * the other session caches (`QueryCatalog.sessionCaches`): its keys
-    * are plans, not directories, so the release drops the session's
-    * whole memo. */
+    * the other session caches (`QueryCatalog.sessionCaches`, after the
+    * last query whose declaration names it): its keys are plans, not
+    * directories, so the release drops the session's whole memo. */
   private[graft] val statsCache =
     graft.util.SessionScoped.cache[GroupStats]("shapeStats", _ => ())
 

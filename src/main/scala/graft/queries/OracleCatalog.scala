@@ -1,10 +1,30 @@
 package graft.queries
 
-/** DuckDB oracle SQL, one entry per SQL-expressible query in
-  * [[QueryCatalog]]. Each statement mirrors the Spark expression tree
-  * exactly (same operation order, same literals-as-doubles, same explicit
-  * timestamp formatting, same tie-breaks) so value hashes match
-  * digit-for-digit — see the portability contract in QueryCatalog's doc.
+import graft.Harness
+import graft.model.Star
+import graft.ops.ShapeDispatch
+import graft.report.Reports
+import graft.util.SessionScoped
+import graft.queries.{QueryCatalog => Q}
+
+/** One driver query, declared once in [[OracleCatalog.declarations]]: its
+  * name, its Spark body, the DuckDB SQL the oracle checks it against, and
+  * the session caches the body reads. [[QueryCatalog.sessionCaches]]
+  * derives each cache's consumers, and so its release point in a sorted
+  * sweep, from `caches`; `releaseEarly` also releases them right after
+  * this query, ahead of their last sorted consumer.
+  */
+final case class QueryDecl(name: String, body: Harness.Query, oracleSql: String,
+    caches: Seq[SessionScoped.Cache[_]], releaseEarly: Boolean = false)
+
+/** The query registry: every driver query declared once, as a
+  * [[QueryDecl]]. `SparkEntry.queries`, `SparkEntry.oracleSql` and the
+  * cache consumer sets are views of [[declarations]].
+  *
+  * Each oracle statement mirrors the Spark expression tree exactly (same
+  * operation order, same literals-as-doubles, same explicit timestamp
+  * formatting, same tie-breaks) so value hashes match digit-for-digit —
+  * see the portability contract in QueryCatalog's doc.
   *
   * Tables (lineitem, orders, customer, nation, region, part, events,
   * documents, embeddings) are registered by the driver over the same
@@ -387,68 +407,74 @@ object OracleCatalog {
       |WINDOW w AS (PARTITION BY l_returnflag
       |  ORDER BY l_quantity ASC, l_orderkey ASC, l_linenumber ASC)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q01_scan_filter_project" ->
+  private def query(name: String, body: Harness.Query, caches: SessionScoped.Cache[_]*)(
+      sql: String): QueryDecl = QueryDecl(name, body, sql, caches)
+
+  val declarations: Seq[QueryDecl] = Seq(
+    // parity: reference operator inventory
+    query("q01_scan_filter_project", Q.scanFilterProject)(
       """SELECT l_orderkey AS order_id, l_linenumber AS line_number, l_quantity AS quantity,
         | l_extendedprice * (1 - l_discount) AS net_price
         |FROM lineitem
-        |WHERE l_quantity > 0 AND l_returnflag IS NOT NULL AND l_shipdate IS NOT NULL""".stripMargin,
+        |WHERE l_quantity > 0 AND l_returnflag IS NOT NULL AND l_shipdate IS NOT NULL""".stripMargin),
 
-    "q02_dim_customer" -> dimc,
-    "q03_dim_datetime" -> dimd,
-    "q04_dim_product"  -> dimp,
-    "q05_dim_invoice"  -> dimi,
-    "q06_fct_line_value" -> fct,
+    // dims/fact read the session-cached materialization (Star.build) —
+    // the dbt `materialized: table` analog all star consumers share
+    query("q02_dim_customer", (s, d) => Star.build(s, d).dimCustomer, Star.cache)(dimc),
+    query("q03_dim_datetime", (s, d) => Star.build(s, d).dimDatetime, Star.cache)(dimd),
+    query("q04_dim_product", (s, d) => Star.build(s, d).dimProduct, Star.cache)(dimp),
+    query("q05_dim_invoice", (s, d) => Star.build(s, d).dimInvoice, Star.cache)(dimi),
+    query("q06_fct_line_value", (s, d) => Star.build(s, d).fct, Star.cache)(fct),
 
-    "q07_report_customer" ->
+    query("q07_report_customer", Reports.customerInvoices, Star.cache)(
       s"""SELECT nation, region, count(invoice_key) AS total_invoices,
          | ${sumMoney("total_price")} AS total_revenue
          |FROM ($fct) f
          |JOIN (SELECT invoice_key, customer_key FROM ($dimi)) i USING (invoice_key)
          |JOIN (SELECT customer_key, nation, region FROM ($dimc)) c USING (customer_key)
          |GROUP BY nation, region
-         |ORDER BY total_revenue DESC, nation ASC LIMIT 10""".stripMargin,
+         |ORDER BY total_revenue DESC, nation ASC LIMIT 10""".stripMargin),
 
-    "q08_report_product" ->
+    query("q08_report_product", Reports.productInvoices, Star.cache)(
       s"""SELECT product_key, stock_code, description,
          | ${sumMoney("quantity")} AS total_quantity_sold
          |FROM ($fct) f
          |JOIN (SELECT product_key, stock_code, description FROM ($dimp)) p USING (product_key)
          |GROUP BY product_key, stock_code, description
-         |ORDER BY total_quantity_sold DESC, product_key ASC LIMIT 10""".stripMargin,
+         |ORDER BY total_quantity_sold DESC, product_key ASC LIMIT 10""".stripMargin),
 
-    "q09_report_year" ->
+    query("q09_report_year", Reports.yearInvoices, Star.cache)(
       s"""SELECT year, month, count(DISTINCT invoice_key) AS num_invoices,
          | ${sumMoney("total_price")} AS total_revenue
          |FROM ($fct) f
          |JOIN (SELECT date_key, year, month FROM ($dimd)) d USING (date_key)
-         |GROUP BY year, month ORDER BY year ASC, month ASC""".stripMargin,
+         |GROUP BY year, month ORDER BY year ASC, month ASC""".stripMargin),
 
-    "q10_events_group_max" ->
+    query("q10_events_group_max", Q.eventsGroupMax)(
       s"""SELECT event_id, user_id, ${fmtTs("date_trunc('second', ts)")} AS ts_s,
          | ${fmtTs("date_trunc('second', max(ts) OVER (PARTITION BY user_id))")} AS max_ts_s
-         |FROM events""".stripMargin,
+         |FROM events""".stripMargin),
 
-    "q11_events_dedup_latest" ->
+    query("q11_events_dedup_latest", Q.eventsDedupLatest)(
       s"""SELECT user_id, event_id, ${fmtTs("date_trunc('second', ts)")} AS ts_s
          |FROM (SELECT user_id, event_id, ts,
          |        row_number() OVER (PARTITION BY user_id
          |          ORDER BY date_trunc('second', ts) DESC, event_id DESC) AS rn
          |      FROM events)
-         |WHERE rn = 1""".stripMargin,
+         |WHERE rn = 1""".stripMargin),
 
-    "q12_events_rollup" ->
+    query("q12_events_rollup", Q.eventsRollup)(
       s"""SELECT event_type, count(event_id) AS n_events, count(DISTINCT user_id) AS n_users,
          | ${sumMoney("value")} AS total_value
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q13_events_hourly" ->
+    query("q13_events_hourly", Q.eventsHourly)(
       s"""SELECT ${fmtTs("date_trunc('hour', ts)")} AS window_start,
          | ${fmtTs("date_trunc('hour', ts) + INTERVAL 1 HOUR")} AS window_end,
          | event_type, count(*) AS n_events, ${sumMoney("value")} AS total_value
-         |FROM events GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin,
+         |FROM events GROUP BY 1, 2, 3 ORDER BY window_start, event_type""".stripMargin),
 
-    "q31_events_sessions" ->
+    query("q31_events_sessions", Q.eventsSessions)(
       s"""WITH e AS (SELECT user_id, event_id, value, date_trunc('second', ts) AS ts_sec FROM events),
          |f AS (SELECT user_id, event_id, value, ts_sec,
          |        CASE WHEN lag(ts_sec) OVER w IS NULL
@@ -463,20 +489,21 @@ object OracleCatalog {
          |  ${fmtTs("max(ts_sec)")} AS session_end,
          |  ${sumMoney("value")} AS session_value
          |FROM g GROUP BY user_id, session_seq
-         |ORDER BY user_id, session_seq""".stripMargin,
+         |ORDER BY user_id, session_seq""".stripMargin),
 
-    "q14_exact_dedup" ->
+    // extensions: text analysis + dedup
+    query("q14_exact_dedup", Q.exactDedup)(
       s"""SELECT md5(array_to_string($toksLower, ' ')) AS content_hash,
          | min(doc_id) AS keep_id, count(*) AS dup_count
-         |FROM documents GROUP BY 1""".stripMargin,
+         |FROM documents GROUP BY 1""".stripMargin),
 
-    "q15_text_stats" ->
+    query("q15_text_stats", Q.textStats)(
       s"""WITH ${statsCte("documents")}
          |SELECT doc_id, n_tokens, n_bpeish, n_punct, n_digits, n_stop,
          | $qualityExpr AS quality
-         |FROM b""".stripMargin,
+         |FROM b""".stripMargin),
 
-    "q16_lang_id" -> {
+    query("q16_lang_id", Q.langId) {
       val m = graft.text.TextOps.LangMarkers.map { case (code, ws) =>
         s"len(list_filter(tk2, x -> x IN (${ws.map(w => s"'$w'").mkString(", ")}))) AS s_$code"
       }.mkString(",\n  ")
@@ -491,28 +518,28 @@ object OracleCatalog {
          |FROM sc""".stripMargin
     },
 
-    "q17_fingerprint" ->
+    query("q17_fingerprint", Q.fingerprints)(
       s"""WITH $tkCte, $shCte
          |SELECT doc_id, md5(array_to_string(t, ' ')) AS fp_exact,
          | list_min(list_transform(sh, x -> md5(x))) AS fp_minshingle
-         |FROM sh""".stripMargin,
+         |FROM sh""".stripMargin),
 
-    "q18_minhash_sig" ->
+    query("q18_minhash_sig", Q.minhashSig)(
       s"""WITH $tkCte, $shCte
          |SELECT doc_id, concat_ws('|', ${(0 until 16)
             .map(i => s"CAST(${minhash(i)} AS VARCHAR)").mkString(",\n ")}) AS sig
-         |FROM sh""".stripMargin,
+         |FROM sh""".stripMargin),
 
-    "q19_minhash_pairs" ->
+    query("q19_minhash_pairs", Q.minhashPairs, Q.pairsCache)(
       s"""WITH $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
               s"SELECT doc_id, $b AS band, ${bandKey(b)} AS band_key FROM sig")
               .mkString("\n UNION ALL ")})
          |SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-         |FROM bands l JOIN bands r ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id""".stripMargin,
+         |FROM bands l JOIN bands r ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id""".stripMargin),
 
-    "q20_jaccard_neighbors" ->
+    query("q20_jaccard_neighbors", Q.jaccardNeighbors)(
       s"""WITH $tkCte, $shCte,
          |p AS (SELECT source, doc_id AS doc_a,
          |        lead(doc_id) OVER (PARTITION BY source ORDER BY doc_id) AS doc_b, sh AS sh_a
@@ -522,20 +549,22 @@ object OracleCatalog {
          |   ELSE CAST(len(list_intersect(sh_a, b.sh)) AS DOUBLE)
          |        / CAST(len(sh_a) + len(b.sh) - len(list_intersect(sh_a, b.sh)) AS DOUBLE) END) * 1000000.0 + 0.5) / 1000000.0 AS jaccard
          |FROM p JOIN sh b ON p.doc_b = b.doc_id
-         |WHERE doc_b IS NOT NULL""".stripMargin,
+         |WHERE doc_b IS NOT NULL""".stripMargin),
 
-    "q21_cosine_scores" ->
+    // extensions: similarity search
+    query("q21_cosine_scores", Q.cosineScores)(
       s"""WITH $embCte
-         |$cosScores""".stripMargin,
+         |$cosScores""".stripMargin),
 
-    "q22_ann_topk" ->
+    query("q22_ann_topk", Q.annTopK)(
       s"""WITH $embCte,
          |s AS ($cosScores)
          |SELECT query_id, vec_id, score, CAST(rank AS INTEGER) AS rank
          |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank FROM s)
-         |WHERE rank <= 5""".stripMargin,
+         |WHERE rank <= 5""".stripMargin),
 
-    "q29_rolling_hash" ->
+    // rolling-hash fingerprints
+    query("q29_rolling_hash", Q.rollingHashes)(
       """SELECT doc_id,
         | CASE WHEN len(text) = 0 THEN 0 ELSE
         |   list_reduce([CAST(ascii(substr(text, i, 1)) AS BIGINT) for i in generate_series(1, len(text))],
@@ -545,9 +574,10 @@ object OracleCatalog {
         |     list_reduce([CAST(ascii(substr(text, j, 1)) AS BIGINT) for j in generate_series(i, least(i + 15, len(text)))],
         |                 (a, c) -> (a * 31 + c) % 1000000007)
         |     for i in generate_series(1, greatest(len(text) - 15, 1))]) END AS rh_min_window
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
-    "q32_clean_corpus" ->
+    // flagship LLM-pipeline composition (oracle-checked)
+    query("q32_clean_corpus", Q.cleanCorpus, Q.corpusCache)(
       s"""WITH ${statsCte("documents")},
          |q AS (SELECT doc_id, text, n_tokens, $qualityExpr AS quality FROM b),
          |qf AS (SELECT * FROM q WHERE quality >= 0.5),
@@ -568,11 +598,12 @@ object OracleCatalog {
          |       JOIN sh bb ON cand.doc_b = bb.doc_id
          |       WHERE ${jaccardSql("a.sh", "bb.sh")} >= 0.8)
          |SELECT doc_id, n_tokens, quality FROM e
-         |WHERE doc_id NOT IN (SELECT doc_b FROM pv)""".stripMargin,
+         |WHERE doc_id NOT IN (SELECT doc_b FROM pv)""".stripMargin),
 
+    // capstone: full training-corpus preparation composition
     // the q32 chain + split + 8-gram heldout decontamination — each stage
     // is separately oracle-checked; this checks the composition
-    "q49_training_corpus" ->
+    query("q49_training_corpus", Q.trainingCorpus, Q.corpusCache)(
       s"""WITH ${statsCte("documents")},
          |q AS (SELECT doc_id, text, n_tokens, $qualityExpr AS quality FROM b),
          |qf AS (SELECT * FROM q WHERE quality >= 0.5),
@@ -604,15 +635,17 @@ object OracleCatalog {
          |         WHERE split = 'heldout' AND gh IN (SELECT gh FROM tg))
          |SELECT doc_id, split, n_tokens, quality FROM clean
          |WHERE doc_id NOT IN (SELECT doc_id FROM cont)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
-    "q24_simhash" ->
+    // bit-level simhash (the oracle mirrors the bit math)
+    query("q24_simhash", Q.simhash)(
       s"""WITH $simhashCtes
-         |SELECT doc_id, simhash FROM sim""".stripMargin,
+         |SELECT doc_id, simhash FROM sim""".stripMargin),
 
+    // banded simhash near-dup pairs (exact recall for hamming <= 3)
     // banded simhash near-dups: 4×16-bit bands (arithmetic shift + mask ==
     // logical shift), pairs inside band buckets only, exact hamming verify
-    "q52_simhash_neardups" ->
+    query("q52_simhash_neardups", Q.simhashNearDups)(
       s"""WITH $simhashCtes,
          |bands AS (SELECT doc_id, simhash, b.band,
          |    (simhash >> (b.band * 16)) & 65535 AS key
@@ -622,9 +655,10 @@ object OracleCatalog {
          |FROM bands l JOIN bands r
          |  ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
          |WHERE bit_count(xor(l.simhash, r.simhash)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
-    "q25_lsh_ann_topk" -> {
+    // hyperplane-LSH paths (the oracle carries the constants)
+    query("q25_lsh_ann_topk", Q.lshAnnTopK) {
       // same probe-mask set Similarity.lshTopK builds for nBits=6, probeFlips=2
       val n = 6
       val masks: Seq[Long] = Seq(0L) ++ (0 until n).map(i => 1L << i) ++
@@ -646,7 +680,7 @@ object OracleCatalog {
          |WHERE rank <= 5""".stripMargin
     },
 
-    "q26_embedding_neardups" -> {
+    query("q26_embedding_neardups", Q.embeddingNearDups) {
       val dotAB = "list_reduce([a.v[i] * b.v[i] for i in generate_series(1, len(a.v))], (acc, x) -> acc + x)"
       // Similarity.deriveNBits as an integer CASE chain: nBits is the
       // smallest b in [4,16] with count <= 32·2^b; the 16-plane signature
@@ -667,7 +701,8 @@ object OracleCatalog {
          |WHERE score >= 0.35""".stripMargin
     },
 
-    "q30_ivf_ann_topk" -> {
+    // IVF ANN
+    query("q30_ivf_ann_topk", Q.ivfAnnTopK) {
       def dotOf(a: String, b: String) =
         s"list_reduce([$a[i] * $b[i] for i in generate_series(1, len($a))], (acc, x) -> acc + x)"
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -690,14 +725,16 @@ object OracleCatalog {
          |WHERE rank <= 5""".stripMargin
     },
 
+    // product-quantization ADC top-k: the memory-bound ANN scale path
     // q120: product-quantization ADC + exact re-rank — see pqAnnSql
-    "q120_pq_ann" -> pqAnnSql(ivfGate = false),
+    query("q120_pq_ann", Q.pqAnnTopK, Q.pqIndexCache)(pqAnnSql(ivfGate = false)),
 
+    // custom DSv2 TSV connector: filter+column pushdown inside the scan
     // q124: custom DSv2 TSV connector — DuckDB reads the SAME file with
     // the same \N-null and binary-collation conventions, so a hash match
     // is a row-for-row check of the connector's in-reader pushed-filter
     // evaluation (the Spark plan has no post-scan Filter node at all)
-    "q124_tsv_source" -> {
+    query("q124_tsv_source", Q.tsvSourceCountries) {
       val path = graft.sources.GraftTsv.seedTsvPath
       s"""SELECT iso, nicename, phonecode
          |FROM read_csv('$path', delim = '\t', header = false,
@@ -707,9 +744,10 @@ object OracleCatalog {
          |ORDER BY iso""".stripMargin
     },
 
+    // DSv2 aggregate pushdown: COUNT/MIN/MAX evaluated inside the reader
     // q136: DSv2 aggregate pushdown — same file, same aggregates in
     // DuckDB; the hash match audits the reader's in-scan COUNT/MIN/MAX
-    "q136_tsv_source_stats" -> {
+    query("q136_tsv_source_stats", Q.tsvSourceStats) {
       val path = graft.sources.GraftTsv.seedTsvPath
       s"""SELECT count(*) AS n_rows, count(iso3) AS n_iso3,
          |  min(numcode) AS min_numcode, max(numcode) AS max_numcode,
@@ -721,10 +759,11 @@ object OracleCatalog {
          |    'phonecode': 'BIGINT'})""".stripMargin
     },
 
+    // BPE APPLICATION: encode the corpus with the trained merges
     // q123: BPE corpus encoding — q94's pairTop+fold unrolled EXACTLY
     // nMerges=8 times over the (tok, freq, sym) vocabulary, then every
     // document's words join the encoded vocab and roll up per doc
-    "q123_bpe_encode" -> {
+    query("q123_bpe_encode", Q.bpeEncodeCorpus(_, _)) {
       val nMerges = 8
       def pairTop(src: String, m: String) =
         s"""p$m AS (SELECT p.a AS a, p.b AS b, sum(freq) AS cnt
@@ -758,12 +797,13 @@ object OracleCatalog {
            |GROUP BY doc_id ORDER BY doc_id""".stripMargin
     },
 
+    // real javax.imageio PNG round trip behind the multimodal codec seam
     // q126: real javax.imageio PNG round trip — the engine encodes a
     // deterministic gray gradient per id and decodes it back through the
     // actual codec; PNG is lossless, so the oracle replays the gradient
     // ARITHMETIC (never parses PNG) and the hash match proves the codec
     // recovered every pixel and the true canvas dimensions.
-    "q126_image_decode" ->
+    query("q126_image_decode", Q.imageDecode)(
       """WITH ids AS (SELECT doc_id AS media_id,
         |        CAST(4 + (doc_id % 5) AS INTEGER) AS width,
         |        CAST(3 + (doc_id % 4) AS INTEGER) AS height
@@ -776,16 +816,19 @@ object OracleCatalog {
         |  CAST(width AS BIGINT) * height AS n_pixels,
         |  CAST(sum(g) AS BIGINT) AS sum_luma,
         |  CAST(sum(g) AS DOUBLE) / (CAST(width AS BIGINT) * height) AS mean_luma
-        |FROM px GROUP BY media_id, width, height ORDER BY media_id""".stripMargin,
+        |FROM px GROUP BY media_id, width, height ORDER BY media_id""".stripMargin),
 
+    // PQ with TRAINED sub-space codebooks (one Lloyd refinement per j)
     // q125: trained-codebook PQ — pqAnnSql with one Lloyd refinement of
     // each sub-space codebook replayed in the CTEs (the q68 quantized-
     // mean construction applied per sub-space j)
-    "q125_pq_trained" -> pqAnnSql(ivfGate = false, trainedCb = true),
+    query("q125_pq_trained", Q.pqAnnTrained, Q.pqIndexCache)(
+      pqAnnSql(ivfGate = false, trainedCb = true)),
 
+    // generic MERGE upsert/delete — the lakehouse MERGE INTO primitive
     // q128: generic MERGE — change derivation + anti-join/union replayed;
     // bal+100.0 is one IEEE double add in both engines
-    "q128_merge_upsert" ->
+    query("q128_merge_upsert", Q.mergeUpsert)(
       """WITH t AS (SELECT c_custkey AS k, c_name AS name, c_acctbal AS bal FROM customer),
         |ch AS (
         |  SELECT k, name, bal + 100.0 AS bal, false AS is_delete FROM t WHERE k % 7 = 0
@@ -797,35 +840,42 @@ object OracleCatalog {
         |  SELECT k, name, bal FROM t ANTI JOIN ch USING (k)
         |  UNION ALL
         |  SELECT k, name, bal FROM ch WHERE NOT is_delete)
-        |ORDER BY k""".stripMargin,
+        |ORDER BY k""".stripMargin),
 
+    // equi-depth histogram from exact order statistics (per group)
     // q129: equi-depth histogram — rank·B DIV n bucket assignment is
     // pure integer arithmetic, identical in both engines
-    "q129_equidepth_hist" -> equiDepthHistSql,
+    query("q129_equidepth_hist", Q.equiDepthHist, ShapeDispatch.statsCache)(equiDepthHistSql),
+    // q129's scale side forced (ranged equi-depth ranks), same oracle as
+    // q129 now that q129 rides equiDepthHistogramAuto
     // q171 = q129's ranged rank shape FORCED (ShapeDispatch's scale
     // side) — deliberately the SAME oracle: both histogram shapes must
     // hash identically at the gate (the q53/q170 pattern)
-    "q171_equidepth_ranged" -> equiDepthHistSql,
+    query("q171_equidepth_ranged", Q.equiDepthHistRanged)(equiDepthHistSql),
 
+    // distributed global row_number: range partition + offsets, no
+    // single-partition window
     // q130: distributed global rank — oracle is the NAIVE global window,
     // proving the range-partition + offset construction rank-for-rank
-    "q130_global_rank" ->
+    query("q130_global_rank", Q.globalRank)(
       """SELECT rank, l_extendedprice, l_orderkey, l_linenumber FROM (
         |  SELECT l_orderkey, l_linenumber, l_extendedprice,
         |    row_number() OVER (ORDER BY l_extendedprice ASC, l_orderkey ASC, l_linenumber ASC) AS rank
         |  FROM lineitem)
         |WHERE rank <= 5 OR rank % 1000 = 0
-        |ORDER BY rank""".stripMargin,
+        |ORDER BY rank""".stripMargin),
 
+    // k-anonymity re-identification census over a quasi-identifier pair
     // q131: k-anonymity — one grouped census, flag groups under k
-    "q131_k_anonymity" ->
+    query("q131_k_anonymity", Q.kAnonymityAudit)(
       """SELECT c_nationkey, c_mktsegment, count(*) AS group_size,
         |  count(*) < 5 AS at_risk
-        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM customer GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
+    // l-diversity: the homogeneity-attack audit beside q131's k-anonymity
     // q162: l-diversity — same census shuffle as q131 with the
     // sensitive-class distinct count riding along
-    "q162_l_diversity" ->
+    query("q162_l_diversity", Q.lDiversityAudit)(
       """WITH d AS (SELECT c_nationkey, c_mktsegment,
         |    CASE WHEN c_acctbal < 0 THEN 'debt'
         |         WHEN c_acctbal < 5000 THEN 'low' ELSE 'high' END AS bal_class
@@ -833,11 +883,12 @@ object OracleCatalog {
         |SELECT c_nationkey, c_mktsegment, count(*) AS group_size,
         |  count(DISTINCT bal_class) AS n_sensitive,
         |  count(DISTINCT bal_class) < 2 AS at_risk
-        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
+    // small-file compaction planning (lakehouse OPTIMIZE scheduling)
     // q132: compaction plan — cumulative-before DIV target first-fit,
     // integer arithmetic replayed verbatim
-    "q132_compaction_plan" ->
+    query("q132_compaction_plan", Q.compactionPlan)(
       """WITH f AS (SELECT source, doc_id, CAST(length(text) AS BIGINT) AS bytes
         |  FROM documents),
         |b AS (SELECT source, doc_id, bytes,
@@ -846,12 +897,13 @@ object OracleCatalog {
         |  FROM f)
         |SELECT source, bin, count(*) AS n_files, CAST(sum(bytes) AS BIGINT) AS total_bytes,
         |  min(doc_id) AS first_id, max(doc_id) AS last_id
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
+    // snapshot diff: CDC derivation, the inverse of q128's merge
     // q133: snapshot diff — replays q128's merge, then the full-outer
     // hash diff (same md5-concat row hash, non-key columns in sorted
     // name order: bal, name)
-    "q133_snapshot_diff" ->
+    query("q133_snapshot_diff", Q.snapshotDiffQuery)(
       s"""WITH t AS (SELECT c_custkey AS k, c_name AS name, c_acctbal AS bal FROM customer),
          |ch AS (
          |  SELECT k, name, bal + 100.0 AS bal, false AS is_delete FROM t WHERE k % 7 = 0
@@ -870,10 +922,11 @@ object OracleCatalog {
          |               WHEN oh.h != nh.h THEN 'update' END AS change
          |FROM oh FULL OUTER JOIN nh USING (k)
          |WHERE oh.h IS NULL OR nh.h IS NULL OR oh.h != nh.h
-         |ORDER BY k""".stripMargin,
+         |ORDER BY k""".stripMargin),
 
+    // GDPR erasure cascade impact down the FK chain (semi joins only)
     // q134: erasure cascade — key sets down the FK chain, count per table
-    "q134_erasure_cascade" ->
+    query("q134_erasure_cascade", Q.erasureCascade)(
       """WITH r AS (SELECT DISTINCT c_custkey AS k FROM customer WHERE c_custkey % 13 = 1),
         |o AS (SELECT o_orderkey FROM orders WHERE o_custkey IN (SELECT k FROM r)),
         |l AS (SELECT l_orderkey FROM lineitem
@@ -882,11 +935,12 @@ object OracleCatalog {
         |  SELECT 'customer' AS table_name, count(*) AS n_rows FROM r
         |  UNION ALL SELECT 'orders', count(*) FROM o
         |  UNION ALL SELECT 'lineitem', count(*) FROM l)
-        |ORDER BY table_name""".stripMargin,
+        |ORDER BY table_name""".stripMargin),
 
+    // referential-integrity orphan audit over the star's FK relations
     // q135: referential integrity — orphan count per FK relation + the
     // childless-customer count
-    "q135_integrity_audit" ->
+    query("q135_integrity_audit", Q.integrityAudit)(
       """SELECT relation, n_orphans FROM (
         |  SELECT 'lineitem->orders' AS relation, count(*) AS n_orphans FROM lineitem
         |    WHERE l_orderkey IS NOT NULL
@@ -902,23 +956,25 @@ object OracleCatalog {
         |      AND c_nationkey NOT IN (SELECT n_nationkey FROM nation)
         |  UNION ALL SELECT 'customer_without_orders', count(*) FROM customer
         |    WHERE c_custkey NOT IN (SELECT o_custkey FROM orders))
-        |ORDER BY relation""".stripMargin,
+        |ORDER BY relation""".stripMargin),
 
+    // staircase Pareto frontier; oracle = NOT-EXISTS dominance definition
     // q139: Pareto frontier — the oracle is the quadratic NOT-EXISTS
     // dominance DEFINITION, while Spark runs the staircase reduction;
     // a green row is a per-run proof of the reduction's equivalence
-    "q139_pareto_frontier" ->
+    query("q139_pareto_frontier", Q.paretoFrontier)(
       s"""WITH ${statsCte("documents")},
          |q AS (SELECT doc_id, n_tokens, $qualityExpr AS quality FROM b)
          |SELECT doc_id, n_tokens, quality FROM q o
          |WHERE NOT EXISTS (SELECT 1 FROM q a
          |  WHERE a.n_tokens <= o.n_tokens AND a.quality >= o.quality
          |    AND (a.n_tokens < o.n_tokens OR a.quality > o.quality))
-         |ORDER BY n_tokens, doc_id""".stripMargin,
+         |ORDER BY n_tokens, doc_id""".stripMargin),
 
+    // day-bucketed interval join; oracle = the BETWEEN theta join
     // q141: interval join — the oracle states the BETWEEN theta join the
     // day-bucketed equi-join must equal
-    "q141_promo_attribution" ->
+    query("q141_promo_attribution", Q.promoAttribution)(
       """WITH span AS (SELECT CAST(min(ts) AS DATE) AS d0, CAST(max(ts) AS DATE) AS d1 FROM events),
         |promos AS (SELECT k AS promo_id,
         |    CAST(d0 + INTERVAL 1 DAY * (k*7) AS TIMESTAMP) AS start_ts,
@@ -928,12 +984,13 @@ object OracleCatalog {
         |  JOIN promos p ON e.ts >= p.start_ts AND e.ts < p.end_ts)
         |SELECT promo_id, count(*) AS n_events, count(DISTINCT user_id) AS n_users,
         |  CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-        |FROM j GROUP BY promo_id ORDER BY promo_id""".stripMargin,
+        |FROM j GROUP BY promo_id ORDER BY promo_id""".stripMargin),
 
+    // exact set-similarity join via prefix filtering (no false negatives)
     // q142: prefix-filter set-similarity join — full construction replay:
     // distinct 3-gram sets, df-ascending global order, prefix bound
     // sz − ⌈sz/2⌉ + 1, length filter, integer Jaccard verification
-    "q142_prefix_filter_pairs" ->
+    query("q142_prefix_filter_pairs", Q.prefixFilterPairsQuery)(
       s"""WITH $tkCte,
          |s2 AS (SELECT doc_id AS id, $shingle3 AS toks,
          |    CAST(len($shingle3) AS INTEGER) AS sz FROM tk WHERE len($shingle3) > 0),
@@ -953,12 +1010,13 @@ object OracleCatalog {
          |SELECT doc_a, doc_b, inter, union_sz,
          |  floor(CAST(inter AS DOUBLE) / CAST(union_sz AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS jaccard
          |FROM v WHERE inter * 2 >= union_sz * 1
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
+    // per-group OLS from exact integer sufficient statistics
     // q143: per-group OLS — exact integer sufficient statistics (HUGEINT
     // products mirror Spark's DECIMAL(38,0) sums value-for-value), then
     // the identical double combine
-    "q143_ols_trend" ->
+    query("q143_ols_trend", Q.olsTrend)(
       """WITH d AS (SELECT l_returnflag,
         |    CAST(l_quantity AS BIGINT) AS x,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 10000 AS BIGINT) AS y
@@ -974,10 +1032,11 @@ object OracleCatalog {
         |    sx, sy FROM a)
         |SELECT l_returnflag, n, slope,
         |  CASE WHEN slope IS NOT NULL THEN (sy - slope * sx) / CAST(n AS DOUBLE) END AS intercept
-        |FROM s ORDER BY l_returnflag""".stripMargin,
+        |FROM s ORDER BY l_returnflag""".stripMargin),
 
+    // one-shuffle column profiler with deterministic mode
     // q144: column profiler — one melted count frame, argmax-then-min mode
-    "q144_column_profile" ->
+    query("q144_column_profile", Q.columnProfileQuery)(
       """WITH pairs AS (
         |  SELECT 'o_custkey' AS col_name, CAST(o_custkey AS VARCHAR) AS val FROM orders
         |  UNION ALL SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR) FROM orders
@@ -993,22 +1052,24 @@ object OracleCatalog {
         |  GROUP BY 1, 2)
         |SELECT b.col_name, n_rows, n_nulls, n_distinct, mode_val, mode_n
         |FROM base b LEFT JOIN mode m ON b.col_name = m.col_name
-        |ORDER BY b.col_name""".stripMargin,
+        |ORDER BY b.col_name""".stripMargin),
 
+    // trailing 7-day distinct users via bounded day fan-out
     // q145: sliding 7-day distinct users — the oracle states the
     // trailing-window definition directly (anchor joined to its 7 days)
-    "q145_sliding_distinct" ->
+    query("q145_sliding_distinct", Q.slidingDistinct)(
       """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |anchors AS (SELECT DISTINCT day AS anchor FROM ud)
         |SELECT strftime(a.anchor, '%Y-%m-%d') AS anchor,
         |  count(DISTINCT u.user_id) AS n_users_7d
         |FROM anchors a JOIN ud u
         |  ON u.day >= a.anchor - INTERVAL 6 DAY AND u.day <= a.anchor
-        |GROUP BY a.anchor ORDER BY 1""".stripMargin,
+        |GROUP BY a.anchor ORDER BY 1""".stripMargin),
 
+    // Welch's t between experiment arms from exact decimal sums
     // q146: Welch's t — exact decimal (n, Σv, Σv²) per arm, then the
     // identical double combine; sqrt is IEEE-portable (ln is not)
-    "q146_welch_readout" ->
+    query("q146_welch_readout", Q.welchReadout)(
       """WITH tagged AS (SELECT event_type,
         |    substr(md5(CAST(user_id AS VARCHAR)), 1, 1) IN ('0','1','2','3','4','5','6','7') AS tr,
         |    CAST(value AS DECIMAL(18,4)) AS v
@@ -1032,17 +1093,19 @@ object OracleCatalog {
         |  CASE WHEN n_t >= 2 AND n_c >= 2
         |        AND vt / CAST(n_t AS DOUBLE) + vc / CAST(n_c AS DOUBLE) > 0.0
         |    THEN (mt - mc) / sqrt(vt / CAST(n_t AS DOUBLE) + vc / CAST(n_c AS DOUBLE)) END AS t_stat
-        |FROM m ORDER BY event_type""".stripMargin,
+        |FROM m ORDER BY event_type""".stripMargin),
 
+    // hot-key exact distinct decomposed over disjoint value buckets
     // q147: skew-decomposed distinct — the oracle is the plain global
     // COUNT(DISTINCT) the bucket decomposition must sum to
-    "q147_skewed_distinct" ->
+    query("q147_skewed_distinct", Q.skewedDistinct)(
       """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
+    // triangle census of the rare-gram co-occurrence graph
     // q148: triangle census of the rare-8-gram co-occurrence graph —
     // edge build replay + ordered triple join (a<b<c counts each once)
-    "q148_triangle_census" ->
+    query("q148_triangle_census", Q.triangleCensus, Q.rareEdgesCache)(
       s"""WITH $tkCte,
          |g AS (SELECT doc_id, unnest(${shingleSqlN(8)}) AS gram FROM tk),
          |rare AS (SELECT gram FROM (SELECT gram, count(*) AS df FROM g GROUP BY 1)
@@ -1056,11 +1119,12 @@ object OracleCatalog {
          |tr AS (SELECT count(*) AS n_triangles FROM e e1
          |  JOIN e e2 ON e2.a = e1.b
          |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
-         |SELECT n_nodes, n_edges, n_triangles FROM n, m, tr""".stripMargin,
+         |SELECT n_nodes, n_edges, n_triangles FROM n, m, tr""".stripMargin),
 
+    // water-filling token-budget allocation across sources
     // q149: water-filling budget — sorted prefix feasibility, one integer
     // cap; every window runs over the per-source stats frame
-    "q149_token_budget" ->
+    query("q149_token_budget", Q.tokenBudget)(
       s"""WITH ${statsCte("documents")},
          |st AS (SELECT d.source, CAST(sum(b.n_tokens) AS BIGINT) AS n
          |  FROM b JOIN documents d ON b.doc_id = d.doc_id GROUP BY 1),
@@ -1077,11 +1141,12 @@ object OracleCatalog {
          |  FROM k)
          |SELECT source, n AS n_tokens, CAST(alloc AS BIGINT) AS alloc,
          |  alloc < n AS is_capped
-         |FROM a ORDER BY source""".stripMargin,
+         |FROM a ORDER BY source""".stripMargin),
 
+    // per-source score calibration onto the global distribution
     // q150: quantile normalization — exact integer index math onto the
     // global order statistics
-    "q150_quantile_normalize" ->
+    query("q150_quantile_normalize", Q.quantileNormalizeQuery)(
       s"""WITH ${statsCte("documents")},
          |q0 AS (SELECT doc_id, $qualityExpr AS quality FROM b),
          |q AS (SELECT q0.doc_id, d.source, quality
@@ -1096,11 +1161,12 @@ object OracleCatalog {
          |         ELSE 1 + (gn - 1) // 2 END AS ti FROM r),
          |l AS (SELECT gi, quality AS norm_quality FROM r)
          |SELECT t.doc_id, t.source, t.quality, l.norm_quality
-         |FROM ti t JOIN l ON t.ti = l.gi ORDER BY t.doc_id""".stripMargin,
+         |FROM ti t JOIN l ON t.ti = l.gi ORDER BY t.doc_id""".stripMargin),
 
+    // Gopher-style intra-document repetition gates
     // q151: repetition filters — top-2-gram / dup-5-gram / adjacent-repeat
     // fractions, all ratios of exact integers
-    "q151_repetition_filters" ->
+    query("q151_repetition_filters", Q.repetitionFilters)(
       s"""WITH $tkCte,
          |r1 AS (SELECT doc_id,
          |    CASE WHEN len(trim(text)) = 0 THEN 0 ELSE CAST(len(t) AS INTEGER) END AS n_tokens,
@@ -1121,10 +1187,11 @@ object OracleCatalog {
          |  FROM r1 JOIN t2 ON r1.doc_id = t2.doc_id)
          |SELECT doc_id, n_tokens, top_2gram_frac, dup5gram_frac, rep_pair_frac,
          |  (top_2gram_frac <= 0.2 AND dup5gram_frac <= 0.3 AND rep_pair_frac <= 0.1) AS passes
-         |FROM m ORDER BY doc_id""".stripMargin,
+         |FROM m ORDER BY doc_id""".stripMargin),
 
+    // per-user behavior transition matrix (exact-count ratios)
     // q152: Markov transition matrix — lag pairs, exact-count ratios
-    "q152_markov_transitions" ->
+    query("q152_markov_transitions", Q.markovTransitions)(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |    epoch(date_trunc('second', ts)) AS ep FROM events),
         |p AS (SELECT event_type AS state,
@@ -1134,13 +1201,14 @@ object OracleCatalog {
         |  WHERE next_state IS NOT NULL GROUP BY 1, 2)
         |SELECT state, next_state, n,
         |  CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY state) AS DOUBLE) AS prob
-        |FROM c ORDER BY state, next_state""".stripMargin,
+        |FROM c ORDER BY state, next_state""".stripMargin),
 
+    // Benford first-digit screen via a log-free magnitude ladder
     // q153: Benford audit — log-free leading digit via the integer
     // part's decimal rendering; integer part as x - x%1 (exact IEEE,
     // mirrors CoreOps.leadingDigit — no BIGINT saturation/error bound),
     // rendered through DECIMAL(38,0); literal expecteds
-    "q153_benford_audit" ->
+    query("q153_benford_audit", Q.benfordAudit)(
       """WITH d AS (SELECT CAST(substr(CAST(CAST(o_totalprice - (o_totalprice % 1) AS DECIMAL(38,0)) AS VARCHAR), 1, 1) AS INTEGER) AS digit
         |  FROM orders WHERE o_totalprice >= 1 AND o_totalprice IS NOT NULL),
         |c AS (SELECT digit, count(*) AS n FROM d GROUP BY 1),
@@ -1153,11 +1221,12 @@ object OracleCatalog {
         |  FROM c)
         |SELECT digit, n, obs_frac, benford_frac,
         |  abs(obs_frac - benford_frac) AS abs_dev
-        |FROM m ORDER BY digit""".stripMargin,
+        |FROM m ORDER BY digit""".stripMargin),
 
+    // 3-D skyline by local-prune-then-merge (oracle = dominance NOT EXISTS)
     // q154: 3-D skyline — the oracle is the quadratic NOT-EXISTS
     // dominance definition the local-prune-then-merge must equal
-    "q154_skyline_3d" ->
+    query("q154_skyline_3d", Q.skyline3d)(
       s"""WITH ${statsCte("documents")},
          |q AS (SELECT doc_id, n_tokens,
          |    CAST(n_punct AS DOUBLE) / greatest(CAST(length(text) AS DOUBLE), CAST(1.0 AS DOUBLE)) AS punct_frac,
@@ -1168,12 +1237,13 @@ object OracleCatalog {
          |    AND a.quality >= o.quality
          |    AND (a.n_tokens < o.n_tokens OR a.punct_frac < o.punct_frac
          |         OR a.quality > o.quality))
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
+    // KMV sketch set algebra: pairwise distinct-user overlap estimates
     // q155: KMV set operations — per-type k-min sketches, union k-min,
     // shared count, Beyer estimators; under-full → exact. Pure set
     // functions, so the estimates replay bit-exact (q117's property).
-    "q155_kmv_set_ops" ->
+    query("q155_kmv_set_ops", Q.kmvSetOps)(
       """WITH uh AS (SELECT DISTINCT event_type,
         |    list_reduce([CAST(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), i, 1)) - 1 AS BIGINT)
         |                 for i in generate_series(1, 13)], (a, x) -> a * 16 + x) AS h
@@ -1209,11 +1279,12 @@ object OracleCatalog {
         |  END AS inter_est,
         |  CAST(coalesce(n_inter_exact, 0) AS BIGINT) AS n_inter_exact
         |FROM f LEFT JOIN ex ON f.type_a = ex.type_a AND f.type_b = ex.type_b
-        |ORDER BY f.type_a, f.type_b""".stripMargin,
+        |ORDER BY f.type_a, f.type_b""".stripMargin),
 
+    // sorted-neighborhood blocking: one global sort, O(n·w) verifications
     // q156: sorted-neighborhood pairs — global sort by the 3-token key,
     // rank window w=8, exact 3-gram verification at Jaccard >= 1/2
-    "q156_sorted_neighbors" ->
+    query("q156_sorted_neighbors", Q.sortedNeighborPairsQuery)(
       s"""WITH $tkCte,
          |s2 AS (SELECT doc_id AS id, array_to_string(t[1:3], ' ') AS sort_key,
          |    $shingle3 AS toks, CAST(len($shingle3) AS INTEGER) AS sz
@@ -1230,11 +1301,12 @@ object OracleCatalog {
          |  inter, union_sz,
          |  floor(CAST(inter AS DOUBLE) / CAST(union_sz AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 AS jaccard
          |FROM v WHERE inter * 2 >= union_sz * 1
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
+    // Count-Min frequency sketch as a grouped-count dataflow
     // q157: Count-Min as dataflow — d×w grouped counters, min-over-rows
     // estimate, top-20 readout with the est >= true guarantee column
-    "q157_countmin_sketch" ->
+    query("q157_countmin_sketch", Q.countMinSketch)(
       """WITH ev AS (SELECT user_id FROM events),
         |posted AS (SELECT user_id, i AS r,
         |    list_reduce([CAST(strpos('0123456789abcdef',
@@ -1251,12 +1323,13 @@ object OracleCatalog {
         |  FROM tr t JOIN est USING (user_id))
         |SELECT user_id, n_true, n_est, n_est >= n_true AS never_under,
         |  n_est - n_true AS overcount
-        |FROM top WHERE rk <= 20 ORDER BY user_id""".stripMargin,
+        |FROM top WHERE rk <= 20 ORDER BY user_id""".stripMargin),
 
+    // incremental component maintenance == full recompute (contract)
     // q158: incremental components — the oracle recomputes components
     // FROM SCRATCH over all rare-gram edges (q54's recursive reach on
     // the q148 graph); equality proves incremental == full recompute
-    "q158_incremental_components" ->
+    query("q158_incremental_components", Q.incrementalComponents, Q.rareEdgesCache)(
       s"""WITH RECURSIVE $tkCte,
          |g AS (SELECT doc_id, unnest(${shingleSqlN(8)}) AS gram FROM tk),
          |rare AS (SELECT gram FROM (SELECT gram, count(*) AS df FROM g GROUP BY 1)
@@ -1272,11 +1345,12 @@ object OracleCatalog {
          |comp AS (SELECT node AS doc_id, min(lbl) AS component FROM reach GROUP BY 1)
          |SELECT doc_id, component,
          |  CAST(count(*) OVER (PARTITION BY component) AS INTEGER) AS cluster_size
-         |FROM comp ORDER BY doc_id""".stripMargin,
+         |FROM comp ORDER BY doc_id""".stripMargin),
 
+    // market-basket association: support/confidence/lift per type pair
     // q159: market basket — (user, day) baskets, pair co-occurrence,
     // support/confidence/lift as ratios of exact counts
-    "q159_market_basket" ->
+    query("q159_market_basket", Q.marketBasket)(
       """WITH b AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day, event_type FROM events),
         |nb AS (SELECT count(*) AS n FROM (SELECT DISTINCT user_id, day FROM b)),
         |s AS (SELECT event_type, count(*) AS n_single FROM b GROUP BY 1),
@@ -1291,11 +1365,12 @@ object OracleCatalog {
         |    / (CAST(sa.n_single AS DOUBLE) * CAST(sb.n_single AS DOUBLE)) AS lift
         |FROM p JOIN s sa ON p.type_a = sa.event_type
         |       JOIN s sb ON p.type_b = sb.event_type, nb
-        |ORDER BY type_a, type_b""".stripMargin,
+        |ORDER BY type_a, type_b""".stripMargin),
 
+    // Gini-Simpson language diversity (log-free index, exact internals)
     // q160: Gini-Simpson language diversity — exact-integer internals,
     // one double division (log-free; Shannon would need the banned ln)
-    "q160_lang_diversity" -> {
+    query("q160_lang_diversity", Q.langDiversity) {
       val m = graft.text.TextOps.LangMarkers.map { case (code, ws) =>
         s"len(list_filter(tk2, x -> x IN (${ws.map(w => s"'$w'").mkString(", ")}))) AS s_$code"
       }.mkString(",\n  ")
@@ -1313,10 +1388,11 @@ object OracleCatalog {
          |FROM c GROUP BY source ORDER BY source""".stripMargin
     },
 
+    // Spark 4 VARIANT semi-structured decode (contract: paths agree)
     // q161: VARIANT extraction — numeric aggregates must match the
     // string-path decode; each engine certifies its own two decode paths
     // agree (the verified-contract pattern)
-    "q161_variant_extract" ->
+    query("q161_variant_extract", Q.variantExtract)(
       """WITH d AS (SELECT event_type,
         |    CAST(json_extract_string(props, '$.k') AS INTEGER) AS k,
         |    CAST(json_extract_string(props, '$.k') AS INTEGER)
@@ -1328,12 +1404,13 @@ object OracleCatalog {
         |  min(k) AS min_k, max(k) AS max_k,
         |  min(CASE WHEN agree THEN 1 ELSE 0 END) = 1 AS paths_agree,
         |  count(miss) AS n_missing_hits
-        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin),
 
+    // REAL WAV audio decode round trip (javax.sound; q126's audio analog)
     // q163: WAV audio round trip — the oracle recomputes the waveform
     // SEMANTICS (sample formula → peak/energy/rms); a hash match proves
     // the javax.sound encode→decode path recovered every sample
-    "q163_audio_decode" ->
+    query("q163_audio_decode", Q.audioDecode)(
       """WITH ids AS (SELECT doc_id AS media_id FROM documents WHERE doc_id < 100),
         |s AS (SELECT media_id, 50 + (media_id % 40) AS n FROM ids),
         |x AS (SELECT media_id, n, i,
@@ -1344,11 +1421,12 @@ object OracleCatalog {
         |  CAST(max(abs(v)) AS INTEGER) AS peak_abs,
         |  CAST(sum(v * v) AS BIGINT) AS sum_sq,
         |  sqrt(CAST(sum(v * v) AS DOUBLE) / CAST(max(n) AS DOUBLE)) AS rms
-        |FROM x GROUP BY media_id ORDER BY media_id""".stripMargin,
+        |FROM x GROUP BY media_id ORDER BY media_id""".stripMargin),
 
+    // REAL video container demux + frame-sampled PNG decode
     // q164: video demux — sampled frames' gradient semantics restated;
     // a hash match proves container parse + per-frame decode round trip
-    "q164_video_demux" ->
+    query("q164_video_demux", Q.videoDemux)(
       """WITH ids AS (SELECT doc_id AS media_id FROM documents WHERE doc_id < 100),
         |fr AS (SELECT media_id, f
         |  FROM ids, unnest(generate_series(0, (2 + media_id % 3) - 1)) AS u(f)
@@ -1363,29 +1441,34 @@ object OracleCatalog {
         |SELECT media_id, CAST(f AS INTEGER) AS frame_idx,
         |  CAST(max(w) AS INTEGER) AS width, CAST(max(h) AS INTEGER) AS height,
         |  CAST(sum(g) AS BIGINT) AS sum_luma
-        |FROM px GROUP BY media_id, f ORDER BY media_id, frame_idx""".stripMargin,
+        |FROM px GROUP BY media_id, f ORDER BY media_id, frame_idx""".stripMargin),
 
+    // dynamic partition pruning over the month-partitioned fact layout
     // q165: dynamic partition pruning — the engine reads a month-
     // partitioned fact layout with a dim-fed dynamic partition filter;
     // the oracle replays the same monthly revenue from the unpartitioned
     // base tables (layout is an engine concern, values are not)
-    "q165_dpp_star_scan" ->
+    query("q165_dpp_star_scan", Q.dppStarScan, Star.cache, Q.dppFactCache)(
       s"""SELECT CAST(year * 100 + month AS INTEGER) AS ym,
          | count(1) AS n_lines, ${sumMoney("total_price")} AS revenue
          |FROM ($fct) f
          |JOIN (SELECT date_key, year, month FROM ($dimd)) d USING (date_key)
          |WHERE year = 1998
-         |GROUP BY ym ORDER BY ym""".stripMargin,
+         |GROUP BY ym ORDER BY ym""".stripMargin),
 
+    // q36's scale-side twin: exact percentiles from ranged rank statistics
+    // (no group-sized aggregation buffer), same oracle as q36
     // q36's oracle verbatim: the ranked form must be value-identical to
     // the buffering aggregate (the Round12Spec bit-identity, proven here
     // at the driver gate as well)
-    "q166_ranked_percentiles" ->
+    query("q166_ranked_percentiles", Q.rankedPercentilesQuery)(
       s"""SELECT l_returnflag, ${round4("quantile_cont(l_quantity, 0.5)")} AS p50,
          | ${round4("quantile_cont(l_quantity, 0.9)")} AS p90,
          | ${round4("quantile_cont(l_extendedprice, 0.99)")} AS price_p99
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
+    // duplicated-substring-span removal (Lee et al. 2022 shape): cross-doc
+    // 8-token spans excised, islands merged, clean text reassembled
     // q167: duplicated-substring-span removal. Positioned 8-gram windows
     // (list comprehension mirrors the engine's gram_hashes order: pos =
     // array index), dup = gram in >= 2 distinct docs (md5 string identity
@@ -1393,7 +1476,7 @@ object OracleCatalog {
     // gaps-and-islands over window starts (break where pos > prev + 8),
     // excision by positional anti-semantics (NOT EXISTS), ordered
     // re-aggregation of the survivors
-    "q167_span_dedup" ->
+    query("q167_span_dedup", Q.spanDedupQuery)(
       raw"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |wl AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 8
          |  THEN [{'pos': i, 'gh': md5(concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4], t[i+5], t[i+6], t[i+7]))}
@@ -1420,14 +1503,16 @@ object OracleCatalog {
          |  CAST(coalesce(st.n_removed, 0) AS DOUBLE) / CAST(len(tk.t) AS DOUBLE) AS frac_removed,
          |  coalesce(cl.clean_text, '') AS clean_text
          |FROM tk LEFT JOIN stats st USING (doc_id) LEFT JOIN clean cl ON tk.doc_id = cl.doc_id
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
+    // DSIR-shaped importance selection: hashed-bigram likelihood-ratio
+    // leaning test (exact integers), per-doc target-likeness score
     // q168: DSIR-shaped importance selection. Bigram shingles (engine's
     // shingles(2) short-doc convention mirrored by the CASE), md5-prefix
     // bucket ids (the q57 list_reduce idiom), add-one-smoothed
     // likelihood-ratio leaning per bucket as an exact HUGEINT
     // cross-multiplication, doc score = leaning-instance fraction
-    "q168_importance_selection" ->
+    query("q168_importance_selection", Q.importanceSelection(_, _))(
       raw"""WITH tk AS (SELECT doc_id, source, $toksLower AS t FROM documents),
          |sh AS (SELECT doc_id, source, unnest(CASE WHEN len(t) < 2
          |  THEN [array_to_string(t, ' ')]
@@ -1449,10 +1534,11 @@ object OracleCatalog {
          |SELECT doc_id, source, n_grams, n_leaning,
          |  CAST(n_leaning AS DOUBLE) / CAST(n_grams AS DOUBLE) AS score,
          |  CAST(n_leaning AS DOUBLE) / CAST(n_grams AS DOUBLE) > 0.5 AS selected
-         |FROM doc ORDER BY doc_id""".stripMargin,
+         |FROM doc ORDER BY doc_id""".stripMargin),
 
+    // per-batch corpus novelty decay (crawl self-repetition diagnostic)
     // q138: novelty curve — same fingerprint, min-over-fp, batch rollup
-    "q138_novelty_curve" ->
+    query("q138_novelty_curve", Q.noveltyCurve)(
       s"""WITH d AS (SELECT doc_id, doc_id // 100 AS batch,
          |    md5(array_to_string($toksLower, ' ')) AS fp FROM documents),
          |f AS (SELECT *, min(batch) OVER (PARTITION BY fp) AS first_batch FROM d)
@@ -1460,23 +1546,29 @@ object OracleCatalog {
          |  CAST(sum(CASE WHEN batch = first_batch THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
          |  CAST(sum(CASE WHEN batch = first_batch THEN 1 ELSE 0 END) AS DOUBLE)
          |    / CAST(count(*) AS DOUBLE) AS novelty_rate
-         |FROM f GROUP BY batch ORDER BY batch""".stripMargin,
+         |FROM f GROUP BY batch ORDER BY batch""".stripMargin),
 
+    // grouped top-k via the bounded-heap aggregator on relational data
     // q137: grouped top-k — exact integer-scaled revenue, window replay
-    "q137_top_parts_per_flag" -> topPartsPerFlagSql,
+    query("q137_top_parts_per_flag", Q.topPartsPerFlag, ShapeDispatch.statsCache)(
+      topPartsPerFlagSql),
+    // q137's scale side forced (topk_structs bounded heap), same oracle
+    // as q137 now that q137 rides topKPerGroupAuto
     // q172 = q137's bounded-heap shape FORCED (ShapeDispatch's scale
     // side) — deliberately the SAME oracle: both top-k shapes must hash
     // identically at the gate (the q53/q170 pattern)
-    "q172_top_parts_heap" -> topPartsPerFlagSql,
+    query("q172_top_parts_heap", Q.topPartsPerFlagHeap)(topPartsPerFlagSql),
 
+    // fully-trained IVF-PQ: trained cells + trained codebooks + re-rank
     // q127: fully-trained IVF-PQ — q68's trained cells gate the pair
     // space, q125's trained codebooks quantize it; one pqAnnSql source
-    "q127_ivfpq_trained" -> pqAnnSql(ivfGate = true, trainedCb = true,
-      trainedCells = true),
+    query("q127_ivfpq_trained", Q.ivfPqTrained, Q.centroidsCache, Q.pqIndexCache)(
+      pqAnnSql(ivfGate = true, trainedCb = true, trainedCells = true)),
 
+    // IVF-PQ: probed cells bound the pair space, codes bound the reads
     // q122: IVF-PQ — q30's cell assignment/probing gates q120's ADC pair
     // space; same shared pipeline (pqAnnSql) with the candidate gate on
-    "q122_ivfpq_ann" -> pqAnnSql(ivfGate = true),
+    query("q122_ivfpq_ann", Q.ivfPqAnnTopK, Q.pqIndexCache)(pqAnnSql(ivfGate = true)),
 
     // media payload is encode(text) of documents (Multimodal.mediaFromDocuments)
     // — byte math is mirrorable: n_bytes via octet_length, byte_mean via a
@@ -1484,7 +1576,7 @@ object OracleCatalog {
     // division matches Spark bit-for-bit; no rounding needed). entropy and
     // the feature vector (log/float math, no cross-engine bit contract)
     // stay out of the query — ScalaTest-covered.
-    "q27_media_features" ->
+    query("q27_media_features", Q.mediaFeatures)(
       """WITH m AS (SELECT doc_id AS media_id,
         |   CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
         |   encode(text) AS content FROM documents),
@@ -1494,13 +1586,13 @@ object OracleCatalog {
         |    list_reduce([CAST(strpos('0123456789ABCDEF', substr(hx, 2*i-1, 1)) - 1 AS DOUBLE) * 16
         |                 + CAST(strpos('0123456789ABCDEF', substr(hx, 2*i, 1)) - 1 AS DOUBLE)
         |                 for i in generate_series(1, CAST(n_bytes AS INT))], (a, x) -> a + x) / n_bytes END AS byte_mean
-        |FROM h""".stripMargin,
+        |FROM h""".stripMargin),
 
     // frame geometry mirrors Multimodal.sampleFrames (frameBytes=1024,
     // stride=4): n_frames = max(1, trunc(n_bytes/4096)), frame k covers
     // bytes [k*4096+1, k*4096+1024] ⇒ frame_bytes = clamp(n_bytes - k*4096)
     // — same value substr-then-length produces, without blob slicing.
-    "q28_media_frames" ->
+    query("q28_media_frames", Q.mediaFrames)(
       """WITH m AS (SELECT doc_id AS media_id,
         |   CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
         |   octet_length(encode(text)) AS n_bytes FROM documents),
@@ -1510,14 +1602,15 @@ object OracleCatalog {
         |   CAST(unnest(generate_series(0, n_frames - 1)) AS INT) AS frame_idx FROM f)
         |SELECT media_id, modality, frame_idx,
         |  CAST(greatest(0, least(1024, n_bytes - frame_idx * 4096)) AS INT) AS frame_bytes
-        |FROM x""".stripMargin,
+        |FROM x""".stripMargin),
 
-    "q33_rollup" ->
+    // beyond-reference relational breadth (oracle-checked)
+    query("q33_rollup", Q.rollupReport)(
       s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
          | ${sumMoney("l_quantity")} AS sum_qty
-         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
+         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin),
 
-    "q34_setops_having" ->
+    query("q34_setops_having", Q.setOpsHaving)(
       """WITH building AS (SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
         |open_o AS (SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'),
         |high_value AS (SELECT o_custkey AS custkey FROM orders GROUP BY o_custkey
@@ -1525,23 +1618,23 @@ object OracleCatalog {
         |SELECT custkey, 'building_no_open' AS op_tag FROM (SELECT custkey FROM building EXCEPT SELECT custkey FROM open_o)
         |UNION ALL
         |SELECT custkey, 'building_high_value' AS op_tag FROM (SELECT custkey FROM building INTERSECT SELECT custkey FROM high_value)
-        |ORDER BY op_tag, custkey""".stripMargin,
+        |ORDER BY op_tag, custkey""".stripMargin),
 
-    "q35_semi_anti" ->
+    query("q35_semi_anti", Q.semiAntiJoins)(
       """SELECT o_orderkey, 'has_big_line' AS op_tag FROM orders
         | WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)
         |UNION ALL
         |SELECT o_orderkey, 'no_big_line' AS op_tag FROM orders
         | WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |ORDER BY op_tag, o_orderkey""".stripMargin,
+        |ORDER BY op_tag, o_orderkey""".stripMargin),
 
-    "q36_percentiles" ->
+    query("q36_percentiles", Q.percentiles, ShapeDispatch.statsCache)(
       s"""SELECT l_returnflag, ${round4("quantile_cont(l_quantity, 0.5)")} AS p50,
          | ${round4("quantile_cont(l_quantity, 0.9)")} AS p90,
          | ${round4("quantile_cont(l_extendedprice, 0.99)")} AS price_p99
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "q37_events_pivot" -> {
+    query("q37_events_pivot", Q.eventsPivot) {
       val types = Seq("click", "view", "purchase", "signup", "error")
       val cols = types.flatMap { t =>
         Seq(
@@ -1553,16 +1646,17 @@ object OracleCatalog {
          |FROM events GROUP BY 1 ORDER BY cohort""".stripMargin
     },
 
-    "q40_cube" ->
+    // relational breadth: grouping-sets lattice + window frames
+    query("q40_cube", Q.cubeReport)(
       s"""SELECT l_returnflag, l_linestatus,
          | GROUPING(l_returnflag, l_linestatus) AS gid,
          | count(*) AS n_rows, ${sumMoney("l_quantity")} AS sum_qty
          |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-         |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
+         |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin),
 
     // moving sum through DECIMAL(18,4): exact addition is association-
     // independent, so the sliding-frame implementations agree bit-for-bit
-    "q41_window_frames" ->
+    query("q41_window_frames", Q.eventsWindowFrames)(
       s"""SELECT user_id, event_id,
          | ${fmtTs("date_trunc('second', ts)")} AS ts_s,
          | CAST(row_number() OVER w AS INTEGER) AS seq,
@@ -1575,11 +1669,12 @@ object OracleCatalog {
          |FROM events
          |WINDOW w AS (PARTITION BY user_id ORDER BY date_trunc('second', ts), event_id),
          |  w7 AS (PARTITION BY user_id ORDER BY date_trunc('second', ts), event_id
-         |         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
+         |         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin),
 
+    // LLM-pipeline breadth: tf-idf terms + deterministic hash split
     // log-free idf (tf * N / df): exact-integer doubles + one division,
     // bit-identical across engines where ln() is not
-    "q42_tfidf_topterms" ->
+    query("q42_tfidf_topterms", Q.tfidfTopTerms)(
       s"""WITH tok AS (SELECT doc_id, unnest($toksLower) AS term FROM documents),
          |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),
          |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
@@ -1590,17 +1685,18 @@ object OracleCatalog {
          |SELECT doc_id, term, tf, df, score, CAST(rank AS INTEGER) AS rank
          |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank
          |      FROM scored)
-         |WHERE rank <= 3""".stripMargin,
+         |WHERE rank <= 3""".stripMargin),
 
-    "q43_hash_split" ->
+    query("q43_hash_split", Q.hashSplit)(
       """SELECT doc_id,
         | CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
         |   THEN 'heldout' ELSE 'train' END AS split
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
 
+    // decontamination (train/heldout 8-gram overlap) + column profiler
     // exact 8-gram containment against the deduped train gram set — same
     // split rule as q43; grams md5-hashed like the Spark side
-    "q44_decontamination" ->
+    query("q44_decontamination", Q.decontamination, Q.gramsCache)(
       s"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |sh AS (SELECT doc_id,
          |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
@@ -1611,12 +1707,12 @@ object OracleCatalog {
          |SELECT doc_id, count(DISTINCT gh) AS n_shared_grams
          |FROM g JOIN tg USING (gh)
          |WHERE split = 'heldout'
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // one row per profiled column; doubles stay doubles (double→text
     // formatting is engine-specific), timestamps profile over their
     // formatted-seconds form
-    "q45_column_profile" -> {
+    query("q45_column_profile", Q.columnProfile) {
       def num(c: String) =
         s"""SELECT '$c' AS col_name, count(*) AS n_rows,
            | CAST(coalesce(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_nulls,
@@ -1640,26 +1736,28 @@ object OracleCatalog {
          |) ORDER BY col_name""".stripMargin
     },
 
+    // S2→S5 CSV ingest end-to-end + scale-safe approx percentiles
     // round-trip oracle: the landed CSV→parquet table must equal the source
     // byte-for-byte, and the inference path must agree (literal true)
-    "q38_csv_ingest" ->
+    query("q38_csv_ingest", Q.csvIngest)(
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
         | true AS inferred_ok
-        |FROM customer""".stripMargin,
+        |FROM customer""".stripMargin),
 
     // property-based oracle: the GK accuracy contract holds — the Spark side
     // outputs VERIFIED booleans (rank interval vs target ± n/accuracy), the
     // oracle the contract itself. Approx VALUES are engine-specific by
     // design and never cross the boundary.
-    "q39_approx_percentiles" ->
+    query("q39_approx_percentiles", Q.approxPercentiles)(
       """SELECT l_returnflag, count(*) AS n_rows,
         | true AS p50_ok, true AS p90_ok, true AS p99_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
+    // operators Spark lacks natively, composed scale-safe
     // replays CoreOps.asofJoin's union + running last-non-null construction
     // so tie semantics are identical by definition (right-before-left at
     // equal ts ⇒ <= match; greatest orderkey wins equal-ts order ties)
-    "q46_asof_join" ->
+    query("q46_asof_join", Q.asofEventsOrders)(
       s"""WITH l AS (SELECT event_id, user_id, date_trunc('second', ts) AS uts,
          |             1 AS side, CAST(NULL AS BIGINT) AS tie,
          |             CAST(NULL AS BIGINT) AS oid, CAST(NULL AS TIMESTAMP) AS odate
@@ -1675,11 +1773,11 @@ object OracleCatalog {
          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
          |SELECT event_id, user_id, ${fmtTs("uts")} AS ts_s,
          | m_oid AS order_id, ${fmtTs("m_odate")} AS order_date
-         |FROM m WHERE side = 1""".stripMargin,
+         |FROM m WHERE side = 1""".stripMargin),
 
     // the oracle runs the direct inequality join (DuckDB plans IEJoin);
     // the Spark side buckets it into an equi join — identical pairs
-    "q47_range_join" ->
+    query("q47_range_join", Q.rangeJoinOrderLines)(
       s"""SELECT o_orderkey,
          | count(*) AS n_lines, ${sumMoney("l_quantity")} AS qty_sum
          |FROM orders
@@ -1688,10 +1786,11 @@ object OracleCatalog {
          |  ON o_custkey = le.l_custkey
          | AND le.l_shipdate >= o_orderdate
          | AND le.l_shipdate < o_orderdate + INTERVAL 30 DAY
-         |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
+         |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin),
 
+    // repetition/boilerplate quality rule
     // NON-distinct 3-gram stream (repetition needs counts, not sets)
-    "q48_repetition" -> {
+    query("q48_repetition", Q.repetitionScore) {
       val rawShingle3 =
         "CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')] " +
           "ELSE [concat_ws(' ', t[i], t[i+1], t[i+2]) for i in generate_series(1, len(t) - 2)] END"
@@ -1703,33 +1802,39 @@ object OracleCatalog {
          |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin
     },
 
+    // semi-structured path: lossless JSON pack/unpack
     // the oracle pins the ORIGINAL typed values — the Spark side must
     // round-trip them through JSON losslessly to match
-    "q50_json_roundtrip" ->
+    query("q50_json_roundtrip", Q.jsonRoundtrip)(
       s"""SELECT o_orderkey, o_orderstatus AS st, o_totalprice AS tp,
          | ${fmtTs("o_orderdate")} AS od, o_orderstatus AS st_by_path
-         |FROM orders ORDER BY o_orderkey""".stripMargin,
+         |FROM orders ORDER BY o_orderkey""".stripMargin),
 
+    // regex scrubbing / PII-style redaction
     // 'g' flag: DuckDB's regexp_replace is first-match-only by default,
     // Spark's replaces all
-    "q51_redaction" ->
+    query("q51_redaction", Q.redaction)(
       """SELECT c_custkey,
         | regexp_replace(c_name, '[0-9]+', '#', 'g') AS name_masked,
         | coalesce(regexp_extract(c_name, '[0-9]+', 0), '') AS id_str,
         | CAST(len(regexp_extract_all(c_name, '[0-9]+')) AS INTEGER) AS n_digit_runs
-        |FROM customer ORDER BY c_custkey""".stripMargin,
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
-    "q53_rank_functions" -> rankFunctionsSql,
+    // ranking-function breadth (rank/dense_rank/percent_rank/cume_dist/ntile)
+    query("q53_rank_functions", Q.rankFunctions, ShapeDispatch.statsCache)(rankFunctionsSql),
+    // q53's scale side forced (ShapeDispatch's ranged shape), same window
+    // oracle as q53: both sides of the rank dial hash-checked at the gate
     // q170 = q53's ranged shape FORCED (ShapeDispatch's scale side) —
     // deliberately the SAME window-function oracle: the dispatcher's two
     // shapes must hash identically at the gate (the q36/q166 pattern)
-    "q170_rank_functions_ranged" -> rankFunctionsSql,
+    query("q170_rank_functions_ranged", Q.rankFunctionsRanged)(rankFunctionsSql),
 
+    // near-dup pairs -> connected components -> canonical doc per cluster
     // dedup clusters: verified near-dup pairs (the q19 candidates re-scored
     // with true Jaccard, q32's `pv` shape) → connected components via a
     // recursive reachability CTE; component = min reachable doc_id — the
     // same fixpoint the Spark min-label propagation converges to.
-    "q54_dedup_clusters" ->
+    query("q54_dedup_clusters", Q.dedupClusters, Q.compCache)(
       s"""WITH RECURSIVE $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -1751,13 +1856,15 @@ object OracleCatalog {
          |SELECT doc_id, component,
          | CAST(count(*) OVER (PARTITION BY component) AS INTEGER) AS cluster_size,
          | doc_id = component AS is_canonical
-         |FROM comp""".stripMargin,
+         |FROM comp""".stripMargin),
 
+    // leakage-safe split: train/val/test assignment rides the near-dup
+    // component, so near-duplicates never straddle splits
     // q169: q54's recursive component chain + the q57 md5-prefix uniform
     // OF THE COMPONENT id — split is a pure function of the cluster, so
     // near-dups never straddle (v/2^32 is exact in a double; the 0.8/0.9
     // gates compare identically in both engines)
-    "q169_leakage_safe_split" ->
+    query("q169_leakage_safe_split", Q.leakageSafeSplit(_, _), Q.compCache)(
       s"""WITH RECURSIVE $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -1783,22 +1890,23 @@ object OracleCatalog {
          |SELECT doc_id, component,
          |  CAST(count(*) OVER (PARTITION BY component) AS INTEGER) AS cluster_size,
          |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'validation' ELSE 'test' END AS split
-         |FROM cu ORDER BY doc_id""".stripMargin,
+         |FROM cu ORDER BY doc_id""".stripMargin),
 
+    // training-pipeline breadth: chunking / packing / sampling / reshaping
     // fixed-size token chunks with overlap; DuckDB's inclusive 1-based list
     // slice t[s : s+63] == Spark slice(t, s, 64); chunk_idx = (start-1)//48
     // == posexplode position since starts are arithmetic
-    "q55_chunking" ->
+    query("q55_chunking", Q.chunkDocs)(
       raw"""WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
          |st AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t), 1), 48)) AS s FROM tk)
          |SELECT doc_id, CAST((s - 1) // 48 AS INTEGER) AS chunk_idx,
          | array_to_string(t[s : s + 63], ' ') AS chunk_text,
          | CAST(least(64, len(t) - s + 1) AS INTEGER) AS n_chunk_tokens
-         |FROM st""".stripMargin,
+         |FROM st""".stripMargin),
 
     // contiguous token-budget packing per source shard: running sum in
     // doc_id order, pack = the 2048-token bin the doc's first token falls in
-    "q56_packing" ->
+    query("q56_packing", Q.packSequences)(
       raw"""WITH b AS (SELECT doc_id, source,
          |  CASE WHEN len(trim(text)) = 0 THEN 0
          |    ELSE CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) END AS n_tokens
@@ -1809,11 +1917,11 @@ object OracleCatalog {
          |SELECT doc_id, source, n_tokens,
          | CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
          | CAST((cum - n_tokens) - ((cum - n_tokens) // 2048) * 2048 AS BIGINT) AS pack_offset
-         |FROM c""".stripMargin,
+         |FROM c""".stripMargin),
 
     // content-addressed uniform: first 8 md5 hex chars as integer / 2^32
     // (division by a power of two is FP-exact, so u crosses engines raw)
-    "q57_stratified_sample" ->
+    query("q57_stratified_sample", Q.stratifiedSample)(
       """WITH h AS (SELECT doc_id, source,
         |  list_reduce([CAST(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT)
         |               for i in generate_series(1, 8)], (a, x) -> a * 16 + x) AS v
@@ -1822,9 +1930,9 @@ object OracleCatalog {
         |  CASE WHEN source IN ('src0', 'src1', 'src2') THEN 0.25 ELSE 0.75 END AS rate
         |FROM h
         |WHERE CAST(v AS DOUBLE) / 4294967296.0
-        |      < CASE WHEN source IN ('src0', 'src1', 'src2') THEN 0.25 ELSE 0.75 END""".stripMargin,
+        |      < CASE WHEN source IN ('src0', 'src1', 'src2') THEN 0.25 ELSE 0.75 END""".stripMargin),
 
-    "q58_unpivot" ->
+    query("q58_unpivot", Q.unpivotMetrics)(
       s"""WITH w AS (SELECT l_returnflag,
          |  ${sumMoney("l_quantity")} AS sum_qty,
          |  ${sumMoney("l_extendedprice")} AS sum_price,
@@ -1832,19 +1940,20 @@ object OracleCatalog {
          | FROM lineitem GROUP BY l_returnflag)
          |SELECT l_returnflag, metric, value
          |FROM w UNPIVOT (value FOR metric IN (sum_qty, sum_price, n_rows))
-         |ORDER BY l_returnflag, metric""".stripMargin,
+         |ORDER BY l_returnflag, metric""".stripMargin),
 
+    // sketch contracts + candidate verification
     // contract oracle (q39/q38 pattern): the HLL++ estimate is engine-
     // specific by design; what crosses the boundary is the exact count and
     // the VERIFIED 5-sigma error contract
-    "q59_approx_distinct" ->
+    query("q59_approx_distinct", Q.approxDistinctContract)(
       """SELECT l_returnflag, count(DISTINCT l_orderkey) AS nd_exact,
         | true AS sketch_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
     // exact Levenshtein over the q19 LSH candidate pairs only; both engines
     // implement Wagner-Fischer character distance
-    "q60_edit_distance" ->
+    query("q60_edit_distance", Q.editDistancePairs, Q.pairsCache)(
       s"""WITH $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -1858,11 +1967,12 @@ object OracleCatalog {
          |   / greatest(CAST(greatest(len(a.text), len(b.text)) AS DOUBLE), CAST(1.0 AS DOUBLE)) AS edit_frac
          |FROM cand JOIN documents a ON cand.doc_a = a.doc_id
          |          JOIN documents b ON cand.doc_b = b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin,
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
+    // semi-structured extraction from a STORED json column
     // k re-extracted independently via regexp (the Spark side parses real
     // JSON twice — get_json_object + from_json — and certifies agreement)
-    "q61_props_extract" ->
+    query("q61_props_extract", Q.propsExtract)(
       raw"""WITH k AS (SELECT event_type,
            |  CAST(regexp_extract(props, '"k":\s*(-?[0-9]+)', 1) AS INTEGER) AS k FROM events)
            |SELECT event_type, count(*) AS n,
@@ -1870,16 +1980,18 @@ object OracleCatalog {
            |  min(k) AS min_k, max(k) AS max_k,
            |  count(DISTINCT k) AS n_distinct_k,
            |  true AS parse_agree
-           |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin,
+           |FROM k GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q62_ngram_counts" ->
+    // corpus-level n-gram frequency table (occurrences + doc freq, top-100)
+    query("q62_ngram_counts", Q.ngramCounts)(
       s"""WITH $tkCte,
          |g AS (SELECT doc_id, unnest(${shingleAllSqlN(3)}) AS gram FROM tk)
          |SELECT gram, count(*) AS n_occurrences, count(DISTINCT doc_id) AS n_docs
          |FROM g GROUP BY gram
-         |ORDER BY n_occurrences DESC, gram ASC LIMIT 100""".stripMargin,
+         |ORDER BY n_occurrences DESC, gram ASC LIMIT 100""".stripMargin),
 
-    "q63_value_histogram" ->
+    // profiling: equal-width histogram over a global min/max
+    query("q63_value_histogram", Q.valueHistogram)(
       s"""WITH s AS (SELECT min(value) AS lo, max(value) AS hi FROM events),
          |b AS (SELECT CASE WHEN hi = lo THEN 0
          |        ELSE CAST(least(floor((value - lo) / ((hi - lo) / 20.0)), 19.0) AS INTEGER) END AS bucket,
@@ -1890,26 +2002,29 @@ object OracleCatalog {
          |  floor((lo + CAST(bucket AS DOUBLE) * ((hi - lo) / 20.0)) * 1000000.0 + 0.5) / 1000000.0 AS bucket_lo,
          |  floor((lo + CAST(bucket + 1 AS DOUBLE) * ((hi - lo) / 20.0)) * 1000000.0 + 0.5) / 1000000.0 AS bucket_hi,
          |  n
-         |FROM g ORDER BY bucket""".stripMargin,
+         |FROM g ORDER BY bucket""".stripMargin),
 
+    // native session_window (streaming-capable) vs independent island oracle
     // independent construction: lag + running-sum islands. session_window
     // boundary semantics (pinned by Round5Spec on synthetic gaps, and by a
     // real 1800s gap in sf0.1): an event exactly gap after its predecessor
     // MERGES into the session (windows touching at the boundary count as
     // overlapping) ⇒ new session only when diff > 1800 — the same boundary
     // as q31's manual islands; window end = last event + gap.
-    "q64_session_window" -> sessionIslandSql,
+    query("q64_session_window", Q.sessionWindows)(sessionIslandSql),
 
+    // pure-SQL surface: the gap_sessions TVF registered by GraftSql
     // q84 drives the SQL TVF surface (GraftSql gap_sessions) — same
     // semantics, same oracle
-    "q84_sql_tvf_sessions" -> sessionIslandSql,
+    query("q84_sql_tvf_sessions", Q.sqlTvfSessions)(sessionIslandSql),
 
+    // graph centrality: quantized-portable PageRank over the near-dup graph
     // 2 unrolled PageRank iterations over the q19 candidate-pair graph.
     // Contributions quantize to BIGINT before each sum (associative =>
     // partition-order-free on the Spark side, exactly replayable here);
     // the teleport/init terms spell the identical IEEE op order
     // ((1.0 - 0.85)/n, 1.0/n) the Scala literals compute.
-    "q86_pagerank" -> {
+    query("q86_pagerank", Q.pagerankDocs, Q.pairsCache) {
       def iterCtes(i: Int, prev: String) =
         s"""c$i AS (SELECT sym.dst AS id,
            |        CAST(floor($prev.rank / CAST(deg.deg AS DOUBLE) * CAST(0.85 AS DOUBLE) * 1e12 + 0.5) AS BIGINT) AS cq
@@ -1939,10 +2054,11 @@ object OracleCatalog {
          |SELECT id AS doc_id, rank FROM r2 ORDER BY doc_id""".stripMargin
     },
 
+    // incremental ingest: incoming batch deduped against the corpus band table
     // bands over ALL docs (a signature is corpus-independent), cross
     // pairs filtered by the id-mod split; near hits verified with the
     // same Jaccard fragment as q20/q32
-    "q89_incremental_ingest" ->
+    query("q89_incremental_ingest", Q.incrementalIngest)(
       s"""WITH $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -1968,12 +2084,13 @@ object OracleCatalog {
          |FROM inc
          |LEFT JOIN (SELECT DISTINCT doc_id FROM exact) exact USING (doc_id)
          |LEFT JOIN near USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
+    // BPE tokenizer training: two pair-merge iterations, greedy-left fold
     // both BPE iterations replayed: pair counts -> top-1 (count desc,
     // pair asc) -> greedy left fold, twice; list_reduce seeds from the
     // first single-char element (same left fold as Spark's aggregate)
-    "q92_bpe_merges" -> {
+    query("q92_bpe_merges", Q.bpeMerges) {
       def pairTop(src: String, m: String) =
         s"""p$m AS (SELECT p.a AS a, p.b AS b, sum(freq) AS cnt
            |      FROM (SELECT freq, unnest([struct_pack(a := sym[i], b := sym[i+1])
@@ -2001,11 +2118,12 @@ object OracleCatalog {
            |FROM s2 ORDER BY freq DESC, tok ASC LIMIT 15""".stripMargin
     },
 
+    // BPE training to a target vocab size: the full merge-table artifact
     // q94: the full merge sequence replayed — 10 unrolled pairTop+fold
     // steps (the Spark side's maxMerges cap), then rows filtered to the
     // target vocab (base charset size + step ≤ 32). Same greedy fold and
     // (count desc, pair asc) tie-break as q92.
-    "q94_bpe_vocab" -> {
+    query("q94_bpe_vocab", Q.bpeVocab(_, _)) {
       val maxMerges = 10
       val targetVocab = 32
       def pairTop(src: String, m: String) =
@@ -2042,9 +2160,17 @@ object OracleCatalog {
            |ORDER BY step""".stripMargin
     },
 
+    // infix containment dups (quote inclusion / boilerplate wrapping).
+    // String sort puts q100 between q10 and q11: it is the FIRST consumer
+    // of the session gram table in sweep order (q96 stays last). Without
+    // its early release the gram cache would sit across the star family
+    // and the whole dedup middle — the r5 eviction-churn shape (measured:
+    // q81 1.0s → 18.9s when q100 held the cache to q96). Releasing
+    // immediately costs one rebuild at q44; the q44→q96 span is measured
+    // safe.
     // q100: same min-gram candidate bucket + token-boundary substring
     // verification; distinct gram lists on both engines
-    "q100_containment_dups" ->
+    query("q100_containment_dups", Q.containmentDups, Q.gramsCache)(
       s"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |tj AS (SELECT doc_id, len(t) AS n, array_to_string(t, ' ') AS joined FROM tk),
          |g AS (SELECT doc_id, md5(unnest(sh)) AS gh
@@ -2062,12 +2188,13 @@ object OracleCatalog {
          |SELECT c.doc_id, CAST(c.n AS INTEGER) AS n_tokens,
          |  CAST(coalesce(v.n_hosts, 0) AS BIGINT) AS n_hosts,
          |  coalesce(v.n_hosts, 0) > 0 AS is_contained
-         |FROM c LEFT JOIN v USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM c LEFT JOIN v USING (doc_id) ORDER BY doc_id""".stripMargin).copy(releaseEarly = true),
 
+    // classifier distillation: exact-least-squares student of the q16 gate
     // q105: classifier distillation — exact least squares via HUGEINT
     // normal equations + Cramer (bit-exact weight replay), then one
     // broadcast scoring pass; teacher label = q16 quality gate at 0.8
-    "q105_quality_classifier" ->
+    query("q105_quality_classifier", Q.qualityClassifier)(
       s"""WITH ${statsCte("documents")},
          |f AS (SELECT CAST(n_tokens AS BIGINT) AS x1, CAST(n_stop AS BIGINT) AS x2,
          |        CASE WHEN $qualityExpr >= 0.8 THEN 1 ELSE 0 END AS y
@@ -2101,13 +2228,14 @@ object OracleCatalog {
          |  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
          |  CAST(tn AS BIGINT) AS tn, CAST(fn AS BIGINT) AS fn,
          |  CAST(tp + tn AS DOUBLE) / CAST(n_docs AS DOUBLE) AS accuracy
-         |FROM c""".stripMargin,
+         |FROM c""".stripMargin),
 
+    // reliability table of the distilled quality classifier (q105)
     // q121: calibration/reliability table of q105's student — same
     // training replay, then floor(10·score) buckets clamped to [-1,10];
     // the bucket mean routes through an exact DECIMAL(18,6) sum so it is
     // partial-aggregation-order-independent in both engines
-    "q121_calibration" ->
+    query("q121_calibration", Q.classifierCalibration)(
       s"""WITH ${statsCte("documents")},
          |f AS (SELECT CAST(n_tokens AS BIGINT) AS x1, CAST(n_stop AS BIGINT) AS x2,
          |        CASE WHEN $qualityExpr >= 0.8 THEN 1 ELSE 0 END AS y
@@ -2137,12 +2265,13 @@ object OracleCatalog {
          |  CAST(sum(y) AS BIGINT) AS n_pos,
          |  CAST(sum(CAST(score AS DECIMAL(18,6))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_score,
          |  CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
-         |FROM bk GROUP BY bucket ORDER BY bucket""".stripMargin,
+         |FROM bk GROUP BY bucket ORDER BY bucket""".stripMargin),
 
+    // CCNet-style perplexity buckets, log-free (exact-integer score sums)
     // q103: log-free CCNet perplexity buckets — exact-integer score sums
     // (Σ pair-count / Σ head-count), integer rank-third cut, doc_id
     // tiebreak; one double division per doc
-    "q103_bigram_predictability" ->
+    query("q103_bigram_predictability", Q.bigramPredictability)(
       s"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |bg AS (SELECT doc_id,
          |    unnest(t[1:len(t)-1]) AS w1,
@@ -2165,11 +2294,12 @@ object OracleCatalog {
          |             FROM sc), n)
          |SELECT d.doc_id, CAST(coalesce(bk.n_bigrams, 0) AS BIGINT) AS n_bigrams,
          |  bk.predictability, bk.ppl_bucket
-         |FROM documents d LEFT JOIN bk USING (doc_id) ORDER BY doc_id""".stripMargin,
+         |FROM documents d LEFT JOIN bk USING (doc_id) ORDER BY doc_id""".stripMargin),
 
+    // per-source quality drift: binned KS vs the pooled corpus
     // q99: binned two-sample KS per source vs pooled corpus — same grid,
     // same integer argmax (hugeint cross-products), one double ratio
-    "q99_quality_drift" ->
+    query("q99_quality_drift", Q.qualityDrift)(
       s"""WITH ${statsCte("documents")},
          |qd AS (SELECT doc_id, $qualityExpr AS q FROM b),
          |q0 AS (SELECT d.source, qd.q FROM qd JOIN documents d USING (doc_id)),
@@ -2195,11 +2325,12 @@ object OracleCatalog {
          |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
          |  CAST(ks_num AS DOUBLE) / (CAST(n_docs AS DOUBLE) * CAST(n_g AS DOUBLE)) AS ks,
          |  (CAST(ks_num AS DOUBLE) / (CAST(n_docs AS DOUBLE) * CAST(n_g AS DOUBLE))) > 0.1 AS drifted
-         |FROM k ORDER BY source""".stripMargin,
+         |FROM k ORDER BY source""".stripMargin),
 
+    // truncated-crawl dup class: full text = strict prefix of a longer doc
     // q98: same hash construction — full-text hash of short candidates
     // vs per-distinct-candidate-length prefix hashes of every longer doc
-    "q98_prefix_dups" ->
+    query("q98_prefix_dups", Q.prefixDups)(
       s"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |tn AS (SELECT doc_id, t, len(t) AS n FROM tk),
          |c AS (SELECT doc_id, n, md5(array_to_string(t, ' ')) AS h FROM tn WHERE n <= 64),
@@ -2210,11 +2341,12 @@ object OracleCatalog {
          |      FROM c LEFT JOIN hst USING (h) GROUP BY c.doc_id, c.n)
          |SELECT doc_id, CAST(n AS INTEGER) AS n_tokens,
          |  CAST(n_hosts AS BIGINT) AS n_hosts, n_hosts > 0 AS is_prefix_dup
-         |FROM j ORDER BY doc_id""".stripMargin,
+         |FROM j ORDER BY doc_id""".stripMargin),
 
+    // hard-negative mining: per-anchor top-k wrong-label neighbors
     // q97: q22's cosine top-k with the label-inequality filter — anchors
     // are the same vec_id < 10 family; identical rounding + tie-break
-    "q97_hard_negatives" ->
+    query("q97_hard_negatives", Q.hardNegatives)(
       s"""WITH e AS (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
          |en AS (SELECT vec_id, label, v, sqrt($dotSelf) AS nrm FROM e),
          |q AS (SELECT vec_id AS query_id, label AS qlbl, v AS qv, nrm AS qnrm FROM en WHERE vec_id < 10),
@@ -2223,12 +2355,13 @@ object OracleCatalog {
          |  FROM en CROSS JOIN q WHERE query_id != vec_id AND qlbl != label)
          |SELECT query_id, vec_id AS neg_id, score, CAST(rank AS INTEGER) AS rank
          |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank FROM s)
-         |WHERE rank <= 5""".stripMargin,
+         |WHERE rank <= 5""".stripMargin),
 
+    // source-pair 8-gram Jaccard overlap: the dataset-mixing diagnostic
     // q96: distinct 8-gram sets per source, gram-key self-join for the
     // pair intersections, size cross for the pair frame — same shapes
     // as the Spark side; one IEEE divide for the jaccard
-    "q96_source_overlap" ->
+    query("q96_source_overlap", Q.sourceOverlap, Q.gramsCache)(
       s"""WITH tk AS (SELECT source, $toksLower AS t FROM documents),
          |sh AS (SELECT source, ${shingleSqlN(8)} AS sh FROM tk),
          |g AS (SELECT DISTINCT source, gh
@@ -2245,20 +2378,22 @@ object OracleCatalog {
          |  CAST(coalesce(cm.n_common, 0) AS DOUBLE)
          |    / CAST(p.n_a + p.n_b - coalesce(cm.n_common, 0) AS DOUBLE) AS jaccard
          |FROM p LEFT JOIN cm USING (source_a, source_b)
-         |ORDER BY source_a, source_b""".stripMargin,
+         |ORDER BY source_a, source_b""".stripMargin),
 
+    // Space-Saving (min-replace) heavy hitters: q91's over-estimating dual
     // q95: like q91 — the sketch's counters/eps are merge-order-specific,
     // so only the exact top-10 and the theory-guaranteed booleans cross
-    "q95_space_saving" ->
+    query("q95_space_saving", Q.spaceSavingTokens)(
       raw"""WITH tok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok FROM documents),
            |e AS (SELECT tok, count(*) AS exact_n FROM tok GROUP BY tok
            |      ORDER BY exact_n DESC, tok ASC LIMIT 10)
            |SELECT tok, exact_n, true AS est_ge_exact, true AS est_within_eps
-           |FROM e ORDER BY exact_n DESC, tok ASC""".stripMargin,
+           |FROM e ORDER BY exact_n DESC, tok ASC""".stripMargin),
 
+    // grouped heavy hitters: per-source frequent-token sketch contract
     // per-source exact top-3 + theory-guaranteed booleans (q91's grouped
     // form; the same rk tie-break as the Spark window)
-    "q93_grouped_heavy_hitters" ->
+    query("q93_grouped_heavy_hitters", Q.heavyHittersBySource)(
       raw"""WITH tok AS (SELECT source, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok
            |             FROM documents),
            |e AS (SELECT source, tok, count(*) AS exact_n FROM tok GROUP BY source, tok),
@@ -2267,19 +2402,21 @@ object OracleCatalog {
            |              ORDER BY exact_n DESC, tok ASC) AS INTEGER) AS rk
            |      FROM e)
            |SELECT source, tok, rk, exact_n, true AS est_le_exact, true AS est_ge_lower
-           |FROM r WHERE rk <= 3 ORDER BY source, rk""".stripMargin,
+           |FROM r WHERE rk <= 3 ORDER BY source, rk""".stripMargin),
 
+    // Misra-Gries frequent-items sketch with its verified error contract
     // like q39/q59/q69: sketch counters are partition-order-specific,
     // so only the exact top-10 and the theory-guaranteed booleans cross
-    "q91_heavy_hitters" ->
+    query("q91_heavy_hitters", Q.heavyHittersTokens)(
       raw"""WITH tok AS (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok FROM documents),
            |e AS (SELECT tok, count(*) AS exact_n FROM tok GROUP BY tok
            |      ORDER BY exact_n DESC, tok ASC LIMIT 10)
            |SELECT tok, exact_n, true AS est_le_exact, true AS est_ge_lower
-           |FROM e ORDER BY exact_n DESC, tok ASC""".stripMargin,
+           |FROM e ORDER BY exact_n DESC, tok ASC""".stripMargin),
 
+    // LATERAL correlated subquery: top-2 related rows per driving row
     // identical SQL text on both engines (the point of q90)
-    "q90_lateral_topk" ->
+    query("q90_lateral_topk", Q.lateralTopNations)(
       """WITH nc AS (SELECT n_regionkey, n_name, count(*) AS n_customers
         |            FROM customer JOIN nation ON c_nationkey = n_nationkey
         |            GROUP BY n_regionkey, n_name)
@@ -2288,12 +2425,13 @@ object OracleCatalog {
         |LATERAL (SELECT n_name, n_customers FROM nc
         |         WHERE nc.n_regionkey = r.r_regionkey
         |         ORDER BY n_customers DESC, n_name ASC LIMIT 2) t
-        |ORDER BY region, n_customers DESC, nation""".stripMargin,
+        |ORDER BY region, n_customers DESC, nation""".stripMargin),
 
+    // point-in-time lookup: scd2 history composed with the as-of join
     // scd2 change stream (q78's CTEs) + the q46 union/last-ignore-nulls
     // as-of replay: right rows sort before left at equal ts, greatest
     // version among same-second changes wins
-    "q88_pit_join" ->
+    query("q88_pit_join", Q.pitEnrichment)(
       s"""WITH e AS (SELECT user_id, event_id, event_type, date_trunc('second', ts) AS ts_sec,
          |             epoch(date_trunc('second', ts)) AS ep FROM events),
          |l1 AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id ORDER BY ep ASC, event_id ASC)
@@ -2311,10 +2449,11 @@ object OracleCatalog {
          |      FROM u WINDOW w AS (PARTITION BY user_id ORDER BY uts, side, tie
          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
          |SELECT event_id, user_id, ${fmtTs("uts")} AS ts_s, m_state AS state, m_version AS version
-         |FROM m WHERE side = 1 ORDER BY event_id""".stripMargin,
+         |FROM m WHERE side = 1 ORDER BY event_id""".stripMargin),
 
+    // WITH RECURSIVE: 2-hop neighborhood sizes over the near-dup graph
     // same recursion DuckDB-side, over the serialized-minhash pair CTEs
-    "q87_recursive_reach" ->
+    query("q87_recursive_reach", Q.recursiveReach, Q.pairsCache)(
       s"""WITH RECURSIVE $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -2333,9 +2472,10 @@ object OracleCatalog {
          |  WHERE h.depth < 2
          |)
          |SELECT seed AS doc_id, count(DISTINCT id) AS n_within_2hops
-         |FROM hop GROUP BY seed ORDER BY doc_id""".stripMargin,
+         |FROM hop GROUP BY seed ORDER BY doc_id""".stripMargin),
 
-    "q85_source_mixture" ->
+    // dataset mixture: per-source rates with epoch repetition + fractional top-up
+    query("q85_source_mixture", Q.sourceMixture)(
       """WITH r AS (SELECT doc_id, source,
         |    CAST(CASE CAST(substr(source, 4) AS INT) % 3
         |      WHEN 0 THEN 0.5 WHEN 1 THEN 1.0 ELSE 2.5 END AS DOUBLE) AS rate,
@@ -2348,20 +2488,22 @@ object OracleCatalog {
         |      FROM r)
         |SELECT doc_id, source, rate, CAST(unnest(generate_series(1, copies)) AS INT) AS rep
         |FROM c WHERE copies >= 1
-        |ORDER BY doc_id, rep""".stripMargin,
+        |ORDER BY doc_id, rep""".stripMargin),
 
+    // skew-salted join checked against the plain-join oracle
     // the PLAIN join — the Spark side goes through CoreOps.saltedJoin, so a
     // hash match proves salting preserves join semantics exactly
-    "q65_salted_join" ->
+    query("q65_salted_join", Q.saltedJoinAgg)(
       s"""SELECT o_orderstatus, count(*) AS n_lines,
          | ${sumMoney("l_extendedprice * (1.0 - l_discount)")} AS net_revenue
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
 
+    // quality-weighted deterministic (content-addressed) sampling
     // u = first 8 md5 hex chars of 'ws|'||doc_id as a 32-bit int / 2^32 —
     // an exact binary fraction, so u and the keep_prob compare are
     // bit-portable without rounding
-    "q66_weighted_sample" ->
+    query("q66_weighted_sample", Q.weightedSample)(
       s"""WITH ${statsCte("documents")},
          |q AS (SELECT doc_id, $qualityExpr AS quality FROM b),
          |h AS (SELECT doc_id, quality,
@@ -2369,11 +2511,12 @@ object OracleCatalog {
          |                    for i in generate_series(1, 8)], (a, x) -> a * 16 + x) AS DOUBLE) / 4294967296.0 AS u
          |FROM q)
          |SELECT doc_id, quality, u, 0.2 + 0.6 * quality AS keep_prob
-         |FROM h WHERE u < 0.2 + 0.6 * quality ORDER BY doc_id""".stripMargin,
+         |FROM h WHERE u < 0.2 + 0.6 * quality ORDER BY doc_id""".stripMargin),
 
+    // per-label embedding centroids (quantized-exact portable means)
     // quantized-exact means: sum of integer-valued doubles is associative,
     // so the distributed Spark sum and DuckDB's agree bit-for-bit
-    "q67_label_centroids" ->
+    query("q67_label_centroids", Q.labelCentroids)(
       """WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
         |x AS (SELECT label,
         |        unnest(generate_series(1, len(v))) AS pos,
@@ -2382,17 +2525,19 @@ object OracleCatalog {
         |g AS (SELECT label, pos, count(*) AS n_vecs, sum(xq) AS sq FROM x GROUP BY label, pos)
         |SELECT label, CAST(pos AS INTEGER) AS dim, n_vecs,
         |  sq / (1000000.0 * CAST(n_vecs AS DOUBLE)) AS centroid
-        |FROM g ORDER BY label, dim""".stripMargin,
+        |FROM g ORDER BY label, dim""".stripMargin),
 
+    // format breadth: JSON-lines ingest + ORC round-trip vs the original table
     // round-trip ingests: the oracle is the ORIGINAL table — any format
     // drift (text doubles, escaping, nulls, column types) breaks the hash
-    "q75_json_ingest" ->
-      "SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM part ORDER BY p_partkey",
+    query("q75_json_ingest", Q.jsonIngest)(
+      "SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM part ORDER BY p_partkey"),
 
-    "q76_orc_roundtrip" ->
-      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey",
+    query("q76_orc_roundtrip", Q.orcRoundtrip)(
+      "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier ORDER BY s_suppkey"),
 
-    "q77_full_outer" ->
+    // join-type completion: FULL OUTER with both unmatched sides tagged
+    query("q77_full_outer", Q.fullOuterOrders)(
       s"""WITH seg AS (SELECT c_custkey, c_name FROM customer WHERE c_mktsegment = 'BUILDING'),
          |oa AS (SELECT o_custkey AS c_custkey, count(*) AS n_orders,
          |         ${sumMoney("o_totalprice")} AS total_spend
@@ -2405,9 +2550,10 @@ object OracleCatalog {
          |       WHEN n_orders IS NULL THEN 'customer_only'
          |       ELSE 'both' END AS side
          |FROM seg FULL OUTER JOIN oa USING (c_custkey)
-         |ORDER BY c_custkey""".stripMargin,
+         |ORDER BY c_custkey""".stripMargin),
 
-    "q72_range_frame" ->
+    // time-based RANGE window frames (trailing hour per user)
+    query("q72_range_frame", Q.rangeFrameCounts)(
       s"""WITH e AS (SELECT user_id, event_id, value, date_trunc('second', ts) AS ts_sec,
          |             epoch(date_trunc('second', ts)) AS ep FROM events)
          |SELECT user_id, event_id, ${fmtTs("ts_sec")} AS ts_s,
@@ -2415,18 +2561,20 @@ object OracleCatalog {
          |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS value_last_hour
          |FROM e
          |WINDOW w AS (PARTITION BY user_id ORDER BY ep
-         |             RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)""".stripMargin,
+         |             RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)""".stripMargin),
 
-    "q73_debounce" ->
+    // double-fire suppression: gap-filter debounce per (user, type)
+    query("q73_debounce", Q.debounceEvents)(
       s"""WITH e AS (SELECT user_id, event_type, event_id, date_trunc('second', ts) AS ts_sec,
          |             epoch(date_trunc('second', ts)) AS ep FROM events),
          |l AS (SELECT *, lag(ep) OVER (PARTITION BY user_id, event_type
          |                              ORDER BY ep ASC, event_id ASC) AS prev_ep FROM e)
          |SELECT user_id, event_type, event_id, ${fmtTs("ts_sec")} AS ts_s
          |FROM l WHERE prev_ep IS NULL OR ep - prev_ep >= 60
-         |ORDER BY user_id, event_type, event_id""".stripMargin,
+         |ORDER BY user_id, event_type, event_id""".stripMargin),
 
-    "q74_revenue_share" ->
+    // ratio_to_report: revenue share within flag and of grand total
+    query("q74_revenue_share", Q.revenueShare)(
       """WITH g AS (SELECT l_returnflag, l_linestatus,
         |             sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS rev_dec
         |           FROM lineitem GROUP BY l_returnflag, l_linestatus)
@@ -2434,9 +2582,10 @@ object OracleCatalog {
         |  CAST(rev_dec AS DOUBLE) AS revenue,
         |  CAST(rev_dec AS DOUBLE) / CAST(sum(rev_dec) OVER (PARTITION BY l_returnflag) AS DOUBLE) AS share_of_flag,
         |  CAST(rev_dec AS DOUBLE) / CAST(sum(rev_dec) OVER () AS DOUBLE) AS share_of_total
-        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin,
+        |FROM g ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q71_quota_sample" ->
+    // balanced eval sets: exact per-stratum quota, content-addressed order
+    query("q71_quota_sample", Q.quotaSample)(
       """WITH h AS (SELECT doc_id, source,
         |  list_reduce([CAST(strpos('0123456789abcdef', substr(md5('qs|' || CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT)
         |               for i in generate_series(1, 8)], (a, x) -> a * 16 + x) AS h
@@ -2444,9 +2593,10 @@ object OracleCatalog {
         |r AS (SELECT doc_id, source,
         |        CAST(row_number() OVER (PARTITION BY source ORDER BY h ASC, doc_id ASC) AS INTEGER) AS rk
         |      FROM h)
-        |SELECT doc_id, source, rk FROM r WHERE rk <= 20 ORDER BY source, rk""".stripMargin,
+        |SELECT doc_id, source, rk FROM r WHERE rk <= 20 ORDER BY source, rk""".stripMargin),
 
-    "q70_oov_rate" ->
+    // vocab-coverage diagnostic: per-doc OOV fraction vs top-K corpus vocab
+    query("q70_oov_rate", Q.oovRate)(
       raw"""WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS tok FROM documents),
            |vocab AS (SELECT tok, true AS in_vocab FROM (
            |  SELECT tok, count(*) AS cnt FROM tok GROUP BY tok
@@ -2456,18 +2606,20 @@ object OracleCatalog {
            |  CAST(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
            |  CAST(sum(CASE WHEN in_vocab IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
            |    / CAST(count(*) AS DOUBLE) AS oov_frac
-           |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+           |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
+    // native TypedImperativeAggregate t-digest, verified rank-error contract
     // like q39: the sketch's verified rank-error contract crosses the
     // boundary as booleans, never the partition-order-specific estimates
-    "q69_tdigest_percentiles" ->
+    query("q69_tdigest_percentiles", Q.tdigestPercentiles)(
       """SELECT l_returnflag, count(*) AS n_rows,
         | true AS p50_ok, true AS p90_ok, true AS p99_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
+    // IVF ANN over 1-iteration Lloyd-trained centroids (oracle replays training)
     // full 1-iteration Lloyd replay: stride init -> assign -> quantized
     // mean per (cell, dim) -> reassign -> probe 3 cells -> top-5
-    "q68_ivf_trained" -> {
+    query("q68_ivf_trained", Q.ivfTrainedTopK, Q.centroidsCache) {
       def dotOf(a: String, b: String) =
         s"list_reduce([$a[i] * $b[i] for i in generate_series(1, len($a))], (acc, x) -> acc + x)"
       def normOf(a: String) =
@@ -2507,10 +2659,11 @@ object OracleCatalog {
          |WHERE rank <= 5""".stripMargin
     },
 
+    // SemDeDup: kept/dup classification inside trained k-means cells
     // q104: SemDeDup — replays q68's one-iteration quantized-mean k-means
     // training verbatim (same init stride, same assignment tiebreaks),
     // then within-cell pairs a<b at round4(cos) >= 0.35, keep-lowest-id
-    "q104_semantic_dedup" -> {
+    query("q104_semantic_dedup", Q.semanticDedup, Q.centroidsCache) {
       def dotOf(a: String, b: String) =
         s"list_reduce([$a[i] * $b[i] for i in generate_series(1, len($a))], (acc, x) -> acc + x)"
       def normOf(a: String) =
@@ -2549,15 +2702,18 @@ object OracleCatalog {
          |FROM corp LEFT JOIN p USING (vec_id) ORDER BY vec_id""".stripMargin
     },
 
-    "q78_scd2_snapshot" -> scd2Sql,
+    // SCD Type-2 snapshot: change-compressed validity intervals per user
+    query("q78_scd2_snapshot", Q.scd2Snapshot)(scd2Sql),
 
+    // incremental SCD2 upsert, gated as equal to the full recompute
     // q102 merges incrementally Spark-side; the CONTRACT is merged ==
     // full recompute, so the oracle is q78's SQL over all events verbatim
-    "q102_scd2_incremental" -> scd2Sql,
+    query("q102_scd2_incremental", Q.scd2IncrementalMerge)(scd2Sql),
 
+    // pre-join planning census: exact output cardinality + skew ratio
     // q101: two groupBys + full outer on the key; exact integer census,
     // one double divide for the skew ratio
-    "q101_join_cardinality" ->
+    query("q101_join_cardinality", Q.joinCardinality)(
       """WITH l AS (SELECT o_orderkey AS k, count(*) AS cl FROM orders GROUP BY o_orderkey),
         |r AS (SELECT l_orderkey AS k, count(*) AS cr FROM lineitem GROUP BY l_orderkey),
         |j AS (SELECT l.cl, r.cr, coalesce(l.cl, 0) * coalesce(r.cr, 0) AS p
@@ -2567,9 +2723,10 @@ object OracleCatalog {
         |  CAST(sum(p) AS BIGINT) AS join_rows, CAST(max(p) AS BIGINT) AS max_key_rows,
         |  CAST(max(p) AS DOUBLE) * CAST(count(CASE WHEN cl IS NOT NULL AND cr IS NOT NULL THEN 1 END) AS DOUBLE)
         |    / CAST(sum(p) AS DOUBLE) AS skew_ratio
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
 
-    "q79_gap_fill" ->
+    // date-spine resample + forward fill (LOCF) per user
+    query("q79_gap_fill", Q.gapFill)(
       """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS day,
         |                 sum(CAST(value AS DECIMAL(18,4))) AS dv
         |               FROM events GROUP BY user_id, CAST(ts AS DATE)),
@@ -2583,12 +2740,13 @@ object OracleCatalog {
         |  CAST(last_value(dv IGNORE NULLS) OVER (PARTITION BY s.user_id ORDER BY s.day ASC
         |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS filled_value,
         |  dv IS NULL AS is_gap
-        |FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day""".stripMargin,
+        |FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day""".stripMargin),
 
+    // bloom-filter decontamination: the no-false-negative scale path of q44
     // the bloom CONTRACT: no false negatives => every exactly-contaminated
     // train doc is bloom-flagged => bloom_ok is true on EVERY row. The
     // oracle derives the exact set; `true` is the pinned contract value.
-    "q80_bloom_decontam" ->
+    query("q80_bloom_decontam", Q.bloomDecontamination, Q.gramsCache)(
       s"""WITH tk AS (SELECT doc_id, $toksLower AS t FROM documents),
          |sh AS (SELECT doc_id,
          |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
@@ -2602,12 +2760,13 @@ object OracleCatalog {
          |  true AS bloom_ok
          |FROM (SELECT DISTINCT doc_id FROM g WHERE split = 'train') t
          |LEFT JOIN ex USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
+    // exact Pearson correlations from scaled-integer power sums
     // scaled-integer power sums (exact, associative) -> decimal cross
     // terms sized under 38 digits in both engines -> ONE scale-0
     // decimal->double conversion each -> identical IEEE divide/sqrt
-    "q81_corr_profile" -> {
+    query("q81_corr_profile", Q.corrProfile) {
       // HUGEINT (int128) mirrors Spark's decimal(38,0) combination math:
       // both are exact integer arithmetic while values stay under ~1e38,
       // and both convert to double with one correctly-rounded step.
@@ -2639,7 +2798,8 @@ object OracleCatalog {
          |  ${corrOf("sp", "sd", "spp", "sdd", "spd")} FROM a""".stripMargin
     },
 
-    "q82_boilerplate" ->
+    // C4-style cross-document boilerplate chunk removal
+    query("q82_boilerplate", Q.boilerplateStrip)(
       s"""WITH w AS (SELECT doc_id, $toksRaw AS words FROM documents),
          |ix AS (SELECT doc_id, words,
          |         unnest(generate_series(0, CAST(floor((len(words) - 1) / 10.0) AS BIGINT))) AS ci
@@ -2660,11 +2820,12 @@ object OracleCatalog {
          |  coalesce(k.n_chunks_kept, 0) AS n_chunks_kept,
          |  t.n_chunks - coalesce(k.n_chunks_kept, 0) AS n_chunks_dropped
          |FROM tot t LEFT JOIN kept k USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
 
+    // int8 embedding quantization with verified reconstruction-error bound
     // left fold from a prepended 0.0 == Spark's aggregate(errs, 0.0, +):
     // 0.0 + e1 is exactly e1, so both engines run the identical op chain
-    "q83_int8_quant" ->
+    query("q83_int8_quant", Q.int8Quant)(
       """WITH e AS (SELECT vec_id, label,
         |             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS xs FROM embeddings),
         |m AS (SELECT *, list_max(list_transform(xs, x -> abs(x))) AS max_abs FROM e),
@@ -2682,9 +2843,10 @@ object OracleCatalog {
         |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), errs), (a, x) -> a + x) AS sum_abs_err,
         |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE), errs), (a, x) -> a + x)
         |    <= CAST(len(xs) AS DOUBLE) * 0.5 / scale AS err_bound_ok
-        |FROM er""".stripMargin,
+        |FROM er""".stripMargin),
 
-    "q23_checks_report" -> {
+    // checks engine
+    query("q23_checks_report", Q.checksReport, Star.cache) {
       def dup(table: String, key: String, name: String) =
         s"""SELECT '$name' AS check_name,
            | CAST(count($key) - count(DISTINCT $key) AS DOUBLE) AS metric,
@@ -2715,10 +2877,13 @@ object OracleCatalog {
          |  CAST(min(total_revenue) AS DOUBLE) AS metric, min(total_revenue) >= 0 AS passed FROM ry""".stripMargin
     },
 
+    // best-copy canonicalization: cluster keeper by quality, not min-id;
+    // it reads the pairs only transitively: as the first sorted components
+    // consumer it primes the component map FROM the pairs
     // q106: q54's full clustering replay + quality argmax keeper — rank
     // inside each component by (quality DESC, doc_id ASC); the same
     // window in both engines, total order so engine-exact
-    "q106_cluster_keepers" ->
+    query("q106_cluster_keepers", Q.clusterKeepers, Q.pairsCache, Q.compCache)(
       s"""WITH RECURSIVE $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -2743,11 +2908,12 @@ object OracleCatalog {
          |  first_value(comp.doc_id) OVER w AS keeper_id,
          |  comp.doc_id = first_value(comp.doc_id) OVER w AS is_kept
          |FROM comp JOIN q USING (doc_id)
-         |WINDOW w AS (PARTITION BY component ORDER BY quality DESC, comp.doc_id ASC)""".stripMargin,
+         |WINDOW w AS (PARTITION BY component ORDER BY quality DESC, comp.doc_id ASC)""".stripMargin),
 
+    // best-copy clean corpus: quality gate on q106's kept cluster members
     // q110: q106's clustering + keeper window, filtered to kept members
     // passing the q32 quality gate, with exact token counts
-    "q110_best_copy_corpus" ->
+    query("q110_best_copy_corpus", Q.bestCopyCorpus, Q.compCache)(
       s"""WITH RECURSIVE $tkCte, $shCte,
          |sig AS (SELECT doc_id, $sigCols FROM sh),
          |bands AS (${(0 until 4).map(b =>
@@ -2773,11 +2939,12 @@ object OracleCatalog {
          |          ORDER BY quality DESC, comp.doc_id ASC) AS keeper_id
          |      FROM comp JOIN q USING (doc_id))
          |SELECT doc_id, component, quality, n_tokens
-         |FROM k WHERE doc_id = keeper_id AND quality >= 0.5""".stripMargin,
+         |FROM k WHERE doc_id = keeper_id AND quality >= 0.5""".stripMargin),
 
+    // power-of-two token-length histogram (len(bin(n))-1: no libm log)
     // q111: power-of-two length histogram; bucket = length(bin(n)) - 1
     // (binary-string length in both engines — no libm log2)
-    "q111_token_histogram" ->
+    query("q111_token_histogram", Q.tokenHistogram)(
       raw"""WITH n AS (SELECT CASE WHEN len(trim(text)) = 0 THEN 0
          |  ELSE CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) END AS n
          | FROM documents),
@@ -2785,12 +2952,13 @@ object OracleCatalog {
          |  ELSE CAST(length(bin(n)) - 1 AS INTEGER) END AS len_bucket, n FROM n)
          |SELECT len_bucket, count(*) AS n_docs, CAST(sum(n) AS BIGINT) AS n_tokens,
          |  CAST(count(*) AS DOUBLE) / CAST(sum(count(*)) OVER () AS DOUBLE) AS doc_share
-         |FROM b GROUP BY len_bucket""".stripMargin,
+         |FROM b GROUP BY len_bucket""".stripMargin),
 
+    // per-user view→purchase conversion over 30-min gap sessions
     // q112: per-user view→purchase conversion over the q64 session
     // islands; seen-view window is strictly-preceding rows; NULL
     // conversion for users with no view sessions
-    "q112_session_funnel" ->
+    query("q112_session_funnel", Q.sessionFunnel)(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |            date_trunc('second', ts) AS ts_sec FROM events),
         |f AS (SELECT *, CASE WHEN lag(ts_sec) OVER w IS NULL
@@ -2811,11 +2979,12 @@ object OracleCatalog {
         |  CAST(sum(has_conv) AS BIGINT) AS n_converted,
         |  CASE WHEN sum(has_view) > 0
         |    THEN CAST(sum(has_conv) AS DOUBLE) / CAST(sum(has_view) AS DOUBLE) END AS conversion
-        |FROM s GROUP BY user_id""".stripMargin,
+        |FROM s GROUP BY user_id""".stripMargin),
 
+    // weekly cohort retention matrix (integer-exact date math)
     // q113: weekly cohort retention; all date math integer (datediff//7),
     // no engine week-truncation semantics
-    "q113_cohort_retention" ->
+    query("q113_cohort_retention", Q.cohortRetention)(
       """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |fd AS (SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id),
         |tagged AS (SELECT DISTINCT d.user_id,
@@ -2828,12 +2997,13 @@ object OracleCatalog {
         |         count(*) AS cohort_size FROM fd GROUP BY 1)
         |SELECT cohort_week, week_offset, n_active, cohort_size,
         |  CAST(n_active AS DOUBLE) / CAST(cohort_size AS DOUBLE) AS retention
-        |FROM act JOIN cs USING (cohort_week)""".stripMargin,
+        |FROM act JOIN cs USING (cohort_week)""".stripMargin),
 
+    // k-step funnel report over gap sessions (CoreOps.funnelSteps)
     // q114: k-step funnel — chained conditional min-windows (step i
     // strictly after step i-1) over the q64 session islands; one
     // aggregation row exploded to per-step counts
-    "q114_funnel_report" ->
+    query("q114_funnel_report", Q.funnelReport)(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |            date_trunc('second', ts) AS ts_sec FROM events),
         |f AS (SELECT *, CASE WHEN lag(ts_sec) OVER w IS NULL
@@ -2855,12 +3025,13 @@ object OracleCatalog {
         |UNION ALL SELECT 1, 'click', CAST(c1 AS BIGINT),
         |  CASE WHEN c0 > 0 THEN CAST(c1 AS DOUBLE) / CAST(c0 AS DOUBLE) END FROM c
         |UNION ALL SELECT 2, 'purchase', CAST(c2 AS BIGINT),
-        |  CASE WHEN c0 > 0 THEN CAST(c2 AS DOUBLE) / CAST(c0 AS DOUBLE) END FROM c""".stripMargin,
+        |  CASE WHEN c0 > 0 THEN CAST(c2 AS DOUBLE) / CAST(c0 AS DOUBLE) END FROM c""".stripMargin),
 
+    // timeout-bounded funnel: 300s max step gap, attrition vs unbounded
     // q116: timeout-bounded funnel — q114's chain with each transition
     // additionally bounded to 300s after the previous step (greedy-
     // earliest anchor), reported beside the unbounded chain
-    "q116_funnel_timeout" ->
+    query("q116_funnel_timeout", Q.funnelTimeoutReport)(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |            date_trunc('second', ts) AS ts_sec FROM events),
         |f AS (SELECT *, CASE WHEN lag(ts_sec) OVER w IS NULL
@@ -2892,14 +3063,15 @@ object OracleCatalog {
         |  CASE WHEN cb0 > 0 THEN CAST(cb1 AS DOUBLE) / CAST(cb0 AS DOUBLE) END FROM c
         |UNION ALL SELECT 2, 'purchase', CAST(cb2 AS BIGINT), CAST(cu2 AS BIGINT),
         |  CAST(cu2 - cb2 AS BIGINT),
-        |  CASE WHEN cb0 > 0 THEN CAST(cb2 AS DOUBLE) / CAST(cb0 AS DOUBLE) END FROM c""".stripMargin,
+        |  CASE WHEN cb0 > 0 THEN CAST(cb2 AS DOUBLE) / CAST(cb0 AS DOUBLE) END FROM c""".stripMargin),
 
+    // KMV distinct sketch: deterministic estimate crosses the oracle exact
     // q117: KMV distinct — the estimate is a pure function of the input
     // set (k smallest distinct 52-bit md5 hashes), so the oracle replays
     // it exactly by sorting: kth hash, then (k−1)/(h_k/2^52) — the same
     // two IEEE ops as KmvState.estimate. Fewer than k distinct hashes →
     // est = the exact kept count (kth_hash null).
-    "q117_kmv_distinct" ->
+    query("q117_kmv_distinct", Q.kmvDistinctEstimate)(
       """WITH hs AS (SELECT DISTINCT l_returnflag,
         |  list_reduce([CAST(strpos('0123456789abcdef', substr(md5(CAST(l_orderkey AS VARCHAR)), i, 1)) - 1 AS BIGINT)
         |               for i in generate_series(1, 13)], (a, x) -> a * 16 + x) AS hv
@@ -2922,12 +3094,13 @@ object OracleCatalog {
         |      FROM k JOIN e USING (l_returnflag))
         |SELECT l_returnflag, nd_exact, n_kept, kth_hash, nd_kmv,
         |  ABS(nd_kmv - CAST(nd_exact AS DOUBLE)) / CAST(nd_exact AS DOUBLE) AS rel_err
-        |FROM f ORDER BY l_returnflag""".stripMargin,
+        |FROM f ORDER BY l_returnflag""".stripMargin),
 
+    // MAD robust outlier days over the daily revenue series
     // q118: MAD outlier days — low medians (⌈n/2⌉-th order statistic via
     // row_number, no interpolation) so med/mad are actual series values;
     // the only derived double is abs_dev/mad
-    "q118_outlier_days" ->
+    query("q118_outlier_days", Q.outlierDays)(
       """WITH daily AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
         |        CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |        count(*) AS n_events
@@ -2942,20 +3115,22 @@ object OracleCatalog {
         |SELECT day, revenue, n_events, med, abs_dev, mad,
         |  CASE WHEN mad > 0 THEN abs_dev / mad END AS robust_z,
         |  CASE WHEN mad > 0 THEN abs_dev / mad > 3.5 ELSE abs_dev > 0 END AS is_outlier
-        |FROM d, m2 ORDER BY day""".stripMargin,
+        |FROM d, m2 ORDER BY day""".stripMargin),
 
+    // incremental rollup state merge, gated equal to full recompute
     // q119: incremental aggregate maintenance CONTRACT — the oracle is
     // the FULL RECOMPUTE over all events, so a hash match proves
     // merge(agg(history), agg(delta)) == agg(history ∪ delta)
-    "q119_incremental_agg" ->
+    query("q119_incremental_agg", Q.incrementalAggMerge)(
       s"""SELECT user_id, count(*) AS n_events,
          | ${sumMoney("value")} AS total_value,
          | ${fmtTs("max(ts)")} AS last_ts
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
+    // A/B readout: hash-split variants, per-variant conversion + lift
     // q115: A/B readout — md5-nibble variant split over the 2-step funnel
     // sessions; lift = conversion − control conversion (control lift ≡ 0)
-    "q115_experiment_readout" ->
+    query("q115_experiment_readout", Q.experimentReadout)(
       """WITH e AS (SELECT user_id, event_id, event_type,
         |            date_trunc('second', ts) AS ts_sec FROM events),
         |f AS (SELECT *, CASE WHEN lag(ts_sec) OVER w IS NULL
@@ -2980,12 +3155,13 @@ object OracleCatalog {
         |      FROM p)
         |SELECT variant, n_users, n_sessions, n_view_sessions, n_converted, conversion,
         |  conversion - max(CASE WHEN variant = 'control' THEN conversion END) OVER () AS lift_vs_control
-        |FROM q""".stripMargin,
+        |FROM q""".stripMargin),
 
+    // per-doc duplicated-chunk ratio: the drop-mostly-copied-docs signal
     // q107: per-doc duplicated-chunk ratio over non-overlapping 64-token
     // chunks; window count over per-(chunk,doc) rows = distinct-doc
     // frequency; same-doc repeats never count as shared
-    "q107_chunk_dup_profile" ->
+    query("q107_chunk_dup_profile", Q.chunkDupProfile)(
       raw"""WITH tk AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t FROM documents),
          |ck AS (SELECT doc_id, md5(array_to_string(t[s : s + 63], ' ')) AS ch
          |       FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t), 1), 64)) AS s FROM tk)),
@@ -2996,11 +3172,12 @@ object OracleCatalog {
          |  CAST(sum(CASE WHEN n_docs >= 2 THEN n_in_doc ELSE 0 END) AS INTEGER) AS n_shared_chunks,
          |  CAST(sum(CASE WHEN n_docs >= 2 THEN n_in_doc ELSE 0 END) AS DOUBLE)
          |    / CAST(sum(n_in_doc) AS DOUBLE) AS shared_ratio
-         |FROM f GROUP BY doc_id""".stripMargin,
+         |FROM f GROUP BY doc_id""".stripMargin),
 
+    // Deequ-style run-over-run anomaly gate on daily pipeline metrics
     // q108: daily pipeline metrics + trailing-3-day anomaly flag; avg over
     // a bounded ordered frame of exact longs → deterministic double
-    "q108_metric_drift" ->
+    query("q108_metric_drift", Q.dailyMetricDrift)(
       """WITH daily AS (
         |  SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
         |         count(*) AS n_rows,
@@ -3013,12 +3190,13 @@ object OracleCatalog {
         |    (CAST(n_rows AS DOUBLE) > (avg(n_rows) OVER w) * 1.5
         |     OR CAST(n_rows AS DOUBLE) < (avg(n_rows) OVER w) * 0.5) AS is_anomaly
         |FROM daily
-        |WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)""".stripMargin,
+        |WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)""".stripMargin),
 
+    // α=0.5 temperature-scaled source sampling weights (exact/IEEE-portable)
     // q109: α=0.5 temperature mixture — exact integer token sums; the only
     // doubles are one division of exact longs and one sqrt ratio (both
     // correctly-rounded IEEE ops in both engines)
-    "q109_temperature_mixture" ->
+    query("q109_temperature_mixture", Q.temperatureMixture)(
       raw"""WITH b AS (SELECT source,
          |  CASE WHEN len(trim(text)) = 0 THEN 0
          |    ELSE CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INTEGER) END AS n_tok
@@ -3029,6 +3207,12 @@ object OracleCatalog {
          |SELECT source, n_docs, n_tokens,
          |  CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE) AS linear_share,
          |  sqrt(CAST(n_tokens AS DOUBLE)) / sqrt(CAST(max(n_tokens) OVER () AS DOUBLE)) AS temp_weight_rel
-         |FROM s""".stripMargin
+         |FROM s""".stripMargin)
   )
+
+  locally {
+    val names = declarations.map(_.name)
+    require(names.distinct == names,
+      s"query declared twice: ${names.diff(names.distinct).mkString(", ")}")
+  }
 }

@@ -166,7 +166,7 @@ object QueryCatalog {
     * blocks — the cache's release owns that (non-recomputable, so only
     * safe once no consumer can re-evaluate a frame derived from them).
     */
-  private val pairsCache =
+  private[queries] val pairsCache =
     graft.util.SessionScoped.cache[DataFrame]("candidatePairs", Checkpoints.drop)
 
   private def docCandidatePairs(s: SparkSession, dir: String): DataFrame =
@@ -183,7 +183,7 @@ object QueryCatalog {
     * (the [[pairsCache]] convention); the cache's release owns the
     * block release, sequenced after the last sorted consumer.
     */
-  private val rareEdgesCache =
+  private[queries] val rareEdgesCache =
     graft.util.SessionScoped.cache[DataFrame]("rareGramEdges", Checkpoints.drop)
 
   private def rareGramEdges(s: SparkSession, dir: String): DataFrame =
@@ -227,8 +227,8 @@ object QueryCatalog {
     * them to ContextCleaner GC. (The small-graph path's plan DOES embed
     * the pairs RDD; holding the frame covers both paths.)
     */
-  private final case class CachedComponents(components: DataFrame, pairs: DataFrame)
-  private val compCache =
+  private[queries] final case class CachedComponents(components: DataFrame, pairs: DataFrame)
+  private[queries] val compCache =
     graft.util.SessionScoped.cache[CachedComponents]("components", c => {
       Checkpoints.drop(c.components); Checkpoints.drop(c.pairs)
     })
@@ -289,9 +289,9 @@ object QueryCatalog {
     * held explicitly because waiting on driver GC is the leak the r10
     * verdict flagged on the LSH family.
     */
-  private final case class CachedCorpus(deduped: DataFrame, clean: DataFrame,
-                                        nearDups: DataFrame)
-  private val corpusCache =
+  private[queries] final case class CachedCorpus(deduped: DataFrame, clean: DataFrame,
+                                                 nearDups: DataFrame)
+  private[queries] val corpusCache =
     graft.util.SessionScoped.cache[CachedCorpus]("corpus", c => {
       c.clean.unpersist(blocking = true); c.deduped.unpersist(blocking = true)
       Checkpoints.drop(c.nearDups)
@@ -305,7 +305,7 @@ object QueryCatalog {
     * (session, dir). kmeansCentroids returns an already-persisted k-row
     * frame; release unpersists it.
     */
-  private val centroidsCache =
+  private[queries] val centroidsCache =
     graft.util.SessionScoped.cache[DataFrame]("trainedCentroids",
       _.unpersist(blocking = true))
 
@@ -323,7 +323,7 @@ object QueryCatalog {
     * Both frames are eagerly localCheckpointed (codes is n·m rows of
     * three ints — always executor-resident at sane m).
     */
-  private val pqIndexCache =
+  private[queries] val pqIndexCache =
     graft.util.SessionScoped.cache[Similarity.PqIndex]("pqIndex", i => {
       Checkpoints.drop(i.cb); Checkpoints.drop(i.codes)
     })
@@ -883,7 +883,7 @@ object QueryCatalog {
     * materializes to parquet once and reads many times; the in-memory
     * persist is the local analog.
     */
-  private val gramsCache =
+  private[queries] val gramsCache =
     graft.util.SessionScoped.cache[DataFrame]("splitGrams", _.unpersist(blocking = true))
 
   /** The gram cache frame: ONE ROW PER DOC with the distinct gram-hash
@@ -910,9 +910,8 @@ object QueryCatalog {
       explode(col("ghs")).as("gh"))
 
   /** The q165 partitioned-fact path (see [[dppFactPath]]); its release
-    * deletes the layout. Declared here, above [[sessionCaches]], because
-    * object vals initialize in source order. */
-  private val dppFactCache =
+    * deletes the layout. */
+  private[queries] val dppFactCache =
     graft.util.SessionScoped.cache[String]("dppFactPath",
       path => deleteRecursively(new java.io.File(path)))
 
@@ -928,10 +927,11 @@ object QueryCatalog {
     * reader finishes, or storage eviction churn taxes the whole tail of
     * the job (SCALE.md).
     *
-    * Release points are DERIVED from the declared consumer sets below,
-    * not hand-maintained: adding a query to a cache's consumer set moves
-    * the release automatically, and CacheLifecycleSpec verifies each
-    * declared set against the accesses every cache handle records
+    * Release points are DERIVED from the consumer sets, and the consumer
+    * sets from each query's declared caches ([[QueryDecl.caches]]), not
+    * hand-maintained: listing a cache on a query's declaration moves the
+    * release automatically, and CacheLifecycleSpec verifies each derived
+    * set against the accesses every cache handle records
     * ([[graft.util.SessionScoped.accesses]]) — an undeclared consumer
     * fails the spec instead of silently re-creating the round-5 eviction
     * churn (the q100 incident: one new query name shifted a
@@ -956,73 +956,45 @@ object QueryCatalog {
   final case class SessionCache(
       cache: graft.util.SessionScoped.Cache[_],
       consumers: Set[String],
-      earlyReleaseAfter: Set[String] = Set.empty) {
+      earlyReleaseAfter: Set[String]) {
     def name: String = cache.name
     /** Release every entry session `s` holds in this cache (`dir` is
       * unused: one directory per session, see above). */
     def invalidate(s: SparkSession, dir: String): Unit = cache.invalidateSession(s)
-    require(consumers.nonEmpty, s"cache $name declares no consumers")
+    require(consumers.nonEmpty, s"no query declares cache $name")
     /** Last consumer in sorted sweep order — the derived release point. */
     def lastConsumer: String = consumers.max
-    require(earlyReleaseAfter.subsetOf(consumers),
-      s"cache $name: early release points must be consumers")
     require(earlyReleaseAfter.forall(_ < lastConsumer),
       s"cache $name: an early release at/after the last consumer is just the release")
   }
 
-  /** The session caches and the queries that read them. Membership
-    * is verified by CacheLifecycleSpec against recorded getter accesses
-    * on a cold sorted sweep — edit the sets here when adding a consumer;
-    * the release schedule follows.
+  /** The session caches. Each one's consumers are the queries whose
+    * [[QueryDecl]] lists it ([[OracleCatalog.declarations]]), and its
+    * early release points those of them marked `releaseEarly`;
+    * CacheLifecycleSpec checks the declarations against the getter
+    * accesses of a cold sorted sweep. Lazy, like [[cacheReleaseAfter]]:
+    * the declarations refer to these handles, so neither object reads
+    * the other half-built.
     */
-  val sessionCaches: Seq[SessionCache] = Seq(
-    SessionCache(Star.cache,
-      consumers = Set("q02_dim_customer", "q03_dim_datetime", "q04_dim_product",
-        "q05_dim_invoice", "q06_fct_line_value", "q07_report_customer",
-        "q08_report_product", "q09_report_year", "q165_dpp_star_scan",
-        "q23_checks_report")),
-    // q100 sorts FIRST among the gram consumers (string order puts it
-    // before q10): without an early release there, the gram cache it
-    // builds would sit across the star family and the whole dedup middle
-    // — exactly the r5 eviction-churn shape (measured: q81 1.0s → 18.9s
-    // when q100 held the cache to q96). Releasing immediately costs one
-    // rebuild at q44; the q44→q96 span is measured safe.
-    SessionCache(gramsCache,
-      consumers = Set("q100_containment_dups", "q44_decontamination",
-        "q80_bloom_decontam", "q96_source_overlap"),
-      earlyReleaseAfter = Set("q100_containment_dups")),
-    // q106 reads the pairs only transitively: it is the first sorted
-    // component consumer, so it primes the component map FROM the pairs.
-    SessionCache(pairsCache,
-      consumers = Set("q106_cluster_keepers", "q19_minhash_pairs",
-        "q60_edit_distance", "q86_pagerank", "q87_recursive_reach")),
-    SessionCache(compCache,
-      consumers = Set("q106_cluster_keepers", "q110_best_copy_corpus",
-        "q169_leakage_safe_split", "q54_dedup_clusters")),
-    SessionCache(corpusCache,
-      consumers = Set("q32_clean_corpus", "q49_training_corpus")),
-    SessionCache(rareEdgesCache,
-      consumers = Set("q148_triangle_census", "q158_incremental_components")),
-    SessionCache(centroidsCache,
-      consumers = Set("q104_semantic_dedup", "q127_ivfpq_trained",
-        "q68_ivf_trained")),
-    // the partitioned-fact PATH (files, not blocks): the release deletes
-    // the layout so a fresh sweep rebuilds (and re-records) it
-    SessionCache(dppFactCache,
-      consumers = Set("q165_dpp_star_scan")),
-    SessionCache(pqIndexCache,
-      consumers = Set("q120_pq_ann", "q122_ivfpq_ann", "q125_pq_trained",
-        "q127_ivfpq_trained")),
-    // the auto dials' probe memo, keyed by input plan rather than
-    // directory
-    SessionCache(graft.ops.ShapeDispatch.statsCache,
-      consumers = Set("q129_equidepth_hist", "q137_top_parts_per_flag",
-        "q36_percentiles", "q53_rank_functions")))
+  lazy val sessionCaches: Seq[SessionCache] =
+    Seq(Star.cache, gramsCache, pairsCache, compCache, corpusCache, rareEdgesCache,
+      centroidsCache,
+      // the partitioned-fact PATH (files, not blocks): the release deletes
+      // the layout so a fresh sweep rebuilds (and re-records) it
+      dppFactCache,
+      pqIndexCache,
+      // the auto dials' probe memo, keyed by input plan rather than
+      // directory
+      graft.ops.ShapeDispatch.statsCache).map { c =>
+      val readers = OracleCatalog.declarations.filter(_.caches.contains(c))
+      SessionCache(c, readers.map(_.name).toSet,
+        readers.filter(_.releaseEarly).map(_.name).toSet)
+    }
 
   /** Derived release schedule: query name → releases to run after it
     * (each cache's last sorted consumer, plus declared early points).
     */
-  val cacheReleaseAfter: Map[String, Seq[(SparkSession, String) => Unit]] =
+  lazy val cacheReleaseAfter: Map[String, Seq[(SparkSession, String) => Unit]] =
     sessionCaches
       .flatMap(c => (c.earlyReleaseAfter + c.lastConsumer).toSeq.map(_ -> (c.invalidate _)))
       .groupMap(_._1)(_._2)

@@ -12,25 +12,32 @@ import graft.Harness
   * Each run line also prints `compiles=N`, the Janino compilations the
   * run paid (the `CodegenMetrics` compilation count delta): run 1 in a
   * fresh JVM gives the query's distinct generated-class keys while they
-  * fit Spark's codegen cache, and runs 2+ its steady recompiles.
+  * fit Spark's codegen cache, and runs 2+ its steady recompiles. Beside
+  * it, `jobs=N` counts the Spark jobs the run started.
   *
   *   runMain graft.tools.SoloRuns <sfDir> <runs> <q1,q2,...>
+  *
+  * All three arguments are required.
   */
 object SoloRuns {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val runs = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val names = args.lift(2).map(Harness.names).getOrElse(Seq("q06_fct_line_value"))
+    require(args.length == 3, "usage: SoloRuns <sfDir> <runs> <q1,q2,...>")
+    val dir = args(0)
+    val runs = args(1).toInt
+    val names = Harness.names(args(2))
     Harness.requireKnown(names)
     val spark = Harness.session(Harness.threads(defaultCpus = 16))
     spark.sparkContext.setLogLevel("ERROR")
     Harness.warmUp(spark, dir)
 
     val cpuNanos = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         cpuNanos.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
     // listener-bus events are delivered asynchronously: settle before each
@@ -63,21 +70,21 @@ object SoloRuns {
       var best = Double.MaxValue; var bestCpu = Double.MaxValue
       for (r <- 1 to runs) {
         val c0 = settledCpu(s"q=$name run=$r start")
-        val k0 = compiles()
+        val k0 = compiles(); val j0 = jobs.get()
         // one-query sweep: the harness releases this query's caches after
         // every run, so each iteration re-pays the fill the bench charges it
         val run = Harness.runSorted(spark, dir, Some(Seq(name))) { (_, df) =>
           df.write.format("noop").mode("overwrite").save()
         }.head
         val cpu = (settledCpu(s"q=$name run=$r end") - c0) / 1e9
-        val k = compiles() - k0
+        val k = compiles() - k0; val j = jobs.get() - j0
         run.error match {
           case Some(e) =>
             failures += 1
             println(s"[solo] q=$name run=$r FAILED: $e")
           case None =>
             if (r > 1) { best = math.min(best, run.seconds); bestCpu = math.min(bestCpu, cpu) }
-            println(f"[solo] q=$name run=$r wall=${run.seconds}%.2fs cpu=$cpu%.1fs compiles=$k")
+            println(f"[solo] q=$name run=$r wall=${run.seconds}%.2fs cpu=$cpu%.1fs compiles=$k jobs=$j")
         }
       }
       // no successful run after the first leaves no steady-state sample:

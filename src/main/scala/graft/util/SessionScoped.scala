@@ -28,8 +28,10 @@ import scala.collection.mutable.ArrayBuffer
   * A cache's handle is its one owner: the name it registers under, the
   * access record (every [[Cache.getOrElseUpdate]] logs the current
   * query and the cache name) and the release (`invalidate*`).
-  * `QueryCatalog.sessionCaches` declares each handle's consumers, and
-  * CacheLifecycleSpec checks that declaration against the access log.
+  * `QueryCatalog.sessionCaches` lists each handle with its consumers,
+  * the queries whose declaration (`OracleCatalog.declarations`) names it,
+  * and CacheLifecycleSpec checks those declarations against the access
+  * log.
   */
 object SessionScoped {
 

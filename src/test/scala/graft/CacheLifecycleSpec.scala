@@ -1,13 +1,14 @@
 package graft
 
 import graft.dedup.Checkpoints
-import graft.queries.QueryCatalog
+import graft.queries.{OracleCatalog, QueryCatalog}
 import graft.util.SessionScoped
 
-/** Verifies QueryCatalog.sessionCaches — the DECLARED cache→consumers
-  * sets the release schedule is derived from — against the accesses the
-  * cache handles record (SessionScoped.accesses) during a cold sorted
-  * catalog sweep.
+/** Verifies QueryCatalog.sessionCaches — the cache→consumers sets the
+  * release schedule is derived from, themselves derived from the caches
+  * each query's declaration lists (OracleCatalog.declarations) — against
+  * the accesses the cache handles record (SessionScoped.accesses) during
+  * a cold sorted catalog sweep.
   * The getters run at DataFrame construction time, so the sweep builds
   * every query (priming each cache once, at sf0.001) without executing
   * the query bodies.
@@ -18,10 +19,11 @@ import graft.util.SessionScoped
   * hold-span across 40 queries and recreated the round-5 storage-pool
   * eviction churn (q81 1.0s → 18.9s) before a bench run caught it. Now:
   *  - an UNDECLARED consumer (a new query touching a cache) fails here,
-  *    forcing the consumer-set edit that moves the release automatically;
-  *  - a STALE declared consumer (query renamed/dropped, or no longer
-  *    touching the cache) fails here, so the release point can't silently
-  *    trail the real last reader.
+  *    forcing the edit to that query's declared cache list, which moves
+  *    the release automatically;
+  *  - a STALE declared consumer (a query whose declaration lists a cache
+  *    it no longer touches) fails here, so the release point can't
+  *    silently trail the real last reader.
   */
 class CacheLifecycleSpec extends SparkSpec {
 
@@ -51,8 +53,8 @@ class CacheLifecycleSpec extends SparkSpec {
         fail(s"cache '$cache' records accesses but declares no SessionCache"))
       val undeclared = queries -- c.consumers
       assert(undeclared.isEmpty,
-        s"cache '$cache' has UNDECLARED consumers $undeclared — add them to " +
-          "QueryCatalog.sessionCaches so the release point follows")
+        s"cache '$cache' has UNDECLARED consumers $undeclared — list the cache " +
+          "in each one's declaration (OracleCatalog) so the release point follows")
     }
     // 2. every declared consumer really reads the cache — no stale entry
     //    pinning the release later than the true last reader
@@ -61,7 +63,8 @@ class CacheLifecycleSpec extends SparkSpec {
       val stale = c.consumers -- seen
       assert(stale.isEmpty,
         s"cache '${c.name}' declares consumers $stale that never accessed it " +
-          "in the sweep — remove them (they pin the release point)")
+          "in the sweep — drop the cache from their declarations (OracleCatalog; " +
+          "they pin the release point)")
     }
     // 3. the schedule invariant the derivation guarantees, asserted
     //    end-to-end: each cache's release runs at its last sorted consumer
@@ -69,6 +72,44 @@ class CacheLifecycleSpec extends SparkSpec {
       assert(QueryCatalog.cacheReleaseAfter.contains(c.lastConsumer),
         s"cache '${c.name}': no release scheduled at last consumer ${c.lastConsumer}")
     }
+  }
+
+  test("the query registry: 171 unique declarations, an oracle each; " +
+       "the derived consumer sets and early release are pinned") {
+    val names = OracleCatalog.declarations.map(_.name)
+    assert(names.size == 171)
+    assert(names.distinct == names, s"declared twice: ${names.diff(names.distinct)}")
+    val malformed = names.filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(malformed.isEmpty, s"malformed query names: $malformed")
+    assert(OracleCatalog.declarations.forall(_.oracleSql.trim.nonEmpty))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    // pinned: an edit to a declaration's cache list moves that cache's
+    // consumers, and so its release point, and must show here
+    val consumers = QueryCatalog.sessionCaches.map(c => c.name -> c.consumers).toMap
+    assert(consumers == Map(
+      "star" -> Set("q02_dim_customer", "q03_dim_datetime", "q04_dim_product",
+        "q05_dim_invoice", "q06_fct_line_value", "q07_report_customer",
+        "q08_report_product", "q09_report_year", "q165_dpp_star_scan",
+        "q23_checks_report"),
+      "splitGrams" -> Set("q100_containment_dups", "q44_decontamination",
+        "q80_bloom_decontam", "q96_source_overlap"),
+      "candidatePairs" -> Set("q106_cluster_keepers", "q19_minhash_pairs",
+        "q60_edit_distance", "q86_pagerank", "q87_recursive_reach"),
+      "components" -> Set("q106_cluster_keepers", "q110_best_copy_corpus",
+        "q169_leakage_safe_split", "q54_dedup_clusters"),
+      "corpus" -> Set("q32_clean_corpus", "q49_training_corpus"),
+      "rareGramEdges" -> Set("q148_triangle_census", "q158_incremental_components"),
+      "trainedCentroids" -> Set("q104_semantic_dedup", "q127_ivfpq_trained",
+        "q68_ivf_trained"),
+      "dppFactPath" -> Set("q165_dpp_star_scan"),
+      "pqIndex" -> Set("q120_pq_ann", "q122_ivfpq_ann", "q125_pq_trained",
+        "q127_ivfpq_trained"),
+      "shapeStats" -> Set("q129_equidepth_hist", "q137_top_parts_per_flag",
+        "q36_percentiles", "q53_rank_functions")))
+    val early = QueryCatalog.sessionCaches.filter(_.earlyReleaseAfter.nonEmpty)
+      .map(c => c.name -> c.earlyReleaseAfter)
+    assert(early == Seq("splitGrams" -> Set("q100_containment_dups")))
   }
 
   test("every registered session cache is declared in sessionCaches, once") {

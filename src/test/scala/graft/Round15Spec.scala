@@ -73,7 +73,7 @@ class Round15Spec extends SparkSpec {
     }
   }
 
-  test("probeStatsMulti: the distinct bound is the WORST value column's") {
+  test("probeStats over two value columns: the distinct bound is the WORST column's") {
     import spark.implicits._
     // value a: 2 distinct per group; value b: 250 distinct per group
     // (i % 997 is injective over each group's 250-element residue class)
@@ -89,7 +89,7 @@ class Round15Spec extends SparkSpec {
 
   // ---- (b) the multi-column percentile dial (q36's r15 shape) -------------
 
-  test("percentilesAutoMulti: buffer and ranked shapes agree across two value columns") {
+  test("percentilesAuto: buffer and ranked shapes agree across two value columns") {
     import spark.implicits._
     val df = (0 until 4000).map { i =>
       val g = s"g${i % 3}"
@@ -113,7 +113,7 @@ class Round15Spec extends SparkSpec {
     assert(!bufPlan.contains("Join"), s"buffer shape must not join:\n$bufPlan")
   }
 
-  test("percentilesAutoMulti: a group all-null in ONE column yields no row in either shape") {
+  test("percentilesAuto: a group all-null in ONE column yields no row in either shape") {
     import spark.implicits._
     val df = Seq[(String, java.lang.Double, java.lang.Double)](
       ("ok", 1.0, 2.0), ("ok", 3.0, 4.0),

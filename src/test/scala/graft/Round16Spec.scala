@@ -117,7 +117,7 @@ class Round16Spec extends SparkSpec {
     rows.toDF("grp", "a", "b")
   }
 
-  test("percentilesAutoMulti ranged branch keeps the per-column form; the fused API is value-identical to it") {
+  test("percentilesAuto ranged shape is the per-column rankedPercentiles join, value for value") {
     val df = fixtureDf()
     val specs = Seq(
       PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),

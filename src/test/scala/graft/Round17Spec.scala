@@ -87,7 +87,7 @@ class Round17Spec extends SparkSpec {
     rows.toDF("grp", "a", "b")
   }
 
-  test("percentilesAutoMulti: a null group key survives buffered, per-column ranged, and fused identically") {
+  test("percentilesAuto: a null group key survives the buffered and per-column ranged shapes identically") {
     val df = nullKeyFixture()
     val specs = Seq(
       PercentileSpec("a", Seq(0.5, 0.9), Seq("a50", "a90")),
